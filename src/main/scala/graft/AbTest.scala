@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** In-JVM A/B config comparator (r13 optimization round): on a noisy
   * shared box, cross-JVM timing comparisons drift by 2×; alternating the
   * two configurations per iteration INSIDE one session and taking the min
@@ -17,18 +15,8 @@ object AbTest {
     val Array(key, vals) = args(1).split("=", 2)
     val Array(valA, valB) = vals.split("\\|", 2)
     val names = args.drop(2).toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
     val iters = sys.env.getOrElse("SPARK_GRAFT_AB_ITERS", "3").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.execution.topKSortFallbackThreshold", "1048576")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .getOrCreate()
+    val spark = GraftSession.local()
     spark.sparkContext.setLogLevel("ERROR")
 
     def run(name: String): Double = {
@@ -42,12 +30,7 @@ object AbTest {
 
     names.foreach { name =>
       val (as, bs) = (Seq.newBuilder[Double], Seq.newBuilder[Double])
-      // "prop:<name>" keys flip a JVM system property instead of a SQL
-      // conf — the lever for A/B-ing code-path switches (e.g.
-      // graft.fanout) inside one session
-      def set(v: String): Unit =
-        if (key.startsWith("prop:")) System.setProperty(key.stripPrefix("prop:"), v)
-        else spark.conf.set(key, v)
+      def set(v: String): Unit = spark.conf.set(key, v)
       // warm up IN arm-A state (r13 ADVICE: warming in session-default /
       // previous query's arm-B state biased arm A's first iteration)
       set(valA); run(name)

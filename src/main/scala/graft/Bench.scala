@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark harness: runs every declared query against
   * SPARK_GRAFT_SF_DIR and prints one JSON line.
   *
@@ -10,35 +8,26 @@ import org.apache.spark.sql.SparkSession
   * let Catalyst prune them) without paying any write-side cost. A warmup
   * pass on the flagship query absorbs JVM/codegen/classloading time so
   * per-query numbers reflect steady state.
+  *
+  * Queries that build a stored or fitted artifact do so through
+  * [[Artifacts]], once per session; every iteration records how many
+  * artifacts it built and the build seconds. A query whose first timed
+  * iteration built an artifact is timed once — a later iteration would
+  * time the cache hit, not the operator — so its time includes the build.
   */
 object Bench {
+  final case class Iteration(seconds: Double, artifactBuilds: Long, artifactBuildSeconds: Double) {
+    def json: String =
+      s"""{"s":$seconds,"artifact_builds":$artifactBuilds,"artifact_build_s":$artifactBuildSeconds}"""
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.execution.topKSortFallbackThreshold", "1048576")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      // see GraftSession for both knobs: driver-side file listing up
-      // to 1024 paths (local FS — a distributed listing JOB per store read
-      // costs more than it saves; object-store clusters set it back down),
-      // and the AQE coalescing floor at Spark's 1m default (r14: the r13
-      // session-wide 64k cost the CC/minhash band more than the pair
-      // scorers gained; those three queries now scope it themselves via
-      // Housekeeping.scopedConf)
-      .config("spark.sql.sources.parallelPartitionDiscovery.threshold",
-        sys.env.getOrElse("SPARK_GRAFT_LIST_PAR", "1024"))
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("SPARK_GRAFT_MIN_PART", "1m"))
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = GraftSession.envCpus
+    val spark = GraftSession.local(cpus)
 
-    def run(name: String): Double = {
+    def run(name: String): Iteration = {
+      val before = Artifacts.stats(spark)
       val t0 = System.nanoTime()
       val elapsed =
         try {
@@ -49,12 +38,13 @@ object Bench {
           System.err.println(s"[bench] $name failed: ${e.getMessage}")
           -1.0
         }
+      val built = Artifacts.stats(spark) - before
       // the block sweep is bench hygiene, not query cost: without it 284
       // runs accumulate never-unpersisted checkpoint blocks (round-3: x6
       // 26 s vs 1 s fresh-JVM), but its driver-side unpersist calls must
       // not bias the measurement, so it runs AFTER elapsed is captured
       Housekeeping.releaseAllBlocks(spark)
-      elapsed
+      Iteration(elapsed, built.builds, built.buildSeconds)
     }
 
     // host contention evidence: three rounds of apparent "regressions"
@@ -65,6 +55,10 @@ object Bench {
       try java.nio.file.Files.readString(java.nio.file.Paths.get("/proc/loadavg"))
         .split(" ").take(3).mkString(",")
       catch { case _: Exception => "" }
+    val commit =
+      try scala.sys.process.Process(Seq("git", "rev-parse", "HEAD"))
+        .!!(scala.sys.process.ProcessLogger(_ => ())).trim
+      catch { case _: Exception => "" }
 
     val loadBefore = loadavg
     val names = SparkEntry.queries.keys.toSeq.sorted
@@ -72,41 +66,31 @@ object Bench {
     // best-of-N steady state: single-shot numbers on a shared box carry
     // ±30% scheduler noise; min over iterations is the standard estimator
     val iters = sys.env.getOrElse("SPARK_GRAFT_BENCH_ITERS", "2").toInt.max(1)
-    // iterations=1 carve-out (r13 verdict what's-wrong #4 / next #9):
-    // these queries memoize their built lifecycle per (applicationId, dir)
-    // BY DESIGN (x55/x58 retain the multi-day artifacts, e1 the shared
-    // flagship panel via retainCheckpoint), so iteration 2+ would time a
-    // cache hit, not the operator — best-of-N must never take a memoized
-    // re-construction as the query's time. One iteration = the honest
-    // build-plus-query cost. (The Stored-artifact queries — x39/x40/x41/
-    // y18 — are NOT carved out: their contract is incremental work against
-    // a pre-existing store, so the steady-state iteration is the declared
-    // measurement; see OPTIMIZATION_r14.md.)
-    val memoizing = Set("x55_tail_composition", "x58_interleaved_takedown",
-      "e1_stability_matrix")
-    val raw = names.map(n =>
-      n -> (1 to (if (memoizing(n)) 1 else iters)).map(_ => run(n)))
-    val results = raw.map { case (n, times) =>
-      val ok = times.filter(_ >= 0)
+    val raw = names.map { n =>
+      val first = run(n)
+      n -> (if (first.artifactBuilds > 0) Seq(first) else first +: (2 to iters).map(_ => run(n)))
+    }
+    val results = raw.map { case (n, runs) =>
+      val ok = runs.map(_.seconds).filter(_ >= 0)
       n -> (if (ok.isEmpty) -1.0 else ok.min)
     }
     // queries that failed on SOME iteration still report their best time,
     // but are named here so flakiness stays visible in the JSON
-    val flaky = raw.collect { case (n, ts) if ts.exists(_ < 0) => s"\"$n\"" }
+    val flaky = raw.collect { case (n, rs) if rs.exists(_.seconds < 0) => s"\"$n\"" }
     val qs = results.map { case (k, v) => s"\"$k\":$v" }.mkString("{", ",", "}")
+    val detail = raw.map { case (n, rs) => s"\"$n\":${rs.map(_.json).mkString("[", ",", "]")}" }
+      .mkString("{", ",", "}")
     val total = results.map(_._2).filter(_ >= 0).sum
+    val head = s""""metric":"total","value":$total,"unit":"sec","sf":"$sfDir","cpus":$cpus,"commit":"$commit","iterations":$iters"""
+    val tail = s""""loadavg_before":[$loadBefore],"loadavg_after":[$loadavg]"""
     val line =
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"sf":"$sfDir","iterations":$iters,"failed_iterations":[${flaky.mkString(",")}],"loadavg_before":[$loadBefore],"loadavg_after":[$loadavg]}"""
+      s"""{$head,"queries":$qs,"runs":$detail,"failed_iterations":[${flaky.mkString(",")}],$tail}"""
     println(line)
-    // sbt wraps stdout in [info] noise the driver can't always strip — also
-    // write the bare JSON line to a file: the env-var path when the driver
-    // asks for one, and unconditionally to fixed repo-relative paths so
-    // the number survives any harness. `bench_full.json` at the repo root
-    // is the STABLE cross-round record (r12 verdict #8): the driver's
-    // BENCH_r{N}.json keeps only the last 2000 chars of output, so
-    // per-query comparison there covers just the tail — this file carries
-    // the complete per-query map and is committed each round, letting the
-    // next round diff every heavy without fresh-JVM re-measurement.
+    // `bench_full.json` at the repo root is the STABLE cross-round record:
+    // the full line above runs to tens of KB and a tail-limited reader of stdout
+    // keeps only its end, so the complete per-query map and every
+    // iteration go to files (the env-var path when set, plus fixed
+    // repo-relative paths).
     val outs = sys.env.get("SPARK_GRAFT_BENCH_OUT").toSeq ++
       Seq("target/bench.json", "bench_full.json")
     outs.foreach { p =>
@@ -120,14 +104,9 @@ object Bench {
         System.err.println(s"[bench] could not write $p: ${e.getMessage}")
       }
     }
-    // r13 verdict: the full line above is ~12 KB (293 per-query entries) and
-    // the driver's record keeps only the final ~2 KB of stdout, so its parse
-    // failed in BOTH r12 and r13 (PERF per-query empty). Emit a compact
-    // summary as the LAST stdout line — small enough that any tail-limited
-    // parser sees one complete JSON object; the per-query map stays in the
-    // full line above and in bench_full.json (committed each round).
-    println(
-      s"""{"metric":"total","value":$total,"unit":"sec","sf":"$sfDir","n_queries":${results.size},"iterations":$iters,"detail":"bench_full.json","loadavg_before":[$loadBefore],"loadavg_after":[$loadavg]}""")
+    // a compact summary as the LAST stdout line — small enough that any
+    // tail-limited parser sees one complete JSON object
+    println(s"""{$head,"n_queries":${results.size},"detail":"bench_full.json",$tail}""")
     spark.stop()
   }
 }

@@ -10,7 +10,10 @@ import org.apache.spark.sql.SparkSession
   * shuffle partitions match local cores instead of the 200 default.
   */
 object GraftSession {
-  def local(cpus: Int = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt): SparkSession = {
+  /** Local core count for every harness: `SPARK_GRAFT_CPUS`, default 4. */
+  def envCpus: Int = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+
+  def local(cpus: Int = envCpus): SparkSession = {
     val spark = SparkSession
       .builder()
       .master(s"local[$cpus]")

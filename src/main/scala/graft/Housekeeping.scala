@@ -21,10 +21,13 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * from lineage if re-executed, and checkpointed frames are rebuilt fresh by
   * the next query construction.
   *
-  * [[retainCheckpoint]] is the deliberate exception: a frame shared across
-  * MANY queries in one process (the flagship panel) registers its blocks as
-  * process-lifetime so the per-query sweep skips them. The registry holds
-  * RDD ids, not references — a handful of ints.
+  * [[retainCheckpoint]] is the deliberate exception: an artifact built
+  * once per session through [[Artifacts.getOrBuild]] and read by later
+  * queries (the flagship panel, multi-day tail artifacts) registers the
+  * checkpoint blocks it keeps as process-lifetime so the per-query sweep
+  * skips them. Each build chooses which of its frames outlive the sweep;
+  * everything else it leaves behind is swept. The registry holds RDD ids,
+  * not references — a handful of ints.
   */
 object Housekeeping {
 

@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.scheduler._
-import org.apache.spark.sql.SparkSession
 
 /** Optimization-round measurement harness (guide §1): runs named queries
   * through the noop sink like Bench, but with a SparkListener that
@@ -11,7 +10,7 @@ import org.apache.spark.sql.SparkSession
   * event-log replay. Gaps between jobs are driver/planning time.
   *
   * Usage: runMain graft.Profile <tableDir> <query> [query...]
-  * Env: SPARK_GRAFT_CPUS (default 8). Second run of each query is the
+  * Env: SPARK_GRAFT_CPUS (default 4, see GraftSession). Second run of each query is the
   * profiled one (first absorbs codegen/artifact builds, mirroring Bench's
   * best-of-N steady state).
   */
@@ -23,21 +22,7 @@ object Profile {
   def main(args: Array[String]): Unit = {
     require(args.length >= 2, "usage: Profile <tableDir> <query> [query...]")
     val (dir, names) = (args.head, args.tail.toSeq)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.execution.topKSortFallbackThreshold", "1048576")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.sources.parallelPartitionDiscovery.threshold",
-        sys.env.getOrElse("SPARK_GRAFT_LIST_PAR", "1024"))
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("SPARK_GRAFT_MIN_PART", "1m"))
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .getOrCreate()
+    val spark = GraftSession.local()
     spark.sparkContext.setLogLevel("ERROR")
 
     val jobs = new java.util.concurrent.ConcurrentHashMap[Int, JobRow]()

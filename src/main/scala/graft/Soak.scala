@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Scale-soak harness: times a named subset of the declared queries against
   * an arbitrary table directory (e.g. the 10× generated corpus under
   * `target/soak10`) through the noop sink — the measurement behind
@@ -15,22 +13,7 @@ object Soak {
   def main(args: Array[String]): Unit = {
     require(args.length >= 2, "usage: Soak <tableDir> <query> [query...]")
     val (dir, names) = (args.head, args.tail.toSeq)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.execution.topKSortFallbackThreshold", "1048576")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.sources.parallelPartitionDiscovery.threshold",
-        sys.env.getOrElse("SPARK_GRAFT_LIST_PAR", "1024"))
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("SPARK_GRAFT_MIN_PART", "1m"))
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
 
     def run(name: String): Double = {
       val t0 = System.nanoTime()

@@ -73,7 +73,6 @@ object Tables {
     * their parallelism from the shuffle anyway, so the helper is the
     * identity for them, enforced by a narrow-plan walk (no job). */
   def fanOut(df: DataFrame): DataFrame = {
-    if (sys.props.getOrElse("graft.fanout", "on") == "off") return df
     import org.apache.spark.sql.catalyst.plans.logical._
     val narrowOnly = df.queryExecution.optimizedPlan.collectFirst {
       case n if !(n.isInstanceOf[LeafNode] || n.isInstanceOf[Project] ||

@@ -1,7 +1,6 @@
 package graft
 
 import graft.operators.Vocab
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Tokenizer-fit soak at PRODUCTION knobs — the measurement behind the
@@ -20,18 +19,7 @@ object VocabSoak {
   def main(args: Array[String]): Unit = {
     require(args.length >= 1, "usage: VocabSoak <tableDir>")
     val dir = args.head
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.execution.topKSortFallbackThreshold", "1048576")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
 
     val docs = Tables.documents(spark, dir)
     // warmup: JVM + codegen + parquet reader init, and one tiny fit so the

@@ -486,21 +486,9 @@ object Dedup {
     var prevSum = if (numericIds) labelSum(labels.df) else java.math.BigDecimal.ZERO
     var changed = true
     var i = 0
-    // hops per materialized round (r14): TRIED AND MEASURED SLOWER at 2.
-    // Hypothesis was that CC consumers are job-count bound (x8's profile:
-    // 54 jobs, 1.2 s of ideal compute inside 7.4 s wall), so fusing two
-    // min-propagation hops per checkpoint should halve rounds/probes/
-    // checkpoints, with ReuseExchange shipping sym once per fused round.
-    // The in-JVM A/B (prop:graft.cchops=2|1, min of 2, sf0.1) said NO,
-    // uniformly: x8 3.69 vs 3.43, x25 4.79 vs 4.58, z58 4.89 vs 4.25,
-    // x30 11.22 vs 10.94, m7 10.80 vs 10.00, x39 13.32 vs 10.03,
-    // x47 11.98 vs 11.42 (z47 3.06 vs 3.30 the lone small win) — the
-    // doubled per-round plan costs more in planning/AQE re-optimization
-    // than the saved jobs return; the binding overhead is PLAN SIZE per
-    // action, not job count. Default stays 1; the knob remains for
-    // cluster-scale tuning, where sym is corpus-sized and shipping it
-    // once per two hops is the dominant term instead.
-    val hops = math.max(1, sys.props.getOrElse("graft.cchops", "1").toInt)
+    // one hop per materialized round: fusing two hops per checkpoint was
+    // measured uniformly slower (plan size per action, not job count, is
+    // the binding overhead — OPTIMIZATION_r14.md, "CC fused double-hops")
     def hop(l: DataFrame): DataFrame = {
       val nbrMin = sym.df.select(col("dst").as("node"), col("src"))
         .join(l, "node")
@@ -511,34 +499,24 @@ object Dedup {
           least(col("cluster"), coalesce(col("nbr_min"), col("cluster"))).as("cluster"))
     }
     while (changed && i < maxIters) {
-      val nHops = math.min(hops, maxIters - i)
-      def round = (1 to nHops).foldLeft(labels.df)((l, _) => hop(l))
       val next =
         if (numericIds) {
           // lazy pin + probe-as-materializer (r13): the sum probe runs
           // every round anyway, so let IT materialize the checkpoint —
           // one job per round instead of an eager-checkpoint job plus a
           // probe job. Safe here because the probe ALWAYS runs before
-          // the parent frame is freed below. prop-gated (r14) so the
-          // in-JVM A/B can measure it per consumer: graft.cclazy=off
-          // restores the r12 eager pin + separate probe job.
-          val nx =
-            if (sys.props.getOrElse("graft.cclazy", "on") != "off")
-              Housekeeping.pinLazy(spark)(round)
-            else Housekeeping.pin(spark)(round)
+          // the parent frame is freed below.
+          val nx = Housekeeping.pinLazy(spark)(hop(labels.df))
           val nextSum = labelSum(nx.df)
           changed = nextSum.compareTo(prevSum) != 0
           prevSum = nextSum
           nx
         } else {
-          // string-keyed path probes at most every other HOP, so the frame
-          // must be materialized EAGERLY — a lazy pin would still hold the
-          // parent's blocks when labels.free() runs. With fused rounds
-          // (nHops >= 2) every round already spans two hops, so each
-          // round is probed; single-hop rounds keep the every-other-round
-          // cadence.
-          val nx = Housekeeping.pin(spark)(round)
-          if (nHops >= 2 || i % 2 == 1 || i + nHops >= maxIters) {
+          // string-keyed path probes every other round, so the frame must
+          // be materialized EAGERLY — a lazy pin would still hold the
+          // parent's blocks when labels.free() runs
+          val nx = Housekeeping.pin(spark)(hop(labels.df))
+          if (i % 2 == 1 || i + 1 >= maxIters) {
             changed = nx.df.as("n").join(labels.df.as("p"), col("n.node") === col("p.node"))
               .filter(col("n.cluster") =!= col("p.cluster")).count() > 0
           }
@@ -546,7 +524,7 @@ object Dedup {
         }
       labels.free()
       labels = next
-      i += nHops
+      i += 1
     }
     // `changed` is accurate at exit (probed every round): true means a
     // component with diameter > maxIters exists and the labels below are

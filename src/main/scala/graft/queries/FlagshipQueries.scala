@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.Tables
+import graft.{Artifacts, Tables}
 import graft.pipelines.MetricPipelines
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -117,10 +117,8 @@ object FlagshipQueries {
     * The cross-PROCESS form of the same idea is
     * [[materializedStabilityMatrices]]: write the panel to a
     * season-partitioned Store table once, filter it per variant. */
-  private val panelCache =
-    scala.collection.concurrent.TrieMap.empty[(String, String), DataFrame]
   private def sharedPanel(s: SparkSession, d: String): DataFrame =
-    panelCache.getOrElseUpdate((s.sparkContext.applicationId, d),
+    Artifacts.getOrBuild(s, d, "e_panel")(
       graft.Housekeeping.retainCheckpoint(s)(panel(s, d)))
 
   // ---- oracle SQL (generated; mirrors the Spark DAG stage by stage) ----

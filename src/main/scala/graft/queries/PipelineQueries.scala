@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.Tables
+import graft.{Artifacts, Tables}
 import graft.operators.{Dedup, Multimodal, Relational, Sampling, Similarity, TextAnalysis}
 import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -92,17 +92,10 @@ object PipelineQueries {
     minhashSigOf(Tables.documents(s, d))
 
   private def minhashSigOf(docs: org.apache.spark.sql.DataFrame) = {
-    // fanOut NOT applied by default (r13 A/B: the added exchange lost —
-    // x2 −0.17 s, x39 −1.3 s, x8/x24/x53/x9b −0.2–0.5 s with it off).
-    // That measurement ran under the r13 session-wide 64k AQE floor; the
-    // r14 profile still shows a ~2.5 s single-task signature stage at the
-    // head of every minhash consumer, so the decision is re-A/B-able
-    // under the 1m default via prop graft.fanout.sig (default off).
-    val spread =
-      if (sys.props.getOrElse("graft.fanout.sig", "off") == "on")
-        graft.Tables.fanOut(docs)
-      else docs
-    val sh = spread
+    // no fanOut here: the added exchange lost in the r13 and r14 in-JVM
+    // A/Bs (x2 −0.17 s, x39 −1.3 s, x8/x24/x53/x9b −0.2–0.5 s with it
+    // off; OPTIMIZATION_r14.md)
+    val sh = docs
       .select(col("doc_id"), split(col("text"), " ").as("ws"))
       .filter(size(col("ws")) >= 3)
       .select(col("doc_id"), explode(TextAnalysis.shinglesExpr("ws", 3)).as("sh"))
@@ -1475,9 +1468,6 @@ object PipelineQueries {
       |  CAST(n_straddling AS DOUBLE) / n_docs AS straddle_frac
       |FROM g ORDER BY seq_len""".stripMargin)
 
-  private val x50Built = new java.util.concurrent.ConcurrentHashMap[
-    String, org.apache.spark.sql.DataFrame]()
-
   /** x50: TAKEDOWN PROPAGATION into the boilerplate inventory — x44's
     * deletion E2 extended to x46/x48's artifact, by its production rule:
     * counts UNLEARN by subtract-merge (the removed docs' segment counts
@@ -1504,20 +1494,17 @@ object PipelineQueries {
             TextAnalysis.hash32b(col("chunk_text")).as("h2"))
       val fullCnt = segsOf(docs).groupBy("h1", "h2").agg(count(lit(1)).as("df"))
       val stored = if (planOnly) fullCnt else
-        x50Built.computeIfAbsent(s"${s.sparkContext.applicationId}:$d", _ => {
-          val path = s"${System.getProperty("java.io.tmpdir")}/graft_etl/" +
-            s"segfull_${s.sparkContext.applicationId}_" +
-            Integer.toHexString(d.hashCode)
+        Artifacts.getOrBuild(s, d, "x50_segment_counts") {
+          val path = Artifacts.scratchPath(s, d, "segfull")
           val store = graft.sources.Store(s, path, "part")
           store.destroy()
           val withPart = fullCnt.withColumn("part", pmod(col("h1"), lit(8)))
           store.append(withPart)
-          sys.addShutdownHook { try store.destroy() catch { case _: Exception => () } }
           val back = readOrEmpty(store, withPart)
           store.trackFrom(back,
             (col("h1") % M) * (col("h2") % M) % M * (col("df") % M) % M)
           back.drop("part")
-        })
+        }
       val removedCnt = segsOf(docs.filter(col("doc_id") % 13 === 0))
         .groupBy("h1", "h2").agg(count(lit(1)).as("rm"))
       val merged = stored
@@ -1593,9 +1580,6 @@ object PipelineQueries {
        |  g.inv_after, g.freq_checksum, nl.n_left_inventory
        |ORDER BY d.source""".stripMargin)
 
-  private val x52Built = new java.util.concurrent.ConcurrentHashMap[
-    String, org.apache.spark.sql.DataFrame]()
-
   /** x52: TAKEDOWN RE-MATERIALIZATION — x50's deletion E2 completed.
     * x50 computed WHO is over-scrubbed (retained docs whose stored
     * scrubbed bytes dropped a segment that has since LEFT the
@@ -1637,17 +1621,14 @@ object PipelineQueries {
       val scrubBuilt = docs.select(col("doc_id"), col("source"))
         .join(scrubAgainst(docs, invBefore), Seq("doc_id"), "left")
       val stored = if (planOnly) scrubBuilt else
-        x52Built.computeIfAbsent(s"${s.sparkContext.applicationId}:$d", _ => {
-          val path = s"${System.getProperty("java.io.tmpdir")}/graft_etl/" +
-            s"scrubbed_${s.sparkContext.applicationId}_" +
-            Integer.toHexString(d.hashCode)
+        Artifacts.getOrBuild(s, d, "x52_scrubbed") {
+          val path = Artifacts.scratchPath(s, d, "scrubbed")
           val store = graft.sources.Store(s, path, "part")
           store.destroy()
           val withPart = scrubBuilt.withColumn("part", pmod(col("doc_id"), lit(8)))
           store.append(withPart)
-          sys.addShutdownHook { try store.destroy() catch { case _: Exception => () } }
           readOrEmpty(store, withPart).drop("part")
-        })
+        }
       val retained = docs.filter(col("doc_id") % 13 =!= 0)
       val removedCnt = segsOf(docs.filter(col("doc_id") % 13 === 0))
         .groupBy("h1", "h2").agg(count(lit(1)).as("rm"))
@@ -1991,8 +1972,6 @@ object PipelineQueries {
       art2: org.apache.spark.sql.DataFrame, probed1: org.apache.spark.sql.DataFrame,
       probed2: org.apache.spark.sql.DataFrame, nTail0: Long, nItemsD1: Long,
       mergeExact: Boolean, resketchMatchesTruth: Boolean)
-  private val x55Cache =
-    new java.util.concurrent.ConcurrentHashMap[String, X55State]()
 
   /** x55: MULTI-DAY TAIL-MAINTENANCE COMPOSITION — x54 proves one ingest
     * day's merge ≡ rebuild; a production corpus runs that merge EVERY day,
@@ -2092,7 +2071,7 @@ object PipelineQueries {
               call_function("graft_cms_estimate", lit(skB),
                 concat_ws(":", col("h1"), col("h2"))))
             .otherwise(lit(0L)))
-        // retainCheckpoint, not pin: these frames live in the x55Cache
+        // retainCheckpoint, not pin: these frames live in x55's artifact
         // across constructions (Bench/Soak run every query twice), so
         // their blocks must survive the per-query releaseAllBlocks sweep —
         // a pinned frame would be unpersisted after run 1 and run 2 would
@@ -2119,13 +2098,10 @@ object PipelineQueries {
         (newArt, probed)
       }
       def stored(day: String, built: org.apache.spark.sql.DataFrame) = {
-        val path = s"${System.getProperty("java.io.tmpdir")}/graft_etl/" +
-          s"tailsplit_${day}_${s.sparkContext.applicationId}_" +
-          Integer.toHexString(d.hashCode)
+        val path = Artifacts.scratchPath(s, d, s"tailsplit_$day")
         val store = graft.sources.Store(s, path, "part")
         store.destroy()
         store.append(built.withColumn("part", pmod(col("h1"), lit(8))))
-        sys.addShutdownHook { try store.destroy() catch { case _: Exception => () } }
         store.read.drop("part")
       }
       val day0 = docs.filter(col("doc_id") % 10 =!= 0 && col("doc_id") % 10 =!= 5)
@@ -2140,8 +2116,7 @@ object PipelineQueries {
           val (a2, p2) = mergeDay(a1, b2, Array.empty[Byte])
           X55State(a0, a1, a2, p1, p2, 0L, 0L, mergeExact = true,
             resketchMatchesTruth = true)
-        } else x55Cache.computeIfAbsent(
-          s"${s.sparkContext.applicationId}:$d", _ => {
+        } else Artifacts.getOrBuild(s, d, "x55_tail_split") {
             val art0 = stored("d0", cntOf(day0))
             val tail0 = art0.filter(col("df") === 1)
             val nTail0 = tail0.count()
@@ -2176,7 +2151,7 @@ object PipelineQueries {
             val resketch = java.util.Arrays.equals(wideStored, wideTruth)
             X55State(art0, art1, art2, probed1, probed2, nTail0, nItemsD1,
               mergeExact, resketch)
-          })
+          }
       val estFlag = when(col("est") >= 1, 1L).otherwise(0L)
       def dayCounts(p: org.apache.spark.sql.DataFrame, cName: String, nName: String) =
         p.agg(
@@ -2273,8 +2248,6 @@ object PipelineQueries {
   private final case class X56State(
       art0: org.apache.spark.sql.DataFrame, art1: org.apache.spark.sql.DataFrame,
       resketchOk: Boolean)
-  private val x56Cache =
-    new java.util.concurrent.ConcurrentHashMap[String, X56State]()
 
   /** x56: TAKEDOWN on the TAIL-SPLIT artifact — the third side of the
     * split-artifact lifecycle triangle (x51 builds it, x54/x55 maintain
@@ -2320,13 +2293,10 @@ object PipelineQueries {
         Option(r.getAs[Array[Byte]]("sk")).getOrElse(Array.empty[Byte])
       }
       def stored(day: String, built: org.apache.spark.sql.DataFrame) = {
-        val path = s"${System.getProperty("java.io.tmpdir")}/graft_etl/" +
-          s"tailtd_${day}_${s.sparkContext.applicationId}_" +
-          Integer.toHexString(d.hashCode)
+        val path = Artifacts.scratchPath(s, d, s"tailtd_$day")
         val store = graft.sources.Store(s, path, "part")
         store.destroy()
         store.append(built.withColumn("part", pmod(col("h1"), lit(8))))
-        sys.addShutdownHook { try store.destroy() catch { case _: Exception => () } }
         store.read.drop("part")
       }
       def subtracted(art: org.apache.spark.sql.DataFrame) = {
@@ -2341,8 +2311,7 @@ object PipelineQueries {
         if (planOnly) {
           val a0 = cntOf(docs)
           X56State(a0, subtracted(a0), resketchOk = true)
-        } else x56Cache.computeIfAbsent(
-          s"${s.sparkContext.applicationId}:$d", _ => {
+        } else Artifacts.getOrBuild(s, d, "x56_tail_takedown") {
             val art0 = stored("t0", cntOf(docs))
             val art1 = stored("t1", subtracted(art0))
             // CMS is add-only: the takedown repair IS x55's re-sketch
@@ -2352,7 +2321,7 @@ object PipelineQueries {
             val scratch = sketchBytes(
               cntOf(docs.filter(!removedPred)).filter(col("df") === 1))
             X56State(art0, art1, java.util.Arrays.equals(rebuilt, scratch))
-          })
+          }
       val before = st.art0.agg(
         sum(when(col("df") >= 2, 1L).otherwise(0L)).as("n_exact_before"),
         sum(when(col("df") === 1, 1L).otherwise(0L)).as("n_tail_before"))
@@ -2421,8 +2390,6 @@ object PipelineQueries {
       art1: org.apache.spark.sql.DataFrame, art1t: org.apache.spark.sql.DataFrame,
       art2: org.apache.spark.sql.DataFrame, probed1: org.apache.spark.sql.DataFrame,
       probed2: org.apache.spark.sql.DataFrame, resketchOk: Boolean)
-  private val x58Cache =
-    new java.util.concurrent.ConcurrentHashMap[String, X58State]()
 
   /** x58: TAKEDOWN INTERLEAVED WITH THE MULTI-DAY COMPOSITION — the
     * lifecycle triangle's last untested ORDERING (x51 builds, x54/x55
@@ -2475,13 +2442,10 @@ object PipelineQueries {
         Option(r.getAs[Array[Byte]]("sk")).getOrElse(Array.empty[Byte])
       }
       def stored(day: String, built: org.apache.spark.sql.DataFrame) = {
-        val path = s"${System.getProperty("java.io.tmpdir")}/graft_etl/" +
-          s"tailint_${day}_${s.sparkContext.applicationId}_" +
-          Integer.toHexString(d.hashCode)
+        val path = Artifacts.scratchPath(s, d, s"tailint_$day")
         val store = graft.sources.Store(s, path, "part")
         store.destroy()
         store.append(built.withColumn("part", pmod(col("h1"), lit(8))))
-        sys.addShutdownHook { try store.destroy() catch { case _: Exception => () } }
         store.read.drop("part")
       }
       def mergeDay(art: org.apache.spark.sql.DataFrame,
@@ -2497,7 +2461,7 @@ object PipelineQueries {
               call_function("graft_cms_estimate", lit(skB),
                 concat_ws(":", col("h1"), col("h2"))))
             .otherwise(lit(0L)))
-        // retainCheckpoint (x55's rule): these frames live in x58Cache
+        // retainCheckpoint (x55's rule): these frames live in x58's artifact
         // across constructions, so their blocks must survive the
         // per-query releaseAllBlocks sweep
         val probed = if (planOnly) probed0
@@ -2540,8 +2504,7 @@ object PipelineQueries {
           val a1t = subtracted(a1)
           val (a2, p2) = mergeDay(a1t, b2, Array.empty[Byte])
           X58State(a1, a1t, a2, p1, p2, resketchOk = true)
-        } else x58Cache.computeIfAbsent(
-          s"${s.sparkContext.applicationId}:$d", _ => {
+        } else Artifacts.getOrBuild(s, d, "x58_tail_interleaved") {
             val art0 = stored("d0", cntOf(day0))
             val sk0 = sketchBytes(art0.filter(col("df") === 1))
             val (newArt1, probed1) = mergeDay(art0, b1, sk0)
@@ -2559,7 +2522,7 @@ object PipelineQueries {
             val (newArt2, probed2) = mergeDay(art1t, b2, sk1t)
             val art2 = stored("d2", newArt2)
             X58State(art1, art1t, art2, probed1, probed2, resketch)
-          })
+          }
       val estFlag = when(col("est") >= 1, 1L).otherwise(0L)
       def dayCounts(p: org.apache.spark.sql.DataFrame, cName: String, nName: String) =
         p.agg(
@@ -2655,8 +2618,6 @@ object PipelineQueries {
       art0: org.apache.spark.sql.DataFrame, artT: org.apache.spark.sql.DataFrame,
       manA: org.apache.spark.sql.DataFrame, manB: org.apache.spark.sql.DataFrame,
       epoch: Long, nVersions: Long, servingGen: Long, dup: Long)
-  private val x59Cache =
-    new java.util.concurrent.ConcurrentHashMap[String, X59State]()
 
   /** x59: THE GOVERNED PLATFORM, ONE TICKET END TO END — the r12 verdict's
     * capstone: every governance piece this engine grew separately (s33's
@@ -2808,10 +2769,8 @@ object PipelineQueries {
           X59State(retainedEv, histOf(retainedEv), stateF, g1f, g2f,
             e.filter(tombPred).select("vec_id"), a0, at, manA, manB,
             2L, 1L, 2L, 0L)
-        } else x59Cache.computeIfAbsent(
-          s"${s.sparkContext.applicationId}:$d", _ => {
-          val base = s"${System.getProperty("java.io.tmpdir")}/graft_etl/" +
-            s"platform_${s.sparkContext.applicationId}_${math.abs(d.hashCode)}"
+        } else Artifacts.getOrBuild(s, d, "x59_platform") {
+          val base = Artifacts.scratchPath(s, d, "platform")
           val src = graft.sources.Store(s, s"$base/src", "event_type")
           val hst = graft.sources.Store(s, s"$base/hist", "event_type")
           val stt = graft.sources.Store(s, s"$base/state", "event_type")
@@ -2882,7 +2841,7 @@ object PipelineQueries {
             tmb.read.select("vec_id"), art0, artT,
             mst.read.select("artifact", "coord", "n_rows", "checksum"), manB,
             src.epoch, src.versions.size.toLong, servingGen, dup)
-        })
+        }
       def rows(aggd: org.apache.spark.sql.DataFrame, pairs: (String, String)*) =
         aggd.select(explode(map(pairs.flatMap { case (entry, c) =>
           Seq(lit(entry), col(c).cast(LongType)) }: _*)).as(Seq("entry", "value")))
@@ -3457,27 +3416,22 @@ object PipelineQueries {
        |CROSS JOIN crs
        |ORDER BY b.source""".stripMargin)
 
-  private val x48Built = new java.util.concurrent.ConcurrentHashMap[
-    String, org.apache.spark.sql.DataFrame]()
-
   /** The stored base segment-frequency table for x48: (h1, h2, df) over the
     * base corpus, hash-partitioned and tracked through the Store. */
   private def x48FreqStored(s: SparkSession, d: String,
                             built: org.apache.spark.sql.DataFrame) =
-    x48Built.computeIfAbsent(s"${s.sparkContext.applicationId}:$d", _ => {
-      val path = s"${System.getProperty("java.io.tmpdir")}/graft_etl/" +
-        s"segfreq_${s.sparkContext.applicationId}_${Integer.toHexString(d.hashCode)}"
+    Artifacts.getOrBuild(s, d, "x48_segment_freq") {
+      val path = Artifacts.scratchPath(s, d, "segfreq")
       val store = graft.sources.Store(s, path, "part")
       store.destroy()
       val withPart = built.withColumn("part", pmod(col("h1"), lit(8)))
       store.append(withPart)
-      sys.addShutdownHook { try store.destroy() catch { case _: Exception => () } }
       val back = readOrEmpty(store, withPart)
       val M = lit(2147483647L)
       store.trackFrom(back,
         (col("h1") % M) * (col("h2") % M) % M * (col("df") % M) % M)
       back.drop("part")
-    })
+    }
 
   /** x48: BOILERPLATE-INVENTORY MAINTENANCE — x46's artifact gets the same
     * E2 story every other stored artifact has (x39's map, y18's index,
@@ -4100,9 +4054,6 @@ object PipelineQueries {
     * partition and read back — the artifact a daily dedup increment
     * resolves against (z41/z42's fit→store→serve discipline applied to
     * the dedup side). One build per (session, input dir). */
-  private val x39Built = new java.util.concurrent.ConcurrentHashMap[
-    String, org.apache.spark.sql.DataFrame]()
-
   private def baseMapFit(s: SparkSession, d: String) =
     Dedup.connectedComponents(
       Dedup.lshCandidates(minhashSig(s, d).filter(col("doc_id") % 10 =!= 0),
@@ -4110,23 +4061,21 @@ object PipelineQueries {
       Tables.documents(s, d).filter(col("doc_id") % 10 =!= 0), "doc_id")
 
   private def baseMapPath(s: SparkSession, d: String) =
-    s"${System.getProperty("java.io.tmpdir")}/graft_etl/" +
-      s"basemap_${s.sparkContext.applicationId}_${Integer.toHexString(d.hashCode)}"
+    Artifacts.scratchPath(s, d, "basemap")
 
   private def baseMapStored(s: SparkSession, d: String) =
-    x39Built.computeIfAbsent(s"${s.sparkContext.applicationId}:$d", _ => {
+    Artifacts.getOrBuild(s, d, "x39_base_map") {
       val store = graft.sources.Store(s, baseMapPath(s, d), "part")
       store.destroy()
       val built = baseMapFit(s, d)
         .select("doc_id", "cluster_id")
         .withColumn("part", pmod(hash(col("doc_id")), lit(8)))
       store.appendVersioned(built) // (epoch 1, v1) — x42's manifest coordinate
-      sys.addShutdownHook { try store.destroy() catch { case _: Exception => () } }
       val back = readOrEmpty(store, built)
       val M = lit(2147483647L)
       store.trackFrom(back, (col("doc_id") % M) * (col("cluster_id") % M) % M)
       back.drop("part")
-    })
+    }
 
   /** x39: ARRIVAL RESOLUTION report — the daily-ingest artifact on top of
     * x30's incremental exactness: the base corpus's canonical map is a
@@ -4205,30 +4154,25 @@ object PipelineQueries {
     * through the Store: the KN bigram count table sharded by prev-hash
     * (knModelStored's layout at the ingest split) and the per-lang
     * discriminator coefficients (z42's snapshot discipline). One build
-    * per (session, input dir); y3d's cache-and-shutdown-hook rules. */
-  private val x40LmBuilt = new java.util.concurrent.ConcurrentHashMap[
-    String, org.apache.spark.sql.DataFrame]()
-
+    * per (session, input dir) through Artifacts, y3d's rules. */
   private def x40LmPath(s: SparkSession, d: String) =
-    s"${System.getProperty("java.io.tmpdir")}/graft_etl/" +
-      s"ingest_lm_${s.sparkContext.applicationId}_${Integer.toHexString(d.hashCode)}"
+    Artifacts.scratchPath(s, d, "ingest_lm")
 
   private def x40LmStored(s: SparkSession, d: String) =
-    x40LmBuilt.computeIfAbsent(s"${s.sparkContext.applicationId}:$d", _ => {
+    Artifacts.getOrBuild(s, d, "x40_lm_model") {
       val store = graft.sources.Store(s, x40LmPath(s, d), "part")
       store.destroy()
       val built = graft.operators.Lm.bigramCounts(
           Tables.documents(s, d).filter(col("doc_id") % 10 =!= 0))
         .withColumn("part", pmod(hash(col("prev")), lit(8)))
       store.appendVersioned(built) // (epoch 1, v1) — x42's manifest coordinate
-      sys.addShutdownHook { try store.destroy() catch { case _: Exception => () } }
       val back = readOrEmpty(store, built)
       val M = lit(2147483647L)
       store.trackFrom(back,
         (TextAnalysis.hash32(col("prev")) * 31 + TextAnalysis.hash32(col("cur"))) % M
           * (col("n_bg") % M) % M)
       back.drop("part")
-    })
+    }
 
   private def x40ClsFit(docs: org.apache.spark.sql.DataFrame) =
     Relational.logisticIrls(
@@ -4239,20 +4183,15 @@ object PipelineQueries {
         col("b1").cast("decimal(12,4)").cast("double").as("b1s"),
         col("b2").cast("decimal(12,4)").cast("double").as("b2s"))
 
-  private val x40ClsBuilt = new java.util.concurrent.ConcurrentHashMap[
-    String, org.apache.spark.sql.DataFrame]()
-
   private def x40ClsStored(s: SparkSession, d: String) =
-    x40ClsBuilt.computeIfAbsent(s"${s.sparkContext.applicationId}:$d", _ => {
-      val path = s"${System.getProperty("java.io.tmpdir")}/graft_etl/" +
-        s"ingest_cls_${s.sparkContext.applicationId}_${Integer.toHexString(d.hashCode)}"
+    Artifacts.getOrBuild(s, d, "x40_cls_model") {
+      val path = Artifacts.scratchPath(s, d, "ingest_cls")
       val store = graft.sources.Store(s, path, "part")
       store.destroy()
       store.append(x40ClsFit(Tables.documents(s, d))
         .withColumn("part", col("lang")))
-      sys.addShutdownHook { try store.destroy() catch { case _: Exception => () } }
       store.read.drop("part")
-    })
+    }
 
   /** x40: THE DAILY-INGEST CAPSTONE — every arrival-path rung composed as
     * the ONE job a production corpus actually runs each day, entirely
@@ -5040,8 +4979,6 @@ object PipelineQueries {
     * eigenvalue-allocated across the 8 PQ subspaces. Cached like y3d's
     * fitted index: Bench constructs every query twice and must not
     * re-run the Gram pass. */
-  private val y13Rotations = new java.util.concurrent.ConcurrentHashMap[
-    String, (Array[Array[Double]], org.apache.spark.sql.DataFrame)]()
 
   /** Returns (rotation, rotated corpus). The rotated frame is retain-
     * checkpointed (process-lifetime, exempt from the bench block sweep):
@@ -5054,7 +4991,7 @@ object PipelineQueries {
     * production contract either way. */
   private def y13RotationFor(s: SparkSession, d: String)
       : (Array[Array[Double]], org.apache.spark.sql.DataFrame) =
-    y13Rotations.computeIfAbsent(s"${s.sparkContext.applicationId}:$d", _ => {
+    Artifacts.getOrBuild(s, d, "y13_rotation") {
       val mixed = y13Mixed(s, d)
       val rows = Similarity.gramUpper(mixed, "mvec")
         .select("i", "j", "gram").collect()
@@ -5063,7 +5000,7 @@ object PipelineQueries {
       val er = graft.Housekeeping.retainCheckpoint(s)(
         mixed.withColumn("rvec", Similarity.rotateVec("mvec", r)))
       (r, er)
-    })
+    }
 
   /** y13: the Gram matrix CONSUMED — OPQ-rotated product quantization
     * graded against raw PQ at equal code budget on the y8 recall harness,
@@ -5187,17 +5124,14 @@ object PipelineQueries {
       |FROM embeddings WHERE vec_id % 50 = 0 AND vec_id < 1000""".stripMargin)
 
   /** One stored rotated-PQ index per (session, input dir) — y3d's
-    * cache-and-shutdown-hook discipline for the OPQ-rotated serve table:
+    * build-once discipline for the OPQ-rotated serve table:
     * coarse-assign the ROTATED corpus, PQ-encode in rotated space, and
     * persist the 8-byte code rows through the Store partitioned by cell
     * (the read side prunes to probed cells; candidate vectors are never
     * read at serve time — the whole point of a PQ index on 100 TB). */
-  private val y3fBuilt = new java.util.concurrent.ConcurrentHashMap[
-    String, org.apache.spark.sql.DataFrame]()
-
   private def y3fStoredCodes(s: SparkSession, d: String,
                              er: org.apache.spark.sql.DataFrame) =
-    y3fBuilt.computeIfAbsent(s"${s.sparkContext.applicationId}:$d", _ => {
+    Artifacts.getOrBuild(s, d, "y3f_opq_index") {
       val anchors = er.filter(col("vec_id") < IvfCells)
         .select(col("vec_id").as("anchor_id"), col("rvec").as("anchor_vec"))
       val cb = er.filter(col("vec_id") < 16)
@@ -5206,14 +5140,12 @@ object PipelineQueries {
         .select(col("vec_id"), col("rvec"), col("cell"))
       val codes = Similarity.pqEncode(assigned, cb, "vec_id", "rvec",
         m = 8, subDim = 8, carryCols = Seq("cell"))
-      val path = s"${System.getProperty("java.io.tmpdir")}/graft_etl/" +
-        s"opq_index_${s.sparkContext.applicationId}_${Integer.toHexString(d.hashCode)}"
+      val path = Artifacts.scratchPath(s, d, "opq_index")
       val store = graft.sources.Store(s, path, "cell")
       store.destroy()
       store.append(codes)
-      sys.addShutdownHook { try store.destroy() catch { case _: Exception => () } }
       store.read
-    })
+    }
 
   /** y3f: the fitted STORE/SERVE index rotated — the second production
     * deployment (y3d's lifecycle with OPQ + PQ codes as the persisted
@@ -5557,13 +5489,10 @@ object PipelineQueries {
     * The cached anchors are COLLECTED to a driver-local frame (8 rows,
     * broadcast-sized by definition): the fit's localCheckpoint blocks are
     * swept by `Housekeeping.releaseAllBlocks` between bench iterations, so
-    * a cached frame must not reference them. The tmp store is destroyed by
-    * a JVM shutdown hook registered once per build. */
-  private val y3dBuilt = new java.util.concurrent.ConcurrentHashMap[
-    String, (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame)]()
-
+    * a cached frame must not reference them. The tmp store is deleted at
+    * JVM exit ([[graft.Artifacts.scratchPath]]). */
   private def y3dIndexAndAnchors(s: SparkSession, d: String) =
-    y3dBuilt.computeIfAbsent(s"${s.sparkContext.applicationId}:$d", _ => {
+    Artifacts.getOrBuild(s, d, "y3d_ivf_fitted") {
       val e = Tables.embeddings(s, d)
       val seed = e.filter(col("vec_id") < IvfCells)
         .select(col("vec_id").as("anchor_id"), col("embedding").as("anchor_vec"))
@@ -5573,18 +5502,16 @@ object PipelineQueries {
       // verifying the same SF concurrently must not destroy()/append the
       // same store out from under each other's lazy read-back (hex of the
       // raw hash — math.abs would stay negative on Int.MinValue)
-      val path = s"${System.getProperty("java.io.tmpdir")}/graft_etl/" +
-        s"ivf_fitted_${s.sparkContext.applicationId}_${Integer.toHexString(d.hashCode)}"
+      val path = Artifacts.scratchPath(s, d, "ivf_fitted")
       val store = graft.sources.Store(s, path, "cell")
       store.destroy()
       store.append(Similarity.ivfAssign(e, fit.anchors, "vec_id", "embedding")
         .withColumn("nrm", Similarity.norm("embedding"))
         .drop("cell_d2"))
-      sys.addShutdownHook { try store.destroy() catch { case _: Exception => () } }
       val localAnchors = s.createDataFrame(
         java.util.Arrays.asList(fit.anchors.collect(): _*), fit.anchors.schema)
       (store.read, localAnchors)
-    })
+    }
 
   private val y3dKnnIvfFitted = Q(
     (s, d) => {
@@ -6002,30 +5929,25 @@ object PipelineQueries {
     * index lands cell-partitioned, the arrivals are assigned against the
     * SAME anchors (broadcast argmin — the base table is never re-read or
     * re-assigned) and appended as new files into their cell partition
-    * directories. Cache + shutdown-hook discipline as y3d. */
-  private val y18Built = new java.util.concurrent.ConcurrentHashMap[
-    String, org.apache.spark.sql.DataFrame]()
-
+    * directories. Built once, as y3d. */
   private def y18Anchors(e: org.apache.spark.sql.DataFrame) =
     e.filter(col("vec_id") >= 1 && col("vec_id") <= IvfCells)
       .select(col("vec_id").as("anchor_id"), col("embedding").as("anchor_vec"))
 
   private def y18StoredIndex(s: SparkSession, d: String) =
-    y18Built.computeIfAbsent(s"${s.sparkContext.applicationId}:$d", _ => {
+    Artifacts.getOrBuild(s, d, "y18_ivf_index") {
       val e = Tables.embeddings(s, d)
       val anchors = y18Anchors(e)
       def asg(pred: org.apache.spark.sql.Column) =
         Similarity.ivfAssign(e.filter(pred), anchors, "vec_id", "embedding")
           .select(col("vec_id"), col("cell"), col("cell_d2"))
-      val path = s"${System.getProperty("java.io.tmpdir")}/graft_etl/" +
-        s"ivf_index_${s.sparkContext.applicationId}_${Integer.toHexString(d.hashCode)}"
+      val path = Artifacts.scratchPath(s, d, "ivf_index")
       val store = graft.sources.Store(s, path, "cell")
       store.destroy()
       store.append(asg(col("vec_id") % 10 =!= 0)) // the base build
       store.append(asg(col("vec_id") % 10 === 0)) // the daily increment
-      sys.addShutdownHook { try store.destroy() catch { case _: Exception => () } }
       readOrEmpty(store, asg(lit(false)))
-    })
+    }
 
   /** y18: INDEX APPEND — the ANN store's E2, x39/x41's proof style on the
     * vector side: y15/y16/y17 MEASURE the aging index, this query LANDS
@@ -6119,30 +6041,24 @@ object PipelineQueries {
        |LEFT JOIN neg ON neg.q_id = a.q_id
        |ORDER BY a.q_id""".stripMargin)
 
-  private val x47Built = new java.util.concurrent.ConcurrentHashMap[
-    String, org.apache.spark.sql.DataFrame]()
-
   /** One day's canonical-map store round-trip for x47: land the map
     * through a tracked, hash-partitioned Store and hand back the re-read
     * frame — the next day's resolution must consume the ARTIFACT, not the
     * lineage that built it. */
   private def x47Stored(s: SparkSession, d: String, day: String,
                         built: org.apache.spark.sql.DataFrame) =
-    x47Built.computeIfAbsent(s"${s.sparkContext.applicationId}:$d:$day", _ => {
-      val path = s"${System.getProperty("java.io.tmpdir")}/graft_etl/" +
-        s"replaymap_${day}_${s.sparkContext.applicationId}_" +
-        Integer.toHexString(d.hashCode)
+    Artifacts.getOrBuild(s, d, s"x47_replay_map_$day") {
+      val path = Artifacts.scratchPath(s, d, s"replaymap_$day")
       val store = graft.sources.Store(s, path, "part")
       store.destroy()
       val withPart = built.select("doc_id", "cluster_id")
         .withColumn("part", pmod(hash(col("doc_id")), lit(8)))
       store.append(withPart)
-      sys.addShutdownHook { try store.destroy() catch { case _: Exception => () } }
       val back = readOrEmpty(store, withPart)
       val M = lit(2147483647L)
       store.trackFrom(back, (col("doc_id") % M) * (col("cluster_id") % M) % M)
       back.drop("part")
-    })
+    }
 
   /** x47: TWO-WAVE INGEST REPLAY — the proof that the incremental arrival
     * loop COMPOSES: x39/x40 show one stored-artifact resolution step lands
@@ -8100,26 +8016,21 @@ object PipelineQueries {
     * key-hash sharding is how a billion-row bigram table co-locates with
     * its scorer join), then read back: the serve side never re-derives
     * counts from training text. One build per (session, input dir) —
-    * y3d's cache-and-shutdown-hook discipline, same plan-only escape for
+    * y3d's build-once discipline, same plan-only escape for
     * the registry-wide plan sweeps. */
-  private val z41Built = new java.util.concurrent.ConcurrentHashMap[
-    String, org.apache.spark.sql.DataFrame]()
-
   private def knBigramCounts(docs: org.apache.spark.sql.DataFrame) =
     graft.operators.Lm.bigramCounts(docs)
 
   private def knModelStored(s: SparkSession, d: String) =
-    z41Built.computeIfAbsent(s"${s.sparkContext.applicationId}:$d", _ => {
-      val path = s"${System.getProperty("java.io.tmpdir")}/graft_etl/" +
-        s"kn_model_${s.sparkContext.applicationId}_${Integer.toHexString(d.hashCode)}"
+    Artifacts.getOrBuild(s, d, "z41_kn_model") {
+      val path = Artifacts.scratchPath(s, d, "kn_model")
       val store = graft.sources.Store(s, path, "part")
       store.destroy()
       store.append(knBigramCounts(
           Tables.documents(s, d).filter(col("doc_id") % 2 === 0))
         .withColumn("part", pmod(hash(col("prev")), lit(8))))
-      sys.addShutdownHook { try store.destroy() catch { case _: Exception => () } }
       store.read.drop("part")
-    })
+    }
 
   /** Score `docs` against a FITTED bigram count model (training text not
     * required — the production shape of CCNet-style perplexity filtering,
@@ -8242,25 +8153,20 @@ object PipelineQueries {
     * streaming gate — same build + Store cache the declared queries use). */
   private[graft] def clsModel(s: SparkSession, d: String) = clsModelStored(s, d)
 
-  private val z42Built = new java.util.concurrent.ConcurrentHashMap[
-    String, org.apache.spark.sql.DataFrame]()
-
   /** The fitted discriminator persisted through the Store (lang →
     * snapshot coefficients, partitioned by lang) and read back — the
     * serve side never re-derives weights from training text. Same
-    * cache-and-shutdown-hook discipline and plan-only escape as z41's
+    * build-once discipline and plan-only escape as z41's
     * bigram model. */
   private def clsModelStored(s: SparkSession, d: String) =
-    z42Built.computeIfAbsent(s"${s.sparkContext.applicationId}:$d", _ => {
-      val path = s"${System.getProperty("java.io.tmpdir")}/graft_etl/" +
-        s"cls_model_${s.sparkContext.applicationId}_${Integer.toHexString(d.hashCode)}"
+    Artifacts.getOrBuild(s, d, "z42_cls_model") {
+      val path = Artifacts.scratchPath(s, d, "cls_model")
       val store = graft.sources.Store(s, path, "part")
       store.destroy()
       store.append(clsModelFit(Tables.documents(s, d))
         .withColumn("part", col("lang")))
-      sys.addShutdownHook { try store.destroy() catch { case _: Exception => () } }
       store.read.drop("part")
-    })
+    }
 
   /** z42: FITTED quality classifier — train/score separation for the
     * learned-discriminator gate (the GPT-3/CCNet companion to z41's LM
@@ -8460,10 +8366,8 @@ object PipelineQueries {
     * write costs one extra scan but survives executor loss and is exactly
     * what a production curation DAG does between its gate stage and its
     * mix/edit stages. Partitioned by source so downstream per-source
-    * consumers get static pruning. Shutdown hook cleans the table up
+    * consumers get static pruning. The table is deleted at JVM exit
     * (y3d's discipline). */
-  private val v5SurvBuilt = new java.util.concurrent.ConcurrentHashMap[
-    String, org.apache.spark.sql.DataFrame]()
 
   /** Read back a just-appended store table, tolerating the EMPTY artifact:
     * a zero-row append writes no parquet data files (only _SUCCESS), so
@@ -8479,21 +8383,19 @@ object PipelineQueries {
     }
 
   private def v5SurvPath(s: SparkSession, d: String) =
-    s"${System.getProperty("java.io.tmpdir")}/graft_etl/" +
-      s"survivors_${s.sparkContext.applicationId}_${Integer.toHexString(d.hashCode)}"
+    Artifacts.scratchPath(s, d, "survivors")
 
   private def v5SurvivorsStored(s: SparkSession, d: String): org.apache.spark.sql.DataFrame =
-    v5SurvBuilt.computeIfAbsent(s"${s.sparkContext.applicationId}:$d", _ => {
+    Artifacts.getOrBuild(s, d, "v5_survivors") {
       val store = graft.sources.Store(s, v5SurvPath(s, d), "source")
       store.destroy()
       val built = v5Survivors(Tables.documents(s, d))
       store.appendVersioned(built) // (epoch 1, v1) — x42's manifest coordinate
-      sys.addShutdownHook { try store.destroy() catch { case _: Exception => () } }
       val back = readOrEmpty(store, built)
       val M = lit(2147483647L)
       store.trackFrom(back, (col("doc_id") % M) * (col("doc_id") % M) % M)
       back
-    })
+    }
 
   private val x32CurationV5 = Q(
     (s, d) => {
@@ -8901,28 +8803,23 @@ object PipelineQueries {
   /** One MATERIALIZED training run per (session, input dir): x37's
     * scrubbed-survivor manifest shard-assigned and WRITTEN through the
     * Store partitioned by shard — 16 partition directories, one per
-    * writer, exactly the layout a data-parallel trainer reads. Cached and
-    * shutdown-hook-destroyed (y3d's discipline). */
-  private val x41Built = new java.util.concurrent.ConcurrentHashMap[
-    String, org.apache.spark.sql.DataFrame]()
-
+    * writer, exactly the layout a data-parallel trainer reads. Built once
+    * and deleted at JVM exit (y3d's discipline). */
   private def x41RunPath(s: SparkSession, d: String) =
-    s"${System.getProperty("java.io.tmpdir")}/graft_etl/" +
-      s"train_run_${s.sparkContext.applicationId}_${Integer.toHexString(d.hashCode)}"
+    Artifacts.scratchPath(s, d, "train_run")
 
   private def x41StoredRun(s: SparkSession, d: String): org.apache.spark.sql.DataFrame =
-    x41Built.computeIfAbsent(s"${s.sparkContext.applicationId}:$d", _ => {
+    Artifacts.getOrBuild(s, d, "x41_train_run") {
       val sharded = Sampling.shardAssign(scrubbedSurvivors(s, d),
         Seq("doc_id"), "clean_toks", nShards = 16)
       val store = graft.sources.Store(s, x41RunPath(s, d), "shard")
       store.destroy()
       store.appendVersioned(sharded) // (epoch 1, v1) — x42's manifest coordinate
-      sys.addShutdownHook { try store.destroy() catch { case _: Exception => () } }
       val back = readOrEmpty(store, sharded)
       val M = lit(2147483647L)
       store.trackFrom(back, (col("doc_id") % M) * ((col("shard") + 1) % M) % M)
       back
-    })
+    }
 
   /** x41: MATERIALIZE THE TRAINING RUN — x37 computes the shard plan;
     * this query LANDS it and proves the landing faithful. The scrubbed
@@ -9390,9 +9287,6 @@ object PipelineQueries {
        |FROM ma FULL OUTER JOIN mb ON ma.artifact = mb.artifact
        |ORDER BY artifact""".stripMargin)
 
-  private val x57Cache = new java.util.concurrent.ConcurrentHashMap[
-    String, (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame)]()
-
   /** x57: MANIFEST DIFF ACROSS A PURGE BOUNDARY — the cross-EPOCH form
     * x43 deliberately does not cover (its two manifests live in one
     * lineage; see x42 for the coordinate itself). After a
@@ -9448,10 +9342,8 @@ object PipelineQueries {
            mrow("corpus", post, "doc_id", 2L, 2L)
              .unionByName(mrow("reference_dims", region, "r_regionkey", 1L, 1L))
              .unionByName(mrow("ingest_batch", bat, "doc_id", 2L, 2L)))
-        } else x57Cache.computeIfAbsent(
-          s"${s.sparkContext.applicationId}:$d", _ => {
-          val base = s"${System.getProperty("java.io.tmpdir")}/graft_etl/" +
-            s"epoch_diff_${s.sparkContext.applicationId}_${math.abs(d.hashCode)}"
+        } else Artifacts.getOrBuild(s, d, "x57_epoch_diff") {
+          val base = Artifacts.scratchPath(s, d, "epoch_diff")
           val src = graft.sources.Store(s, s"$base/corpus", "source")
           val dims = graft.sources.Store(s, s"$base/dims", "r_regionkey")
           val mst = graft.sources.Store(s, s"$base/manifest", "artifact")
@@ -9478,7 +9370,7 @@ object PipelineQueries {
               "doc_id", e2, v2))
           (mst.read.select("artifact", "epoch", "version", "n_rows", "checksum"),
             manB)
-        })
+        }
       val a = manifestA.select(col("artifact"), col("epoch").as("ea"),
         col("version").as("va"), col("n_rows").as("na"), col("checksum").as("ca"))
       val b = manifestB.select(col("artifact"), col("epoch").as("eb"),
@@ -9557,9 +9449,6 @@ object PipelineQueries {
       |FROM ma a FULL OUTER JOIN mb b ON a.artifact = b.artifact
       |ORDER BY artifact""".stripMargin)
 
-  private val x60Cache = new java.util.concurrent.ConcurrentHashMap[
-    String, (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame)]()
-
   /** x60: REPAIR-AWARE MANIFEST DIFF — closing the r12 verdict's "an
     * adoptOrphans() repair version is indistinguishable from a normal
     * append in x42/x43": the log entry knows (the store TAGS repair
@@ -9615,10 +9504,8 @@ object PipelineQueries {
                1L, 1L, viaRepair = false))
              .unionByName(mrow("aux_dims", nation, "n_nationkey",
                1L, 2L, viaRepair = false)))
-        } else x60Cache.computeIfAbsent(
-          s"${s.sparkContext.applicationId}:$d", _ => {
-          val base = s"${System.getProperty("java.io.tmpdir")}/graft_etl/" +
-            s"repair_man_${s.sparkContext.applicationId}_${math.abs(d.hashCode)}"
+        } else Artifacts.getOrBuild(s, d, "x60_repair_manifest") {
+          val base = Artifacts.scratchPath(s, d, "repair_man")
           val src = graft.sources.Store(s, s"$base/corpus", "source")
           val dims = graft.sources.Store(s, s"$base/dims", "r_regionkey")
           val aux = graft.sources.Store(s, s"$base/aux", "n_nationkey")
@@ -9657,7 +9544,7 @@ object PipelineQueries {
             .unionByName(mrow("aux_dims", aux.read, "n_nationkey",
               aux.epoch, aux.versions.last, viaRepair(aux, xv)))
           (manA, manB)
-        })
+        }
       val a = manifestA.select(col("artifact"), col("epoch").as("ea"),
         col("version").as("va"), col("n_rows").as("na"), col("checksum").as("ca"))
       val b = manifestB.select(col("artifact"), col("epoch").as("eb"),
@@ -11365,8 +11252,6 @@ object PipelineQueries {
   private final case class Y27State(
       pf: org.apache.spark.sql.DataFrame, rb: org.apache.spark.sql.DataFrame,
       truth: org.apache.spark.sql.DataFrame, rebuildNow: Boolean, servingGen: Long)
-  private val y27Cache =
-    new java.util.concurrent.ConcurrentHashMap[String, Y27State]()
 
   /** y27: GOVERNANCE REQUEST PROPAGATED TO THE ANN STORE — the vector
     * side of the s32/s33 chain, as ONE declared DAG over STORED index
@@ -11472,10 +11357,8 @@ object PipelineQueries {
           val pf = serveFrom(augIndex(e), 6, Some(e.filter(tombPred)))
           val rb = serveFrom(augIndex(retained), 3, None)
           Y27State(pf, rb, truth, rebuildNow = true, servingGen = 2L)
-        } else y27Cache.computeIfAbsent(
-          s"${s.sparkContext.applicationId}:$d", _ => {
-          val base = s"${System.getProperty("java.io.tmpdir")}/graft_etl/" +
-            s"gov_ann_${s.sparkContext.applicationId}_${math.abs(d.hashCode)}"
+        } else Artifacts.getOrBuild(s, d, "y27_gov_ann") {
+          val base = Artifacts.scratchPath(s, d, "gov_ann")
           val g1 = graft.sources.Store(s, s"$base/gen1", "bucket")
           val g2 = graft.sources.Store(s, s"$base/gen2", "bucket")
           val tmb = graft.sources.Store(s, s"$base/tomb", "part")
@@ -11524,7 +11407,7 @@ object PipelineQueries {
           val servingGen = ptr.read.select("serving_gen")
             .head().getLong(0)
           Y27State(pf, rb, truth, rebuildNow, servingGen)
-        })
+        }
       val nTruth = st.truth.agg(count(lit(1)).as("n_truth"))
       st.rb.select(lit("rebuild").as("arm"), lit(2L).as("index_gen"),
           col("q_id"), col("c_id"))

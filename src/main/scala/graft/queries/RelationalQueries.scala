@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.Tables
+import graft.{Artifacts, Tables}
 import graft.functions.RSemantics._
 import graft.operators.Relational._
 import graft.sources.Ingest
@@ -73,7 +73,7 @@ object RelationalQueries {
     (s, d) => {
       // path namespaced by the input dir: concurrent verifies at different
       // SFs must not race on a shared sink location
-      val path = s"${System.getProperty("java.io.tmpdir")}/graft_etl/orders_by_year_${math.abs(d.hashCode)}"
+      val path = Artifacts.scratchPath(s, d, "orders_by_year")
       Tables.orders(s, d)
         .withColumn("o_year", year(col("o_orderdate")))
         .write.mode("overwrite").partitionBy("o_year").parquet(path)
@@ -105,7 +105,7 @@ object RelationalQueries {
       val docs = Tables.documents(s, d)
       val M = lit(2147483647L)
       val term = (col("doc_id") % M) * ((col("doc_id") + 5) % M) % M
-      val path = s"${System.getProperty("java.io.tmpdir")}/graft_etl/stats_store_${math.abs(d.hashCode)}"
+      val path = Artifacts.scratchPath(s, d, "stats_store")
       val store = graft.sources.Store(s, path, "source")
       store.destroy()
       store.appendTracked(docs.filter(col("doc_id") % 2 === 0), term)
@@ -221,8 +221,7 @@ object RelationalQueries {
         ev.withColumn("valid_from", col("from_us"))
           .withColumn("valid_to", lead(col("from_us"), 1).over(w))
       } else {
-        val path = s"${System.getProperty("java.io.tmpdir")}/graft_etl/" +
-          s"scd2_${s.sparkContext.applicationId}_${math.abs(d.hashCode)}"
+        val path = Artifacts.scratchPath(s, d, "scd2")
         val store = graft.sources.Store(s, path, "event_type")
         store.destroy()
         Seq(col("from_us") < t1,
@@ -286,8 +285,7 @@ object RelationalQueries {
         if (planOnly) { (f, t) =>
           docs.filter(col("doc_id") % 3 >= f && col("doc_id") % 3 < t)
         } else {
-          val path = s"${System.getProperty("java.io.tmpdir")}/graft_etl/" +
-            s"cdf_${s.sparkContext.applicationId}_${math.abs(d.hashCode)}"
+          val path = Artifacts.scratchPath(s, d, "cdf")
           val store = graft.sources.Store(s, path, "source")
           store.destroy()
           (0 to 2).foreach(r =>
@@ -336,8 +334,7 @@ object RelationalQueries {
         docs.withColumn("quality",
           when(col("doc_id") % 2 === 1, col("quality")))
       } else {
-        val path = s"${System.getProperty("java.io.tmpdir")}/graft_etl/" +
-          s"schema_evo_${s.sparkContext.applicationId}_${math.abs(d.hashCode)}"
+        val path = Artifacts.scratchPath(s, d, "schema_evo")
         val store = graft.sources.Store(s, path, "source")
         store.destroy()
         store.append(docs.filter(col("doc_id") % 2 === 0).drop("quality"))
@@ -388,8 +385,7 @@ object RelationalQueries {
           val sub = docs.filter(col("doc_id") % 7 =!= 0)
           (2L, 1L, sub, sub)
         } else {
-          val path = s"${System.getProperty("java.io.tmpdir")}/graft_etl/" +
-            s"purge_${s.sparkContext.applicationId}_${math.abs(d.hashCode)}"
+          val path = Artifacts.scratchPath(s, d, "purge")
           val store = graft.sources.Store(s, path, "source")
           store.destroy()
           (0 to 2).foreach(r =>
@@ -448,8 +444,7 @@ object RelationalQueries {
           docs.filter(col("doc_id") % 3 >= f && col("doc_id") % 3 < t)
             .withColumn("quality", when(col("doc_id") % 3 >= 1, scored))
         } else {
-          val path = s"${System.getProperty("java.io.tmpdir")}/graft_etl/" +
-            s"cdf_evo_${s.sparkContext.applicationId}_${math.abs(d.hashCode)}"
+          val path = Artifacts.scratchPath(s, d, "cdf_evo")
           val store = graft.sources.Store(s, path, "source")
           store.destroy()
           store.appendVersioned(
@@ -525,8 +520,7 @@ object RelationalQueries {
             .withColumn("valid_to", lead(col("from_us"), 1).over(w)),
           partial(ev))
       } else {
-        val base = s"${System.getProperty("java.io.tmpdir")}/graft_etl/" +
-          s"cdc_chain_${s.sparkContext.applicationId}_${math.abs(d.hashCode)}"
+        val base = Artifacts.scratchPath(s, d, "cdc_chain")
         val src = graft.sources.Store(s, s"$base/src", "event_type")
         val hst = graft.sources.Store(s, s"$base/hist", "event_type")
         val stt = graft.sources.Store(s, s"$base/state", "event_type")
@@ -588,8 +582,7 @@ object RelationalQueries {
       val snapshot: Long => org.apache.spark.sql.DataFrame =
         if (planOnly) { v => docs.filter(col("doc_id") % 4 < v) }
         else {
-          val path = s"${System.getProperty("java.io.tmpdir")}/graft_etl/" +
-            s"retention_${s.sparkContext.applicationId}_${math.abs(d.hashCode)}"
+          val path = Artifacts.scratchPath(s, d, "retention")
           val store = graft.sources.Store(s, path, "source")
           store.destroy()
           (0 to 3).foreach(r =>
@@ -645,14 +638,12 @@ object RelationalQueries {
     * negative state delta is NOT — replaying the request would
     * double-subtract, so a production handler keys governance requests
     * by id (the upsertScd2 replay-safety discipline applied to the
-    * request log) and this DAG runs each request exactly once. */
-  /** One s32 lifecycle per (session, dir): the chain's outputs are
+    * request log) and this DAG runs each request exactly once.
+    *
+    * One s32 lifecycle per (session, dir): the chain's outputs are
     * parquet-backed store reads (release-proof, unlike checkpoints), so
     * Bench's second iteration reads the artifacts instead of re-running
     * the purge; the negDelta checkpoint is consumed inside the build. */
-  private val s32Built = new java.util.concurrent.ConcurrentHashMap[
-    String, (DataFrame, DataFrame, Long)]()
-
   private val s32ChainPurge = Q(
     (s, d) => {
       val t1 = 1704931200000000L
@@ -671,10 +662,8 @@ object RelationalQueries {
         (retained.withColumn("valid_from", col("from_us"))
             .withColumn("valid_to", lead(col("from_us"), 1).over(w)),
           partial(retained), 2L)
-      } else s32Built.computeIfAbsent(
-        s"${s.sparkContext.applicationId}:$d", _ => {
-        val base = s"${System.getProperty("java.io.tmpdir")}/graft_etl/" +
-          s"chain_purge_${s.sparkContext.applicationId}_${math.abs(d.hashCode)}"
+      } else Artifacts.getOrBuild(s, d, "s32_chain_purge") {
+        val base = Artifacts.scratchPath(s, d, "chain_purge")
         val src = graft.sources.Store(s, s"$base/src", "event_type")
         val hst = graft.sources.Store(s, s"$base/hist", "event_type")
         val stt = graft.sources.Store(s, s"$base/state", "event_type")
@@ -702,7 +691,7 @@ object RelationalQueries {
         hst.deleteWhere(removePred)
         stt.append(negDelta)
         (hst.read, stt.read, newEpoch)
-      })
+      }
       val histPanel = hist.groupBy("event_type").agg(
         count(lit(1)).as("n_versions"),
         sum(when(col("valid_to").isNull, 1L).otherwise(0L)).as("n_current"))
@@ -757,8 +746,6 @@ object RelationalQueries {
     * exactly-once BY CONSTRUCTION, the property s32 had
     * only by operator care. Scale: one extra request-log append
     * (request-sized) on top of s32's costs. */
-  private val s33Built = new java.util.concurrent.ConcurrentHashMap[
-    String, (DataFrame, DataFrame, Long, Long)]()
 
   private val s33IdempotentPurge = Q(
     (s, d) => {
@@ -789,10 +776,8 @@ object RelationalQueries {
           slices.zipWithIndex.map { case (c, i) =>
             partial(ev.filter(c), s"pull_v${i + 1}")
           }.reduce(_ unionByName _).unionByName(neg), 2L, 0L)
-      } else s33Built.computeIfAbsent(
-        s"${s.sparkContext.applicationId}:$d", _ => {
-        val base = s"${System.getProperty("java.io.tmpdir")}/graft_etl/" +
-          s"chain_idem_${s.sparkContext.applicationId}_${math.abs(d.hashCode)}"
+      } else Artifacts.getOrBuild(s, d, "s33_idempotent_purge") {
+        val base = Artifacts.scratchPath(s, d, "chain_idem")
         val src = graft.sources.Store(s, s"$base/src", "event_type")
         val hst = graft.sources.Store(s, s"$base/hist", "event_type")
         val stt = graft.sources.Store(s, s"$base/state", "event_type")
@@ -829,7 +814,7 @@ object RelationalQueries {
         require(first > 0L, "first delivery must apply the request")
         val dup = deliver() // the SAME request, delivered again
         (hst.read, stt.read, src.epoch, dup)
-      })
+      }
       val histPanel = hist.groupBy("event_type").agg(
         count(lit(1)).as("n_versions"),
         sum(when(col("valid_to").isNull, 1L).otherwise(0L)).as("n_current"))
@@ -902,8 +887,7 @@ object RelationalQueries {
             col("n_rows"), col("checksum"))
           .orderBy("part")
       } else {
-        val path = s"${System.getProperty("java.io.tmpdir")}/graft_etl/" +
-          s"tracked_delete_${s.sparkContext.applicationId}_${math.abs(d.hashCode)}"
+        val path = Artifacts.scratchPath(s, d, "tracked_delete")
         val store = graft.sources.Store(s, path, "part")
         store.destroy()
         store.appendTracked(docs, term)
@@ -960,8 +944,7 @@ object RelationalQueries {
             .withColumn("valid_from", col("from_us"))
             .withColumn("valid_to", lead(col("from_us"), 1).over(w))
         } else {
-          val path = s"${System.getProperty("java.io.tmpdir")}/graft_etl/" +
-            s"evo_scd2_${s.sparkContext.applicationId}_${math.abs(d.hashCode)}"
+          val path = Artifacts.scratchPath(s, d, "evo_scd2")
           val store = graft.sources.Store(s, path, "event_type")
           store.destroy()
           val keys = Seq("user_id", "event_type")
@@ -1016,15 +999,13 @@ object RelationalQueries {
     * truth through appends AND a purge. Cost: each append pays one scan
     * of its landed files (sidecar) + a metadata log write; the purge pays
     * its contracted retained rewrite + one retained scan (sidecar
-    * rebuild). */
-  /** One s36 lifecycle per (session, dir): the outputs are parquet-backed
+    * rebuild).
+    *
+    * One s36 lifecycle per (session, dir): the outputs are parquet-backed
     * store reads (release-proof), so Bench's later iterations read the
     * landed ledgers instead of re-running four tracked-versioned writes
     * plus a purge per construction (18.6 s → sub-second steady-state at
     * sf0.1). */
-  private val s36Built = new java.util.concurrent.ConcurrentHashMap[
-    String, (DataFrame, DataFrame, Long, Long)]()
-
   private val s36VersionedTracked = Q(
     (s, d) => {
       val M = lit(2147483647L)
@@ -1042,10 +1023,8 @@ object RelationalQueries {
           (graft.sources.Store(s, "/nonexistent", "source")
               .statsOf(retained, term),
             feedAgg(docs.filter(col("doc_id") % 4 === 0)), 2L, 2L)
-        } else s36Built.computeIfAbsent(
-          s"${s.sparkContext.applicationId}:$d", _ => {
-          val path = s"${System.getProperty("java.io.tmpdir")}/graft_etl/" +
-            s"vt_store_${s.sparkContext.applicationId}_${math.abs(d.hashCode)}"
+        } else Artifacts.getOrBuild(s, d, "s36_versioned_tracked") {
+          val path = Artifacts.scratchPath(s, d, "vt_store")
           val store = graft.sources.Store(s, path, "source")
           store.destroy()
           (1 to 3).foreach(r => store.appendVersionedTracked(
@@ -1057,7 +1036,7 @@ object RelationalQueries {
           store.appendVersionedTracked(docs.filter(col("doc_id") % 4 === 0), term)
           (store.readStats, feedAgg(store.readChanges(1, 2)),
             store.epoch, store.versions.size.toLong)
-        })
+        }
       stats.crossJoin(broadcast(feed))
         .select(col("source"), col("n_rows"), col("checksum"),
           lit(ep).as("epoch"), lit(nv).as("n_versions"),
@@ -1098,13 +1077,11 @@ object RelationalQueries {
     * snapshot-plus-resume ≡ the never-paused consumer, which is exactly
     * the re-bootstrap promise. Scale: the error path is metadata-only;
     * the re-bootstrap costs one snapshot scan + one delta read, and the
-    * resumed cadence is O(changes) again. */
-  /** One s37 lifecycle per (session, dir) — s36's caching rule: the panel
+    * resumed cadence is O(changes) again.
+    *
+    * One s37 lifecycle per (session, dir) — s36's caching rule: the panel
     * reads the landed state store, not a re-run of the whole
     * pause-collapse-reboot sequence per construction. */
-  private val s37Built = new java.util.concurrent.ConcurrentHashMap[
-    String, (DataFrame, Long, Boolean)]()
-
   private val s37RetentionRebootstrap = Q(
     (s, d) => {
       val M = lit(2147483647L)
@@ -1119,10 +1096,8 @@ object RelationalQueries {
           (partial(docs.filter(col("doc_id") % 4 < 3), "bootstrap_v3")
              .unionByName(partial(docs.filter(col("doc_id") % 4 === 3), "pull_v4")),
             3L, true)
-        } else s37Built.computeIfAbsent(
-          s"${s.sparkContext.applicationId}:$d", _ => {
-          val base = s"${System.getProperty("java.io.tmpdir")}/graft_etl/" +
-            s"reboot_${s.sparkContext.applicationId}_${math.abs(d.hashCode)}"
+        } else Artifacts.getOrBuild(s, d, "s37_reboot") {
+          val base = Artifacts.scratchPath(s, d, "reboot")
           val src = graft.sources.Store(s, s"$base/src", "source")
           val stt = graft.sources.Store(s, s"$base/state", "source")
           Seq(src, stt).foreach(_.destroy())
@@ -1146,7 +1121,7 @@ object RelationalQueries {
           stt.update(partial(src.readChanges(b, 4), "pull_v4"),
             Seq("request_id", "source"))
           (stt.read, b, hit)
-        })
+        }
       state.groupBy("source").agg(
           count(lit(1)).as("n_state_rows"),
           sum(col("n")).cast(LongType).as("n_docs"),
@@ -1164,10 +1139,6 @@ object RelationalQueries {
       |    % 2147483647) % 2147483647 AS BIGINT) AS checksum,
       |  CAST(3 AS BIGINT) AS boundary, TRUE AS hit_boundary
       |FROM documents GROUP BY source ORDER BY source""".stripMargin)
-
-  /** One s38 lifecycle per (session, dir) — the s36 caching rule. */
-  private val s38Built = new java.util.concurrent.ConcurrentHashMap[
-    String, (DataFrame, DataFrame, Long, Boolean, Long)]()
 
   /** s38: VERSIONED COMPACTION + VACUUM — the small-file problem × time
     * travel, the lifecycle [[graft.sources.Store.compact]] refuses on
@@ -1200,10 +1171,8 @@ object RelationalQueries {
       val (v4, v5, boundary, zeroUnref, baseDelta) =
         if (planOnly)
           (docs.filter(col("doc_id") % 4 >= 1), docs, 4L, true, 0L)
-        else s38Built.computeIfAbsent(
-          s"${s.sparkContext.applicationId}:$d", _ => {
-          val path = s"${System.getProperty("java.io.tmpdir")}/graft_etl/" +
-            s"vcompact_${s.sparkContext.applicationId}_${math.abs(d.hashCode)}"
+        else Artifacts.getOrBuild(s, d, "s38_versioned_compaction") {
+          val path = Artifacts.scratchPath(s, d, "vcompact")
           val store = graft.sources.Store(s, path, "source")
           store.destroy()
           (1 to 3).foreach(r =>
@@ -1222,7 +1191,7 @@ object RelationalQueries {
           // idempotence IS the sweep check: a clean table re-vacuums to 0
           val zu = store.vacuum() == 0L
           (store.readVersion(4), store.readVersion(5), b, zu, bd)
-        })
+        }
       Seq((4L, v4), (5L, v5)).map { case (v, df) =>
         df.agg(
             count(lit(1)).as("n_rows"),
@@ -1255,8 +1224,7 @@ object RelationalQueries {
       val snapshot: Long => org.apache.spark.sql.DataFrame =
         if (planOnly) { v => docs.filter(col("doc_id") % 3 < v) }
         else {
-          val path = s"${System.getProperty("java.io.tmpdir")}/graft_etl/" +
-            s"time_travel_${s.sparkContext.applicationId}_${math.abs(d.hashCode)}"
+          val path = Artifacts.scratchPath(s, d, "time_travel")
           val store = graft.sources.Store(s, path, "source")
           store.destroy()
           (0 to 2).foreach(r =>
@@ -1286,7 +1254,7 @@ object RelationalQueries {
     * `/root/reference/R/epa_predict.R:26`). */
   private val s8CsvRoundtrip = Q(
     (s, d) => {
-      val path = s"${System.getProperty("java.io.tmpdir")}/graft_etl/region_csv_${math.abs(d.hashCode)}"
+      val path = Artifacts.scratchPath(s, d, "region_csv")
       Tables.region(s, d).coalesce(1)
         .write.mode("overwrite").option("header", "true").csv(path)
       s.read.option("header", "true")
@@ -1305,7 +1273,7 @@ object RelationalQueries {
     * DECIMAL money path). */
   private val s12OrcRoundtrip = Q(
     (s, d) => {
-      val path = s"${System.getProperty("java.io.tmpdir")}/graft_etl/lineitem_orc_${math.abs(d.hashCode)}"
+      val path = Artifacts.scratchPath(s, d, "lineitem_orc")
       Tables.lineitem(s, d)
         .select("l_orderkey", "l_returnflag", "l_quantity", "l_extendedprice")
         .write.mode("overwrite").orc(path)
@@ -1327,7 +1295,7 @@ object RelationalQueries {
     * the hop is lossless for the typed columns. */
   private val s13JsonRoundtrip = Q(
     (s, d) => {
-      val path = s"${System.getProperty("java.io.tmpdir")}/graft_etl/region_json_${math.abs(d.hashCode)}"
+      val path = Artifacts.scratchPath(s, d, "region_json")
       Tables.region(s, d).coalesce(1).write.mode("overwrite").json(path)
       s.read.schema("r_regionkey INT, r_name STRING").json(path)
         .orderBy("r_regionkey")
@@ -2636,26 +2604,45 @@ object RelationalQueries {
     * NA-poisoning (null if ANY group value is null), `na.rm=TRUE` ignores
     * nulls (`/root/reference/R/epa_predict.R:208-210` mixes both). The
     * derived column nulls values > 400 so every group has some nulls at
-    * every SF, and the poisoned mean differs visibly from the na.rm one. */
+    * every SF, and the poisoned mean differs visibly from the na.rm one.
+    *
+    * Both means are rounded to 4 decimals from the EXACT value, half away
+    * from zero, in integer arithmetic on (sum of cents, n) — then one IEEE
+    * division by 10^4. `ROUND(double, 4)` is not engine-stable: Spark
+    * rounds the shortest decimal form of the double half-up, DuckDB rounds
+    * the binary double, and Spark's decimal `avg` rounds at 6 decimals
+    * first; a mean on (or within 5e-7 below) a half-way point comes out
+    * differently in the two engines. */
+  private def mean4Sql(cents: String, n: String, intDiv: String): String =
+    s"CASE WHEN $n > 0 THEN CAST(((2 * abs($cents) * 100 + $n) $intDiv (2 * $n))" +
+      s" * sign($cents) AS DOUBLE) / CAST(10000 AS DOUBLE) END"
+
   private val f6RMeanSemantics = Q(
     (s, d) => {
       Tables.events(s, d)
         .withColumn("v", when(col("value") > 400, lit(null).cast(DoubleType)).otherwise(col("value")))
         .groupBy("event_type")
         .agg(
-          // decimal-exact means: double avg is shuffle-merge-order sensitive
-          stat4(graft.functions.RSemantics.rMean(dec2(col("v")))).as("mean_poisoning"),
-          avgDec2(col("v")).as("mean_na_rm"),
+          (sum(dec2(col("v"))) * 100).cast(LongType).as("cents"),
+          count(col("v")).as("n_v"),
           count(lit(1)).as("n"))
+        .select(col("event_type"),
+          expr(s"CASE WHEN n_v = n THEN ${mean4Sql("cents", "n_v", "div")} END")
+            .as("mean_poisoning"),
+          expr(mean4Sql("cents", "n_v", "div")).as("mean_na_rm"),
+          col("n"))
         .orderBy("event_type")
     },
-    """SELECT event_type,
-      |  ROUND(CAST(CASE WHEN COUNT(CASE WHEN v IS NULL THEN 1 END) = 0
-      |    THEN AVG(CAST(v AS DECIMAL(18,2))) END AS DOUBLE), 4) AS mean_poisoning,
-      |  ROUND(CAST(AVG(CAST(v AS DECIMAL(18,2))) AS DOUBLE), 4) AS mean_na_rm,
-      |  count(*) AS n
-      |FROM (SELECT event_type, CASE WHEN value > 400 THEN NULL ELSE value END AS v FROM events)
-      |GROUP BY event_type ORDER BY event_type""".stripMargin)
+    s"""WITH g AS (SELECT event_type,
+      |    CAST(SUM(CAST(v AS DECIMAL(18,2)) * 100) AS BIGINT) AS cents,
+      |    COUNT(v) AS n_v, COUNT(*) AS n
+      |  FROM (SELECT event_type, CASE WHEN value > 400 THEN NULL ELSE value END AS v FROM events)
+      |  GROUP BY event_type)
+      |SELECT event_type,
+      |  CASE WHEN n_v = n THEN ${mean4Sql("cents", "n_v", "//")} END AS mean_poisoning,
+      |  ${mean4Sql("cents", "n_v", "//")} AS mean_na_rm,
+      |  n
+      |FROM g ORDER BY event_type""".stripMargin)
 
   val all: Map[String, Q] = Map(
     "f6_r_mean_semantics" -> f6RMeanSemantics,

@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.Tables
+import graft.{Artifacts, Tables}
 import graft.operators.Vocab
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -34,16 +34,12 @@ object VocabQueries {
   private def planOnly: Boolean = sys.props.get("graft.plan.only").contains("true")
 
   /** One learn per (session, input dir): Verify/Bench construct z30 and
-    * z31 (twice each, for Bench's iterations) and must not re-run the
-    * K-round loop every time. The cached value is a driver-local Seq —
-    * nothing references executor blocks (the learn frees its histogram
-    * checkpoint before returning). */
-  private val learned =
-    new java.util.concurrent.ConcurrentHashMap[String, Seq[Vocab.Merge]]()
-
+    * z31 and must not re-run the K-round loop every time. The cached
+    * value is a driver-local Seq — nothing references executor blocks
+    * (the learn frees its histogram checkpoint before returning). */
   private def merges(s: SparkSession, d: String): Seq[Vocab.Merge] =
-    learned.computeIfAbsent(s"${s.sparkContext.applicationId}:$d:$BpeMerges",
-      _ => Vocab.bpeLearn(Tables.documents(s, d), "text", BpeMerges))
+    Artifacts.getOrBuild(s, d, s"bpe_merges_$BpeMerges")(
+      Vocab.bpeLearn(Tables.documents(s, d), "text", BpeMerges))
 
   // ---- DuckDB oracle generation (unrolled BPE rounds) ----
 

@@ -724,6 +724,25 @@ class PlanAuditSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
       "the two-window profile must be one conditional-aggregation pass")
   }
 
+  /** ONE construction of every declared query feeds both registry-wide
+    * audits below: each query is built once with AQE off, and its output
+    * schema and formatted plan are read from that one frame (building
+    * every query costs minutes at this SF, so two sweeps doubled it).
+    * Forced by whichever audit runs first. */
+  private lazy val sweep: Seq[(String, Seq[String], Boolean)] = {
+    import org.apache.spark.sql.types.DecimalType
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
+      val df = fn(spark, sf)
+      val decimals = df.schema.fields.collect {
+        case f if f.dataType.isInstanceOf[DecimalType] => s"$name.${f.name}"
+      }.toSeq
+      val codegen = "codegen id : (\\d+)".r
+        .findFirstIn(df.queryExecution.explainString(FormattedMode)).isDefined
+      (name, decimals, codegen)
+    } finally spark.conf.set("spark.sql.adaptive.enabled", "true")
+  }
+
   test("no query output schema contains a DECIMAL column") {
     // The driver's compare reads Spark parquet decimals scale-preserving
     // ("1.50") but DuckDB oracle decimals as doubles ("1.5"): any DECIMAL
@@ -731,12 +750,7 @@ class PlanAuditSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
     // DECIMAL belongs inside the plan; DOUBLE at the output boundary.
     // NOTE: constructing y3b/x9b runs their driver loops (k-means, CC) —
     // a few seconds at this SF, the price of auditing every declared query.
-    import org.apache.spark.sql.types.DecimalType
-    val offenders = SparkEntry.queries.toSeq.sortBy(_._1).flatMap { case (name, fn) =>
-      fn(spark, sf).schema.fields.collect {
-        case f if f.dataType.isInstanceOf[DecimalType] => s"$name.${f.name}"
-      }
-    }
+    val offenders = sweep.flatMap(_._2)
     assert(offenders.isEmpty, s"DECIMAL-typed output columns: $offenders")
   }
 
@@ -747,11 +761,9 @@ class PlanAuditSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
     // z30's is the collected BPE merge table (a LocalRelation by shape —
     // the distributed stages live inside Vocab.bpeLearn's per-round jobs,
     // audited by VocabSpec).
-    val gaps = SparkEntry.queries.keys.toSeq.sorted
-      .filterNot(Set("y3b_kmeans_iterate", "z30_bpe_learn"))
-      .filter { name =>
-        !"codegen id : (\\d+)".r.findFirstIn(formatted(name)).isDefined
-      }
+    val gaps = sweep
+      .filterNot { case (name, _, _) => Set("y3b_kmeans_iterate", "z30_bpe_learn")(name) }
+      .collect { case (name, _, false) => name }
     assert(gaps.isEmpty, s"queries with zero codegen spans: $gaps")
   }
 }

@@ -675,4 +675,29 @@ class RelationalSpec extends SparkSpec {
     assert(RelationalQueries.exactNdv(df, "allnull").head.getLong(0) === 0L,
       "an all-null column has ndv 0, not 1")
   }
+
+  test("f6 rounds each mean from its exact value, half away from zero") {
+    // "half": 199 x 1.00 + 1 x 1.01 — the mean is exactly 1.00005, on the
+    // half-way point at the 5th decimal: half away from zero gives 1.0001.
+    // "below": 200 x 0.01 + 1 x 0.02 — the mean 0.010049751... lies 2.5e-7
+    // below the half-way point 0.01005, so it rounds DOWN to 0.0100 (a
+    // decimal avg rounded to 6 places first reads 0.010050 and rounds up).
+    // "nulls": one nulled value (> 400) poisons the R mean only.
+    val dir = tmpDir("f6_events")
+    val ts = java.sql.Timestamp.valueOf("2024-01-01 00:00:00")
+    val rows =
+      Seq.fill(199)(("half", 1.00)) ++ Seq(("half", 1.01)) ++
+        Seq.fill(200)(("below", 0.01)) ++ Seq(("below", 0.02)) ++
+        Seq(("nulls", 2.00), ("nulls", 3.00), ("nulls", 401.00))
+    rows.zipWithIndex.map { case ((t, v), i) => (i.toLong, i.toLong % 7, t, ts, v) }
+      .toDF("event_id", "user_id", "event_type", "ts", "value")
+      .write.parquet(dir + "/events.parquet")
+    val got = SparkEntry.queries("f6_r_mean_semantics")(spark, dir)
+      .select("event_type", "mean_poisoning", "mean_na_rm", "n")
+      .as[(String, Option[Double], Option[Double], Long)].collect()
+      .map(r => r._1 -> ((r._2, r._3, r._4))).toMap
+    assert(got("half") === ((Some(1.0001), Some(1.0001), 200L)))
+    assert(got("below") === ((Some(0.01), Some(0.01), 201L)))
+    assert(got("nulls") === ((None, Some(2.5), 3L)))
+  }
 }
