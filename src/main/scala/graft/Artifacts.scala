@@ -57,6 +57,18 @@ object Artifacts {
     }
   }
 
+  /** Drops this application's entries for input `dir`: the next
+    * [[getOrBuild]] of any of them builds again. Other directories, other
+    * applications and the counters are left alone, and nothing on disk is
+    * deleted (each builder clears its scratch path before it writes).
+    * Blocks a build registered through [[Housekeeping.retainCheckpoint]]
+    * stay retained. */
+  def evict(spark: SparkSession, dir: String): Unit =
+    evictIn(spark.sparkContext.applicationId, dir)
+
+  private[graft] def evictIn(app: String, dir: String): Unit =
+    built.keySet.removeIf(k => k._1 == app && k._2 == dir)
+
   /** Builds, hits and outermost build seconds so far in this application. */
   def stats(spark: SparkSession): Stats = statsIn(spark.sparkContext.applicationId)
 

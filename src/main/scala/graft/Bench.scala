@@ -104,8 +104,10 @@ object Bench {
         System.err.println(s"[bench] could not write $p: ${e.getMessage}")
       }
     }
-    // a compact summary as the LAST stdout line — small enough that any
-    // tail-limited parser sees one complete JSON object
+    // a compact summary as the last JSON line — small enough that any
+    // tail-limited parser sees one complete JSON object; sbt prints its
+    // own `[success]` line after it, so parsers take the last stdout line
+    // that starts with `{`
     println(s"""{$head,"n_queries":${results.size},"detail":"bench_full.json",$tail}""")
     spark.stop()
   }

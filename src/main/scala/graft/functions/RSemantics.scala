@@ -73,9 +73,31 @@ object RSemantics {
   def sumDec2Prod(a: Column, b: Column): Column =
     sum(dec2(a) * dec2(b)).cast(DecimalType(18, 4))
 
-  /** Deterministic mean of a money column: exact decimal sum, then one
-    * double division, rounded at the boundary. */
-  def avgDec2(c: Column): Column = round(avg(dec2(c)).cast(DoubleType), 4)
+  /** A mean rounded to 4 decimals from its EXACT value, half away from
+    * zero, as SQL that reads the same in Spark and DuckDB: integer
+    * arithmetic on (sum of cents, n), then one IEEE division by 10^4.
+    * `intDiv` is the engine's integer division: `div` in Spark, `//` in
+    * DuckDB. `ROUND(double, 4)` is not engine-stable: Spark rounds the
+    * shortest decimal form of the double half-up, DuckDB rounds the binary
+    * double, and Spark's decimal `avg` rounds at 6 decimals first; a mean
+    * on (or within 5e-7 below) a half-way point comes out differently in
+    * the two engines. */
+  def mean4Sql(cents: String, n: String, intDiv: String): String =
+    s"CASE WHEN $n > 0 THEN CAST(((2 * abs($cents) * 100 + $n) $intDiv (2 * $n))" +
+      s" * sign($cents) AS DOUBLE) / CAST(10000 AS DOUBLE) END"
+
+  /** Exact sum of the 2-decimal money column `c` in cents, BIGINT in both
+    * engines. */
+  def centsSql(c: String): String = s"CAST(SUM(CAST($c AS DECIMAL(18,2)) * 100) AS BIGINT)"
+
+  /** [[mean4Sql]] of the money column `c` over its non-null rows, as one
+    * aggregate in either engine's SQL. */
+  def avgDec2Sql(c: String, intDiv: String): String =
+    mean4Sql(centsSql(c), s"COUNT($c)", intDiv)
+
+  /** Spark side of [[avgDec2Sql]]: the exactly rounded mean of a money
+    * column. */
+  def avgDec2(c: String): Column = expr(avgDec2Sql(c, "div"))
 
   /** Output-boundary rounding for inherently-double statistics. */
   def stat4(c: Column): Column = round(c.cast(DoubleType), 4)

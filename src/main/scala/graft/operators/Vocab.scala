@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.Housekeeping
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -139,14 +139,6 @@ object Vocab {
     } finally pinned.free()
   }
 
-  /** [[bpeLearn]] as a DataFrame (the declared-query form). */
-  def bpeLearnDF(spark: SparkSession, docs: DataFrame, textCol: String,
-                 merges: Int): DataFrame = {
-    val rows = bpeLearn(docs, textCol, merges)
-      .map(m => Row(m.step, m.tokA, m.tokB, m.merged, m.n))
-    spark.createDataFrame(java.util.Arrays.asList(rows: _*), MergeSchema)
-  }
-
   /** Word-level subword tokenization under a learned merge list: chars,
     * then each merge replayed in learned order. A pure chained expression —
     * the merge list compiles into 2·merges literal replaces inside
@@ -249,8 +241,8 @@ object Vocab {
     * instead of nesting every earlier round's full segmentation subtree —
     * without it the composed plan's ANALYSIS alone measured ~9 s at ANY
     * corpus size (the bpeLearn plan-depth lesson, at the optimizer level).
-    * Pass false for action-free construction (plan-shape sweeps); results
-    * are invariant (spec-gated). A production 10⁶-word histogram would
+    * Pass false to build without actions; results are invariant
+    * (spec-gated). A production 10⁶-word histogram would
     * additionally pin the histogram and driver-iterate like [[bpeLearn]]. */
   def unigramFit(docs: DataFrame, textCol: String, maxTok: Int = 4,
                  initMulti: Int = 24, pruneTo: Int = 16,

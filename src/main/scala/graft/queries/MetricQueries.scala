@@ -127,12 +127,12 @@ object MetricQueries {
       Tables.events(s, d)
         .withColumn("bin", (round(col("value") / 50) * 50).cast(IntegerType))
         .groupBy("event_type", "bin")
-        .agg(count(lit(1)).as("n"), avgDec2(col("value")).as("avg_value"))
+        .agg(count(lit(1)).as("n"), avgDec2("value").as("avg_value"))
         .orderBy("event_type", "bin")
     },
-    """SELECT event_type, CAST(round(value / 50) * 50 AS INT) AS bin,
+    s"""SELECT event_type, CAST(round(value / 50) * 50 AS INT) AS bin,
       |  count(*) AS n,
-      |  ROUND(CAST(AVG(CAST(value AS DECIMAL(18,2))) AS DOUBLE), 4) AS avg_value
+      |  ${avgDec2Sql("value", "//")} AS avg_value
       |FROM events GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin)
 
   /** A10: log-loss over all slices at once — the reference's 20 separate

@@ -555,7 +555,7 @@ object PipelineQueries {
       import s.implicits._
       val e = Tables.embeddings(s, d)
       val target = 32L
-      val n = if (planOnly) 500L else e.count()
+      val n = e.count()
       val planes = (1 to graft.plans.HyperplaneBucket.MaxPlanes)
         .find(p => n <= target * (1L << p))
         .getOrElse(graft.plans.HyperplaneBucket.MaxPlanes)
@@ -1183,11 +1183,8 @@ object PipelineQueries {
         .groupBy("source")
         .agg(count(lit(1)).cast(LongType).as("n_tokens"),
           ((-sum(col("lp"))).cast(DoubleType) / count(lit(1))).as("loss"))
-      // rounds iterate on this 20-row frame only; under plan-only sweeps
-      // the checkpoint is skipped so (a) construction stays action-free and
-      // (b) the audited plan covers the corpus explode+join stage instead
-      // of a lineage-truncated LogicalRDD
-      val perSrc = if (planOnly) perSrc0 else perSrc0.localCheckpoint(true)
+      // rounds iterate on this 20-row frame only
+      val perSrc = perSrc0.localCheckpoint(true)
       val stats = perSrc.agg(min(col("loss")).as("minloss"),
         count(lit(1)).as("n_sources"))
       var cur = perSrc.crossJoin(broadcast(stats))
@@ -1315,7 +1312,7 @@ object PipelineQueries {
       import org.apache.spark.sql.types.{DecimalType, DoubleType, LongType}
       val docs = Tables.documents(s, d)
       val wts0 = z56Weights(s, d).select("source", "n_tokens", "loss", "w1")
-      val wts = if (planOnly) wts0 else wts0.localCheckpoint(true)
+      val wts = wts0.localCheckpoint(true)
       val B = 200L
       val q0 = wts.withColumn("raw", col("w1") * lit(B.toDouble))
         .withColumn("qfloor", floor(col("raw")).cast(LongType))
@@ -1337,7 +1334,7 @@ object PipelineQueries {
         .select("doc_id", "source")
       val wd0 = docs.select(col("doc_id"), col("source"),
         explode(split(col("text"), " ")).as("term"))
-      val wd = if (planOnly) wd0 else graft.Housekeeping.pin(s)(wd0).df
+      val wd = graft.Housekeeping.pin(s)(wd0).df
       val vocab = wd.agg(countDistinct(col("term")).as("v"))
       val sw = wd.join(sampled.select("doc_id"), Seq("doc_id"), "left_semi")
       val scnt = sw.groupBy("term").agg(count(lit(1)).as("n_s"))
@@ -1354,7 +1351,7 @@ object PipelineQueries {
         .join(evalLoss, Seq("source"))
         .join(nSamp, Seq("source"), "left")
         .withColumn("n_sampled", coalesce(col("n_sampled"), lit(0L)))
-      val j = if (planOnly) j0 else j0.localCheckpoint(true)
+      val j = j0.localCheckpoint(true)
       val st2 = j.agg(min(col("loss_refit")).as("minloss2"))
       val stepped = j.crossJoin(broadcast(st2))
         .withColumn("egain2", exp(col("loss_refit") - col("minloss2"))
@@ -1493,18 +1490,17 @@ object PipelineQueries {
             TextAnalysis.hash32(col("chunk_text")).as("h1"),
             TextAnalysis.hash32b(col("chunk_text")).as("h2"))
       val fullCnt = segsOf(docs).groupBy("h1", "h2").agg(count(lit(1)).as("df"))
-      val stored = if (planOnly) fullCnt else
-        Artifacts.getOrBuild(s, d, "x50_segment_counts") {
-          val path = Artifacts.scratchPath(s, d, "segfull")
-          val store = graft.sources.Store(s, path, "part")
-          store.destroy()
-          val withPart = fullCnt.withColumn("part", pmod(col("h1"), lit(8)))
-          store.append(withPart)
-          val back = readOrEmpty(store, withPart)
-          store.trackFrom(back,
-            (col("h1") % M) * (col("h2") % M) % M * (col("df") % M) % M)
-          back.drop("part")
-        }
+      val stored = Artifacts.getOrBuild(s, d, "x50_segment_counts") {
+        val path = Artifacts.scratchPath(s, d, "segfull")
+        val store = graft.sources.Store(s, path, "part")
+        store.destroy()
+        val withPart = fullCnt.withColumn("part", pmod(col("h1"), lit(8)))
+        store.append(withPart)
+        val back = readOrEmpty(store, withPart)
+        store.trackFrom(back,
+          (col("h1") % M) * (col("h2") % M) % M * (col("df") % M) % M)
+        back.drop("part")
+      }
       val removedCnt = segsOf(docs.filter(col("doc_id") % 13 === 0))
         .groupBy("h1", "h2").agg(count(lit(1)).as("rm"))
       val merged = stored
@@ -1596,8 +1592,7 @@ object PipelineQueries {
     * construction. Scale: the day-0 scrubbed corpus is a stored
     * artifact (Store round-trip, amortized like x40/x47's base builds);
     * the takedown pays O(removed) for the subtract-merge + O(touched)
-    * re-scrubs — never a corpus re-scrub. planOnly substitutes the
-    * built frame for the store round-trip (x47/x48's discipline). */
+    * re-scrubs — never a corpus re-scrub. */
   private val x52TakedownRematerialize = Q(
     (s, d) => {
       import org.apache.spark.sql.types.LongType
@@ -1620,15 +1615,14 @@ object PipelineQueries {
       val invBefore = fullCnt.filter(col("df") >= 2).select("h1", "h2")
       val scrubBuilt = docs.select(col("doc_id"), col("source"))
         .join(scrubAgainst(docs, invBefore), Seq("doc_id"), "left")
-      val stored = if (planOnly) scrubBuilt else
-        Artifacts.getOrBuild(s, d, "x52_scrubbed") {
-          val path = Artifacts.scratchPath(s, d, "scrubbed")
-          val store = graft.sources.Store(s, path, "part")
-          store.destroy()
-          val withPart = scrubBuilt.withColumn("part", pmod(col("doc_id"), lit(8)))
-          store.append(withPart)
-          readOrEmpty(store, withPart).drop("part")
-        }
+      val stored = Artifacts.getOrBuild(s, d, "x52_scrubbed") {
+        val path = Artifacts.scratchPath(s, d, "scrubbed")
+        val store = graft.sources.Store(s, path, "part")
+        store.destroy()
+        val withPart = scrubBuilt.withColumn("part", pmod(col("doc_id"), lit(8)))
+        store.append(withPart)
+        readOrEmpty(store, withPart).drop("part")
+      }
       val retained = docs.filter(col("doc_id") % 13 =!= 0)
       val removedCnt = segsOf(docs.filter(col("doc_id") % 13 === 0))
         .groupBy("h1", "h2").agg(count(lit(1)).as("rm"))
@@ -1807,8 +1801,7 @@ object PipelineQueries {
       // FIVE consumers read the day-0 counts (exact updates, tail sketch
       // collect, one-shot merge check, both panel counts) — pin so the
       // corpus pays one segment pass (x47's signature discipline)
-      val baseCnt = if (planOnly) baseCnt0
-        else graft.Housekeeping.pin(s)(baseCnt0).df
+      val baseCnt = graft.Housekeeping.pin(s)(baseCnt0).df
       val exact0 = baseCnt.filter(col("df") >= 2)
       val tail0 = baseCnt.filter(col("df") === 1)
         .withColumn("key", concat_ws(":", col("h1"), col("h2")))
@@ -1836,13 +1829,11 @@ object PipelineQueries {
           .create(0.00001, 0.99, 42).writeTo(bos)
         bos.toByteArray
       }
-      val (sk0Bytes, nTail0): (Array[Byte], Long) =
-        if (planOnly) (Array.empty[Byte], 0L)
-        else {
-          val r = sk0.head()
-          (Option(r.getAs[Array[Byte]]("sk")).getOrElse(emptySketchBytes),
-            r.getAs[Long]("n_tail0"))
-        }
+      val (sk0Bytes, nTail0): (Array[Byte], Long) = {
+        val r = sk0.head()
+        (Option(r.getAs[Array[Byte]]("sk")).getOrElse(emptySketchBytes),
+          r.getAs[Long]("n_tail0"))
+      }
       val batchCnt = segsOf(docs.filter(col("doc_id") % 10 === 0))
         .groupBy("h1", "h2").agg(count(lit(1)).as("b"))
       val probed0 = batchCnt
@@ -1855,8 +1846,7 @@ object PipelineQueries {
       // FOUR consumers read the probed batch (crossings, newTail → sketch
       // collect, newTail → panel count, the one-shot merge check) — pin so
       // the probe stage runs once instead of re-executing per consumer
-      val probed = if (planOnly) probed0
-        else graft.Housekeeping.pin(s)(probed0).df
+      val probed = graft.Housekeeping.pin(s)(probed0).df
       // the maintained exact part: updates + reconstructed crossings
       val updated = exact0.join(batchCnt, Seq("h1", "h2"), "left")
         .select(col("h1"), col("h2"),
@@ -1873,9 +1863,8 @@ object PipelineQueries {
         .withColumn("key", concat_ws(":", col("h1"), col("h2")))
       val skNew = newTail.agg(expr(skAgg).as("sk"), count(lit(1)).as("n_new"))
       // driver-side CMS addition vs a one-shot build over the union —
-      // byte equality is the mergeability contract (plan-only skips the
-      // collects; the substitute keeps construction action-free)
-      val mergeExact: Boolean = planOnly || {
+      // byte equality is the mergeability contract
+      val mergeExact: Boolean = {
         import java.io.{ByteArrayInputStream, ByteArrayOutputStream}
         import org.apache.spark.util.sketch.CountMinSketch
         def decode(b: Array[Byte]) =
@@ -2077,8 +2066,7 @@ object PipelineQueries {
         // a pinned frame would be unpersisted after run 1 and run 2 would
         // hit CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND (lineage is truncated).
         // Batch-keys-sized state: a few MB held for the process lifetime.
-        val probed = if (planOnly) probed0
-          else graft.Housekeeping.retainCheckpoint(s)(probed0)
+        val probed = graft.Housekeeping.retainCheckpoint(s)(probed0)
         val estFlag = when(col("est") >= 1, 1L).otherwise(0L)
         val updated = exact.join(batch, Seq("h1", "h2"), "left")
           .select(col("h1"), col("h2"),
@@ -2107,51 +2095,42 @@ object PipelineQueries {
       val day0 = docs.filter(col("doc_id") % 10 =!= 0 && col("doc_id") % 10 =!= 5)
       val b1 = batchOf(docs.filter(col("doc_id") % 10 === 5))
       val b2 = batchOf(docs.filter(col("doc_id") % 10 === 0))
-      val st =
-        if (planOnly) {
-          // action-free substitutes: artifacts ride lineage, sketches are
-          // empty literals (never evaluated), contract booleans default
-          val a0 = cntOf(day0)
-          val (a1, p1) = mergeDay(a0, b1, Array.empty[Byte])
-          val (a2, p2) = mergeDay(a1, b2, Array.empty[Byte])
-          X55State(a0, a1, a2, p1, p2, 0L, 0L, mergeExact = true,
-            resketchMatchesTruth = true)
-        } else Artifacts.getOrBuild(s, d, "x55_tail_split") {
-            val art0 = stored("d0", cntOf(day0))
-            val tail0 = art0.filter(col("df") === 1)
-            val nTail0 = tail0.count()
-            val sk0 = sketchBytes(tail0, skAgg)
-            val (newArt1, probed1) = mergeDay(art0, b1, sk0)
-            val art1 = stored("d1", newArt1)
-            val newTail1 = probed1.filter(col("df_exact").isNull
-              && col("b") === 1 && col("est") < 1)
-            val skNew1 = sketchBytes(newTail1, skAgg)
-            val sk1 = addSketches(sk0, skNew1)
-            val nItemsD1 = nTail0 + newTail1.count()
-            val (newArt2, probed2) = mergeDay(art1, b2, sk1)
-            val art2 = stored("d2", newArt2)
-            val newTail2 = probed2.filter(col("df_exact").isNull
-              && col("b") === 1 && col("est") < 1)
-            val skNew2 = sketchBytes(newTail2, skAgg)
-            val skAfter = addSketches(sk1, skNew2)
-            // mergeability across days: addition ≡ one-shot over every
-            // item ever added (crossed keys' residue included — CMS
-            // cannot subtract, and the identity is over ADDITIONS)
-            val oneShot = sketchBytes(
-              tail0.select("h1", "h2")
-                .unionByName(newTail1.select("h1", "h2"))
-                .unionByName(newTail2.select("h1", "h2")), skAgg)
-            val mergeExact = java.util.Arrays.equals(skAfter, oneShot)
-            // the re-sketch path: wider build from the STORED artifact's
-            // tail keys vs a wider build over the from-scratch tail — the
-            // corpus is touched ONLY by the verification arm
-            val wideStored = sketchBytes(art2.filter(col("df") === 1), skAggWide)
-            val wideTruth = sketchBytes(
-              cntOf(docs).filter(col("df") === 1), skAggWide)
-            val resketch = java.util.Arrays.equals(wideStored, wideTruth)
-            X55State(art0, art1, art2, probed1, probed2, nTail0, nItemsD1,
-              mergeExact, resketch)
-          }
+      val st = Artifacts.getOrBuild(s, d, "x55_tail_split") {
+        val art0 = stored("d0", cntOf(day0))
+        val tail0 = art0.filter(col("df") === 1)
+        val nTail0 = tail0.count()
+        val sk0 = sketchBytes(tail0, skAgg)
+        val (newArt1, probed1) = mergeDay(art0, b1, sk0)
+        val art1 = stored("d1", newArt1)
+        val newTail1 = probed1.filter(col("df_exact").isNull
+          && col("b") === 1 && col("est") < 1)
+        val skNew1 = sketchBytes(newTail1, skAgg)
+        val sk1 = addSketches(sk0, skNew1)
+        val nItemsD1 = nTail0 + newTail1.count()
+        val (newArt2, probed2) = mergeDay(art1, b2, sk1)
+        val art2 = stored("d2", newArt2)
+        val newTail2 = probed2.filter(col("df_exact").isNull
+          && col("b") === 1 && col("est") < 1)
+        val skNew2 = sketchBytes(newTail2, skAgg)
+        val skAfter = addSketches(sk1, skNew2)
+        // mergeability across days: addition ≡ one-shot over every
+        // item ever added (crossed keys' residue included — CMS
+        // cannot subtract, and the identity is over ADDITIONS)
+        val oneShot = sketchBytes(
+          tail0.select("h1", "h2")
+            .unionByName(newTail1.select("h1", "h2"))
+            .unionByName(newTail2.select("h1", "h2")), skAgg)
+        val mergeExact = java.util.Arrays.equals(skAfter, oneShot)
+        // the re-sketch path: wider build from the STORED artifact's
+        // tail keys vs a wider build over the from-scratch tail — the
+        // corpus is touched ONLY by the verification arm
+        val wideStored = sketchBytes(art2.filter(col("df") === 1), skAggWide)
+        val wideTruth = sketchBytes(
+          cntOf(docs).filter(col("df") === 1), skAggWide)
+        val resketch = java.util.Arrays.equals(wideStored, wideTruth)
+        X55State(art0, art1, art2, probed1, probed2, nTail0, nItemsD1,
+          mergeExact, resketch)
+      }
       val estFlag = when(col("est") >= 1, 1L).otherwise(0L)
       def dayCounts(p: org.apache.spark.sql.DataFrame, cName: String, nName: String) =
         p.agg(
@@ -2307,21 +2286,17 @@ object PipelineQueries {
             (col("df") - coalesce(col("r"), lit(0L))).cast(LongType).as("df"))
           .filter(col("df") >= 1)
       }
-      val st =
-        if (planOnly) {
-          val a0 = cntOf(docs)
-          X56State(a0, subtracted(a0), resketchOk = true)
-        } else Artifacts.getOrBuild(s, d, "x56_tail_takedown") {
-            val art0 = stored("t0", cntOf(docs))
-            val art1 = stored("t1", subtracted(art0))
-            // CMS is add-only: the takedown repair IS x55's re-sketch
-            // path, run off the stored tail′ keys; the from-scratch arm
-            // exists only to verify it
-            val rebuilt = sketchBytes(art1.filter(col("df") === 1))
-            val scratch = sketchBytes(
-              cntOf(docs.filter(!removedPred)).filter(col("df") === 1))
-            X56State(art0, art1, java.util.Arrays.equals(rebuilt, scratch))
-          }
+      val st = Artifacts.getOrBuild(s, d, "x56_tail_takedown") {
+        val art0 = stored("t0", cntOf(docs))
+        val art1 = stored("t1", subtracted(art0))
+        // CMS is add-only: the takedown repair IS x55's re-sketch
+        // path, run off the stored tail′ keys; the from-scratch arm
+        // exists only to verify it
+        val rebuilt = sketchBytes(art1.filter(col("df") === 1))
+        val scratch = sketchBytes(
+          cntOf(docs.filter(!removedPred)).filter(col("df") === 1))
+        X56State(art0, art1, java.util.Arrays.equals(rebuilt, scratch))
+      }
       val before = st.art0.agg(
         sum(when(col("df") >= 2, 1L).otherwise(0L)).as("n_exact_before"),
         sum(when(col("df") === 1, 1L).otherwise(0L)).as("n_tail_before"))
@@ -2464,8 +2439,7 @@ object PipelineQueries {
         // retainCheckpoint (x55's rule): these frames live in x58's artifact
         // across constructions, so their blocks must survive the
         // per-query releaseAllBlocks sweep
-        val probed = if (planOnly) probed0
-          else graft.Housekeeping.retainCheckpoint(s)(probed0)
+        val probed = graft.Housekeeping.retainCheckpoint(s)(probed0)
         val estFlag = when(col("est") >= 1, 1L).otherwise(0L)
         val updated = exact.join(batch, Seq("h1", "h2"), "left")
           .select(col("h1"), col("h2"),
@@ -2497,32 +2471,25 @@ object PipelineQueries {
             (col("df") - coalesce(col("r"), lit(0L))).cast(LongType).as("df"))
           .filter(col("df") >= 1)
       }
-      val st =
-        if (planOnly) {
-          val a0 = cntOf(day0)
-          val (a1, p1) = mergeDay(a0, b1, Array.empty[Byte])
-          val a1t = subtracted(a1)
-          val (a2, p2) = mergeDay(a1t, b2, Array.empty[Byte])
-          X58State(a1, a1t, a2, p1, p2, resketchOk = true)
-        } else Artifacts.getOrBuild(s, d, "x58_tail_interleaved") {
-            val art0 = stored("d0", cntOf(day0))
-            val sk0 = sketchBytes(art0.filter(col("df") === 1))
-            val (newArt1, probed1) = mergeDay(art0, b1, sk0)
-            val art1 = stored("d1", newArt1)
-            // ---- the governance request between the merge days ----
-            val art1t = stored("td", subtracted(art1))
-            // CMS cannot subtract: rebuild the sketch from the STORED
-            // tail′ keys — zero residue by construction, never the corpus
-            val sk1t = sketchBytes(art1t.filter(col("df") === 1))
-            val scratchT = sketchBytes(
-              cntOf(docs.filter(col("doc_id") % 10 =!= 0
-                  && col("doc_id") % 9 =!= 0))
-                .filter(col("df") === 1))
-            val resketch = java.util.Arrays.equals(sk1t, scratchT)
-            val (newArt2, probed2) = mergeDay(art1t, b2, sk1t)
-            val art2 = stored("d2", newArt2)
-            X58State(art1, art1t, art2, probed1, probed2, resketch)
-          }
+      val st = Artifacts.getOrBuild(s, d, "x58_tail_interleaved") {
+        val art0 = stored("d0", cntOf(day0))
+        val sk0 = sketchBytes(art0.filter(col("df") === 1))
+        val (newArt1, probed1) = mergeDay(art0, b1, sk0)
+        val art1 = stored("d1", newArt1)
+        // ---- the governance request between the merge days ----
+        val art1t = stored("td", subtracted(art1))
+        // CMS cannot subtract: rebuild the sketch from the STORED
+        // tail′ keys — zero residue by construction, never the corpus
+        val sk1t = sketchBytes(art1t.filter(col("df") === 1))
+        val scratchT = sketchBytes(
+          cntOf(docs.filter(col("doc_id") % 10 =!= 0
+              && col("doc_id") % 9 =!= 0))
+            .filter(col("df") === 1))
+        val resketch = java.util.Arrays.equals(sk1t, scratchT)
+        val (newArt2, probed2) = mergeDay(art1t, b2, sk1t)
+        val art2 = stored("d2", newArt2)
+        X58State(art1, art1t, art2, probed1, probed2, resketch)
+      }
       val estFlag = when(col("est") >= 1, 1L).otherwise(0L)
       def dayCounts(p: org.apache.spark.sql.DataFrame, cName: String, nName: String) =
         p.agg(
@@ -2741,107 +2708,79 @@ object PipelineQueries {
         f.agg(count(lit(1)).as("n_rows"),
           coalesce(pmod(sum((col("h1") % M) * (col("h2") % M) % M
             * (col("df") % M) % M), M), lit(0L)).cast(LongType).as("checksum"))
-      val st =
-        if (planOnly) {
-          val retainedEv = ev.filter(!userPred)
-          val w = Window.partitionBy("user_id", "event_type")
-            .orderBy(col("from_us").asc, col("event_id").asc)
-          def histOf(f: org.apache.spark.sql.DataFrame) =
-            f.withColumn("valid_from", col("from_us"))
-              .withColumn("valid_to", lead(col("from_us"), 1).over(w))
-          val pulls = slices.zipWithIndex.map { case (c, i) =>
-            partial(ev.filter(c), s"pull_v${i + 1}") }.reduce(_ unionByName _)
-          val stateF = pulls.unionByName(negDelta(ev))
-          val g1f = augIndex(e)
-          val g2f = augIndex(e.filter(!tombPred))
-          val a0 = cntOf(docs)
-          val at = subtracted(a0)
-          val manA = mrow("source", 1L, idAgg(ev, "event_id"))
-            .unionByName(mrow("history", 0L, idAgg(ev, "event_id")))
-            .unionByName(mrow("state", 0L, stateAgg(pulls)))
-            .unionByName(mrow("ann_index", 1L, annAgg(g1f)))
-            .unionByName(mrow("tail_artifact", 0L, artAgg(a0)))
-          val manB = mrow("source", 2L, idAgg(retainedEv, "event_id"))
-            .unionByName(mrow("history", 0L, idAgg(retainedEv, "event_id")))
-            .unionByName(mrow("state", 0L, stateAgg(stateF)))
-            .unionByName(mrow("ann_index", 2L, annAgg(g2f)))
-            .unionByName(mrow("tail_artifact", 0L, artAgg(at)))
-          X59State(retainedEv, histOf(retainedEv), stateF, g1f, g2f,
-            e.filter(tombPred).select("vec_id"), a0, at, manA, manB,
-            2L, 1L, 2L, 0L)
-        } else Artifacts.getOrBuild(s, d, "x59_platform") {
-          val base = Artifacts.scratchPath(s, d, "platform")
-          val src = graft.sources.Store(s, s"$base/src", "event_type")
-          val hst = graft.sources.Store(s, s"$base/hist", "event_type")
-          val stt = graft.sources.Store(s, s"$base/state", "event_type")
-          val req = graft.sources.Store(s, s"$base/req", "event_type")
-          val g1 = graft.sources.Store(s, s"$base/gen1", "bucket")
-          val g2 = graft.sources.Store(s, s"$base/gen2", "bucket")
-          val tmb = graft.sources.Store(s, s"$base/tomb", "part")
-          val ptr = graft.sources.Store(s, s"$base/ptr", "part")
-          val a0s = graft.sources.Store(s, s"$base/art0", "part")
-          val ats = graft.sources.Store(s, s"$base/artT", "part")
-          val mst = graft.sources.Store(s, s"$base/manifest", "artifact")
-          Seq(src, hst, stt, req, g1, g2, tmb, ptr, a0s, ats, mst)
-            .foreach(_.destroy())
-          // ---- the platform builds (ingest cadence) ----
-          slices.foreach(c => src.appendVersioned(ev.filter(c)))
-          (1L to 3L).foreach { v =>
-            val delta = src.readChanges(v - 1, v)
-            hst.upsertScd2(delta, Seq("user_id", "event_type"), "from_us",
-              Seq(col("event_id")))
-            stt.update(partial(delta, s"pull_v$v"),
-              Seq("request_id", "event_type"))
-          }
-          g1.appendVersioned(augIndex(e))
-          a0s.append(cntOf(docs).withColumn("part", pmod(col("h1"), lit(8))))
-          val art0 = a0s.read.drop("part")
-          // manifest A PUBLISHED before the ticket (durable barrier: its
-          // source/history aggregates read files the purge destroys)
-          mst.append(
-            mrow("source", src.epoch, idAgg(src.read, "event_id"))
-              .unionByName(mrow("history", 0L, idAgg(hst.read, "event_id")))
-              .unionByName(mrow("state", 0L, stateAgg(stt.read)))
-              .unionByName(mrow("ann_index", 1L, annAgg(g1.read)))
-              .unionByName(mrow("tail_artifact", 0L, artAgg(art0))))
-          // ---- the ticket arrives: its negative delta lands durably
-          // BEFORE any destructive leg (re-delivery must never need the
-          // doomed source rows)
-          req.append(negDelta(ev))
-          def deliver(): Long =
-            if (stt.read.filter(col("request_id") === ticket)
-                .limit(1).count() > 0) 0L
-            else {
-              src.purgeRestartLineage(userPred) // request-keyed: no 2nd rewrite
-              hst.deleteWhere(userPred)         // empty on re-run
-              tmb.update(e.filter(tombPred).select("vec_id")
-                .withColumn("part", pmod(col("vec_id"), lit(4))), Seq("vec_id"))
-              if (!g2.exists)                   // guarded: one rebuild
-                g2.appendVersioned(augIndex(e.filter(!tombPred)))
-              ats.destroy()                     // overwrite-idempotent
-              ats.append(subtracted(art0)
-                .withColumn("part", pmod(col("h1"), lit(8))))
-              ptr.update(s.range(1).select(lit(2L).as("serving_gen"),
-                lit(0).as("part")), Seq("serving_gen"))
-              stt.update(req.read.filter(col("request_id") === ticket),
-                Seq("request_id", "event_type")) // the marker, LAST
-            }
-          val first = deliver()
-          require(first > 0L, "first delivery must apply the ticket")
-          val dup = deliver() // the SAME ticket, delivered again
-          val servingGen = ptr.read.agg(max(col("serving_gen"))).head().getLong(0)
-          val serving = if (servingGen >= 2L) g2.read else g1.read
-          val artT = ats.read.drop("part")
-          val manB = mrow("source", src.epoch, idAgg(src.read, "event_id"))
+      val st = Artifacts.getOrBuild(s, d, "x59_platform") {
+        val base = Artifacts.scratchPath(s, d, "platform")
+        val src = graft.sources.Store(s, s"$base/src", "event_type")
+        val hst = graft.sources.Store(s, s"$base/hist", "event_type")
+        val stt = graft.sources.Store(s, s"$base/state", "event_type")
+        val req = graft.sources.Store(s, s"$base/req", "event_type")
+        val g1 = graft.sources.Store(s, s"$base/gen1", "bucket")
+        val g2 = graft.sources.Store(s, s"$base/gen2", "bucket")
+        val tmb = graft.sources.Store(s, s"$base/tomb", "part")
+        val ptr = graft.sources.Store(s, s"$base/ptr", "part")
+        val a0s = graft.sources.Store(s, s"$base/art0", "part")
+        val ats = graft.sources.Store(s, s"$base/artT", "part")
+        val mst = graft.sources.Store(s, s"$base/manifest", "artifact")
+        Seq(src, hst, stt, req, g1, g2, tmb, ptr, a0s, ats, mst)
+          .foreach(_.destroy())
+        // ---- the platform builds (ingest cadence) ----
+        slices.foreach(c => src.appendVersioned(ev.filter(c)))
+        (1L to 3L).foreach { v =>
+          val delta = src.readChanges(v - 1, v)
+          hst.upsertScd2(delta, Seq("user_id", "event_type"), "from_us",
+            Seq(col("event_id")))
+          stt.update(partial(delta, s"pull_v$v"),
+            Seq("request_id", "event_type"))
+        }
+        g1.appendVersioned(augIndex(e))
+        a0s.append(cntOf(docs).withColumn("part", pmod(col("h1"), lit(8))))
+        val art0 = a0s.read.drop("part")
+        // manifest A PUBLISHED before the ticket (durable barrier: its
+        // source/history aggregates read files the purge destroys)
+        mst.append(
+          mrow("source", src.epoch, idAgg(src.read, "event_id"))
             .unionByName(mrow("history", 0L, idAgg(hst.read, "event_id")))
             .unionByName(mrow("state", 0L, stateAgg(stt.read)))
-            .unionByName(mrow("ann_index", servingGen, annAgg(serving)))
-            .unionByName(mrow("tail_artifact", 0L, artAgg(artT)))
-          X59State(src.read, hst.read, stt.read, g1.read, g2.read,
-            tmb.read.select("vec_id"), art0, artT,
-            mst.read.select("artifact", "coord", "n_rows", "checksum"), manB,
-            src.epoch, src.versions.size.toLong, servingGen, dup)
-        }
+            .unionByName(mrow("ann_index", 1L, annAgg(g1.read)))
+            .unionByName(mrow("tail_artifact", 0L, artAgg(art0))))
+        // ---- the ticket arrives: its negative delta lands durably
+        // BEFORE any destructive leg (re-delivery must never need the
+        // doomed source rows)
+        req.append(negDelta(ev))
+        def deliver(): Long =
+          if (stt.read.filter(col("request_id") === ticket)
+              .limit(1).count() > 0) 0L
+          else {
+            src.purgeRestartLineage(userPred) // request-keyed: no 2nd rewrite
+            hst.deleteWhere(userPred)         // empty on re-run
+            tmb.update(e.filter(tombPred).select("vec_id")
+              .withColumn("part", pmod(col("vec_id"), lit(4))), Seq("vec_id"))
+            if (!g2.exists)                   // guarded: one rebuild
+              g2.appendVersioned(augIndex(e.filter(!tombPred)))
+            ats.destroy()                     // overwrite-idempotent
+            ats.append(subtracted(art0)
+              .withColumn("part", pmod(col("h1"), lit(8))))
+            ptr.update(s.range(1).select(lit(2L).as("serving_gen"),
+              lit(0).as("part")), Seq("serving_gen"))
+            stt.update(req.read.filter(col("request_id") === ticket),
+              Seq("request_id", "event_type")) // the marker, LAST
+          }
+        val first = deliver()
+        require(first > 0L, "first delivery must apply the ticket")
+        val dup = deliver() // the SAME ticket, delivered again
+        val servingGen = ptr.read.agg(max(col("serving_gen"))).head().getLong(0)
+        val serving = if (servingGen >= 2L) g2.read else g1.read
+        val artT = ats.read.drop("part")
+        val manB = mrow("source", src.epoch, idAgg(src.read, "event_id"))
+          .unionByName(mrow("history", 0L, idAgg(hst.read, "event_id")))
+          .unionByName(mrow("state", 0L, stateAgg(stt.read)))
+          .unionByName(mrow("ann_index", servingGen, annAgg(serving)))
+          .unionByName(mrow("tail_artifact", 0L, artAgg(artT)))
+        X59State(src.read, hst.read, stt.read, g1.read, g2.read,
+          tmb.read.select("vec_id"), art0, artT,
+          mst.read.select("artifact", "coord", "n_rows", "checksum"), manB,
+          src.epoch, src.versions.size.toLong, servingGen, dup)
+      }
       def rows(aggd: org.apache.spark.sql.DataFrame, pairs: (String, String)*) =
         aggd.select(explode(map(pairs.flatMap { case (entry, c) =>
           Seq(lit(entry), col(c).cast(LongType)) }: _*)).as(Seq("entry", "value")))
@@ -3339,11 +3278,10 @@ object PipelineQueries {
         .groupBy("source").agg(count(lit(1)).as("n_exact_local"))
       // the pair relation feeds BOTH the clustering and the cross-source
       // count — pin it so the LSH chain (shingle → signature → buckets)
-      // runs once (plan-only constructions stay action-free)
+      // runs once
       val pairsRaw = Dedup.lshCandidates(minhashSig(s, d), "doc_id", 8,
         maxBucket = Some(X2MaxBucket))
-      val pairs =
-        if (planOnly) pairsRaw else graft.Housekeeping.pin(s)(pairsRaw).df
+      val pairs = graft.Housekeeping.pin(s)(pairsRaw).df
       val labels = Dedup.connectedComponents(pairs, docs, "doc_id")
         .select("doc_id", "cluster_id")
         .join(srcOf, Seq("doc_id"))
@@ -3462,8 +3400,7 @@ object PipelineQueries {
             TextAnalysis.hash32b(col("chunk_text")).as("h2"))
       val baseCnt = segsOf(docs.filter(col("doc_id") % 10 =!= 0))
         .groupBy("h1", "h2").agg(count(lit(1)).as("df"))
-      val stored =
-        if (planOnly) baseCnt else x48FreqStored(s, d, baseCnt)
+      val stored = x48FreqStored(s, d, baseCnt)
       val batchSegs = segsOf(docs.filter(col("doc_id") % 10 === 0))
       val batchCnt = batchSegs.groupBy("h1", "h2").agg(count(lit(1)).as("df"))
       val merged = stored.unionByName(batchCnt)
@@ -3601,8 +3538,7 @@ object PipelineQueries {
         .groupBy("h1", "h2").agg(count(lit(1)).as("df"))
       // three consumers (exact part, tail → sketch collect, tail → probe
       // attach) — pin so the corpus pays one segment pass
-      val baseCnt = if (planOnly) baseCnt0
-        else graft.Housekeeping.pin(s)(baseCnt0).df
+      val baseCnt = graft.Housekeeping.pin(s)(baseCnt0).df
       val exactPart = baseCnt.filter(col("df") >= 2)
       val tail = baseCnt.filter(col("df") === 1)
       // sketch collected once at build and inlined as a plan LITERAL (the
@@ -3614,18 +3550,16 @@ object PipelineQueries {
         .agg(expr("count_min_sketch(key, CAST(0.0001 AS DOUBLE), " +
             "CAST(0.99 AS DOUBLE), 42)").as("sk"),
           count(lit(1)).as("n_tail_rows"))
-      val (skBytes, nTailRows): (Array[Byte], Long) =
-        if (planOnly) (Array.empty[Byte], 0L)
-        else {
-          val r = sk.head()
-          val b = Option(r.getAs[Array[Byte]]("sk")).getOrElse {
-            val bos = new java.io.ByteArrayOutputStream()
-            org.apache.spark.util.sketch.CountMinSketch
-              .create(0.0001, 0.99, 42).writeTo(bos)
-            bos.toByteArray
-          }
-          (b, r.getAs[Long]("n_tail_rows"))
+      val (skBytes, nTailRows): (Array[Byte], Long) = {
+        val r = sk.head()
+        val b = Option(r.getAs[Array[Byte]]("sk")).getOrElse {
+          val bos = new java.io.ByteArrayOutputStream()
+          org.apache.spark.util.sketch.CountMinSketch
+            .create(0.0001, 0.99, 42).writeTo(bos)
+          bos.toByteArray
         }
+        (b, r.getAs[Long]("n_tail_rows"))
+      }
       val nExact = exactPart.agg(count(lit(1)).as("n_exact_rows"))
       val batchCnt = segsOf(docs.filter(col("doc_id") % 10 === 0))
         .groupBy("h1", "h2").agg(count(lit(1)).as("b"))
@@ -4100,9 +4034,7 @@ object PipelineQueries {
       val sig = minhashSig(s, d)
       val exist = sig.filter(col("doc_id") % 10 =!= 0)
       val batch = sig.filter(col("doc_id") % 10 === 0)
-      val labels0 =
-        if (planOnly) baseMapFit(s, d)
-        else baseMapStored(s, d)
+      val labels0 = baseMapStored(s, d)
       val newPairs = Dedup.lshCandidatesAgainst(batch, exist, "doc_id", 8)
         .select(col("doc_new").as("doc_a"), col("doc_base").as("doc_b"))
         .union(Dedup.lshCandidates(batch, "doc_id", 8))
@@ -4244,9 +4176,7 @@ object PipelineQueries {
       val batch = docs.filter(col("doc_id") % 10 === 0)
       // 1. dedup resolution against the stored canonical map
       val sig = minhashSig(s, d)
-      val labels0 =
-        if (planOnly) baseMapFit(s, d)
-        else baseMapStored(s, d)
+      val labels0 = baseMapStored(s, d)
       val newPairs = Dedup.lshCandidatesAgainst(
           sig.filter(col("doc_id") % 10 === 0),
           sig.filter(col("doc_id") % 10 =!= 0), "doc_id", 8)
@@ -4264,10 +4194,7 @@ object PipelineQueries {
             .when(col("n_all") >= 2, "new_cluster")
             .otherwise("singleton").as("outcome"))
       // 2. LM gate off the stored base model
-      val knM =
-        if (planOnly) graft.operators.Lm.bigramCounts(
-          docs.filter(col("doc_id") % 10 =!= 0))
-        else x40LmStored(s, d)
+      val knM = x40LmStored(s, d)
       val lmBand = Relational.groupedNtile(
           knHeldoutScored(knM, batch)
             .join(batch.select("doc_id", "lang"), Seq("doc_id"))
@@ -4276,9 +4203,7 @@ object PipelineQueries {
           n = 3, out = "band")
         .select(col("doc_id"), (col("band") >= 2).as("lm_keep"))
       // 3. discriminator gate off the stored coefficients
-      val clsM =
-        if (planOnly) x40ClsFit(docs)
-        else x40ClsStored(s, d)
+      val clsM = x40ClsStored(s, d)
       val clsKeep = Relational.groupedNtile(
           clsFeats(batch).join(broadcast(clsM), Seq("lang"))
             .select(col("doc_id"), col("lang"),
@@ -5024,13 +4949,11 @@ object PipelineQueries {
     * equal code budget. Scale: truth and both serve passes ride the y8
     * bounded-batch discipline (|Q| fixed, corpus linear); the Gram pass
     * is one shuffle of dims²×P partials; the eigensolve is O(dims³)
-    * driver work. In plan-only sweeps the rotation is the identity (same
-    * plan shape, zero actions at construction). */
+    * driver work. */
   private val y13OpqRotation = Q(
     (s, d) => {
       val e = y13Mixed(s, d)
-      val (r, er) =
-        if (planOnly) identityRotated(e) else y13RotationFor(s, d)
+      val (r, er) = y13RotationFor(s, d)
       val orthogonal = Similarity.orthogonalityDefect(r) < 1e-8
       val qPred = col("vec_id") % 50 === 0 && col("vec_id") < 1000
       val cbRaw = e.filter(col("vec_id") < 16)
@@ -5059,15 +4982,6 @@ object PipelineQueries {
       |  TRUE AS rotation_orthogonal, TRUE AS recall_ok
       |FROM embeddings WHERE vec_id % 50 = 0 AND vec_id < 1000""".stripMargin)
 
-  /** The identity rotation + unpinned projection pair the plan-only
-    * sweeps substitute for [[y13RotationFor]] — same downstream plan
-    * shape, zero actions at construction. */
-  private def identityRotated(e: org.apache.spark.sql.DataFrame)
-      : (Array[Array[Double]], org.apache.spark.sql.DataFrame) = {
-    val id = Array.tabulate(64, 64)((i, j) => if (i == j) 1.0 else 0.0)
-    (id, e.withColumn("rvec", Similarity.rotateVec("mvec", id)))
-  }
-
   /** y9b: the IVF-PQ SERVING path (y9) with the OPQ rotation applied at
     * its encode seam — the first of the two production deployments the
     * y13 rotation was built for. Both arms run the COMPLETE y9 DAG
@@ -5090,8 +5004,7 @@ object PipelineQueries {
       graft.Housekeeping.scopedConf(s,
         "spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
       val e = y13Mixed(s, d)
-      val (r, er) =
-        if (planOnly) identityRotated(e) else y13RotationFor(s, d)
+      val (r, er) = y13RotationFor(s, d)
       val orthogonal = Similarity.orthogonalityDefect(r) < 1e-8
       val qPred = col("vec_id") % 50 === 0 && col("vec_id") < 1000
       val truth = Similarity.bruteForceTopK(
@@ -5161,21 +5074,14 @@ object PipelineQueries {
   private val y3fKnnOpqFitted = Q(
     (s, d) => {
       val e = y13Mixed(s, d)
-      val (r, er) =
-        if (planOnly) identityRotated(e) else y13RotationFor(s, d)
+      val (r, er) = y13RotationFor(s, d)
       val orthogonal = Similarity.orthogonalityDefect(r) < 1e-8
       val qPred = col("vec_id") % 50 === 0 && col("vec_id") < 1000
       val anchorsRot = er.filter(col("vec_id") < IvfCells)
         .select(col("vec_id").as("anchor_id"), col("rvec").as("anchor_vec"))
       val cbRot = er.filter(col("vec_id") < 16)
         .select(col("vec_id").as("anchor_id"), col("rvec").as("anchor_vec"))
-      val stored =
-        if (planOnly)
-          Similarity.pqEncode(
-            Similarity.ivfAssign(er, anchorsRot, "vec_id", "rvec")
-              .select(col("vec_id"), col("rvec"), col("cell")),
-            cbRot, "vec_id", "rvec", m = 8, subDim = 8, carryCols = Seq("cell"))
-        else y3fStoredCodes(s, d, er)
+      val stored = y3fStoredCodes(s, d, er)
       val truth = Similarity.bruteForceTopK(
           e.filter(qPred), e, "vec_id", "mvec", k = 10)
         .select("q_id", "c_id")
@@ -5474,14 +5380,6 @@ object PipelineQueries {
     * refinement, and recall@5 against brute force over the stored index
     * at or above 40% (nprobe=2 of 8 cells — a deliberately loose
     * invariant; the gate passes it at both correctness SFs). */
-  /** Plan-only construction mode: PlanAuditSpec's registry-wide schema and
-    * codegen sweeps construct every declared query just to READ its plan —
-    * a query whose construction runs side effects (y3d's kmeans-fit actions
-    * and store write) substitutes a plan-shape-identical in-memory path
-    * when this property is set. Production entry points (Verify, Bench,
-    * Soak) never set it, so the gated output is always the real lifecycle. */
-  private def planOnly: Boolean = sys.props.get("graft.plan.only").contains("true")
-
   /** One fitted-IVF build per (session, input dir): repeated constructions
     * (Bench runs every query twice) reuse the first build's persisted index
     * instead of re-running the fit and the parquet write — exactly the
@@ -5516,16 +5414,7 @@ object PipelineQueries {
   private val y3dKnnIvfFitted = Q(
     (s, d) => {
       val e = Tables.embeddings(s, d)
-      val (index, anchors) =
-        if (planOnly) {
-          // plan/schema sweeps: same serve-plan shape (assign → cell
-          // equi-join → per-query window) off the in-memory assignment,
-          // zero actions and zero writes at construction time
-          val seed = e.filter(col("vec_id") < IvfCells)
-            .select(col("vec_id").as("anchor_id"), col("embedding").as("anchor_vec"))
-          (Similarity.ivfAssign(e, seed, "vec_id", "embedding")
-            .withColumn("nrm", Similarity.norm("embedding")).drop("cell_d2"), seed)
-        } else y3dIndexAndAnchors(s, d)
+      val (index, anchors) = y3dIndexAndAnchors(s, d)
       val served = Similarity.ivfTopKAssigned(index, anchors,
         id => id % 50 === 0, "vec_id", "embedding", k = 5, nprobe = 2)
       // recall gate on a BOUNDED query batch (y8's `< 1000` discipline —
@@ -5965,11 +5854,7 @@ object PipelineQueries {
     (s, d) => {
       import org.apache.spark.sql.types.{DecimalType, DoubleType, LongType}
       val e = Tables.embeddings(s, d)
-      val index =
-        if (planOnly)
-          Similarity.ivfAssign(e, y18Anchors(e), "vec_id", "embedding")
-            .select(col("vec_id"), col("cell"), col("cell_d2"))
-        else y18StoredIndex(s, d)
+      val index = y18StoredIndex(s, d)
       val M = lit(2147483647L)
       index.groupBy("cell").agg(
           count(lit(1)).as("n_vecs"),
@@ -6086,9 +5971,8 @@ object PipelineQueries {
       val docs = Tables.documents(s, d)
       // the signature relation feeds SIX consumers (one per candidate
       // generator per day) — pin it so the corpus pays one shingle pass
-      // (plan-only constructions stay action-free for the audit sweeps)
       val sigRaw = minhashSig(s, d)
-      val sig = if (planOnly) sigRaw else graft.Housekeeping.pin(s)(sigRaw).df
+      val sig = graft.Housekeeping.pin(s)(sigRaw).df
       val sigBase = sig.filter(col("doc_id") % 5 =!= 0)
       val labels0 = Dedup.connectedComponents(
         Dedup.lshCandidates(sigBase, "doc_id", 8),
@@ -6099,8 +5983,7 @@ object PipelineQueries {
         .union(Dedup.lshCandidates(sigW1, "doc_id", 8))
       val labels1Built = Dedup.incrementalComponents(labels0,
         docs.filter(col("doc_id") % 10 === 0).select("doc_id"), pairs1, "doc_id")
-      val labels1 =
-        if (planOnly) labels1Built else x47Stored(s, d, "d1", labels1Built)
+      val labels1 = x47Stored(s, d, "d1", labels1Built)
       val sigPrior = sig.filter(col("doc_id") % 10 =!= 5)
       val sigW2 = sig.filter(col("doc_id") % 10 === 5)
       val pairs2 = Dedup.lshCandidatesAgainst(sigW2, sigPrior, "doc_id", 8)
@@ -6108,8 +5991,7 @@ object PipelineQueries {
         .union(Dedup.lshCandidates(sigW2, "doc_id", 8))
       val labels2Built = Dedup.incrementalComponents(labels1,
         docs.filter(col("doc_id") % 10 === 5).select("doc_id"), pairs2, "doc_id")
-      val labels2 =
-        if (planOnly) labels2Built else x47Stored(s, d, "d2", labels2Built)
+      val labels2 = x47Stored(s, d, "d2", labels2Built)
       def outc(labels: org.apache.spark.sql.DataFrame,
                arrCond: Column, priorCond: Column) = {
         val cl = labels.groupBy("cluster_id").agg(
@@ -6232,23 +6114,23 @@ object PipelineQueries {
         .select(col("doc_id"), explode(expr(
           "transform(sequence(0, size(w) - 3), i -> concat_ws(' ', w[i], w[i+1], w[i+2]))"))
           .as("phrase"))
-      val top = tri.groupBy("phrase").agg(count(lit(1)).as("n_mined"))
-        .orderBy(col("n_mined").desc, col("phrase")).limit(3)
-      val wantRaw = top.select(col("phrase"), split(col("phrase"), " ").as("pw"))
-        .select(col("phrase"), col("pw").getItem(0).as("w0"),
-          col("pw").getItem(1).as("w1"), col("pw").getItem(2).as("w2"))
       // the mined 3-row phrase table and the token-filtered postings are
       // each consumed by several search branches — pin both so the corpus
-      // pays ONE mining pass and ONE explode pass, not one per branch
-      // (plan-only constructions must stay action-free, so the sweeps
-      // audit the unpinned plan shape)
-      val want = if (planOnly) wantRaw else graft.Housekeeping.pin(s)(wantRaw).df
+      // pays ONE mining pass and ONE explode pass, not one per branch. The
+      // pin holds the limit frame itself: a projection above it would
+      // plan the top-3 as a global range sort of the trigram histogram
+      val top = graft.Housekeeping.pin(s)(
+        tri.groupBy("phrase").agg(count(lit(1)).as("n_mined"))
+          .orderBy(col("n_mined").desc, col("phrase")).limit(3)).df
+      val pw = split(col("phrase"), " ")
+      val want = top.select(col("phrase"), pw.getItem(0).as("w0"),
+        pw.getItem(1).as("w1"), pw.getItem(2).as("w2"))
       val tokens = want.select(explode(array(col("w0"), col("w1"), col("w2")))
         .as("token")).distinct()
       val postRaw = docs
         .select(col("doc_id"), posexplode(col("w")).as(Seq("pos", "token")))
         .join(broadcast(tokens), Seq("token"), "left_semi")
-      val post = if (planOnly) postRaw else graft.Housekeeping.pin(s)(postRaw).df
+      val post = graft.Housekeeping.pin(s)(postRaw).df
       val starts = post.join(broadcast(want), col("token") === col("w0"))
         .select(col("phrase"), col("doc_id").as("d"), col("pos").as("p"),
           col("w1"), col("w2"))
@@ -8016,17 +7898,13 @@ object PipelineQueries {
     * key-hash sharding is how a billion-row bigram table co-locates with
     * its scorer join), then read back: the serve side never re-derives
     * counts from training text. One build per (session, input dir) —
-    * y3d's build-once discipline, same plan-only escape for
-    * the registry-wide plan sweeps. */
-  private def knBigramCounts(docs: org.apache.spark.sql.DataFrame) =
-    graft.operators.Lm.bigramCounts(docs)
-
+    * y3d's build-once discipline. */
   private def knModelStored(s: SparkSession, d: String) =
     Artifacts.getOrBuild(s, d, "z41_kn_model") {
       val path = Artifacts.scratchPath(s, d, "kn_model")
       val store = graft.sources.Store(s, path, "part")
       store.destroy()
-      store.append(knBigramCounts(
+      store.append(graft.operators.Lm.bigramCounts(
           Tables.documents(s, d).filter(col("doc_id") % 2 === 0))
         .withColumn("part", pmod(hash(col("prev")), lit(8))))
       store.read.drop("part")
@@ -8107,9 +7985,7 @@ object PipelineQueries {
   private val z41HeldoutPerplexity = Q(
     (s, d) => {
       val docs = Tables.documents(s, d)
-      val model =
-        if (planOnly) knBigramCounts(docs.filter(col("doc_id") % 2 === 0))
-        else knModelStored(s, d)
+      val model = knModelStored(s, d)
       knHeldoutScored(model, docs.filter(col("doc_id") % 2 === 1))
         .orderBy("doc_id")
     },
@@ -8156,8 +8032,7 @@ object PipelineQueries {
   /** The fitted discriminator persisted through the Store (lang →
     * snapshot coefficients, partitioned by lang) and read back — the
     * serve side never re-derives weights from training text. Same
-    * build-once discipline and plan-only escape as z41's
-    * bigram model. */
+    * build-once discipline as z41's bigram model. */
   private def clsModelStored(s: SparkSession, d: String) =
     Artifacts.getOrBuild(s, d, "z42_cls_model") {
       val path = Artifacts.scratchPath(s, d, "cls_model")
@@ -8187,9 +8062,7 @@ object PipelineQueries {
   private val z42ClassifierFitted = Q(
     (s, d) => {
       val docs = Tables.documents(s, d)
-      val model =
-        if (planOnly) clsModelFit(docs)
-        else clsModelStored(s, d)
+      val model = clsModelStored(s, d)
       val scored = clsFeats(docs.filter(col("doc_id") % 2 === 1))
         .join(broadcast(model), Seq("lang"))
         .withColumn("eta",
@@ -8429,9 +8302,7 @@ object PipelineQueries {
         .filter(col("keep")).select("doc_id")
       val span = Dedup.spanDupStats(docs, "doc_id", "text", k = 8, rolling = true)
         .filter(col("n_dup") * 2 <= col("n_windows")).select("doc_id")
-      val model =
-        if (planOnly) knBigramCounts(docs.filter(col("doc_id") % 2 === 0))
-        else knModelStored(s, d)
+      val model = knModelStored(s, d)
       val kn = knHeldoutScored(model, docs)
         .join(docs.select("doc_id", "lang"), Seq("doc_id"))
       val banded = Relational.groupedNtile(
@@ -8479,9 +8350,7 @@ object PipelineQueries {
     (s, d) => {
       val docs = Tables.documents(s, d)
       val odd = docs.filter(col("doc_id") % 2 === 1)
-      val knM =
-        if (planOnly) knBigramCounts(docs.filter(col("doc_id") % 2 === 0))
-        else knModelStored(s, d)
+      val knM = knModelStored(s, d)
       val banded = Relational.groupedNtile(
           knHeldoutScored(knM, odd)
             .join(odd.select("doc_id", "lang"), Seq("doc_id"))
@@ -8489,9 +8358,7 @@ object PipelineQueries {
           groups = Seq("lang"), order = Seq("avg_kn_logprob", "doc_id"),
           n = 3, out = "band")
         .select(col("doc_id"), (col("band") >= 2).as("lm_keep"))
-      val clsM =
-        if (planOnly) clsModelFit(docs)
-        else clsModelStored(s, d)
+      val clsM = clsModelStored(s, d)
       val cls = Relational.groupedNtile(
           clsFeats(odd).join(broadcast(clsM), Seq("lang"))
             .select(col("doc_id"), col("lang"),
@@ -8588,11 +8455,8 @@ object PipelineQueries {
       // gate DAG — and the CC loop re-runs its input per iteration.
       // The barrier IS a store write ([[v5SurvivorsStored]] — y13's rule,
       // now implemented rather than documented: fault-tolerant, shared
-      // with x37/x41, pruned by source on the read side). Plan-only
-      // sweeps skip it (no actions at construction).
-      val surv =
-        if (planOnly) v5Survivors(Tables.documents(s, d))
-        else v5SurvivorsStored(s, d)
+      // with x37/x41, pruned by source on the read side).
+      val surv = v5SurvivorsStored(s, d)
       val pairs = Dedup.lshCandidates(minhashSigOf(surv), "doc_id", 8,
         maxBucket = Some(X2MaxBucket))
       val labels = Dedup.connectedComponents(pairs, surv, "doc_id")
@@ -8709,9 +8573,7 @@ object PipelineQueries {
     * write — the two durable ends bound the recompute cost on loss). */
   private def scrubbedSurvivors(s: SparkSession, d: String): org.apache.spark.sql.DataFrame = {
     import org.apache.spark.sql.types.LongType
-    val surv =
-      if (planOnly) v5Survivors(Tables.documents(s, d))
-      else v5SurvivorsStored(s, d)
+    val surv = v5SurvivorsStored(s, d)
     val scr = Dedup.spanScrub(surv, "doc_id", "text", k = 8)
       .select(col("doc_id"), col("n_tokens").cast(LongType).as("orig_toks"),
         (col("n_tokens") - col("n_removed_tokens")).cast(LongType).as("clean_toks"))
@@ -8719,8 +8581,7 @@ object PipelineQueries {
       .join(surv.select("doc_id", "source"), Seq("doc_id"))
       .filter(col("clean_toks") >= 8)
       .select("doc_id", "source", "orig_toks", "clean_toks")
-    if (planOnly) cleanedFrame
-    else graft.Housekeeping.retainCheckpoint(s)(cleanedFrame)
+    graft.Housekeeping.retainCheckpoint(s)(cleanedFrame)
   }
 
   /** Oracle CTE chain producing `cl` — the scrubbed-survivor manifest
@@ -8846,11 +8707,7 @@ object PipelineQueries {
   private val x41RunMaterialize = Q(
     (s, d) => {
       import org.apache.spark.sql.types.LongType
-      val run =
-        if (planOnly)
-          Sampling.shardAssign(scrubbedSurvivors(s, d),
-            Seq("doc_id"), "clean_toks", nShards = 16)
-        else x41StoredRun(s, d)
+      val run = x41StoredRun(s, d)
       val ep = run.select(col("doc_id"), col("shard"), col("clean_toks"),
         explode(sequence(lit(0), lit(3))).as("epoch"))
       val ordered = ep.withColumn("pos", row_number().over(
@@ -8918,29 +8775,17 @@ object PipelineQueries {
     (s, d) => {
       import org.apache.spark.sql.types.LongType
       val M = lit(2147483647L)
-      val surv =
-        if (planOnly) v5Survivors(Tables.documents(s, d))
-        else v5SurvivorsStored(s, d)
-      val run =
-        if (planOnly) Sampling.shardAssign(scrubbedSurvivors(s, d),
-          Seq("doc_id"), "clean_toks", nShards = 16)
-        else x41StoredRun(s, d)
-      val lm =
-        if (planOnly) graft.operators.Lm.bigramCounts(
-          Tables.documents(s, d).filter(col("doc_id") % 10 =!= 0))
-        else x40LmStored(s, d)
-      val bm =
-        if (planOnly) baseMapFit(s, d).select("doc_id", "cluster_id")
-        else baseMapStored(s, d)
+      val surv = v5SurvivorsStored(s, d)
+      val run = x41StoredRun(s, d)
+      val lm = x40LmStored(s, d)
+      val bm = baseMapStored(s, d)
       // the store's lineage coordinate (metadata reads: one marker file +
       // one _log listing per artifact; the builders above guarantee the
       // logs exist before this runs)
-      def coordOf(path: String): (Long, Long) =
-        if (planOnly) (1L, 1L)
-        else {
-          val st = graft.sources.Store(s, path, "part")
-          (st.epoch, st.versions.lastOption.getOrElse(0L))
-        }
+      def coordOf(path: String): (Long, Long) = {
+        val st = graft.sources.Store(s, path, "part")
+        (st.epoch, st.versions.lastOption.getOrElse(0L))
+      }
       val (survEp, survV) = coordOf(v5SurvPath(s, d))
       val (runEp, runV) = coordOf(x41RunPath(s, d))
       val (lmEp, lmV) = coordOf(x40LmPath(s, d))
@@ -9076,26 +8921,12 @@ object PipelineQueries {
       import org.apache.spark.sql.types.LongType
       val M = lit(2147483647L)
       val docs = Tables.documents(s, d)
-      val surv =
-        if (planOnly) v5Survivors(docs)
-        else v5SurvivorsStored(s, d)
-      val run =
-        if (planOnly) Sampling.shardAssign(scrubbedSurvivors(s, d),
-          Seq("doc_id"), "clean_toks", nShards = 16)
-        else x41StoredRun(s, d)
-      val lm =
-        if (planOnly) graft.operators.Lm.bigramCounts(
-          docs.filter(col("doc_id") % 10 =!= 0))
-        else x40LmStored(s, d)
-      val bm =
-        if (planOnly) baseMapFit(s, d).select("doc_id", "cluster_id")
-        else baseMapStored(s, d)
+      val surv = v5SurvivorsStored(s, d)
+      val run = x41StoredRun(s, d)
+      val lm = x40LmStored(s, d)
+      val bm = baseMapStored(s, d)
       val e = Tables.embeddings(s, d)
-      val idx =
-        if (planOnly)
-          Similarity.ivfAssign(e, y18Anchors(e), "vec_id", "embedding")
-            .select(col("vec_id"), col("cell"), col("cell_d2"))
-        else y18StoredIndex(s, d)
+      val idx = y18StoredIndex(s, d)
 
       def manifestRow(name: String, agg: org.apache.spark.sql.DataFrame) =
         agg.select(lit(name).as("artifact"), col("n_rows"), col("total"),
@@ -9330,47 +9161,35 @@ object PipelineQueries {
               lit(0L)).cast(LongType).as("checksum"))
           .select(lit(name).as("artifact"), lit(ep).as("epoch"),
             lit(v).as("version"), col("n_rows"), col("checksum"))
-      val (manifestA, manifestB) =
-        if (planOnly) {
-          val pre = docs.filter(col("doc_id") % 4 >= 1)
-          val post = docs.filter(
-            (col("doc_id") % 4 >= 1 && col("doc_id") % 6 =!= 0)
-              || col("doc_id") % 4 === 0)
-          val bat = docs.filter(col("doc_id") % 4 === 0)
-          (mrow("corpus", pre, "doc_id", 1L, 3L)
-             .unionByName(mrow("reference_dims", region, "r_regionkey", 1L, 1L)),
-           mrow("corpus", post, "doc_id", 2L, 2L)
-             .unionByName(mrow("reference_dims", region, "r_regionkey", 1L, 1L))
-             .unionByName(mrow("ingest_batch", bat, "doc_id", 2L, 2L)))
-        } else Artifacts.getOrBuild(s, d, "x57_epoch_diff") {
-          val base = Artifacts.scratchPath(s, d, "epoch_diff")
-          val src = graft.sources.Store(s, s"$base/corpus", "source")
-          val dims = graft.sources.Store(s, s"$base/dims", "r_regionkey")
-          val mst = graft.sources.Store(s, s"$base/manifest", "artifact")
-          Seq(src, dims, mst).foreach(_.destroy())
-          (1 to 3).foreach(r =>
-            src.appendVersioned(docs.filter(col("doc_id") % 4 === r)))
-          dims.appendVersioned(region)
-          def coord(st: graft.sources.Store) =
-            (st.epoch, st.versions.lastOption.getOrElse(0L))
-          // PUBLISH manifest A before the purge: its aggregates read the
-          // files the purge destroys, so the store append is the barrier
-          val (e1, v1) = coord(src); val (de, dv) = coord(dims)
-          mst.append(
-            mrow("corpus", src.read, "doc_id", e1, v1)
-              .unionByName(mrow("reference_dims", dims.read, "r_regionkey", de, dv)))
-          // the governance request, then the next ingest day in epoch 2
-          src.purgeRestartLineage(col("doc_id") % 6 === 0)
-          src.appendVersioned(docs.filter(col("doc_id") % 4 === 0))
-          val (e2, v2) = coord(src)
-          val manB = mrow("corpus", src.read, "doc_id", e2, v2)
-            .unionByName(mrow("reference_dims", dims.read, "r_regionkey", de, dv))
-            // the batch artifact reads ONLY the changed files off the log
-            .unionByName(mrow("ingest_batch", src.readChanges(v2 - 1, v2),
-              "doc_id", e2, v2))
-          (mst.read.select("artifact", "epoch", "version", "n_rows", "checksum"),
-            manB)
-        }
+      val (manifestA, manifestB) = Artifacts.getOrBuild(s, d, "x57_epoch_diff") {
+        val base = Artifacts.scratchPath(s, d, "epoch_diff")
+        val src = graft.sources.Store(s, s"$base/corpus", "source")
+        val dims = graft.sources.Store(s, s"$base/dims", "r_regionkey")
+        val mst = graft.sources.Store(s, s"$base/manifest", "artifact")
+        Seq(src, dims, mst).foreach(_.destroy())
+        (1 to 3).foreach(r =>
+          src.appendVersioned(docs.filter(col("doc_id") % 4 === r)))
+        dims.appendVersioned(region)
+        def coord(st: graft.sources.Store) =
+          (st.epoch, st.versions.lastOption.getOrElse(0L))
+        // PUBLISH manifest A before the purge: its aggregates read the
+        // files the purge destroys, so the store append is the barrier
+        val (e1, v1) = coord(src); val (de, dv) = coord(dims)
+        mst.append(
+          mrow("corpus", src.read, "doc_id", e1, v1)
+            .unionByName(mrow("reference_dims", dims.read, "r_regionkey", de, dv)))
+        // the governance request, then the next ingest day in epoch 2
+        src.purgeRestartLineage(col("doc_id") % 6 === 0)
+        src.appendVersioned(docs.filter(col("doc_id") % 4 === 0))
+        val (e2, v2) = coord(src)
+        val manB = mrow("corpus", src.read, "doc_id", e2, v2)
+          .unionByName(mrow("reference_dims", dims.read, "r_regionkey", de, dv))
+          // the batch artifact reads ONLY the changed files off the log
+          .unionByName(mrow("ingest_batch", src.readChanges(v2 - 1, v2),
+            "doc_id", e2, v2))
+        (mst.read.select("artifact", "epoch", "version", "n_rows", "checksum"),
+          manB)
+      }
       val a = manifestA.select(col("artifact"), col("epoch").as("ea"),
         col("version").as("va"), col("n_rows").as("na"), col("checksum").as("ca"))
       val b = manifestB.select(col("artifact"), col("epoch").as("eb"),
@@ -9490,61 +9309,47 @@ object PipelineQueries {
           .select(lit(name).as("artifact"), lit(ep).as("epoch"),
             lit(v).as("version"), col("n_rows"), col("checksum"),
             lit(viaRepair).as("via_repair"))
-      val (manifestA, manifestB) =
-        if (planOnly) {
-          val pre = docs.filter(col("doc_id") % 3 >= 1)
-          val auxPre = nation.filter(col("n_nationkey") < 13)
-          (mrow("corpus", pre, "doc_id", 1L, 2L, viaRepair = false)
-             .unionByName(mrow("reference_dims", region, "r_regionkey",
-               1L, 1L, viaRepair = false))
-             .unionByName(mrow("aux_dims", auxPre, "n_nationkey",
-               1L, 1L, viaRepair = false)),
-           mrow("corpus", docs, "doc_id", 1L, 3L, viaRepair = true)
-             .unionByName(mrow("reference_dims", region, "r_regionkey",
-               1L, 1L, viaRepair = false))
-             .unionByName(mrow("aux_dims", nation, "n_nationkey",
-               1L, 2L, viaRepair = false)))
-        } else Artifacts.getOrBuild(s, d, "x60_repair_manifest") {
-          val base = Artifacts.scratchPath(s, d, "repair_man")
-          val src = graft.sources.Store(s, s"$base/corpus", "source")
-          val dims = graft.sources.Store(s, s"$base/dims", "r_regionkey")
-          val aux = graft.sources.Store(s, s"$base/aux", "n_nationkey")
-          Seq(src, dims, aux).foreach(_.destroy())
-          (1 to 2).foreach(r =>
-            src.appendVersioned(docs.filter(col("doc_id") % 3 === r)))
-          dims.appendVersioned(region)
-          aux.appendVersioned(nation.filter(col("n_nationkey") < 13))
-          // manifest-A coordinates, recorded as metadata before the incident
-          val (va, dv, xv) =
-            (src.versions.last, dims.versions.last, aux.versions.last)
-          // ---- the crash: a writer's data files land, its log write
-          // never runs (the orphan shape appendVersioned refuses over)
-          src.append(docs.filter(col("doc_id") % 3 === 0))
-          intercept(src) // the refusal is part of the contract — assert it
-          val rv = src.adoptOrphans()
-          require(rv.contains(va + 1), s"repair version unexpected: $rv")
-          // normal growth on the aux store in the same window
-          aux.appendVersioned(nation.filter(col("n_nationkey") >= 13))
-          def viaRepair(st: graft.sources.Store, fromV: Long): Boolean = {
-            val nv = st.versions.filter(_ > fromV)
-            nv.nonEmpty && nv.forall(st.isRepairVersion)
-          }
-          val manA =
-            mrow("corpus", src.readVersion(va), "doc_id", src.epoch, va,
-              viaRepair = false)
-            .unionByName(mrow("reference_dims", dims.readVersion(dv),
-              "r_regionkey", dims.epoch, dv, viaRepair = false))
-            .unionByName(mrow("aux_dims", aux.readVersion(xv), "n_nationkey",
-              aux.epoch, xv, viaRepair = false))
-          val manB =
-            mrow("corpus", src.read, "doc_id", src.epoch, src.versions.last,
-              viaRepair(src, va))
-            .unionByName(mrow("reference_dims", dims.read, "r_regionkey",
-              dims.epoch, dims.versions.last, viaRepair(dims, dv)))
-            .unionByName(mrow("aux_dims", aux.read, "n_nationkey",
-              aux.epoch, aux.versions.last, viaRepair(aux, xv)))
-          (manA, manB)
+      val (manifestA, manifestB) = Artifacts.getOrBuild(s, d, "x60_repair_manifest") {
+        val base = Artifacts.scratchPath(s, d, "repair_man")
+        val src = graft.sources.Store(s, s"$base/corpus", "source")
+        val dims = graft.sources.Store(s, s"$base/dims", "r_regionkey")
+        val aux = graft.sources.Store(s, s"$base/aux", "n_nationkey")
+        Seq(src, dims, aux).foreach(_.destroy())
+        (1 to 2).foreach(r =>
+          src.appendVersioned(docs.filter(col("doc_id") % 3 === r)))
+        dims.appendVersioned(region)
+        aux.appendVersioned(nation.filter(col("n_nationkey") < 13))
+        // manifest-A coordinates, recorded as metadata before the incident
+        val (va, dv, xv) =
+          (src.versions.last, dims.versions.last, aux.versions.last)
+        // ---- the crash: a writer's data files land, its log write
+        // never runs (the orphan shape appendVersioned refuses over)
+        src.append(docs.filter(col("doc_id") % 3 === 0))
+        intercept(src) // the refusal is part of the contract — assert it
+        val rv = src.adoptOrphans()
+        require(rv.contains(va + 1), s"repair version unexpected: $rv")
+        // normal growth on the aux store in the same window
+        aux.appendVersioned(nation.filter(col("n_nationkey") >= 13))
+        def viaRepair(st: graft.sources.Store, fromV: Long): Boolean = {
+          val nv = st.versions.filter(_ > fromV)
+          nv.nonEmpty && nv.forall(st.isRepairVersion)
         }
+        val manA =
+          mrow("corpus", src.readVersion(va), "doc_id", src.epoch, va,
+            viaRepair = false)
+          .unionByName(mrow("reference_dims", dims.readVersion(dv),
+            "r_regionkey", dims.epoch, dv, viaRepair = false))
+          .unionByName(mrow("aux_dims", aux.readVersion(xv), "n_nationkey",
+            aux.epoch, xv, viaRepair = false))
+        val manB =
+          mrow("corpus", src.read, "doc_id", src.epoch, src.versions.last,
+            viaRepair(src, va))
+          .unionByName(mrow("reference_dims", dims.read, "r_regionkey",
+            dims.epoch, dims.versions.last, viaRepair(dims, dv)))
+          .unionByName(mrow("aux_dims", aux.read, "n_nationkey",
+            aux.epoch, aux.versions.last, viaRepair(aux, xv)))
+        (manA, manB)
+      }
       val a = manifestA.select(col("artifact"), col("epoch").as("ea"),
         col("version").as("va"), col("n_rows").as("na"), col("checksum").as("ca"))
       val b = manifestB.select(col("artifact"), col("epoch").as("eb"),
@@ -9691,26 +9496,12 @@ object PipelineQueries {
       val M = lit(2147483647L)
       val docs = Tables.documents(s, d)
       val rmDoc = col("doc_id") % 17 === 3
-      val surv =
-        if (planOnly) v5Survivors(docs)
-        else v5SurvivorsStored(s, d)
-      val run =
-        if (planOnly) Sampling.shardAssign(scrubbedSurvivors(s, d),
-          Seq("doc_id"), "clean_toks", nShards = 16)
-        else x41StoredRun(s, d)
-      val lm =
-        if (planOnly) graft.operators.Lm.bigramCounts(
-          docs.filter(col("doc_id") % 10 =!= 0))
-        else x40LmStored(s, d)
-      val bm =
-        if (planOnly) baseMapFit(s, d).select("doc_id", "cluster_id")
-        else baseMapStored(s, d)
+      val surv = v5SurvivorsStored(s, d)
+      val run = x41StoredRun(s, d)
+      val lm = x40LmStored(s, d)
+      val bm = baseMapStored(s, d)
       val e = Tables.embeddings(s, d)
-      val idx =
-        if (planOnly)
-          Similarity.ivfAssign(e, y18Anchors(e), "vec_id", "embedding")
-            .select(col("vec_id"), col("cell"), col("cell_d2"))
-        else y18StoredIndex(s, d)
+      val idx = y18StoredIndex(s, d)
 
       // tombstone artifacts: one conditional-aggregation pass each
       val survRow = surv.agg(
@@ -9900,47 +9691,21 @@ object PipelineQueries {
     (s, d) => {
       import org.apache.spark.sql.types.LongType
       val M = lit(2147483647L)
-      if (planOnly) {
-        // in-memory equivalents of the sidecar sums: identical terms over
-        // the builder frames (no store IO during plan sweeps)
-        def row(name: String, df: org.apache.spark.sql.DataFrame,
-                term: org.apache.spark.sql.Column) =
-          df.agg(count(lit(1)).cast(LongType).as("n_rows"),
-              coalesce(pmod(sum(pmod(term, M)), M), lit(0L))
-                .cast(LongType).as("checksum"))
-            .select(lit(name).as("artifact"), col("n_rows"), col("checksum"))
-        val docs = Tables.documents(s, d)
-        val run = Sampling.shardAssign(scrubbedSurvivors(s, d),
-          Seq("doc_id"), "clean_toks", nShards = 16)
-        val lm = graft.operators.Lm.bigramCounts(
-          docs.filter(col("doc_id") % 10 =!= 0))
-        row("survivor_set", v5Survivors(docs),
-            (col("doc_id") % M) * (col("doc_id") % M) % M)
-          .unionByName(row("train_run", run,
-            (col("doc_id") % M) * ((col("shard") + 1) % M) % M))
-          .unionByName(row("lm_model", lm,
-            (TextAnalysis.hash32(col("prev")) * 31 + TextAnalysis.hash32(col("cur"))) % M
-              * (col("n_bg") % M) % M))
-          .unionByName(row("canonical_map", baseMapFit(s, d),
-            (col("doc_id") % M) * (col("cluster_id") % M) % M))
-          .orderBy("artifact")
-      } else {
-        // force the builds (and with them the write-time tracking) …
-        v5SurvivorsStored(s, d); x41StoredRun(s, d)
-        x40LmStored(s, d); baseMapStored(s, d)
-        // … then read ONLY the sidecars
-        def row(name: String, path: String, partCol: String) =
-          graft.sources.Store(s, path, partCol).readStats
-            .agg(coalesce(sum(col("n_rows")), lit(0L)).cast(LongType).as("n_rows"),
-              coalesce(pmod(sum(col("checksum")), M), lit(0L))
-                .cast(LongType).as("checksum"))
-            .select(lit(name).as("artifact"), col("n_rows"), col("checksum"))
-        row("survivor_set", v5SurvPath(s, d), "source")
-          .unionByName(row("train_run", x41RunPath(s, d), "shard"))
-          .unionByName(row("lm_model", x40LmPath(s, d), "part"))
-          .unionByName(row("canonical_map", baseMapPath(s, d), "part"))
-          .orderBy("artifact")
-      }
+      // force the builds (and with them the write-time tracking) …
+      v5SurvivorsStored(s, d); x41StoredRun(s, d)
+      x40LmStored(s, d); baseMapStored(s, d)
+      // … then read ONLY the sidecars
+      def row(name: String, path: String, partCol: String) =
+        graft.sources.Store(s, path, partCol).readStats
+          .agg(coalesce(sum(col("n_rows")), lit(0L)).cast(LongType).as("n_rows"),
+            coalesce(pmod(sum(col("checksum")), M), lit(0L))
+              .cast(LongType).as("checksum"))
+          .select(lit(name).as("artifact"), col("n_rows"), col("checksum"))
+      row("survivor_set", v5SurvPath(s, d), "source")
+        .unionByName(row("train_run", x41RunPath(s, d), "shard"))
+        .unionByName(row("lm_model", x40LmPath(s, d), "part"))
+        .unionByName(row("canonical_map", baseMapPath(s, d), "part"))
+        .orderBy("artifact")
     },
     s"""WITH RECURSIVE $x37ScrubCtes,
        |wwshr AS (SELECT doc_id, clean_toks,
@@ -10832,8 +10597,8 @@ object PipelineQueries {
       val truth0 = Relational.groupedTopK(scored, Seq("q_id"), col("c_id"),
           Seq(col("dot").desc, col("c_id").asc), k = 3, out = "rank")
         .select("q_id", "c_id")
-      // four arms read ONE truth relation (plan-only stays action-free)
-      val truth = if (planOnly) truth0 else graft.Housekeeping.pin(s)(truth0).df
+      // four arms read ONE truth relation
+      val truth = graft.Housekeeping.pin(s)(truth0).df
       val nTruth = truth.agg(count(lit(1)).as("n_truth"))
       val served = (for { p <- Seq(4, 6); r <- Seq(0, 1) } yield
         Similarity.mipsTopK(e, qPred, "vec_id", "embedding", k = 3,
@@ -11045,7 +10810,7 @@ object PipelineQueries {
             "vec_id", "embedding", k = 3)
           .select("q_id", "c_id")
         // three consumers per fraction (count, both arm joins) — pin
-        val truth = if (planOnly) truth0 else graft.Housekeeping.pin(s)(truth0).df
+        val truth = graft.Housekeeping.pin(s)(truth0).df
         val rebuild = Similarity.bucketedTopK(retained, qPred, "vec_id",
             "embedding", k = 3, probeRadius = 1)
           .select("q_id", "c_id")
@@ -11168,7 +10933,7 @@ object PipelineQueries {
       val truth0 = Relational.groupedTopK(scored, Seq("q_id"), col("c_id"),
           Seq(col("dot").desc, col("c_id").asc), k = 3, out = "rank")
         .select("q_id", "c_id")
-      val truth = if (planOnly) truth0 else graft.Housekeeping.pin(s)(truth0).df
+      val truth = graft.Housekeeping.pin(s)(truth0).df
       val rebuild = Similarity.mipsTopK(retained, qPred, "vec_id", "embedding",
           k = 3, planes = 4)
         .select(lit("rebuild").as("arm"), col("q_id"), col("c_id"))
@@ -11342,72 +11107,57 @@ object PipelineQueries {
             broadcast(t.select(col("vec_id").as("c_id"))), Seq("c_id"), "left_anti"))
           .select("q_id", "c_id", "rank")
       }
-      val st =
-        if (planOnly) {
-          val q = e.filter(qPred(col("vec_id")))
-            .select(col("vec_id").as("q_id"), col("embedding").as("q_vec"))
-          val c = retained.select(col("vec_id").as("c_id"),
-            col("embedding").as("c_vec"))
-          val truth = Relational.groupedTopK(
+      val st = Artifacts.getOrBuild(s, d, "y27_gov_ann") {
+        val base = Artifacts.scratchPath(s, d, "gov_ann")
+        val g1 = graft.sources.Store(s, s"$base/gen1", "bucket")
+        val g2 = graft.sources.Store(s, s"$base/gen2", "bucket")
+        val tmb = graft.sources.Store(s, s"$base/tomb", "part")
+        val ptr = graft.sources.Store(s, s"$base/ptr", "part")
+        Seq(g1, g2, tmb, ptr).foreach(_.destroy())
+        g1.appendVersioned(augIndex(e))
+        // ---- the request arrives ----
+        tmb.append(e.filter(tombPred).select("vec_id")
+          .withColumn("part", pmod(col("vec_id"), lit(4))))
+        val tombIds = tmb.read.select("vec_id")
+        // exact retained-MIPS truth (bounded query batch); cached across
+        // constructions, so retainCheckpoint, not pin
+        val q = e.filter(qPred(col("vec_id")))
+          .select(col("vec_id").as("q_id"), col("embedding").as("q_vec"))
+        val c = retained.select(col("vec_id").as("c_id"),
+          col("embedding").as("c_vec"))
+        val truth = graft.Housekeeping.retainCheckpoint(s)(
+          Relational.groupedTopK(
               q.join(c, col("q_id") =!= col("c_id"))
                 .withColumn("dot", round(Similarity.dot("q_vec", "c_vec"), 6)),
               Seq("q_id"), col("c_id"),
               Seq(col("dot").desc, col("c_id").asc), k = 3, out = "rank")
-            .select("q_id", "c_id")
-          val pf = serveFrom(augIndex(e), 6, Some(e.filter(tombPred)))
-          val rb = serveFrom(augIndex(retained), 3, None)
-          Y27State(pf, rb, truth, rebuildNow = true, servingGen = 2L)
-        } else Artifacts.getOrBuild(s, d, "y27_gov_ann") {
-          val base = Artifacts.scratchPath(s, d, "gov_ann")
-          val g1 = graft.sources.Store(s, s"$base/gen1", "bucket")
-          val g2 = graft.sources.Store(s, s"$base/gen2", "bucket")
-          val tmb = graft.sources.Store(s, s"$base/tomb", "part")
-          val ptr = graft.sources.Store(s, s"$base/ptr", "part")
-          Seq(g1, g2, tmb, ptr).foreach(_.destroy())
-          g1.appendVersioned(augIndex(e))
-          // ---- the request arrives ----
-          tmb.append(e.filter(tombPred).select("vec_id")
-            .withColumn("part", pmod(col("vec_id"), lit(4))))
-          val tombIds = tmb.read.select("vec_id")
-          // exact retained-MIPS truth (bounded query batch); cached across
-          // constructions, so retainCheckpoint, not pin
-          val q = e.filter(qPred(col("vec_id")))
-            .select(col("vec_id").as("q_id"), col("embedding").as("q_vec"))
-          val c = retained.select(col("vec_id").as("c_id"),
-            col("embedding").as("c_vec"))
-          val truth = graft.Housekeeping.retainCheckpoint(s)(
-            Relational.groupedTopK(
-                q.join(c, col("q_id") =!= col("c_id"))
-                  .withColumn("dot", round(Similarity.dot("q_vec", "c_vec"), 6)),
-                Seq("q_id"), col("c_id"),
-                Seq(col("dot").desc, col("c_id").asc), k = 3, out = "rank")
-              .select("q_id", "c_id"))
-          // stopgap arm off the STALE stored index
-          val pf0 = serveFrom(g1.read, 6, Some(tombIds))
-            .withColumn("r2", row_number().over(
-              Window.partitionBy("q_id").orderBy(col("rank").asc)))
-            .filter(col("r2") <= 3).select("q_id", "c_id")
-          val pf = graft.Housekeeping.retainCheckpoint(s)(pf0)
-          // candidate generation 2: retained corpus, RE-AUGMENTED
-          g2.appendVersioned(augIndex(retained))
-          val rb = graft.Housekeeping.retainCheckpoint(s)(
-            serveFrom(g2.read, 3, None).select("q_id", "c_id"))
-          // the measured y25 decision
-          def hits(a: org.apache.spark.sql.DataFrame) =
-            a.join(truth, Seq("q_id", "c_id"), "left_semi").count()
-          val pfQ = pf.select("q_id").distinct().count()
-          val pfServed = pf.count()
-          val (pfHits, rbHits) = (hits(pf), hits(rb))
-          val rebuildNow = (pfQ * 3 - pfServed) > 0 || rbHits > pfHits ||
-            7L <= RebuildDeletionModMax
-          // promotion is a metadata append to the pointer store
-          ptr.append(s.range(1).select(
-            lit(if (rebuildNow) 2L else 1L).as("serving_gen"),
-            lit(0).as("part")))
-          val servingGen = ptr.read.select("serving_gen")
-            .head().getLong(0)
-          Y27State(pf, rb, truth, rebuildNow, servingGen)
-        }
+            .select("q_id", "c_id"))
+        // stopgap arm off the STALE stored index
+        val pf0 = serveFrom(g1.read, 6, Some(tombIds))
+          .withColumn("r2", row_number().over(
+            Window.partitionBy("q_id").orderBy(col("rank").asc)))
+          .filter(col("r2") <= 3).select("q_id", "c_id")
+        val pf = graft.Housekeeping.retainCheckpoint(s)(pf0)
+        // candidate generation 2: retained corpus, RE-AUGMENTED
+        g2.appendVersioned(augIndex(retained))
+        val rb = graft.Housekeeping.retainCheckpoint(s)(
+          serveFrom(g2.read, 3, None).select("q_id", "c_id"))
+        // the measured y25 decision
+        def hits(a: org.apache.spark.sql.DataFrame) =
+          a.join(truth, Seq("q_id", "c_id"), "left_semi").count()
+        val pfQ = pf.select("q_id").distinct().count()
+        val pfServed = pf.count()
+        val (pfHits, rbHits) = (hits(pf), hits(rb))
+        val rebuildNow = (pfQ * 3 - pfServed) > 0 || rbHits > pfHits ||
+          7L <= RebuildDeletionModMax
+        // promotion is a metadata append to the pointer store
+        ptr.append(s.range(1).select(
+          lit(if (rebuildNow) 2L else 1L).as("serving_gen"),
+          lit(0).as("part")))
+        val servingGen = ptr.read.select("serving_gen")
+          .head().getLong(0)
+        Y27State(pf, rb, truth, rebuildNow, servingGen)
+      }
       val nTruth = st.truth.agg(count(lit(1)).as("n_truth"))
       st.rb.select(lit("rebuild").as("arm"), lit(2L).as("index_gen"),
           col("q_id"), col("c_id"))

@@ -18,12 +18,6 @@ import org.apache.spark.sql.types.{DecimalType, DoubleType, IntegerType, LongTyp
   */
 object RelationalQueries {
 
-  /** Plan-audit escape shared with PipelineQueries' discipline: sweeps
-    * that construct every registered query (DECIMAL/codegen audits) set
-    * this so store-lifecycle queries substitute a plan-equivalent frame
-    * instead of running real write jobs at construction time. */
-  private def planOnly: Boolean = sys.props.get("graft.plan.only").contains("true")
-
   /** Exact ndv as a two-phase `groupBy(c)→count` (s20's Expand-free rung,
     * r13): map-side combinable, fully codegen'd, shuffles one row per
     * distinct value. The `isNotNull` filter is load-bearing (r13 ADVICE):
@@ -212,15 +206,7 @@ object RelationalQueries {
       val ev = Tables.events(s, d)
         .withColumn("from_us", unix_micros(col("ts")))
         .select("event_id", "user_id", "event_type", "value", "from_us")
-      // plan-only sweeps substitute the window-derived history (the
-      // equality the oracle proves) so construction stays action-free
-      val hist = if (planOnly) {
-        val w = org.apache.spark.sql.expressions.Window
-          .partitionBy("user_id", "event_type")
-          .orderBy(col("from_us").asc, col("event_id").asc)
-        ev.withColumn("valid_from", col("from_us"))
-          .withColumn("valid_to", lead(col("from_us"), 1).over(w))
-      } else {
+      val hist = {
         val path = Artifacts.scratchPath(s, d, "scd2")
         val store = graft.sources.Store(s, path, "event_type")
         store.destroy()
@@ -279,19 +265,14 @@ object RelationalQueries {
       import org.apache.spark.sql.types.LongType
       val docs = Tables.documents(s, d)
       val M = lit(2147483647L)
-      // plan-only sweeps substitute direct membership filters (what the
-      // oracle recomputes) so construction stays action-free
-      val changes: (Long, Long) => org.apache.spark.sql.DataFrame =
-        if (planOnly) { (f, t) =>
-          docs.filter(col("doc_id") % 3 >= f && col("doc_id") % 3 < t)
-        } else {
-          val path = Artifacts.scratchPath(s, d, "cdf")
-          val store = graft.sources.Store(s, path, "source")
-          store.destroy()
-          (0 to 2).foreach(r =>
-            store.appendVersioned(docs.filter(col("doc_id") % 3 === r)))
-          (f, t) => store.readChanges(f, t)
-        }
+      val changes: (Long, Long) => org.apache.spark.sql.DataFrame = {
+        val path = Artifacts.scratchPath(s, d, "cdf")
+        val store = graft.sources.Store(s, path, "source")
+        store.destroy()
+        (0 to 2).foreach(r =>
+          store.appendVersioned(docs.filter(col("doc_id") % 3 === r)))
+        (f, t) => store.readChanges(f, t)
+      }
       Seq((0L, 1L), (1L, 2L), (1L, 3L), (2L, 3L)).map { case (f, t) =>
         changes(f, t).agg(
             count(lit(1)).as("n_rows"),
@@ -322,18 +303,14 @@ object RelationalQueries {
     * recomputes membership from the raw corpus — proving the two-schema
     * layout loses nothing and invents nothing. At 100 TB this is the
     * difference between adding a column and rewriting a table; the
-    * no-rewrite guarantee is the point. planOnly substitutes the
-    * membership-derived frame (action-free construction). */
+    * no-rewrite guarantee is the point. */
   private val s27SchemaEvolution = Q(
     (s, d) => {
       import org.apache.spark.sql.types.LongType
       val docs = Tables.documents(s, d)
         .select(col("doc_id"), col("source"),
           (col("n_chars") % 7).cast(LongType).as("quality"))
-      val evolved = if (planOnly) {
-        docs.withColumn("quality",
-          when(col("doc_id") % 2 === 1, col("quality")))
-      } else {
+      val evolved = {
         val path = Artifacts.scratchPath(s, d, "schema_evo")
         val store = graft.sources.Store(s, path, "source")
         store.destroy()
@@ -378,21 +355,15 @@ object RelationalQueries {
       val docs = Tables.documents(s, d)
       val M = lit(2147483647L)
       val removeCond = col("doc_id") % 7 === 0
-      // plan-only sweeps substitute the retained-membership filter (what
-      // the oracle recomputes) so construction stays action-free
-      val (ep, nv, v1, rd) =
-        if (planOnly) {
-          val sub = docs.filter(col("doc_id") % 7 =!= 0)
-          (2L, 1L, sub, sub)
-        } else {
-          val path = Artifacts.scratchPath(s, d, "purge")
-          val store = graft.sources.Store(s, path, "source")
-          store.destroy()
-          (0 to 2).foreach(r =>
-            store.appendVersioned(docs.filter(col("doc_id") % 3 === r)))
-          val e = store.purgeRestartLineage(removeCond)
-          (e, store.versions.size.toLong, store.readVersion(1), store.read)
-        }
+      val (ep, nv, v1, rd) = {
+        val path = Artifacts.scratchPath(s, d, "purge")
+        val store = graft.sources.Store(s, path, "source")
+        store.destroy()
+        (0 to 2).foreach(r =>
+          store.appendVersioned(docs.filter(col("doc_id") % 3 === r)))
+        val e = store.purgeRestartLineage(removeCond)
+        (e, store.versions.size.toLong, store.readVersion(1), store.read)
+      }
       def stats(df: org.apache.spark.sql.DataFrame) = df.agg(
         count(lit(1)).as("n_rows"),
         sum(size(split(col("text"), " ")).cast(LongType)).as("n_tokens"),
@@ -437,22 +408,16 @@ object RelationalQueries {
       val docs = Tables.documents(s, d)
       val M = lit(2147483647L)
       val scored = (col("n_chars") % 7).cast(LongType)
-      // plan-only sweeps substitute membership filters with the version-
-      // dependent scoredness (what the oracle recomputes) — action-free
-      val changes: (Long, Long) => org.apache.spark.sql.DataFrame =
-        if (planOnly) { (f, t) =>
-          docs.filter(col("doc_id") % 3 >= f && col("doc_id") % 3 < t)
-            .withColumn("quality", when(col("doc_id") % 3 >= 1, scored))
-        } else {
-          val path = Artifacts.scratchPath(s, d, "cdf_evo")
-          val store = graft.sources.Store(s, path, "source")
-          store.destroy()
-          store.appendVersioned(
-            docs.filter(col("doc_id") % 3 === 0)) // pre-evolution: no column
-          (1 to 2).foreach(r => store.appendVersioned(
-            docs.filter(col("doc_id") % 3 === r).withColumn("quality", scored)))
-          (f, t) => store.readChanges(f, t, mergeSchema = true)
-        }
+      val changes: (Long, Long) => org.apache.spark.sql.DataFrame = {
+        val path = Artifacts.scratchPath(s, d, "cdf_evo")
+        val store = graft.sources.Store(s, path, "source")
+        store.destroy()
+        store.appendVersioned(
+          docs.filter(col("doc_id") % 3 === 0)) // pre-evolution: no column
+        (1 to 2).foreach(r => store.appendVersioned(
+          docs.filter(col("doc_id") % 3 === r).withColumn("quality", scored)))
+        (f, t) => store.readChanges(f, t, mergeSchema = true)
+      }
       Seq((0L, 1L), (1L, 3L), (0L, 3L)).map { case (f, t) =>
         val delta0 = changes(f, t)
         // a range entirely BEFORE the evolution has no quality column at
@@ -510,16 +475,7 @@ object RelationalQueries {
         .select("event_id", "user_id", "event_type", "value", "from_us")
       def partial(f: DataFrame) = f.groupBy("event_type")
         .agg(count(lit(1)).as("n"), sum(dec2(col("value"))).as("s_dec"))
-      // plan-only sweeps substitute the window-derived history and a
-      // one-shot partial (the equalities the oracle proves) — action-free
-      val (hist, state) = if (planOnly) {
-        val w = org.apache.spark.sql.expressions.Window
-          .partitionBy("user_id", "event_type")
-          .orderBy(col("from_us").asc, col("event_id").asc)
-        (ev.withColumn("valid_from", col("from_us"))
-            .withColumn("valid_to", lead(col("from_us"), 1).over(w)),
-          partial(ev))
-      } else {
+      val (hist, state) = {
         val base = Artifacts.scratchPath(s, d, "cdc_chain")
         val src = graft.sources.Store(s, s"$base/src", "event_type")
         val hst = graft.sources.Store(s, s"$base/hist", "event_type")
@@ -578,18 +534,15 @@ object RelationalQueries {
       import org.apache.spark.sql.types.LongType
       val docs = Tables.documents(s, d)
       val M = lit(2147483647L)
-      // plan-only sweeps substitute batch-prefix membership filters
-      val snapshot: Long => org.apache.spark.sql.DataFrame =
-        if (planOnly) { v => docs.filter(col("doc_id") % 4 < v) }
-        else {
-          val path = Artifacts.scratchPath(s, d, "retention")
-          val store = graft.sources.Store(s, path, "source")
-          store.destroy()
-          (0 to 3).foreach(r =>
-            store.appendVersioned(docs.filter(col("doc_id") % 4 === r)))
-          store.collapseHistory(2)
-          v => store.readVersion(v)
-        }
+      val snapshot: Long => org.apache.spark.sql.DataFrame = {
+        val path = Artifacts.scratchPath(s, d, "retention")
+        val store = graft.sources.Store(s, path, "source")
+        store.destroy()
+        (0 to 3).foreach(r =>
+          store.appendVersioned(docs.filter(col("doc_id") % 4 === r)))
+        store.collapseHistory(2)
+        v => store.readVersion(v)
+      }
       (2 to 4).map { v =>
         snapshot(v.toLong).agg(
             count(lit(1)).as("n_rows"),
@@ -654,15 +607,7 @@ object RelationalQueries {
       val removePred = col("user_id") % 5 === 0
       def partial(f: DataFrame) = f.groupBy("event_type")
         .agg(count(lit(1)).as("n"), sum(dec2(col("value"))).as("s_dec"))
-      val (hist, state, epoch) = if (planOnly) {
-        val retained = ev.filter(!removePred)
-        val w = org.apache.spark.sql.expressions.Window
-          .partitionBy("user_id", "event_type")
-          .orderBy(col("from_us").asc, col("event_id").asc)
-        (retained.withColumn("valid_from", col("from_us"))
-            .withColumn("valid_to", lead(col("from_us"), 1).over(w)),
-          partial(retained), 2L)
-      } else Artifacts.getOrBuild(s, d, "s32_chain_purge") {
+      val (hist, state, epoch) = Artifacts.getOrBuild(s, d, "s32_chain_purge") {
         val base = Artifacts.scratchPath(s, d, "chain_purge")
         val src = graft.sources.Store(s, s"$base/src", "event_type")
         val hst = graft.sources.Store(s, s"$base/hist", "event_type")
@@ -763,20 +708,7 @@ object RelationalQueries {
         col("from_us") < t1,
         col("from_us") >= t1 && col("from_us") < t2,
         col("from_us") >= t2)
-      val (hist, state, epoch, dupApplied) = if (planOnly) {
-        val retained = ev.filter(!removePred)
-        val w = org.apache.spark.sql.expressions.Window
-          .partitionBy("user_id", "event_type")
-          .orderBy(col("from_us").asc, col("event_id").asc)
-        val neg = ev.filter(removePred).groupBy("event_type")
-          .agg((-count(lit(1))).as("n"), (-sum(dec2(col("value")))).as("s_dec"))
-          .withColumn("request_id", lit(reqId))
-        (retained.withColumn("valid_from", col("from_us"))
-            .withColumn("valid_to", lead(col("from_us"), 1).over(w)),
-          slices.zipWithIndex.map { case (c, i) =>
-            partial(ev.filter(c), s"pull_v${i + 1}")
-          }.reduce(_ unionByName _).unionByName(neg), 2L, 0L)
-      } else Artifacts.getOrBuild(s, d, "s33_idempotent_purge") {
+      val (hist, state, epoch, dupApplied) = Artifacts.getOrBuild(s, d, "s33_idempotent_purge") {
         val base = Artifacts.scratchPath(s, d, "chain_idem")
         val src = graft.sources.Store(s, s"$base/src", "event_type")
         val hst = graft.sources.Store(s, s"$base/hist", "event_type")
@@ -878,25 +810,15 @@ object RelationalQueries {
       val term = (col("doc_id") % M) * ((col("doc_id") + 11) % M) % M
       val remove = (col("doc_id") % 3 === 0 && col("part") < 4) ||
         col("part") === 7
-      if (planOnly) {
-        // plan-equivalent substitute: the sidecar read IS statsOf over the
-        // retained rows (the store lifecycle proves they match on disk)
-        graft.sources.Store(s, "/nonexistent", "part")
-          .statsOf(docs.filter(not(remove)), term)
-          .select(col("part").cast(LongType).as("part"),
-            col("n_rows"), col("checksum"))
-          .orderBy("part")
-      } else {
-        val path = Artifacts.scratchPath(s, d, "tracked_delete")
-        val store = graft.sources.Store(s, path, "part")
-        store.destroy()
-        store.appendTracked(docs, term)
-        store.deleteWhereTracked(remove, term)
-        store.readStats
-          .select(col("part").cast(LongType).as("part"),
-            col("n_rows"), col("checksum"))
-          .orderBy("part")
-      }
+      val path = Artifacts.scratchPath(s, d, "tracked_delete")
+      val store = graft.sources.Store(s, path, "part")
+      store.destroy()
+      store.appendTracked(docs, term)
+      store.deleteWhereTracked(remove, term)
+      store.readStats
+        .select(col("part").cast(LongType).as("part"),
+          col("n_rows"), col("checksum"))
+        .orderBy("part")
     },
     """SELECT CAST(doc_id % 8 AS BIGINT) AS part,
       |  CAST(COUNT(*) AS BIGINT) AS n_rows,
@@ -934,33 +856,24 @@ object RelationalQueries {
       val ev = Tables.events(s, d)
         .withColumn("from_us", unix_micros(col("ts")))
         .select("event_id", "user_id", "event_type", "value", "from_us")
-      val hist =
-        if (planOnly) {
-          val w = org.apache.spark.sql.expressions.Window
-            .partitionBy("user_id", "event_type")
-            .orderBy(col("from_us").asc, col("event_id").asc)
-          ev.withColumn("score",
-              when(col("from_us") >= t1, col("value") * 2))
-            .withColumn("valid_from", col("from_us"))
-            .withColumn("valid_to", lead(col("from_us"), 1).over(w))
-        } else {
-          val path = Artifacts.scratchPath(s, d, "evo_scd2")
-          val store = graft.sources.Store(s, path, "event_type")
-          store.destroy()
-          val keys = Seq("user_id", "event_type")
-          store.upsertScd2(ev.filter(col("from_us") < t1), keys, "from_us",
-            Seq(col("event_id")))
-          // the feed EVOLVES: pulls 2 and 3 carry the new column
-          store.upsertScd2(
-            ev.filter(col("from_us") >= t1 && col("from_us") < t2)
-              .withColumn("score", col("value") * 2),
-            keys, "from_us", Seq(col("event_id")), mergeSchema = true)
-          store.upsertScd2(
-            ev.filter(col("from_us") >= t2)
-              .withColumn("score", col("value") * 2),
-            keys, "from_us", Seq(col("event_id")), mergeSchema = true)
-          store.read(mergeSchema = true)
-        }
+      val hist = {
+        val path = Artifacts.scratchPath(s, d, "evo_scd2")
+        val store = graft.sources.Store(s, path, "event_type")
+        store.destroy()
+        val keys = Seq("user_id", "event_type")
+        store.upsertScd2(ev.filter(col("from_us") < t1), keys, "from_us",
+          Seq(col("event_id")))
+        // the feed EVOLVES: pulls 2 and 3 carry the new column
+        store.upsertScd2(
+          ev.filter(col("from_us") >= t1 && col("from_us") < t2)
+            .withColumn("score", col("value") * 2),
+          keys, "from_us", Seq(col("event_id")), mergeSchema = true)
+        store.upsertScd2(
+          ev.filter(col("from_us") >= t2)
+            .withColumn("score", col("value") * 2),
+          keys, "from_us", Seq(col("event_id")), mergeSchema = true)
+        store.read(mergeSchema = true)
+      }
       hist.groupBy("event_type").agg(
           count(lit(1)).as("n_versions"),
           sum(when(col("valid_to").isNull, 1L).otherwise(0L)).as("n_current"),
@@ -1015,28 +928,20 @@ object RelationalQueries {
         count(lit(1)).as("feed_rows"),
         pmod(sum((col("doc_id") % M) * ((col("doc_id") + 13) % M) % M), M)
           .cast(LongType).as("feed_checksum"))
-      val (stats, feed, ep, nv) =
-        if (planOnly) {
-          val retained = docs.filter(
-            (col("doc_id") % 4 >= 1 && col("doc_id") % 7 =!= 0) ||
-              col("doc_id") % 4 === 0)
-          (graft.sources.Store(s, "/nonexistent", "source")
-              .statsOf(retained, term),
-            feedAgg(docs.filter(col("doc_id") % 4 === 0)), 2L, 2L)
-        } else Artifacts.getOrBuild(s, d, "s36_versioned_tracked") {
-          val path = Artifacts.scratchPath(s, d, "vt_store")
-          val store = graft.sources.Store(s, path, "source")
-          store.destroy()
-          (1 to 3).foreach(r => store.appendVersionedTracked(
-            docs.filter(col("doc_id") % 4 === r), term))
-          // the governance request: epoch restart + sidecar rebuild in one
-          store.purgeRestartLineage(col("doc_id") % 7 === 0, Some(term))
-          // the composition keeps working on the new lineage (re-arrival
-          // of previously-removed ids is ingest, not a violation)
-          store.appendVersionedTracked(docs.filter(col("doc_id") % 4 === 0), term)
-          (store.readStats, feedAgg(store.readChanges(1, 2)),
-            store.epoch, store.versions.size.toLong)
-        }
+      val (stats, feed, ep, nv) = Artifacts.getOrBuild(s, d, "s36_versioned_tracked") {
+        val path = Artifacts.scratchPath(s, d, "vt_store")
+        val store = graft.sources.Store(s, path, "source")
+        store.destroy()
+        (1 to 3).foreach(r => store.appendVersionedTracked(
+          docs.filter(col("doc_id") % 4 === r), term))
+        // the governance request: epoch restart + sidecar rebuild in one
+        store.purgeRestartLineage(col("doc_id") % 7 === 0, Some(term))
+        // the composition keeps working on the new lineage (re-arrival
+        // of previously-removed ids is ingest, not a violation)
+        store.appendVersionedTracked(docs.filter(col("doc_id") % 4 === 0), term)
+        (store.readStats, feedAgg(store.readChanges(1, 2)),
+          store.epoch, store.versions.size.toLong)
+      }
       stats.crossJoin(broadcast(feed))
         .select(col("source"), col("n_rows"), col("checksum"),
           lit(ep).as("epoch"), lit(nv).as("n_versions"),
@@ -1091,37 +996,32 @@ object RelationalQueries {
           pmod(sum((col("doc_id") % M) * ((col("doc_id") + 7) % M) % M), M)
             .cast(LongType).as("ck"))
         .withColumn("request_id", lit(rid))
-      val (state, boundary, hitBoundary) =
-        if (planOnly) {
-          (partial(docs.filter(col("doc_id") % 4 < 3), "bootstrap_v3")
-             .unionByName(partial(docs.filter(col("doc_id") % 4 === 3), "pull_v4")),
-            3L, true)
-        } else Artifacts.getOrBuild(s, d, "s37_reboot") {
-          val base = Artifacts.scratchPath(s, d, "reboot")
-          val src = graft.sources.Store(s, s"$base/src", "source")
-          val stt = graft.sources.Store(s, s"$base/state", "source")
-          Seq(src, stt).foreach(_.destroy())
-          (0 to 3).foreach(r =>
-            src.appendVersioned(docs.filter(col("doc_id") % 4 === r)))
-          (1L to 2L).foreach(v => stt.update(
-            partial(src.readChanges(v - 1, v), s"pull_v$v"),
-            Seq("request_id", "source")))
-          // ---- retention runs while the consumer is paused ----
-          src.collapseHistory(3)
-          // ---- the consumer wakes at cursor 2, below the floor ----
-          val (b, hit) =
-            try { src.readChanges(2, 4); (0L, false) }
-            catch { case e: graft.sources.Store.RetentionBoundaryException =>
-              (e.earliestChangeVersion, true) }
-          // the documented repair, driven by the carried boundary: rebuild
-          // state from the boundary snapshot, resume from the boundary
-          stt.destroy()
-          stt.update(partial(src.readVersion(b), s"bootstrap_v$b"),
-            Seq("request_id", "source"))
-          stt.update(partial(src.readChanges(b, 4), "pull_v4"),
-            Seq("request_id", "source"))
-          (stt.read, b, hit)
-        }
+      val (state, boundary, hitBoundary) = Artifacts.getOrBuild(s, d, "s37_reboot") {
+        val base = Artifacts.scratchPath(s, d, "reboot")
+        val src = graft.sources.Store(s, s"$base/src", "source")
+        val stt = graft.sources.Store(s, s"$base/state", "source")
+        Seq(src, stt).foreach(_.destroy())
+        (0 to 3).foreach(r =>
+          src.appendVersioned(docs.filter(col("doc_id") % 4 === r)))
+        (1L to 2L).foreach(v => stt.update(
+          partial(src.readChanges(v - 1, v), s"pull_v$v"),
+          Seq("request_id", "source")))
+        // ---- retention runs while the consumer is paused ----
+        src.collapseHistory(3)
+        // ---- the consumer wakes at cursor 2, below the floor ----
+        val (b, hit) =
+          try { src.readChanges(2, 4); (0L, false) }
+          catch { case e: graft.sources.Store.RetentionBoundaryException =>
+            (e.earliestChangeVersion, true) }
+        // the documented repair, driven by the carried boundary: rebuild
+        // state from the boundary snapshot, resume from the boundary
+        stt.destroy()
+        stt.update(partial(src.readVersion(b), s"bootstrap_v$b"),
+          Seq("request_id", "source"))
+        stt.update(partial(src.readChanges(b, 4), "pull_v4"),
+          Seq("request_id", "source"))
+        (stt.read, b, hit)
+      }
       state.groupBy("source").agg(
           count(lit(1)).as("n_state_rows"),
           sum(col("n")).cast(LongType).as("n_docs"),
@@ -1169,9 +1069,7 @@ object RelationalQueries {
       val M = lit(2147483647L)
       val docs = Tables.documents(s, d)
       val (v4, v5, boundary, zeroUnref, baseDelta) =
-        if (planOnly)
-          (docs.filter(col("doc_id") % 4 >= 1), docs, 4L, true, 0L)
-        else Artifacts.getOrBuild(s, d, "s38_versioned_compaction") {
+        Artifacts.getOrBuild(s, d, "s38_versioned_compaction") {
           val path = Artifacts.scratchPath(s, d, "vcompact")
           val store = graft.sources.Store(s, path, "source")
           store.destroy()
@@ -1220,17 +1118,14 @@ object RelationalQueries {
       import org.apache.spark.sql.types.LongType
       val docs = Tables.documents(s, d)
       val M = lit(2147483647L)
-      // same plan-only substitution as s26: snapshot membership filters
-      val snapshot: Long => org.apache.spark.sql.DataFrame =
-        if (planOnly) { v => docs.filter(col("doc_id") % 3 < v) }
-        else {
-          val path = Artifacts.scratchPath(s, d, "time_travel")
-          val store = graft.sources.Store(s, path, "source")
-          store.destroy()
-          (0 to 2).foreach(r =>
-            store.appendVersioned(docs.filter(col("doc_id") % 3 === r)))
-          v => store.readVersion(v)
-        }
+      val snapshot: Long => org.apache.spark.sql.DataFrame = {
+        val path = Artifacts.scratchPath(s, d, "time_travel")
+        val store = graft.sources.Store(s, path, "source")
+        store.destroy()
+        (0 to 2).foreach(r =>
+          store.appendVersioned(docs.filter(col("doc_id") % 3 === r)))
+        v => store.readVersion(v)
+      }
       (1 to 3).map { v =>
         snapshot(v.toLong).agg(
             count(lit(1)).as("n_rows"),
@@ -1403,13 +1298,13 @@ object RelationalQueries {
         .agg(
           sum(when(col("v").isNull, 1).otherwise(0)).cast(LongType).as("n_null"),
           sum(when(col("v").isNotNull, 1).otherwise(0)).cast(LongType).as("n_notnull"),
-          avgDec2(col("v")).as("avg_v"))
+          avgDec2("v").as("avg_v"))
         .orderBy("event_type")
     },
-    """SELECT event_type,
+    s"""SELECT event_type,
       |  CAST(SUM(CASE WHEN v IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_null,
       |  CAST(SUM(CASE WHEN v IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_notnull,
-      |  ROUND(CAST(AVG(CAST(v AS DECIMAL(18,2))) AS DOUBLE), 4) AS avg_v
+      |  ${avgDec2Sql("v", "//")} AS avg_v
       |FROM (SELECT event_type, CASE WHEN value > 400 THEN NULL ELSE value END AS v FROM events)
       |GROUP BY event_type ORDER BY event_type""".stripMargin)
 
@@ -2605,17 +2500,7 @@ object RelationalQueries {
     * nulls (`/root/reference/R/epa_predict.R:208-210` mixes both). The
     * derived column nulls values > 400 so every group has some nulls at
     * every SF, and the poisoned mean differs visibly from the na.rm one.
-    *
-    * Both means are rounded to 4 decimals from the EXACT value, half away
-    * from zero, in integer arithmetic on (sum of cents, n) — then one IEEE
-    * division by 10^4. `ROUND(double, 4)` is not engine-stable: Spark
-    * rounds the shortest decimal form of the double half-up, DuckDB rounds
-    * the binary double, and Spark's decimal `avg` rounds at 6 decimals
-    * first; a mean on (or within 5e-7 below) a half-way point comes out
-    * differently in the two engines. */
-  private def mean4Sql(cents: String, n: String, intDiv: String): String =
-    s"CASE WHEN $n > 0 THEN CAST(((2 * abs($cents) * 100 + $n) $intDiv (2 * $n))" +
-      s" * sign($cents) AS DOUBLE) / CAST(10000 AS DOUBLE) END"
+    * Both means are rounded exactly ([[RSemantics.mean4Sql]]). */
 
   private val f6RMeanSemantics = Q(
     (s, d) => {
@@ -2623,7 +2508,7 @@ object RelationalQueries {
         .withColumn("v", when(col("value") > 400, lit(null).cast(DoubleType)).otherwise(col("value")))
         .groupBy("event_type")
         .agg(
-          (sum(dec2(col("v"))) * 100).cast(LongType).as("cents"),
+          expr(centsSql("v")).as("cents"),
           count(col("v")).as("n_v"),
           count(lit(1)).as("n"))
         .select(col("event_type"),
@@ -2634,7 +2519,7 @@ object RelationalQueries {
         .orderBy("event_type")
     },
     s"""WITH g AS (SELECT event_type,
-      |    CAST(SUM(CAST(v AS DECIMAL(18,2)) * 100) AS BIGINT) AS cents,
+      |    ${centsSql("v")} AS cents,
       |    COUNT(v) AS n_v, COUNT(*) AS n
       |  FROM (SELECT event_type, CASE WHEN value > 400 THEN NULL ELSE value END AS v FROM events)
       |  GROUP BY event_type)

@@ -26,13 +26,6 @@ object VocabQueries {
     * SQL stays reviewable. */
   private val BpeMerges = 6
 
-  /** PlanAuditSpec's registry-wide sweeps construct queries only to read
-    * plans; the BPE queries' construction runs the learn loop (driver-
-    * collected arg-max per round — inherent to the query's shape, the
-    * y3b/y3d precedent), so plan-only mode substitutes a plan-shape
-    * substitute with zero jobs. Production entry points never set it. */
-  private def planOnly: Boolean = sys.props.get("graft.plan.only").contains("true")
-
   /** One learn per (session, input dir): Verify/Bench construct z30 and
     * z31 and must not re-run the K-round loop every time. The cached
     * value is a driver-local Seq — nothing references executor blocks
@@ -79,14 +72,12 @@ object VocabQueries {
   /** z30: the learned merge table itself — K rounds of "most frequent
     * adjacent token pair" over the corpus word histogram. */
   private val z30BpeLearn = Q(
-    (s, d) =>
-      if (planOnly) Vocab.bpeLearnDF(s, Tables.documents(s, d).limit(0), "text", 1)
-      else {
-        val rows = merges(s, d)
-          .map(m => org.apache.spark.sql.Row(m.step, m.tokA, m.tokB, m.merged, m.n))
-        s.createDataFrame(java.util.Arrays.asList(rows: _*), Vocab.MergeSchema)
-          .orderBy("step")
-      }, {
+    (s, d) => {
+      val rows = merges(s, d)
+        .map(m => org.apache.spark.sql.Row(m.step, m.tokA, m.tokB, m.merged, m.n))
+      s.createDataFrame(java.util.Arrays.asList(rows: _*), Vocab.MergeSchema)
+        .orderBy("step")
+    }, {
       val sel = (1 to BpeMerges).map { r =>
         s"""SELECT $r AS step, string_split(pair, ' ')[1] AS tok_a,
            |  string_split(pair, ' ')[2] AS tok_b,
@@ -103,7 +94,7 @@ object VocabQueries {
     * per word, so learn and encode are differentially gated end-to-end. */
   private val z31BpeTokens = Q(
     (s, d) => {
-      val ms = if (planOnly) Nil else merges(s, d)
+      val ms = merges(s, d)
       Vocab.bpeTokenCounts(Tables.documents(s, d), "doc_id", "text", ms)
         .orderBy("doc_id")
     }, {
@@ -275,7 +266,7 @@ object VocabQueries {
   private val z49UnigramFit = Q(
     (s, d) => Vocab.unigramFit(Tables.documents(s, d), "text",
         maxTok = UgMaxTok, initMulti = UgInitMulti, pruneTo = UgPruneTo,
-        rounds = UgRounds, pinRounds = !planOnly)
+        rounds = UgRounds)
       .select(col("token"), col("n_uses"),
         col("cost").cast("double").as("cost"), col("is_char"))
       .orderBy(col("n_uses").desc, col("token")),
@@ -296,7 +287,7 @@ object VocabQueries {
       val docs = Tables.documents(s, d)
       val fitCosts = Vocab.unigramFit(docs, "text",
           maxTok = UgMaxTok, initMulti = UgInitMulti, pruneTo = UgPruneTo,
-          rounds = UgRounds, pinRounds = !planOnly)
+          rounds = UgRounds)
         .select(col("token"), col("cost"))
       val vmap = fitCosts.agg(
         map_from_entries(collect_list(struct(col("token"), col("cost"))))
@@ -347,7 +338,7 @@ object VocabQueries {
       val docs = Tables.documents(s, d)
       val fitCosts = Vocab.unigramFit(docs, "text",
           maxTok = UgMaxTok, initMulti = UgInitMulti, pruneTo = UgPruneTo,
-          rounds = UgRounds, pinRounds = !planOnly)
+          rounds = UgRounds)
         .select(col("token"), col("cost"))
       val vmap = fitCosts.agg(
         map_from_entries(collect_list(struct(col("token"), col("cost"))))
@@ -405,12 +396,12 @@ object VocabQueries {
   private val z52TokenizerCompare = Q(
     (s, d) => {
       val docs = Tables.documents(s, d)
-      val ms = if (planOnly) Nil else merges(s, d)
+      val ms = merges(s, d)
       val bpe = Vocab.bpeTokenCounts(docs, "doc_id", "text", ms)
         .select(col("doc_id"), col("n_tokens").as("bt"))
       val fitCosts = Vocab.unigramFit(docs, "text",
           maxTok = UgMaxTok, initMulti = UgInitMulti, pruneTo = UgPruneTo,
-          rounds = UgRounds, pinRounds = !planOnly)
+          rounds = UgRounds)
         .select(col("token"), col("cost"))
       val vmap = fitCosts.agg(
         map_from_entries(collect_list(struct(col("token"), col("cost"))))

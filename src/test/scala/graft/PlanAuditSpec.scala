@@ -1,39 +1,48 @@
 package graft
 
-import org.apache.spark.sql.execution.FormattedMode
+import org.apache.spark.ListenerBusDrain
+import org.apache.spark.sql.execution.{FormattedMode, QueryExecution}
+import org.apache.spark.sql.util.QueryExecutionListener
 
 /** Physical-plan regression guards on the real test corpus: the properties
   * SCALE.md claims (pushdown, pruning, broadcast dims, codegen coverage)
   * asserted per representative query so a refactor can't silently lose
   * them. */
-class PlanAuditSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
+class PlanAuditSpec extends SparkSpec {
   private val sf = "/root/testdata/sf0.001"
 
-  // Registry-wide sweeps construct every declared query just to read plan
-  // or schema: plan-only mode makes side-effecting constructions (y3d's
-  // fit + store write) substitute a plan-shape-identical in-memory path
-  // (suites run sequentially in the forked test JVM, so a suite-scoped
-  // property is safe — mirrors the AQE-conf toggle below).
-  // KNOWN LIMIT: the sweeps therefore audit y3d's SUBSTITUTE plan, not the
-  // store-backed serve plan; the real path's schema and results are gated
-  // elsewhere (StoreSpec read-back == recompute, and the Verify oracle runs
-  // the true lifecycle at both SFs every round).
-  override protected def beforeAll(): Unit = {
-    super.beforeAll()
-    sys.props("graft.plan.only") = "true"
-  }
-  override protected def afterAll(): Unit = {
-    sys.props -= "graft.plan.only"
-    super.afterAll()
-  }
-
-  /** AQE wraps plans and hides codegen/scan detail until stages run;
-    * audit against the static plan (suites run sequentially in the forked
-    * test JVM, so toggling the shared session conf is safe). */
-  private def formatted(name: String): String = {
+  /** The formatted plans of every query execution that ran while `name`
+    * was being built (store writes, fits, pins, checkpoints), followed by
+    * the plan of the frame it returns: lineage that a checkpoint or a
+    * stored artifact truncates out of the final plan is audited where it
+    * actually ran. With `evict`, this directory's artifacts are dropped
+    * first, so a build always runs inside the capture whichever suite ran
+    * first. The store-lifecycle panels pass `evict = false`: their
+    * assertions hold on the plans that read the stored tables back, and
+    * rebuilding every store before each of them costs minutes. AQE wraps
+    * plans and hides codegen/scan detail until stages run, so it is off
+    * (suites run sequentially in the forked test JVM, so toggling the
+    * shared session conf is safe). */
+  private def formatted(name: String, evict: Boolean = true): String = {
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val capture = new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        plans.add(qe.explainString(FormattedMode))
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    if (evict) Artifacts.evict(spark, sf)
     spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try SparkEntry.queries(name)(spark, sf).queryExecution.explainString(FormattedMode)
-    finally spark.conf.set("spark.sql.adaptive.enabled", "true")
+    ListenerBusDrain(spark.sparkContext)
+    spark.listenerManager.register(capture)
+    try {
+      val df = SparkEntry.queries(name)(spark, sf)
+      ListenerBusDrain(spark.sparkContext)
+      plans.add(df.queryExecution.explainString(FormattedMode))
+      String.join("\n", plans)
+    } finally {
+      spark.listenerManager.unregister(capture)
+      spark.conf.set("spark.sql.adaptive.enabled", "true")
+    }
   }
 
   test("s1: filters reach the parquet scan and the schema is pruned") {
@@ -236,7 +245,7 @@ class PlanAuditSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
     // Window.orderBy would sort it on ONE task. The prunes must plan as
     // TakeOrderedAndProject (per-partition heap + k-row driver merge); the
     // only acceptable global Sort is the declared output's range-partitioned
-    // orderBy. (Audited on the unpinned composed plan — planOnly mode.)
+    // orderBy. (The pinned rounds' plans are captured at construction.)
     val plan = formatted("z49_unigram_fit")
     assert(plan.contains("TakeOrderedAndProject"),
       "top-k candidate prunes must plan as TakeOrdered")
@@ -494,7 +503,7 @@ class PlanAuditSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
     // candidate joins stay equi-joins), and the ANN drift pass keeps
     // y15's broadcast-argmin shape (the embedding corpus never shuffles
     // to meet the 8 anchors). NOTE: construction runs the CC driver loop
-    // (planOnly substitutes in-memory artifacts) — a few seconds.
+    // and the artifact builds — a few seconds.
     val plan = formatted("x40_daily_ingest")
     assert(!plan.contains("CartesianProduct"),
       "x40 grew a cartesian pair stage")
@@ -539,7 +548,7 @@ class PlanAuditSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
       "z57's assignment must stay in-scan")
     // x47/x48: the composed incremental paths keep their components'
     // equi-join pair generation (construction runs the CC driver loops
-    // under planOnly substitutes — a few seconds)
+    // and artifact builds — a few seconds)
     for (q <- Seq("x47_ingest_replay", "x48_inventory_maintenance",
         "z56_domain_reweight", "m8_payload_integrity")) {
       val p = formatted(q)
@@ -555,13 +564,13 @@ class PlanAuditSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
     assert(z61.contains("__pid"), "the bounded-task numbering key left z61")
     assert("""windowspecdefinition\(lang#\d+, score""".r.findFirstIn(z61).isEmpty,
       "z61 regressed to a single-task per-language rank window")
-    // z56: with the plan-only checkpoint skip, the audited plan must now
-    // cover the corpus explode+join stage (not a lineage-truncated
+    // z56: the audited plans must cover the corpus explode+join stage that
+    // the construction-time checkpoint runs (not only the lineage-truncated
     // LogicalRDD) — pin the scan's visibility so the cartesian check above
     // can never go vacuous again
     val z56 = formatted("z56_domain_reweight")
     assert("""\(\d+\) Scan parquet""".r.findAllIn(z56).nonEmpty,
-      "z56's audited plan lost the corpus scan (checkpoint ran under planOnly)")
+      "z56's audited plans lost the corpus scan (the checkpoint escaped the capture)")
     // y22: the serving arm must stay a bucket equi-join (the n² pair
     // space never materializes); the only nested-loop joins are the
     // deliberate one-row max-norm broadcasts and the exact arm's capped
@@ -581,7 +590,7 @@ class PlanAuditSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
     assert("""\(\d+\) BroadcastNestedLoopJoin""".r.findAllIn(x51).size <= 2,
       "x51: only the one-row sketch/count frames may nest-loop")
     // x52: the repair path is all equi/anti/semi joins over segment hashes
-    // and doc ids (construction substitutes the built frame under planOnly)
+    // and doc ids
     val x52 = formatted("x52_takedown_rematerialize")
     assert(!x52.contains("CartesianProduct") && !x52.contains("BroadcastNestedLoopJoin"),
       "x52 grew a non-equi join")
@@ -607,8 +616,7 @@ class PlanAuditSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
     assert(m9.contains("__pid"), "m9 lost the bounded-task prefix-sum key")
     assert(!m9.contains("CartesianProduct"), "m9 grew a cartesian")
     // x54: artifact maintenance is combinable counts + equi-joins; only
-    // the one-row sketch blob may nest-loop (under planOnly the merge
-    // bytes check substitutes, keeping construction action-free)
+    // the one-row sketch blob may nest-loop
     val x54 = formatted("x54_tail_maintenance")
     assert(!x54.contains("CartesianProduct"), "x54 grew a non-broadcast cartesian")
   }
@@ -640,21 +648,21 @@ class PlanAuditSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
     // + equi-joins over the artifact; the only nested-loops are the
     // one-row panel broadcasts
     for (q <- Seq("x55_tail_composition", "x56_tail_takedown")) {
-      val p = formatted(q)
+      val p = formatted(q, evict = false)
       assert(!p.contains("CartesianProduct"), s"$q grew a non-broadcast cartesian")
     }
     // y25/y26: every serving arm stays a bucket equi-join (the only
     // nested-loops are the deliberate bounded truth batches and one-row
     // panel broadcasts — never a corpus×corpus pair space)
     for (q <- Seq("y25_deletion_decision", "y26_mips_tombstone")) {
-      val p = formatted(q)
+      val p = formatted(q, evict = false)
       assert(!p.contains("CartesianProduct"), s"$q grew a non-broadcast cartesian")
     }
     // s28/s29/s30: the store-lifecycle panels stay equi-join/aggregate
-    // shaped (plan-only substitutes keep the corpus scan visible)
+    // shaped, with the corpus scan visible in the captured plans
     for (q <- Seq("s28_lineage_purge", "s29_evolving_feed", "s30_cdc_chain",
         "s31_history_retention", "s32_chain_purge")) {
-      val p = formatted(q)
+      val p = formatted(q, evict = false)
       assert(!p.contains("CartesianProduct"), s"$q grew a cartesian stage")
       assert("""\(\d+\) Scan parquet""".r.findAllIn(p).nonEmpty,
         s"$q's audited plan lost its scan")
@@ -663,10 +671,10 @@ class PlanAuditSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
 
   test("round-12 additions keep their scale shapes") {
     // s33/s34: governance-lifecycle panels stay equi-join/aggregate shaped
-    // with the corpus scan visible under the plan-only substitutes
+    // with the corpus scan visible in the captured plans
     for (q <- Seq("s33_idempotent_purge", "s34_tracked_delete",
         "s35_evolving_scd2")) {
-      val p = formatted(q)
+      val p = formatted(q, evict = false)
       assert(!p.contains("CartesianProduct"), s"$q grew a cartesian stage")
       assert("""\(\d+\) Scan parquet""".r.findAllIn(p).nonEmpty,
         s"$q's audited plan lost its scan")
@@ -674,13 +682,13 @@ class PlanAuditSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
     // x57: two O(artifacts)-row manifests full-outer-joined — the diff
     // join must never be a cartesian, and the manifest aggregates keep
     // their corpus scans
-    val x57 = formatted("x57_epoch_manifest_diff")
+    val x57 = formatted("x57_epoch_manifest_diff", evict = false)
     assert(!x57.contains("CartesianProduct"), "x57 grew a cartesian")
     assert("""\(\d+\) Scan parquet""".r.findAllIn(x57).nonEmpty,
       "x57's audited plan lost its scan")
     // x58: merge days + the takedown subtract stay combinable counts +
     // equi-joins over the artifact (x55/x56's shape, composed)
-    val x58 = formatted("x58_interleaved_takedown")
+    val x58 = formatted("x58_interleaved_takedown", evict = false)
     assert(!x58.contains("CartesianProduct"), "x58 grew a non-broadcast cartesian")
     // y27: both serving arms ride the stored-index bucket probe key; the
     // only nested-loops are the one-row max-norm/panel broadcasts and the
@@ -693,10 +701,10 @@ class PlanAuditSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
   test("round-13 additions keep their scale shapes") {
     // s36/s37: the versioned+tracked lifecycle and the retention
     // re-bootstrap stay equi-join/aggregate shaped with the corpus scan
-    // visible under the plan-only substitutes
+    // visible in the captured plans
     for (q <- Seq("s36_versioned_tracked", "s37_retention_rebootstrap",
         "s38_versioned_compaction")) {
-      val p = formatted(q)
+      val p = formatted(q, evict = false)
       assert(!p.contains("CartesianProduct"), s"$q grew a cartesian stage")
       assert("""\(\d+\) Scan parquet""".r.findAllIn(p).nonEmpty,
         s"$q's audited plan lost its scan")
@@ -706,12 +714,12 @@ class PlanAuditSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
     // on the artifact name + the O(segments) transition equi-join — the
     // only nested loops are the one-row max-norm broadcast inside the
     // index builders; never a corpus×corpus pair space
-    val x59 = formatted("x59_governed_platform")
+    val x59 = formatted("x59_governed_platform", evict = false)
     assert(!x59.contains("CartesianProduct"), "x59 grew a non-broadcast cartesian")
     assert("""\(\d+\) Scan parquet""".r.findAllIn(x59).nonEmpty,
       "x59's audited plan lost its scan")
     // x60: two O(artifacts) manifests diffed on an equi-key, scans visible
-    val x60 = formatted("x60_repair_manifest")
+    val x60 = formatted("x60_repair_manifest", evict = false)
     assert(!x60.contains("CartesianProduct"), "x60 grew a cartesian stage")
     assert("""\(\d+\) Scan parquet""".r.findAllIn(x60).nonEmpty,
       "x60's audited plan lost its scan")

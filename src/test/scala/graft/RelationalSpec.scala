@@ -683,6 +683,7 @@ class RelationalSpec extends SparkSpec {
     // below the half-way point 0.01005, so it rounds DOWN to 0.0100 (a
     // decimal avg rounded to 6 places first reads 0.010050 and rounds up).
     // "nulls": one nulled value (> 400) poisons the R mean only.
+    // p4's avg_v and a8's avg_value take the same rounding.
     val dir = tmpDir("f6_events")
     val ts = java.sql.Timestamp.valueOf("2024-01-01 00:00:00")
     val rows =
@@ -699,5 +700,13 @@ class RelationalSpec extends SparkSpec {
     assert(got("half") === ((Some(1.0001), Some(1.0001), 200L)))
     assert(got("below") === ((Some(0.01), Some(0.01), 201L)))
     assert(got("nulls") === ((None, Some(2.5), 3L)))
+    val p4 = SparkEntry.queries("p4_null_predicates")(spark, dir)
+      .select("event_type", "avg_v").as[(String, Option[Double])].collect().toMap
+    assert(p4 === Map("half" -> Some(1.0001), "below" -> Some(0.01), "nulls" -> Some(2.5)))
+    val a8 = SparkEntry.queries("a8_binned_agg")(spark, dir)
+      .select("event_type", "bin", "avg_value").as[(String, Int, Double)].collect()
+      .map(r => (r._1, r._2) -> r._3).toMap
+    assert(a8 === Map(("half", 0) -> 1.0001, ("below", 0) -> 0.01,
+      ("nulls", 0) -> 2.5, ("nulls", 400) -> 401.0))
   }
 }
