@@ -15,22 +15,19 @@ class PlanAuditSpec extends SparkSpec {
     * was being built (store writes, fits, pins, checkpoints), followed by
     * the plan of the frame it returns: lineage that a checkpoint or a
     * stored artifact truncates out of the final plan is audited where it
-    * actually ran. With `evict`, this directory's artifacts are dropped
-    * first, so a build always runs inside the capture whichever suite ran
-    * first. The store-lifecycle panels pass `evict = false`: their
-    * assertions hold on the plans that read the stored tables back, and
-    * rebuilding every store before each of them costs minutes. AQE wraps
-    * plans and hides codegen/scan detail until stages run, so it is off
-    * (suites run sequentially in the forked test JVM, so toggling the
-    * shared session conf is safe). */
-  private def formatted(name: String, evict: Boolean = true): String = {
+    * actually ran. This directory's artifacts are evicted first, so the
+    * builds run inside the capture whichever test or suite ran first.
+    * AQE wraps plans and hides codegen/scan detail until stages run, so
+    * it is off (suites run sequentially in the forked test JVM, so
+    * toggling the shared session conf is safe). */
+  private def formatted(name: String): String = {
     val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     val capture = new QueryExecutionListener {
       def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
         plans.add(qe.explainString(FormattedMode))
       def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
     }
-    if (evict) Artifacts.evict(spark, sf)
+    Artifacts.evict(spark, sf)
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     ListenerBusDrain(spark.sparkContext)
     spark.listenerManager.register(capture)
@@ -648,21 +645,21 @@ class PlanAuditSpec extends SparkSpec {
     // + equi-joins over the artifact; the only nested-loops are the
     // one-row panel broadcasts
     for (q <- Seq("x55_tail_composition", "x56_tail_takedown")) {
-      val p = formatted(q, evict = false)
+      val p = formatted(q)
       assert(!p.contains("CartesianProduct"), s"$q grew a non-broadcast cartesian")
     }
     // y25/y26: every serving arm stays a bucket equi-join (the only
     // nested-loops are the deliberate bounded truth batches and one-row
     // panel broadcasts — never a corpus×corpus pair space)
     for (q <- Seq("y25_deletion_decision", "y26_mips_tombstone")) {
-      val p = formatted(q, evict = false)
+      val p = formatted(q)
       assert(!p.contains("CartesianProduct"), s"$q grew a non-broadcast cartesian")
     }
     // s28/s29/s30: the store-lifecycle panels stay equi-join/aggregate
     // shaped, with the corpus scan visible in the captured plans
     for (q <- Seq("s28_lineage_purge", "s29_evolving_feed", "s30_cdc_chain",
         "s31_history_retention", "s32_chain_purge")) {
-      val p = formatted(q, evict = false)
+      val p = formatted(q)
       assert(!p.contains("CartesianProduct"), s"$q grew a cartesian stage")
       assert("""\(\d+\) Scan parquet""".r.findAllIn(p).nonEmpty,
         s"$q's audited plan lost its scan")
@@ -674,7 +671,7 @@ class PlanAuditSpec extends SparkSpec {
     // with the corpus scan visible in the captured plans
     for (q <- Seq("s33_idempotent_purge", "s34_tracked_delete",
         "s35_evolving_scd2")) {
-      val p = formatted(q, evict = false)
+      val p = formatted(q)
       assert(!p.contains("CartesianProduct"), s"$q grew a cartesian stage")
       assert("""\(\d+\) Scan parquet""".r.findAllIn(p).nonEmpty,
         s"$q's audited plan lost its scan")
@@ -682,13 +679,13 @@ class PlanAuditSpec extends SparkSpec {
     // x57: two O(artifacts)-row manifests full-outer-joined — the diff
     // join must never be a cartesian, and the manifest aggregates keep
     // their corpus scans
-    val x57 = formatted("x57_epoch_manifest_diff", evict = false)
+    val x57 = formatted("x57_epoch_manifest_diff")
     assert(!x57.contains("CartesianProduct"), "x57 grew a cartesian")
     assert("""\(\d+\) Scan parquet""".r.findAllIn(x57).nonEmpty,
       "x57's audited plan lost its scan")
     // x58: merge days + the takedown subtract stay combinable counts +
     // equi-joins over the artifact (x55/x56's shape, composed)
-    val x58 = formatted("x58_interleaved_takedown", evict = false)
+    val x58 = formatted("x58_interleaved_takedown")
     assert(!x58.contains("CartesianProduct"), "x58 grew a non-broadcast cartesian")
     // y27: both serving arms ride the stored-index bucket probe key; the
     // only nested-loops are the one-row max-norm/panel broadcasts and the
@@ -704,7 +701,7 @@ class PlanAuditSpec extends SparkSpec {
     // visible in the captured plans
     for (q <- Seq("s36_versioned_tracked", "s37_retention_rebootstrap",
         "s38_versioned_compaction")) {
-      val p = formatted(q, evict = false)
+      val p = formatted(q)
       assert(!p.contains("CartesianProduct"), s"$q grew a cartesian stage")
       assert("""\(\d+\) Scan parquet""".r.findAllIn(p).nonEmpty,
         s"$q's audited plan lost its scan")
@@ -714,12 +711,12 @@ class PlanAuditSpec extends SparkSpec {
     // on the artifact name + the O(segments) transition equi-join — the
     // only nested loops are the one-row max-norm broadcast inside the
     // index builders; never a corpus×corpus pair space
-    val x59 = formatted("x59_governed_platform", evict = false)
+    val x59 = formatted("x59_governed_platform")
     assert(!x59.contains("CartesianProduct"), "x59 grew a non-broadcast cartesian")
     assert("""\(\d+\) Scan parquet""".r.findAllIn(x59).nonEmpty,
       "x59's audited plan lost its scan")
     // x60: two O(artifacts) manifests diffed on an equi-key, scans visible
-    val x60 = formatted("x60_repair_manifest", evict = false)
+    val x60 = formatted("x60_repair_manifest")
     assert(!x60.contains("CartesianProduct"), "x60 grew a cartesian stage")
     assert("""\(\d+\) Scan parquet""".r.findAllIn(x60).nonEmpty,
       "x60's audited plan lost its scan")
