@@ -19,14 +19,7 @@ object AbTest {
     val spark = GraftSession.local()
     spark.sparkContext.setLogLevel("ERROR")
 
-    def run(name: String): Double = {
-      val t0 = System.nanoTime()
-      SparkEntry.queries(name)(spark, dir)
-        .write.format("noop").mode("overwrite").save()
-      val elapsed = (System.nanoTime() - t0) / 1e9
-      Housekeeping.releaseAllBlocks(spark)
-      elapsed
-    }
+    def run(name: String): Double = Bench.run(spark, dir, name).seconds
 
     names.foreach { name =>
       val (as, bs) = (Seq.newBuilder[Double], Seq.newBuilder[Double])

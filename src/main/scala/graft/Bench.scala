@@ -21,31 +21,35 @@ object Bench {
       s"""{"s":$seconds,"artifact_builds":$artifactBuilds,"artifact_build_s":$artifactBuildSeconds}"""
   }
 
+  /** The run step every harness shares (Bench, Soak, AbTest, Profile):
+    * construct query `name` over `dir`, drive its full plan through the
+    * noop sink and time it, recording the artifacts the run built. A
+    * failed run prints its error and reports -1 s. */
+  def run(spark: org.apache.spark.sql.SparkSession, dir: String, name: String): Iteration = {
+    val before = Artifacts.stats(spark)
+    val t0 = System.nanoTime()
+    val elapsed =
+      try {
+        SparkEntry.queries(name)(spark, dir)
+          .write.format("noop").mode("overwrite").save()
+        (System.nanoTime() - t0) / 1e9
+      } catch { case e: Throwable =>
+        System.err.println(s"[bench] $name failed: ${e.getMessage}")
+        -1.0
+      }
+    val built = Artifacts.stats(spark) - before
+    // the block sweep is bench hygiene, not query cost: without it 284
+    // runs accumulate never-unpersisted checkpoint blocks (round-3: x6
+    // 26 s vs 1 s fresh-JVM), but its driver-side unpersist calls must
+    // not bias the measurement, so it runs AFTER elapsed is captured
+    Housekeeping.releaseAllBlocks(spark)
+    Iteration(elapsed, built.builds, built.buildSeconds)
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = GraftSession.envCpus
     val spark = GraftSession.local(cpus)
-
-    def run(name: String): Iteration = {
-      val before = Artifacts.stats(spark)
-      val t0 = System.nanoTime()
-      val elapsed =
-        try {
-          SparkEntry.queries(name)(spark, sfDir)
-            .write.format("noop").mode("overwrite").save()
-          (System.nanoTime() - t0) / 1e9
-        } catch { case e: Throwable =>
-          System.err.println(s"[bench] $name failed: ${e.getMessage}")
-          -1.0
-        }
-      val built = Artifacts.stats(spark) - before
-      // the block sweep is bench hygiene, not query cost: without it 284
-      // runs accumulate never-unpersisted checkpoint blocks (round-3: x6
-      // 26 s vs 1 s fresh-JVM), but its driver-side unpersist calls must
-      // not bias the measurement, so it runs AFTER elapsed is captured
-      Housekeeping.releaseAllBlocks(spark)
-      Iteration(elapsed, built.builds, built.buildSeconds)
-    }
 
     // host contention evidence: three rounds of apparent "regressions"
     // were shared-box noise the judge had to re-measure on a fresh JVM —
@@ -62,13 +66,14 @@ object Bench {
 
     val loadBefore = loadavg
     val names = SparkEntry.queries.keys.toSeq.sorted
-    run(names.head) // warmup: JVM + codegen + parquet reader init
+    run(spark, sfDir, names.head) // warmup: JVM + codegen + parquet reader init
     // best-of-N steady state: single-shot numbers on a shared box carry
     // ±30% scheduler noise; min over iterations is the standard estimator
     val iters = sys.env.getOrElse("SPARK_GRAFT_BENCH_ITERS", "2").toInt.max(1)
     val raw = names.map { n =>
-      val first = run(n)
-      n -> (if (first.artifactBuilds > 0) Seq(first) else first +: (2 to iters).map(_ => run(n)))
+      val first = run(spark, sfDir, n)
+      n -> (if (first.artifactBuilds > 0) Seq(first)
+            else first +: (2 to iters).map(_ => run(spark, sfDir, n)))
     }
     val results = raw.map { case (n, runs) =>
       val ok = runs.map(_.seconds).filter(_ >= 0)

@@ -72,13 +72,7 @@ object Profile {
 
     def run(name: String, profiled: Boolean): Double = {
       if (profiled) { jobs.clear(); live.clear(); collecting = true }
-      val t0 = System.nanoTime()
-      SparkEntry.queries(name)(spark, dir)
-        .write.format("noop").mode("overwrite").save()
-      val elapsed = (System.nanoTime() - t0) / 1e9
-      collecting = false
-      Housekeeping.releaseAllBlocks(spark)
-      elapsed
+      try Bench.run(spark, dir, name).seconds finally collecting = false
     }
 
     names.foreach { name =>

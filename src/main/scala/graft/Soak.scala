@@ -15,15 +15,7 @@ object Soak {
     val (dir, names) = (args.head, args.tail.toSeq)
     val spark = GraftSession.local()
 
-    def run(name: String): Double = {
-      val t0 = System.nanoTime()
-      SparkEntry.queries(name)(spark, dir)
-        .write.format("noop").mode("overwrite").save()
-      val elapsed = (System.nanoTime() - t0) / 1e9
-      // sweep AFTER capturing elapsed: hygiene cost stays out of the number
-      Housekeeping.releaseAllBlocks(spark)
-      elapsed
-    }
+    def run(name: String): Double = Bench.run(spark, dir, name).seconds
 
     run(names.head) // warmup: JVM + codegen init
     val results = names.map(n => n -> (1 to 2).map(_ => run(n)).min)

@@ -19,8 +19,6 @@ import org.apache.spark.sql.types.LongType
   */
 object Dedup {
 
-  private lazy val log = org.slf4j.LoggerFactory.getLogger(getClass)
-
   /** Exact dedup by content hash: survivor = min id per hash.
     * One shuffle; with map-side combine the traffic is one row per distinct
     * hash per partition. */
@@ -392,16 +390,6 @@ object Dedup {
       .select(col("a.id").as("doc_a"), col("b.id").as("doc_b"), col("hamming"))
   }
 
-  /** Duplicate clustering: connected components over a candidate-pair
-    * edge list by iterative min-label propagation — every node ends up
-    * labeled with the smallest doc id in its component (the survivor).
-    * Converges in ≤ graph-diameter iterations; near-dup components are
-    * shallow (stars/short chains), so the driver loop exits after a few
-    * rounds on the real distribution. Each iteration is one shuffle-join +
-    * one aggregation; at very large scale swap the loop body for
-    * alternating large-star/small-star contraction (same fixpoint).
-    * `nodes` supplies the full id universe — isolated docs keep their own
-    * id as cluster. */
   /** Incremental connected components — merge an ingest batch into
     * EXISTING cluster labels without reclustering the corpus. Only the
     * clusters touched by a new edge are re-solved: membership edges
@@ -436,8 +424,29 @@ object Dedup {
       .union(sub.select(col(idCol), col("cluster_id")))
   }
 
+  /** Duplicate clustering: connected components over a candidate-pair
+    * edge list by iterative min-label propagation — every node ends up
+    * labeled with the smallest doc id in its component (the survivor).
+    * Converges in ≤ graph-diameter iterations; near-dup components are
+    * shallow (stars/short chains), so the driver loop exits after a few
+    * rounds on the real distribution. Each iteration is one shuffle-join +
+    * one aggregation; at very large scale swap the loop body for
+    * alternating large-star/small-star contraction (same fixpoint).
+    * `nodes` supplies the full id universe — isolated docs keep their own
+    * id as cluster. Ids must be numeric; a component whose diameter
+    * exceeds `maxIters` throws IllegalStateException rather than return
+    * unconverged labels. */
   def connectedComponents(pairs: DataFrame, nodes: DataFrame, idCol: String,
                           maxIters: Int = 20): DataFrame = {
+    import org.apache.spark.sql.types._
+    // the convergence probe below sums the labels, which is sound only for
+    // numeric ids (a string id would cast to null)
+    val idType = nodes.schema(idCol).dataType
+    require(idType match {
+      case ByteType | ShortType | IntegerType | LongType | FloatType | DoubleType => true
+      case _: DecimalType => true
+      case _ => false
+    }, s"connectedComponents needs a numeric id column; '$idCol' is ${idType.simpleString}")
     val spark = pairs.sparkSession
     // materialize the edge list once — it feeds every iteration, and its
     // upstream (the whole LSH candidate pipeline) must not re-run per round.
@@ -470,20 +479,12 @@ object Dedup {
     // wide-decimal aggregate over the (already checkpointed) label frame
     // per round, versus a full node-keyed join + count; cheap enough to
     // run EVERY round, so the loop also exits a round earlier. A null sum
-    // (empty node set) is the fixpoint by definition. Non-numeric ids
-    // (string keys) would cast to null and break the sum's soundness, so
-    // they keep the join + count probe.
-    import org.apache.spark.sql.types._
-    val numericIds = labels.df.schema("cluster").dataType match {
-      case ByteType | ShortType | IntegerType | LongType | FloatType | DoubleType => true
-      case _: DecimalType => true
-      case _ => false
-    }
+    // (empty node set) is the fixpoint by definition.
     def labelSum(df: DataFrame): java.math.BigDecimal = {
       val s = df.agg(sum(col("cluster").cast("decimal(38,0)")).as("s")).head
       if (s.isNullAt(0)) java.math.BigDecimal.ZERO else s.getDecimal(0)
     }
-    var prevSum = if (numericIds) labelSum(labels.df) else java.math.BigDecimal.ZERO
+    var prevSum = labelSum(labels.df)
     var changed = true
     var i = 0
     // one hop per materialized round: fusing two hops per checkpoint was
@@ -499,40 +500,29 @@ object Dedup {
           least(col("cluster"), coalesce(col("nbr_min"), col("cluster"))).as("cluster"))
     }
     while (changed && i < maxIters) {
-      val next =
-        if (numericIds) {
-          // lazy pin + probe-as-materializer (r13): the sum probe runs
-          // every round anyway, so let IT materialize the checkpoint —
-          // one job per round instead of an eager-checkpoint job plus a
-          // probe job. Safe here because the probe ALWAYS runs before
-          // the parent frame is freed below.
-          val nx = Housekeeping.pinLazy(spark)(hop(labels.df))
-          val nextSum = labelSum(nx.df)
-          changed = nextSum.compareTo(prevSum) != 0
-          prevSum = nextSum
-          nx
-        } else {
-          // string-keyed path probes every other round, so the frame must
-          // be materialized EAGERLY — a lazy pin would still hold the
-          // parent's blocks when labels.free() runs
-          val nx = Housekeeping.pin(spark)(hop(labels.df))
-          if (i % 2 == 1 || i + 1 >= maxIters) {
-            changed = nx.df.as("n").join(labels.df.as("p"), col("n.node") === col("p.node"))
-              .filter(col("n.cluster") =!= col("p.cluster")).count() > 0
-          }
-          nx
-        }
+      // lazy pin + probe-as-materializer (r13): the sum probe runs every
+      // round anyway, so let IT materialize the checkpoint — one job per
+      // round instead of an eager-checkpoint job plus a probe job. Safe
+      // because the probe ALWAYS runs before the parent frame is freed.
+      val next = Housekeeping.pinLazy(spark)(hop(labels.df))
+      val nextSum = labelSum(next.df)
+      changed = nextSum.compareTo(prevSum) != 0
+      prevSum = nextSum
       labels.free()
       labels = next
       i += 1
     }
     // `changed` is accurate at exit (probed every round): true means a
-    // component with diameter > maxIters exists and the labels below are
-    // NOT the fixpoint — loud, not silent
-    if (changed)
-      log.warn(s"connectedComponents exited at maxIters=$maxIters with labels " +
-        "still changing — cluster ids are not converged; raise maxIters or switch " +
-        "to connectedComponentsStar (round count grows with log² n, not diameter)")
+    // component with diameter > maxIters exists and the labels are NOT the
+    // fixpoint — fail rather than return truncated cluster ids
+    if (changed) {
+      labels.free()
+      sym.free()
+      throw new IllegalStateException(s"connectedComponents did not converge " +
+        s"within maxIters=$maxIters: labels were still changing in the last round; " +
+        "raise maxIters or use connectedComponentsStar (its round count grows " +
+        "with log² n, not with the component diameter)")
+    }
     // every checkpoint was EAGER, so nothing downstream reads the edge list
     // anymore — free its blocks here instead of leaking them into the
     // session (the returned frame's own checkpoint block is the caller's to
@@ -604,11 +594,13 @@ object Dedup {
       edges = next
       i += 1
     }
-    // same loud-exit contract as connectedComponents: `stable` is accurate
-    // at exit thanks to the final-round probe
-    if (!stable)
-      log.warn(s"connectedComponentsStar exited at maxIters=$maxIters before the " +
-        "star fixpoint — cluster ids may be unconverged; raise maxIters")
+    // same contract as connectedComponents: `stable` is accurate at exit
+    // thanks to the final-round probe, and an unconverged exit fails
+    if (!stable) {
+      edges.free()
+      throw new IllegalStateException(s"connectedComponentsStar did not reach " +
+        s"the star fixpoint within maxIters=$maxIters; raise maxIters")
+    }
     // at the fixpoint the edges form stars rooted at each component min.
     // Checkpoint the (smaller) label relation eagerly so the final edge
     // blocks can be freed here rather than leaking into the session; the
@@ -842,6 +834,25 @@ object Dedup {
     keyBloom(spanFingerprints(docs, idCol, textCol, k, rolling = true)
       .select("fp"), "fp", expectedItems, bitsPerItem)
 
+  /** Shared spanKeepExpr/spanScrubExpr stage: the dual-lattice rolling
+    * fingerprint of every k-word window of the word array `ws`. */
+  private def windowFps(ws: Column, k: Int): Column = {
+    val hs = transform(ws, w => TextAnalysis.hash32(w))
+    zip_with(
+      TextAnalysis.rollingWindows(hs, k, TextAnalysis.RollingA),
+      TextAnalysis.rollingWindows(hs, k, TextAnalysis.RollingB),
+      (hi, lo) => hi * lit(2147483648L) + lo)
+  }
+
+  /** Shared spanKeepExpr/spanScrubExpr probe of a window fingerprint
+    * against the reference Bloom; never a hit without one. */
+  private def refBloomHit(refBloom: Option[Array[Byte]]): Column => Column =
+    refBloom match {
+      case Some(b) => f =>
+        call_function("graft_might_contain", lit(b), xxhash64(f.cast("string")))
+      case None => _ => lit(false)
+    }
+
   /** The span-duplication keep/drop verdict as one pure row-local
     * expression — the streaming form of [[spanDupStats]]'s
     * `n_dup·2 ≤ n_windows` gate (x32's production rung) for stateless
@@ -859,16 +870,8 @@ object Dedup {
   def spanKeepExpr(text: Column, k: Int,
                    refBloom: Option[Array[Byte]]): Column = {
     val ws = split(text, " ")
-    val hs = transform(ws, w => TextAnalysis.hash32(w))
-    val fps = zip_with(
-      TextAnalysis.rollingWindows(hs, k, TextAnalysis.RollingA),
-      TextAnalysis.rollingWindows(hs, k, TextAnalysis.RollingB),
-      (hi, lo) => hi * lit(2147483648L) + lo)
-    val refHit: Column => Column = refBloom match {
-      case Some(b) => f =>
-        call_function("graft_might_contain", lit(b), xxhash64(f.cast("string")))
-      case None => _ => lit(false)
-    }
+    val fps = windowFps(ws, k)
+    val refHit = refBloomHit(refBloom)
     val nWin = size(fps).cast(LongType)
     val nDup = size(filter(fps, f =>
       size(filter(fps, x => x === f)) >= 2 || refHit(f))).cast(LongType)
@@ -1020,16 +1023,8 @@ object Dedup {
   def spanScrubExpr(text: Column, k: Int,
                     refBloom: Option[Array[Byte]]): Column = {
     val ws = split(text, " ")
-    val hs = transform(ws, w => TextAnalysis.hash32(w))
-    val fps = zip_with(
-      TextAnalysis.rollingWindows(hs, k, TextAnalysis.RollingA),
-      TextAnalysis.rollingWindows(hs, k, TextAnalysis.RollingB),
-      (hi, lo) => hi * lit(2147483648L) + lo)
-    val refHit: Column => Column = refBloom match {
-      case Some(b) => f =>
-        call_function("graft_might_contain", lit(b), xxhash64(f.cast("string")))
-      case None => _ => lit(false)
-    }
+    val fps = windowFps(ws, k)
+    val refHit = refBloomHit(refBloom)
     // 1-based start positions of duplicated windows (sorted by construction:
     // filter preserves the positional order of the window array).
     val dupStarts = filter(

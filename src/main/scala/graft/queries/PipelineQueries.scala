@@ -2,7 +2,7 @@ package graft.queries
 
 import graft.{Artifacts, Tables}
 import graft.operators.{Dedup, Multimodal, Relational, Sampling, Similarity, TextAnalysis}
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -196,6 +196,56 @@ object PipelineQueries {
          |ORDER BY doc_new, doc_base""".stripMargin)
   }
 
+  /** Shared x14/x36 stage: the distinct 3-gram shingle hashes (doc_id,
+    * hv), checkpointed — they feed the signature, both intersect sides and
+    * the set sizes, so the corpus is shingled once. ONE distinct, on the
+    * hashed (doc_id, long) relation — never on the wide shingle strings. */
+  private def shingleHashes(docs: DataFrame) =
+    graft.Tables.fanOut(docs) // r13: one-file scan = one task
+      .select(col("doc_id"), split(col("text"), " ").as("ws"))
+      .filter(size(col("ws")) >= 3)
+      .select(col("doc_id"), explode(TextAnalysis.shinglesExpr("ws", 3)).as("sh"))
+      .select(col("doc_id"), TextAnalysis.hash32(col("sh")).as("hv"))
+      .distinct()
+      .localCheckpoint(true)
+
+  /** Shared x14/x36 stage: `f`'s (doc_a, doc_b) rows joined with their
+    * shingle-set intersection `ni` and both set sizes, over the candidate
+    * `pairs`. The b-side would otherwise shuffle the WHOLE hash relation
+    * into the (doc_b, hv) join; a semi-join against the pair ids first cuts
+    * that shuffle to pair members only. The pair set grows with the corpus
+    * (the soak shows 10×-corpus → 10×-pairs), so it joins UNHINTED — AQE
+    * broadcasts while it fits, shuffles when it doesn't. */
+  private def jaccardJoin(f: DataFrame, hv: DataFrame, pairs: DataFrame) = {
+    val sz = hv.groupBy("doc_id").agg(count(lit(1)).as("sz"))
+    val hvB = hv.select(col("doc_id").as("doc_b"), col("hv"))
+      .join(pairs.select("doc_b").distinct(), Seq("doc_b"), "left_semi")
+    val inter = pairs
+      .join(hv.select(col("doc_id").as("doc_a"), col("hv")), Seq("doc_a"))
+      .join(hvB, Seq("doc_b", "hv"))
+      .groupBy("doc_a", "doc_b").agg(count(lit(1)).as("ni"))
+    f.join(inter, Seq("doc_a", "doc_b"), "left")
+      .withColumn("ni", coalesce(col("ni"), lit(0L)))
+      .join(sz.select(col("doc_id").as("doc_a"), col("sz").as("sz_a")), Seq("doc_a"))
+      .join(sz.select(col("doc_id").as("doc_b"), col("sz").as("sz_b")), Seq("doc_b"))
+  }
+
+  /** Shared x14/x36 exact Jaccard |A∩B|/|A∪B| over jaccardJoin's columns —
+    * one int/int division, bit-identical in both engines. */
+  private def jaccardExact: Column = col("ni") / (col("sz_a") + col("sz_b") - col("ni"))
+
+  /** Oracle side of jaccardJoin: capped-LSH pairs `p`, set sizes `sz` and
+    * intersections `inter`. */
+  private def pairIntersectSql: String =
+    """p AS (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
+      |  FROM kept a JOIN kept b
+      |    ON a.band = b.band AND a.key = b.key AND a.doc_id < b.doc_id),
+      |sz AS (SELECT doc_id, COUNT(*) AS sz FROM hv GROUP BY 1),
+      |inter AS (SELECT p.doc_a, p.doc_b, COUNT(*) AS ni
+      |  FROM p JOIN hv ha ON ha.doc_id = p.doc_a
+      |         JOIN hv hb ON hb.doc_id = p.doc_b AND hb.hv = ha.hv
+      |  GROUP BY 1, 2)""".stripMargin
+
   /** x14: signature-based Jaccard estimate vs exact — the cheap verify
     * stage between LSH candidates and exact n-gram Jaccard, both emitted
     * per candidate pair. The estimate (matching-slot fraction) and the
@@ -207,53 +257,19 @@ object PipelineQueries {
   private val x14JaccardEstimate = Q(
     (s, d) => {
       val docs = Tables.documents(s, d)
-      // hv feeds FOUR consumers (signature, two intersect sides, sizes):
-      // materialize it once instead of re-shingling the corpus per branch
-      // (bench: 5.6 s → one shingle pass); same for the signature, which
-      // the candidate and estimate stages both read. ONE distinct, on the
-      // hashed (doc_id, long) relation — never on the wide shingle strings
-      val hv = graft.Tables.fanOut(docs) // r13: one-file scan = one task
-        .select(col("doc_id"), split(col("text"), " ").as("ws"))
-        .filter(size(col("ws")) >= 3)
-        .select(col("doc_id"), explode(TextAnalysis.shinglesExpr("ws", 3)).as("sh"))
-        .select(col("doc_id"), TextAnalysis.hash32(col("sh")).as("hv"))
-        .distinct()
-        .localCheckpoint(true)
+      // hv is materialized once (bench: 5.6 s → one shingle pass); same
+      // for the signature, which the candidate and estimate stages both read
+      val hv = shingleHashes(docs)
       val sig = Dedup.minhashSignature(hv, "doc_id", 8).localCheckpoint(true)
       val pairs = Dedup.lshCandidates(sig, "doc_id", 8, maxBucket = Some(X2MaxBucket))
       val est = Dedup.jaccardEstimate(sig, pairs, "doc_id", 8)
-      val sz = hv.groupBy("doc_id").agg(count(lit(1)).as("sz"))
-      // the b-side would otherwise shuffle the WHOLE hash relation into
-      // the (doc_b, hv) join; a semi-join against the pair ids first cuts
-      // that shuffle to pair members only. The pair set grows with the
-      // corpus (the soak shows 10×-corpus → 10×-pairs), so it joins
-      // UNHINTED — AQE broadcasts while it fits, shuffles when it doesn't
-      val hvB = hv.select(col("doc_id").as("doc_b"), col("hv"))
-        .join(pairs.select("doc_b").distinct(), Seq("doc_b"), "left_semi")
-      val inter = pairs
-        .join(hv.select(col("doc_id").as("doc_a"), col("hv")), Seq("doc_a"))
-        .join(hvB, Seq("doc_b", "hv"))
-        .groupBy("doc_a", "doc_b").agg(count(lit(1)).as("ni"))
-      est
-        .join(inter, Seq("doc_a", "doc_b"), "left")
-        .withColumn("ni", coalesce(col("ni"), lit(0L)))
-        .join(sz.select(col("doc_id").as("doc_a"), col("sz").as("sz_a")), Seq("doc_a"))
-        .join(sz.select(col("doc_id").as("doc_b"), col("sz").as("sz_b")), Seq("doc_b"))
-        .select(col("doc_a"), col("doc_b"),
-          (col("ni") / (col("sz_a") + col("sz_b") - col("ni"))).as("j_exact"),
-          col("j_est"))
+      jaccardJoin(est, hv, pairs)
+        .select(col("doc_a"), col("doc_b"), jaccardExact.as("j_exact"), col("j_est"))
         .orderBy("doc_a", "doc_b")
     },
     s"""WITH $minhashCtes,
        |${cappedBandsCte(bandsSql)},
-       |p AS (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-       |  FROM kept a JOIN kept b
-       |    ON a.band = b.band AND a.key = b.key AND a.doc_id < b.doc_id),
-       |sz AS (SELECT doc_id, COUNT(*) AS sz FROM hv GROUP BY 1),
-       |inter AS (SELECT p.doc_a, p.doc_b, COUNT(*) AS ni
-       |  FROM p JOIN hv ha ON ha.doc_id = p.doc_a
-       |         JOIN hv hb ON hb.doc_id = p.doc_b AND hb.hv = ha.hv
-       |  GROUP BY 1, 2),
+       |$pairIntersectSql,
        |est AS (SELECT p.doc_a, p.doc_b,
        |    (${(0 until 8).map(i => s"(CASE WHEN sa.mh$i = sb.mh$i THEN 1 ELSE 0 END)").mkString(" + ")}) / 8 AS j_est
        |  FROM p JOIN sig sa ON sa.doc_id = p.doc_a
@@ -287,29 +303,11 @@ object PipelineQueries {
   private val x36DedupThresholdSweep = Q(
     (s, d) => {
       val docs = Tables.documents(s, d)
-      val hv = graft.Tables.fanOut(docs) // r13: one-file scan = one task
-        .select(col("doc_id"), split(col("text"), " ").as("ws"))
-        .filter(size(col("ws")) >= 3)
-        .select(col("doc_id"), explode(TextAnalysis.shinglesExpr("ws", 3)).as("sh"))
-        .select(col("doc_id"), TextAnalysis.hash32(col("sh")).as("hv"))
-        .distinct()
-        .localCheckpoint(true)
+      val hv = shingleHashes(docs)
       val sig = Dedup.minhashSignature(hv, "doc_id", 8)
       val pairs = Dedup.lshCandidates(sig, "doc_id", 8, maxBucket = Some(X2MaxBucket))
-      val sz = hv.groupBy("doc_id").agg(count(lit(1)).as("sz"))
-      val hvB = hv.select(col("doc_id").as("doc_b"), col("hv"))
-        .join(pairs.select("doc_b").distinct(), Seq("doc_b"), "left_semi")
-      val inter = pairs
-        .join(hv.select(col("doc_id").as("doc_a"), col("hv")), Seq("doc_a"))
-        .join(hvB, Seq("doc_b", "hv"))
-        .groupBy("doc_a", "doc_b").agg(count(lit(1)).as("ni"))
-      val jpairs = pairs
-        .join(inter, Seq("doc_a", "doc_b"), "left")
-        .withColumn("ni", coalesce(col("ni"), lit(0L)))
-        .join(sz.select(col("doc_id").as("doc_a"), col("sz").as("sz_a")), Seq("doc_a"))
-        .join(sz.select(col("doc_id").as("doc_b"), col("sz").as("sz_b")), Seq("doc_b"))
-        .select(col("doc_a"), col("doc_b"),
-          (col("ni") / (col("sz_a") + col("sz_b") - col("ni"))).as("j"))
+      val jpairs = jaccardJoin(pairs, hv, pairs)
+        .select(col("doc_a"), col("doc_b"), jaccardExact.as("j"))
       val jmax = jpairs.groupBy("doc_b").agg(max(col("j")).as("jmax"))
       val pc = jpairs
         .select(explode(sequence(lit(1), lit(19))).as("i"), col("j"))
@@ -335,14 +333,7 @@ object PipelineQueries {
     },
     s"""WITH $minhashCtes,
        |${cappedBandsCte(bandsSql)},
-       |p AS (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-       |  FROM kept a JOIN kept b
-       |    ON a.band = b.band AND a.key = b.key AND a.doc_id < b.doc_id),
-       |sz AS (SELECT doc_id, COUNT(*) AS sz FROM hv GROUP BY 1),
-       |inter AS (SELECT p.doc_a, p.doc_b, COUNT(*) AS ni
-       |  FROM p JOIN hv ha ON ha.doc_id = p.doc_a
-       |         JOIN hv hb ON hb.doc_id = p.doc_b AND hb.hv = ha.hv
-       |  GROUP BY 1, 2),
+       |$pairIntersectSql,
        |jp AS (SELECT p.doc_a, p.doc_b,
        |    COALESCE(i.ni, 0) / (sa.sz + sb.sz - COALESCE(i.ni, 0)) AS j
        |  FROM p
@@ -803,14 +794,52 @@ object PipelineQueries {
     Dedup.simhash64(words, "doc_id")
   }
 
+  /** Shared x3/m5/m5b oracle: the SimHash bit sums `bits` over the
+    * (doc_id, hv_hi, hv_lo) relation `hv`, packed into `sh` (doc_id, simhash). */
+  private def simhashBitsSql(hv: String): String =
+    s"""bits AS (SELECT doc_id,
+       |    $simhashBitSumsSql
+       |  FROM $hv GROUP BY 1),
+       |sh AS (SELECT doc_id, CAST($simhashPackedSql AS BIGINT) AS simhash FROM bits)""".stripMargin
+
+  /** Shared x3b/m5/m5b panel: each doc's near-dup degree, min partner and
+    * min Hamming distance over the (doc_a, doc_b, hamming) pairs —
+    * symmetrized by EXPLODING each pair into both directions (a union of
+    * two selects over `pairs` would plan and execute the banded self-join
+    * twice). */
+  private def nearDupPanel(pairs: DataFrame) =
+    pairs.select(explode(array(
+        struct(col("doc_a").as("doc_id"), col("doc_b").as("partner"), col("hamming")),
+        struct(col("doc_b").as("doc_id"), col("doc_a").as("partner"), col("hamming"))))
+        .as("e"))
+      .select(col("e.doc_id"), col("e.partner"), col("e.hamming").as("hamming"))
+      .groupBy("doc_id")
+      .agg(count(lit(1)).as("n_neardups"),
+        min(col("partner")).as("min_partner"),
+        min(col("hamming")).as("min_hamming"))
+      .orderBy("doc_id")
+
+  /** Oracle side of nearDupPanel over `sh`: Hamming ≤ 3 pairs, then the panel. */
+  private def nearDupPanelSql: String =
+    """pairs AS (
+      |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
+      |    CAST(bit_count(xor(a.simhash, b.simhash)) AS INT) AS hamming
+      |  FROM sh a JOIN sh b ON a.doc_id < b.doc_id
+      |  WHERE bit_count(xor(a.simhash, b.simhash)) <= 3),
+      |sym AS (
+      |  SELECT doc_a AS doc_id, doc_b AS partner, hamming FROM pairs
+      |  UNION ALL
+      |  SELECT doc_b AS doc_id, doc_a AS partner, hamming FROM pairs)
+      |SELECT doc_id, COUNT(*) AS n_neardups,
+      |  MIN(partner) AS min_partner,
+      |  CAST(MIN(hamming) AS INT) AS min_hamming
+      |FROM sym GROUP BY doc_id ORDER BY doc_id""".stripMargin
+
   /** DuckDB CTE chain ending in `sh(doc_id, simhash)` — the x3 oracle. */
   private val simhashCtes: String =
     s"""wd AS (SELECT DISTINCT doc_id, ${h32Sql("w")} AS hv_hi, ${h32bSql("w")} AS hv_lo
        |  FROM (SELECT doc_id, unnest(string_split(text, ' ')) AS w FROM documents)),
-       |bits AS (SELECT doc_id,
-       |    $simhashBitSumsSql
-       |  FROM wd GROUP BY 1),
-       |sh AS (SELECT doc_id, CAST($simhashPackedSql AS BIGINT) AS simhash FROM bits)""".stripMargin
+       |${simhashBitsSql("wd")}""".stripMargin
 
   private val x3Simhash = Q(
     (s, d) => simhashSigs(s, d).orderBy("doc_id"),
@@ -830,34 +859,27 @@ object PipelineQueries {
   private val x3bSimhashPairs = Q(
     (s, d) => {
       val pairs = Dedup.simhashPairs(simhashSigs(s, d), "doc_id")
-      // symmetrize by EXPLODING each pair into both directions — a union
-      // of two selects over `pairs` would plan (and execute) the whole
-      // banded self-join twice
-      pairs.select(explode(array(
-          struct(col("doc_a").as("doc_id"), col("doc_b").as("partner"), col("hamming")),
-          struct(col("doc_b").as("doc_id"), col("doc_a").as("partner"), col("hamming"))))
-          .as("e"))
-        .select(col("e.doc_id"), col("e.partner"), col("e.hamming").as("hamming"))
-        .groupBy("doc_id")
-        .agg(count(lit(1)).as("n_neardups"),
-          min(col("partner")).as("min_partner"),
-          min(col("hamming")).as("min_hamming"))
-        .orderBy("doc_id")
+      nearDupPanel(pairs)
     },
     s"""WITH $simhashCtes,
-       |pairs AS (
-       |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-       |    CAST(bit_count(xor(a.simhash, b.simhash)) AS INT) AS hamming
-       |  FROM sh a JOIN sh b ON a.doc_id < b.doc_id
-       |  WHERE bit_count(xor(a.simhash, b.simhash)) <= 3),
-       |sym AS (
-       |  SELECT doc_a AS doc_id, doc_b AS partner, hamming FROM pairs
-       |  UNION ALL
-       |  SELECT doc_b AS doc_id, doc_a AS partner, hamming FROM pairs)
-       |SELECT doc_id, COUNT(*) AS n_neardups,
-       |  MIN(partner) AS min_partner,
-       |  CAST(MIN(hamming) AS INT) AS min_hamming
-       |FROM sym GROUP BY doc_id ORDER BY doc_id""".stripMargin)
+       |$nearDupPanelSql""".stripMargin)
+
+  /** Shared x4/z35 stage: language-blocked shingle-pair Jaccard with the
+    * stop-shingle cap. */
+  private def cappedShinglePairs(docs: DataFrame) =
+    Dedup.shingleJaccardPairs(shingles(docs), "doc_id", "lang",
+      maxDocFreq = Some(X4MaxDocFreq))
+
+  /** Oracle side of cappedShinglePairs over the shingles `sh`: CTEs `df`,
+    * `kept`, `sizes` and the pair intersections `inter`. */
+  private def cappedShingleInterSql: String =
+    s"""df AS (SELECT s, count(*) AS df FROM sh GROUP BY 1),
+       |kept AS (SELECT sh.doc_id, sh.lang, sh.s FROM sh JOIN df USING (s) WHERE df <= $X4MaxDocFreq),
+       |sizes AS (SELECT doc_id, count(*) AS n_sh FROM kept GROUP BY 1),
+       |inter AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS n_inter
+       |  FROM kept a JOIN kept b
+       |    ON a.lang = b.lang AND a.s = b.s AND a.doc_id < b.doc_id
+       |  GROUP BY 1, 2)""".stripMargin
 
   /** True n-gram Jaccard over the language-blocked inverted index — the
     * verify stage after LSH. Ranked top-100 (pairs are distinct so the
@@ -874,21 +896,14 @@ object PipelineQueries {
     * oracle string interpolates it before this point in the file.) */
   private val x4NgramJaccard = Q(
     (s, d) => {
-      val pairs = Dedup.shingleJaccardPairs(shingles(Tables.documents(s, d)), "doc_id", "lang",
-        maxDocFreq = Some(X4MaxDocFreq))
+      val pairs = cappedShinglePairs(Tables.documents(s, d))
       pairs.select(col("doc_a"), col("doc_b"), col("n_inter"), col("n_a"), col("n_b"),
           col("jaccard"))
         .orderBy(col("jaccard").desc, col("doc_a"), col("doc_b"))
         .limit(100)
     },
     s"""WITH $shingleCte,
-       |df AS (SELECT s, count(*) AS df FROM sh GROUP BY 1),
-       |kept AS (SELECT sh.doc_id, sh.lang, sh.s FROM sh JOIN df USING (s) WHERE df <= $X4MaxDocFreq),
-       |sizes AS (SELECT doc_id, count(*) AS n_sh FROM kept GROUP BY 1),
-       |inter AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS n_inter
-       |  FROM kept a JOIN kept b
-       |    ON a.lang = b.lang AND a.s = b.s AND a.doc_id < b.doc_id
-       |  GROUP BY 1, 2)
+       |$cappedShingleInterSql
        |SELECT doc_a, doc_b, n_inter, sa.n_sh AS n_a, sb.n_sh AS n_b,
        |  CAST(n_inter AS DOUBLE) / (sa.n_sh + sb.n_sh - n_inter) AS jaccard
        |FROM inter
@@ -1465,6 +1480,161 @@ object PipelineQueries {
       |  CAST(n_straddling AS DOUBLE) / n_docs AS straddle_frac
       |FROM g ORDER BY seq_len""".stripMargin)
 
+  /** Shared tail-split stage (x50/x51/x54/x55/x56/x58/x59): each doc's
+    * 8-word segments, keyed by the two 32-bit hashes of the segment text. */
+  private def tailSegs(df: DataFrame) =
+    TextAnalysis.chunkWords(df, "doc_id", "text", 8)
+      .select(col("doc_id"),
+        TextAnalysis.hash32(col("chunk_text")).as("h1"),
+        TextAnalysis.hash32b(col("chunk_text")).as("h2"))
+
+  /** Shared tail-split stage: per-(h1, h2) segment counts in column `as`. */
+  private def tailCounts(df: DataFrame, as: String = "df") =
+    tailSegs(df).groupBy("h1", "h2").agg(count(lit(1)).as(as))
+
+  /** Oracle side of tailSegs: CTEs `ws`, `seg0`, the segment-text CTE
+    * named `st`, and `hh` (doc_id, h1, h2). */
+  private def tailSegsSql(st: String): String =
+    s"""ws AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
+       |seg0 AS (SELECT doc_id, w,
+       |    unnest(generate_series(0, (len(w) - 1) // 8)) AS c FROM ws),
+       |$st AS (SELECT doc_id,
+       |    array_to_string(list_slice(w, c * 8 + 1, c * 8 + 8), ' ') AS t FROM seg0),
+       |hh AS (SELECT doc_id, ${h32Sql("t")} AS h1, ${h32bSql("t")} AS h2 FROM $st)""".stripMargin
+
+  /** Shared tail-split stage: the Count-Min sketch aggregate over `key`
+    * at relative error `eps` (confidence 0.99, seed 42). */
+  private def cmsAggSql(eps: String): String =
+    s"count_min_sketch(key, CAST($eps AS DOUBLE), CAST(0.99 AS DOUBLE), 42)"
+
+  /** Shared tail-split stage: the serialized empty sketch of cmsAggSql(eps). */
+  private def emptyCms(eps: String): Array[Byte] = {
+    val bos = new java.io.ByteArrayOutputStream()
+    org.apache.spark.util.sketch.CountMinSketch
+      .create(eps.toDouble, 0.99, 42).writeTo(bos)
+    bos.toByteArray
+  }
+
+  /** Shared x55/x56/x58 stage: the sketch of `keys`' (h1, h2) pairs,
+    * collected to bytes (the empty sketch when there are no keys). */
+  private def tailSketch(keys: DataFrame, eps: String = "0.00001"): Array[Byte] = {
+    val r = keys.select("h1", "h2")
+      .withColumn("key", concat_ws(":", col("h1"), col("h2")))
+      .agg(expr(cmsAggSql(eps)).as("sk")).head()
+    Option(r.getAs[Array[Byte]]("sk")).getOrElse(emptyCms(eps))
+  }
+
+  /** Shared x55/x56/x58 stage: `built` round-tripped through a Store at
+    * scratch name `name`, partitioned by h1 mod 8. */
+  private def tailStored(s: SparkSession, d: String, name: String, built: DataFrame) = {
+    val store = graft.sources.Store(s, Artifacts.scratchPath(s, d, name), "part")
+    store.destroy()
+    store.append(built.withColumn("part", pmod(col("h1"), lit(8))))
+    store.read.drop("part")
+  }
+
+  /** Shared x56/x58/x59 stage: the takedown subtract-merge — `art`'s
+    * counts minus the `removed` docs' own segment counts, zero rows out. */
+  private def tailSubtract(art: DataFrame, removed: DataFrame) =
+    art.join(tailCounts(removed, "r"), Seq("h1", "h2"), "left")
+      .select(col("h1"), col("h2"),
+        (col("df") - coalesce(col("r"), lit(0L)))
+          .cast(org.apache.spark.sql.types.LongType).as("df"))
+      .filter(col("df") >= 1)
+
+  /** Shared x55/x58 stage: one day's merge of `batch` (h1, h2, b) into
+    * the stored tail-split artifact `art`, probing the tail through the
+    * sketch literal `skB`; returns the next artifact and the probe frame. */
+  private def tailMergeDay(s: SparkSession, art: DataFrame, batch: DataFrame,
+                           skB: Array[Byte]) = {
+    import org.apache.spark.sql.types.LongType
+    val exact = art.filter(col("df") >= 2)
+    val tailK = art.filter(col("df") === 1)
+    val probed0 = batch
+      .join(exact.select(col("h1"), col("h2"), col("df").as("df_exact")),
+        Seq("h1", "h2"), "left")
+      .join(tailK.select(col("h1"), col("h2"), lit(1L).as("df_tail")),
+        Seq("h1", "h2"), "left")
+      .withColumn("est", when(col("df_exact").isNull,
+          call_function("graft_cms_estimate", lit(skB),
+            concat_ws(":", col("h1"), col("h2"))))
+        .otherwise(lit(0L)))
+    // retainCheckpoint, not pin: these frames live in x55's/x58's artifact
+    // across constructions (Bench/Soak run every query twice), so their
+    // blocks must survive the per-query releaseAllBlocks sweep — a pinned
+    // frame would be unpersisted after run 1 and run 2 would hit
+    // CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND (lineage is truncated).
+    // Batch-keys-sized state: a few MB held for the process lifetime.
+    val probed = graft.Housekeeping.retainCheckpoint(s)(probed0)
+    val estFlag = when(col("est") >= 1, 1L).otherwise(0L)
+    val updated = exact.join(batch, Seq("h1", "h2"), "left")
+      .select(col("h1"), col("h2"),
+        (col("df") + coalesce(col("b"), lit(0L))).cast(LongType).as("df"))
+    val crossings = probed
+      .filter(col("df_exact").isNull && estFlag + col("b") >= 2)
+      .select(col("h1"), col("h2"), (estFlag + col("b")).cast(LongType).as("df"))
+    val newTail = probed
+      .filter(col("df_exact").isNull && col("b") === 1 && col("est") < 1)
+    val tailKept = tailK
+      .join(crossings.select("h1", "h2"), Seq("h1", "h2"), "left_anti")
+    val newArt = updated.unionByName(crossings)
+      .unionByName(tailKept.select(col("h1"), col("h2"),
+        lit(1L).cast(LongType).as("df")))
+      .unionByName(newTail.select(col("h1"), col("h2"),
+        lit(1L).cast(LongType).as("df")))
+    (newArt, probed)
+  }
+
+  /** Shared x55/x58 panel stage: a merge day's crossings and new
+    * singletons, read off its probe frame `p`. */
+  private def tailDayCounts(p: DataFrame, cName: String, nName: String) = {
+    val estFlag = when(col("est") >= 1, 1L).otherwise(0L)
+    p.agg(
+      sum(when(col("df_exact").isNull && estFlag + col("b") >= 2, 1L)
+        .otherwise(0L)).as(cName),
+      sum(when(col("df_exact").isNull && col("b") === 1 && col("est") < 1, 1L)
+        .otherwise(0L)).as(nName))
+  }
+
+  /** Oracle side of tailDayCounts: CTE `cte` counts the keys that cross
+    * to df ≥ 2 or arrive as new singletons between the counts `before`
+    * and `after`, suffixing both columns with `day`. */
+  private def tailDayCountsSql(cte: String, after: String, before: String,
+                               day: String): String =
+    s"""$cte AS (SELECT
+       |    CAST(SUM(CASE WHEN $after.df >= 2 AND COALESCE($before.df, 0) <= 1
+       |      THEN 1 ELSE 0 END) AS BIGINT) AS n_crossings_$day,
+       |    CAST(SUM(CASE WHEN $after.df = 1 AND $before.h1 IS NULL
+       |      THEN 1 ELSE 0 END) AS BIGINT) AS n_new_tail_$day
+       |  FROM $after LEFT JOIN $before ON $before.h1 = $after.h1 AND $before.h2 = $after.h2)""".stripMargin
+
+  /** Shared x55/x56/x58 panel stage: exact-part (df ≥ 2) and tail (df = 1)
+    * counts of `art` with their lattice checksums. */
+  private def tailSplitTotals(art: DataFrame, nExact: String, nTail: String) = {
+    val M = lit(2147483647L)
+    art.agg(
+      sum(when(col("df") >= 2, 1L).otherwise(0L)).as(nExact),
+      pmod(sum(when(col("df") >= 2,
+        (col("h1") % M) * (col("h2") % M) % M * (col("df") % M) % M)
+        .otherwise(0L)), M).cast(org.apache.spark.sql.types.LongType).as("exact_checksum"),
+      sum(when(col("df") === 1, 1L).otherwise(0L)).as(nTail),
+      pmod(sum(when(col("df") === 1, (col("h1") % M) * (col("h2") % M) % M)
+        .otherwise(0L)), M).cast(org.apache.spark.sql.types.LongType).as("tail_checksum"))
+  }
+
+  /** Oracle side of tailSplitTotals: CTE `cte` over the counts in `from`. */
+  private def tailSplitTotalsSql(cte: String, nExact: String, nTail: String,
+                                 from: String): String =
+    s"""$cte AS (SELECT
+       |    CAST(SUM(CASE WHEN df >= 2 THEN 1 ELSE 0 END) AS BIGINT) AS $nExact,
+       |    CAST(SUM(CASE WHEN df >= 2 THEN (h1 % 2147483647) * (h2 % 2147483647)
+       |      % 2147483647 * (df % 2147483647) % 2147483647 ELSE 0 END)
+       |      % 2147483647 AS BIGINT) AS exact_checksum,
+       |    CAST(SUM(CASE WHEN df = 1 THEN 1 ELSE 0 END) AS BIGINT) AS $nTail,
+       |    CAST(SUM(CASE WHEN df = 1 THEN (h1 % 2147483647) * (h2 % 2147483647)
+       |      % 2147483647 ELSE 0 END) % 2147483647 AS BIGINT) AS tail_checksum
+       |  FROM $from)""".stripMargin
+
   /** x50: TAKEDOWN PROPAGATION into the boilerplate inventory — x44's
     * deletion E2 extended to x46/x48's artifact, by its production rule:
     * counts UNLEARN by subtract-merge (the removed docs' segment counts
@@ -1484,12 +1654,7 @@ object PipelineQueries {
       import org.apache.spark.sql.types.LongType
       val M = lit(2147483647L)
       val docs = Tables.documents(s, d)
-      def segsOf(df: org.apache.spark.sql.DataFrame) =
-        TextAnalysis.chunkWords(df, "doc_id", "text", 8)
-          .select(col("doc_id"),
-            TextAnalysis.hash32(col("chunk_text")).as("h1"),
-            TextAnalysis.hash32b(col("chunk_text")).as("h2"))
-      val fullCnt = segsOf(docs).groupBy("h1", "h2").agg(count(lit(1)).as("df"))
+      val fullCnt = tailCounts(docs)
       val stored = Artifacts.getOrBuild(s, d, "x50_segment_counts") {
         val path = Artifacts.scratchPath(s, d, "segfull")
         val store = graft.sources.Store(s, path, "part")
@@ -1501,8 +1666,7 @@ object PipelineQueries {
           (col("h1") % M) * (col("h2") % M) % M * (col("df") % M) % M)
         back.drop("part")
       }
-      val removedCnt = segsOf(docs.filter(col("doc_id") % 13 === 0))
-        .groupBy("h1", "h2").agg(count(lit(1)).as("rm"))
+      val removedCnt = tailCounts(docs.filter(col("doc_id") % 13 === 0), "rm")
       val merged = stored
         .join(removedCnt, Seq("h1", "h2"), "left")
         .select(col("h1"), col("h2"),
@@ -1515,7 +1679,7 @@ object PipelineQueries {
         .select("h1", "h2")
       // over-scrubbed retained docs: carriers (in the RAW retained corpus)
       // of a segment that left the inventory — the re-materialization set
-      val reEdit = segsOf(docs.filter(col("doc_id") % 13 =!= 0))
+      val reEdit = tailSegs(docs.filter(col("doc_id") % 13 =!= 0))
         .join(left, Seq("h1", "h2"), "left_semi")
         .select("doc_id").distinct()
       val g = merged.agg(
@@ -1791,13 +1955,7 @@ object PipelineQueries {
       import org.apache.spark.sql.types.LongType
       val M = lit(2147483647L)
       val docs = Tables.documents(s, d)
-      def segsOf(df: org.apache.spark.sql.DataFrame) =
-        TextAnalysis.chunkWords(df, "doc_id", "text", 8)
-          .select(col("doc_id"),
-            TextAnalysis.hash32(col("chunk_text")).as("h1"),
-            TextAnalysis.hash32b(col("chunk_text")).as("h2"))
-      val baseCnt0 = segsOf(docs.filter(col("doc_id") % 10 =!= 0))
-        .groupBy("h1", "h2").agg(count(lit(1)).as("df"))
+      val baseCnt0 = tailCounts(docs.filter(col("doc_id") % 10 =!= 0))
       // FIVE consumers read the day-0 counts (exact updates, tail sketch
       // collect, one-shot merge check, both panel counts) — pin so the
       // corpus pays one segment pass (x47's signature discipline)
@@ -1810,8 +1968,7 @@ object PipelineQueries {
       // df reconstruction must stay FP-free at EVERY test SF, not just
       // the gate ones — x51 keeps the tighter sketch and prices the FP
       // bound; x54 exercises the sizing rule that removes them
-      val skAgg = "count_min_sketch(key, CAST(0.00001 AS DOUBLE), " +
-        "CAST(0.99 AS DOUBLE), 42)"
+      val skAgg = cmsAggSql("0.00001")
       // TRANSPORT: the 11 MB day-0 sketch is collected ONCE at build and
       // inlined as a plan LITERAL — the repo's Bloom precedent (j11/x12):
       // the blob rides the task binary to each executor exactly once and
@@ -1823,19 +1980,12 @@ object PipelineQueries {
       // single digits without it, and worse at 100× because per-probe
       // cost grew with sketch width (∝ corpus tail) × batch keys.
       val sk0 = tail0.agg(expr(skAgg).as("sk"), count(lit(1)).as("n_tail0"))
-      def emptySketchBytes: Array[Byte] = {
-        val bos = new java.io.ByteArrayOutputStream()
-        org.apache.spark.util.sketch.CountMinSketch
-          .create(0.00001, 0.99, 42).writeTo(bos)
-        bos.toByteArray
-      }
       val (sk0Bytes, nTail0): (Array[Byte], Long) = {
         val r = sk0.head()
-        (Option(r.getAs[Array[Byte]]("sk")).getOrElse(emptySketchBytes),
+        (Option(r.getAs[Array[Byte]]("sk")).getOrElse(emptyCms("0.00001")),
           r.getAs[Long]("n_tail0"))
       }
-      val batchCnt = segsOf(docs.filter(col("doc_id") % 10 === 0))
-        .groupBy("h1", "h2").agg(count(lit(1)).as("b"))
+      val batchCnt = tailCounts(docs.filter(col("doc_id") % 10 === 0), "b")
       val probed0 = batchCnt
         .join(exact0.select(col("h1"), col("h2"), col("df").as("df_exact")),
           Seq("h1", "h2"), "left")
@@ -1884,7 +2034,7 @@ object PipelineQueries {
       }
       // verification reads (from-scratch truth for tail accounting over
       // the post-ingest corpus = base ∪ batch = all docs)
-      val afterCnt = segsOf(docs)
+      val afterCnt = tailSegs(docs)
       val trueTail = afterCnt.groupBy("h1", "h2").agg(count(lit(1)).as("df"))
         .filter(col("df") === 1).agg(count(lit(1)).as("n_tail_true"))
       val g = exactAfter.agg(
@@ -1905,12 +2055,7 @@ object PipelineQueries {
           "n_crossings", "n_new_tail", "n_sketch_items", "n_tail_true",
           "sketch_residue", "sketch_merge_exact")
     },
-    s"""WITH ws AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
-       |seg0 AS (SELECT doc_id, w,
-       |    unnest(generate_series(0, (len(w) - 1) // 8)) AS c FROM ws),
-       |st AS (SELECT doc_id,
-       |    array_to_string(list_slice(w, c * 8 + 1, c * 8 + 8), ' ') AS t FROM seg0),
-       |hh AS (SELECT doc_id, ${h32Sql("t")} AS h1, ${h32bSql("t")} AS h2 FROM st),
+    s"""WITH ${tailSegsSql("st")},
        |cb AS (SELECT h1, h2, COUNT(*) AS df FROM hh WHERE doc_id % 10 <> 0 GROUP BY 1, 2),
        |ex0 AS (SELECT h1, h2, df FROM cb WHERE df >= 2),
        |tl0 AS (SELECT h1, h2 FROM cb WHERE df = 1),
@@ -2008,35 +2153,7 @@ object PipelineQueries {
   private val x55TailComposition = Q(
     (s, d) => {
       import org.apache.spark.sql.types.LongType
-      val M = lit(2147483647L)
       val docs = Tables.documents(s, d)
-      def segsOf(df: org.apache.spark.sql.DataFrame) =
-        TextAnalysis.chunkWords(df, "doc_id", "text", 8)
-          .select(col("doc_id"),
-            TextAnalysis.hash32(col("chunk_text")).as("h1"),
-            TextAnalysis.hash32b(col("chunk_text")).as("h2"))
-      def cntOf(f: org.apache.spark.sql.DataFrame) =
-        segsOf(f).groupBy("h1", "h2").agg(count(lit(1)).as("df"))
-      def batchOf(f: org.apache.spark.sql.DataFrame) =
-        segsOf(f).groupBy("h1", "h2").agg(count(lit(1)).as("b"))
-      val skAgg = "count_min_sketch(key, CAST(0.00001 AS DOUBLE), " +
-        "CAST(0.99 AS DOUBLE), 42)"
-      val skAggWide = "count_min_sketch(key, CAST(0.000005 AS DOUBLE), " +
-        "CAST(0.99 AS DOUBLE), 42)"
-      def withKey(f: org.apache.spark.sql.DataFrame) =
-        f.withColumn("key", concat_ws(":", col("h1"), col("h2")))
-      def emptySk(agg: String): Array[Byte] = {
-        val eps = if (agg == skAgg) 0.00001 else 0.000005
-        val bos = new java.io.ByteArrayOutputStream()
-        org.apache.spark.util.sketch.CountMinSketch
-          .create(eps, 0.99, 42).writeTo(bos)
-        bos.toByteArray
-      }
-      def sketchBytes(keys: org.apache.spark.sql.DataFrame,
-                      agg: String): Array[Byte] = {
-        val r = withKey(keys.select("h1", "h2")).agg(expr(agg).as("sk")).head()
-        Option(r.getAs[Array[Byte]]("sk")).getOrElse(emptySk(agg))
-      }
       def addSketches(a: Array[Byte], b: Array[Byte]): Array[Byte] = {
         import java.io.{ByteArrayInputStream, ByteArrayOutputStream}
         import org.apache.spark.util.sketch.CountMinSketch
@@ -2044,100 +2161,44 @@ object PipelineQueries {
         sk.mergeInPlace(CountMinSketch.readFrom(new ByteArrayInputStream(b)))
         val bos = new ByteArrayOutputStream(); sk.writeTo(bos); bos.toByteArray
       }
-      // one day's merge against the artifact + the sketch literal; the
-      // probe relation is pinned across its consumers (crossings, new-tail
-      // sketch collect, panel counts)
-      def mergeDay(art: org.apache.spark.sql.DataFrame,
-                   batch: org.apache.spark.sql.DataFrame, skB: Array[Byte]) = {
-        val exact = art.filter(col("df") >= 2)
-        val tailK = art.filter(col("df") === 1)
-        val probed0 = batch
-          .join(exact.select(col("h1"), col("h2"), col("df").as("df_exact")),
-            Seq("h1", "h2"), "left")
-          .join(tailK.select(col("h1"), col("h2"), lit(1L).as("df_tail")),
-            Seq("h1", "h2"), "left")
-          .withColumn("est", when(col("df_exact").isNull,
-              call_function("graft_cms_estimate", lit(skB),
-                concat_ws(":", col("h1"), col("h2"))))
-            .otherwise(lit(0L)))
-        // retainCheckpoint, not pin: these frames live in x55's artifact
-        // across constructions (Bench/Soak run every query twice), so
-        // their blocks must survive the per-query releaseAllBlocks sweep —
-        // a pinned frame would be unpersisted after run 1 and run 2 would
-        // hit CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND (lineage is truncated).
-        // Batch-keys-sized state: a few MB held for the process lifetime.
-        val probed = graft.Housekeeping.retainCheckpoint(s)(probed0)
-        val estFlag = when(col("est") >= 1, 1L).otherwise(0L)
-        val updated = exact.join(batch, Seq("h1", "h2"), "left")
-          .select(col("h1"), col("h2"),
-            (col("df") + coalesce(col("b"), lit(0L))).cast(LongType).as("df"))
-        val crossings = probed
-          .filter(col("df_exact").isNull && estFlag + col("b") >= 2)
-          .select(col("h1"), col("h2"), (estFlag + col("b")).cast(LongType).as("df"))
-        val newTail = probed
-          .filter(col("df_exact").isNull && col("b") === 1 && col("est") < 1)
-        val tailKept = tailK
-          .join(crossings.select("h1", "h2"), Seq("h1", "h2"), "left_anti")
-        val newArt = updated.unionByName(crossings)
-          .unionByName(tailKept.select(col("h1"), col("h2"),
-            lit(1L).cast(LongType).as("df")))
-          .unionByName(newTail.select(col("h1"), col("h2"),
-            lit(1L).cast(LongType).as("df")))
-        (newArt, probed)
-      }
-      def stored(day: String, built: org.apache.spark.sql.DataFrame) = {
-        val path = Artifacts.scratchPath(s, d, s"tailsplit_$day")
-        val store = graft.sources.Store(s, path, "part")
-        store.destroy()
-        store.append(built.withColumn("part", pmod(col("h1"), lit(8))))
-        store.read.drop("part")
-      }
       val day0 = docs.filter(col("doc_id") % 10 =!= 0 && col("doc_id") % 10 =!= 5)
-      val b1 = batchOf(docs.filter(col("doc_id") % 10 === 5))
-      val b2 = batchOf(docs.filter(col("doc_id") % 10 === 0))
+      val b1 = tailCounts(docs.filter(col("doc_id") % 10 === 5), "b")
+      val b2 = tailCounts(docs.filter(col("doc_id") % 10 === 0), "b")
       val st = Artifacts.getOrBuild(s, d, "x55_tail_split") {
-        val art0 = stored("d0", cntOf(day0))
+        val art0 = tailStored(s, d, "tailsplit_d0", tailCounts(day0))
         val tail0 = art0.filter(col("df") === 1)
         val nTail0 = tail0.count()
-        val sk0 = sketchBytes(tail0, skAgg)
-        val (newArt1, probed1) = mergeDay(art0, b1, sk0)
-        val art1 = stored("d1", newArt1)
+        val sk0 = tailSketch(tail0)
+        val (newArt1, probed1) = tailMergeDay(s, art0, b1, sk0)
+        val art1 = tailStored(s, d, "tailsplit_d1", newArt1)
         val newTail1 = probed1.filter(col("df_exact").isNull
           && col("b") === 1 && col("est") < 1)
-        val skNew1 = sketchBytes(newTail1, skAgg)
+        val skNew1 = tailSketch(newTail1)
         val sk1 = addSketches(sk0, skNew1)
         val nItemsD1 = nTail0 + newTail1.count()
-        val (newArt2, probed2) = mergeDay(art1, b2, sk1)
-        val art2 = stored("d2", newArt2)
+        val (newArt2, probed2) = tailMergeDay(s, art1, b2, sk1)
+        val art2 = tailStored(s, d, "tailsplit_d2", newArt2)
         val newTail2 = probed2.filter(col("df_exact").isNull
           && col("b") === 1 && col("est") < 1)
-        val skNew2 = sketchBytes(newTail2, skAgg)
+        val skNew2 = tailSketch(newTail2)
         val skAfter = addSketches(sk1, skNew2)
         // mergeability across days: addition ≡ one-shot over every
         // item ever added (crossed keys' residue included — CMS
         // cannot subtract, and the identity is over ADDITIONS)
-        val oneShot = sketchBytes(
+        val oneShot = tailSketch(
           tail0.select("h1", "h2")
             .unionByName(newTail1.select("h1", "h2"))
-            .unionByName(newTail2.select("h1", "h2")), skAgg)
+            .unionByName(newTail2.select("h1", "h2")))
         val mergeExact = java.util.Arrays.equals(skAfter, oneShot)
         // the re-sketch path: wider build from the STORED artifact's
         // tail keys vs a wider build over the from-scratch tail — the
         // corpus is touched ONLY by the verification arm
-        val wideStored = sketchBytes(art2.filter(col("df") === 1), skAggWide)
-        val wideTruth = sketchBytes(
-          cntOf(docs).filter(col("df") === 1), skAggWide)
+        val wideStored = tailSketch(art2.filter(col("df") === 1), "0.000005")
+        val wideTruth = tailSketch(tailCounts(docs).filter(col("df") === 1), "0.000005")
         val resketch = java.util.Arrays.equals(wideStored, wideTruth)
         X55State(art0, art1, art2, probed1, probed2, nTail0, nItemsD1,
           mergeExact, resketch)
       }
-      val estFlag = when(col("est") >= 1, 1L).otherwise(0L)
-      def dayCounts(p: org.apache.spark.sql.DataFrame, cName: String, nName: String) =
-        p.agg(
-          sum(when(col("df_exact").isNull && estFlag + col("b") >= 2, 1L)
-            .otherwise(0L)).as(cName),
-          sum(when(col("df_exact").isNull && col("b") === 1 && col("est") < 1, 1L)
-            .otherwise(0L)).as(nName))
       val d2Contracts = st.probed2.agg(
         sum(when(col("df_exact").isNull && col("est") >= 1
           && col("df_tail").isNull && col("b") === 1, 1L).otherwise(0L)).as("n_fp_d2"),
@@ -2145,17 +2206,9 @@ object PipelineQueries {
           && col("b") === 1, 1L).otherwise(0L)).as("__n_miss"),
         (sum(when(col("df_exact").isNull && col("df_tail").isNotNull
           && col("est") < 1, 1L).otherwise(0L)) === 0L).as("no_false_negatives_d2"))
-      val finAgg = st.art2.agg(
-        sum(when(col("df") >= 2, 1L).otherwise(0L)).as("n_exact_final"),
-        pmod(sum(when(col("df") >= 2,
-          (col("h1") % M) * (col("h2") % M) % M * (col("df") % M) % M)
-          .otherwise(0L)), M).cast(LongType).as("exact_checksum"),
-        sum(when(col("df") === 1, 1L).otherwise(0L)).as("n_tail_final"),
-        pmod(sum(when(col("df") === 1, (col("h1") % M) * (col("h2") % M) % M)
-          .otherwise(0L)), M).cast(LongType).as("tail_checksum"))
-      finAgg
-        .crossJoin(broadcast(dayCounts(st.probed1, "n_crossings_d1", "n_new_tail_d1")))
-        .crossJoin(broadcast(dayCounts(st.probed2, "n_crossings_d2", "n_new_tail_d2")))
+      tailSplitTotals(st.art2, "n_exact_final", "n_tail_final")
+        .crossJoin(broadcast(tailDayCounts(st.probed1, "n_crossings_d1", "n_new_tail_d1")))
+        .crossJoin(broadcast(tailDayCounts(st.probed2, "n_crossings_d2", "n_new_tail_d2")))
         .crossJoin(broadcast(d2Contracts))
         .withColumn("n_tail0", lit(st.nTail0))
         .withColumn("n_sketch_items",
@@ -2177,39 +2230,16 @@ object PipelineQueries {
           "fp_within_bound", "sketch_merge_exact", "resketch_rule_triggered",
           "resketch_matches_truth")
     },
-    s"""WITH ws AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
-       |seg0 AS (SELECT doc_id, w,
-       |    unnest(generate_series(0, (len(w) - 1) // 8)) AS c FROM ws),
-       |st AS (SELECT doc_id,
-       |    array_to_string(list_slice(w, c * 8 + 1, c * 8 + 8), ' ') AS t FROM seg0),
-       |hh AS (SELECT doc_id, ${h32Sql("t")} AS h1, ${h32bSql("t")} AS h2 FROM st),
+    s"""WITH ${tailSegsSql("st")},
        |c0 AS (SELECT h1, h2, COUNT(*) AS df FROM hh
        |  WHERE doc_id % 10 NOT IN (0, 5) GROUP BY 1, 2),
        |c01 AS (SELECT h1, h2, COUNT(*) AS df FROM hh
        |  WHERE doc_id % 10 <> 0 GROUP BY 1, 2),
        |ca AS (SELECT h1, h2, COUNT(*) AS df FROM hh GROUP BY 1, 2),
-       |x1 AS (SELECT
-       |    CAST(SUM(CASE WHEN c01.df >= 2 AND COALESCE(c0.df, 0) <= 1
-       |      THEN 1 ELSE 0 END) AS BIGINT) AS n_crossings_d1,
-       |    CAST(SUM(CASE WHEN c01.df = 1 AND c0.h1 IS NULL
-       |      THEN 1 ELSE 0 END) AS BIGINT) AS n_new_tail_d1
-       |  FROM c01 LEFT JOIN c0 ON c0.h1 = c01.h1 AND c0.h2 = c01.h2),
-       |x2 AS (SELECT
-       |    CAST(SUM(CASE WHEN ca.df >= 2 AND COALESCE(c01.df, 0) <= 1
-       |      THEN 1 ELSE 0 END) AS BIGINT) AS n_crossings_d2,
-       |    CAST(SUM(CASE WHEN ca.df = 1 AND c01.h1 IS NULL
-       |      THEN 1 ELSE 0 END) AS BIGINT) AS n_new_tail_d2
-       |  FROM ca LEFT JOIN c01 ON c01.h1 = ca.h1 AND c01.h2 = ca.h2),
+       |${tailDayCountsSql("x1", "c01", "c0", "d1")},
+       |${tailDayCountsSql("x2", "ca", "c01", "d2")},
        |t0 AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_tail0 FROM c0 WHERE df = 1),
-       |fin AS (SELECT
-       |    CAST(SUM(CASE WHEN df >= 2 THEN 1 ELSE 0 END) AS BIGINT) AS n_exact_final,
-       |    CAST(SUM(CASE WHEN df >= 2 THEN (h1 % 2147483647) * (h2 % 2147483647)
-       |      % 2147483647 * (df % 2147483647) % 2147483647 ELSE 0 END)
-       |      % 2147483647 AS BIGINT) AS exact_checksum,
-       |    CAST(SUM(CASE WHEN df = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_tail_final,
-       |    CAST(SUM(CASE WHEN df = 1 THEN (h1 % 2147483647) * (h2 % 2147483647)
-       |      % 2147483647 ELSE 0 END) % 2147483647 AS BIGINT) AS tail_checksum
-       |  FROM ca)
+       |${tailSplitTotalsSql("fin", "n_exact_final", "n_tail_final", "ca")}
        |SELECT fin.n_exact_final, fin.exact_checksum, fin.n_tail_final,
        |  fin.tail_checksum, t0.n_tail0, x1.n_crossings_d1, x1.n_new_tail_d1,
        |  x2.n_crossings_d2, x2.n_new_tail_d2,
@@ -2252,62 +2282,23 @@ object PipelineQueries {
     * keys, O(artifact). */
   private val x56TailTakedown = Q(
     (s, d) => {
-      import org.apache.spark.sql.types.LongType
-      val M = lit(2147483647L)
       val docs = Tables.documents(s, d)
-      def segsOf(df: org.apache.spark.sql.DataFrame) =
-        TextAnalysis.chunkWords(df, "doc_id", "text", 8)
-          .select(col("doc_id"),
-            TextAnalysis.hash32(col("chunk_text")).as("h1"),
-            TextAnalysis.hash32b(col("chunk_text")).as("h2"))
-      def cntOf(f: org.apache.spark.sql.DataFrame) =
-        segsOf(f).groupBy("h1", "h2").agg(count(lit(1)).as("df"))
       val removedPred = col("doc_id") % 9 === 0
-      val skAgg = "count_min_sketch(key, CAST(0.00001 AS DOUBLE), " +
-        "CAST(0.99 AS DOUBLE), 42)"
-      def sketchBytes(keys: org.apache.spark.sql.DataFrame): Array[Byte] = {
-        val r = keys.select("h1", "h2")
-          .withColumn("key", concat_ws(":", col("h1"), col("h2")))
-          .agg(expr(skAgg).as("sk")).head()
-        Option(r.getAs[Array[Byte]]("sk")).getOrElse(Array.empty[Byte])
-      }
-      def stored(day: String, built: org.apache.spark.sql.DataFrame) = {
-        val path = Artifacts.scratchPath(s, d, s"tailtd_$day")
-        val store = graft.sources.Store(s, path, "part")
-        store.destroy()
-        store.append(built.withColumn("part", pmod(col("h1"), lit(8))))
-        store.read.drop("part")
-      }
-      def subtracted(art: org.apache.spark.sql.DataFrame) = {
-        val rem = segsOf(docs.filter(removedPred))
-          .groupBy("h1", "h2").agg(count(lit(1)).as("r"))
-        art.join(rem, Seq("h1", "h2"), "left")
-          .select(col("h1"), col("h2"),
-            (col("df") - coalesce(col("r"), lit(0L))).cast(LongType).as("df"))
-          .filter(col("df") >= 1)
-      }
       val st = Artifacts.getOrBuild(s, d, "x56_tail_takedown") {
-        val art0 = stored("t0", cntOf(docs))
-        val art1 = stored("t1", subtracted(art0))
+        val art0 = tailStored(s, d, "tailtd_t0", tailCounts(docs))
+        val art1 = tailStored(s, d, "tailtd_t1", tailSubtract(art0, docs.filter(removedPred)))
         // CMS is add-only: the takedown repair IS x55's re-sketch
         // path, run off the stored tail′ keys; the from-scratch arm
         // exists only to verify it
-        val rebuilt = sketchBytes(art1.filter(col("df") === 1))
-        val scratch = sketchBytes(
-          cntOf(docs.filter(!removedPred)).filter(col("df") === 1))
+        val rebuilt = tailSketch(art1.filter(col("df") === 1))
+        val scratch = tailSketch(
+          tailCounts(docs.filter(!removedPred)).filter(col("df") === 1))
         X56State(art0, art1, java.util.Arrays.equals(rebuilt, scratch))
       }
       val before = st.art0.agg(
         sum(when(col("df") >= 2, 1L).otherwise(0L)).as("n_exact_before"),
         sum(when(col("df") === 1, 1L).otherwise(0L)).as("n_tail_before"))
-      val after = st.art1.agg(
-        sum(when(col("df") >= 2, 1L).otherwise(0L)).as("n_exact_after"),
-        pmod(sum(when(col("df") >= 2,
-          (col("h1") % M) * (col("h2") % M) % M * (col("df") % M) % M)
-          .otherwise(0L)), M).cast(LongType).as("exact_checksum"),
-        sum(when(col("df") === 1, 1L).otherwise(0L)).as("n_tail_after"),
-        pmod(sum(when(col("df") === 1, (col("h1") % M) * (col("h2") % M) % M)
-          .otherwise(0L)), M).cast(LongType).as("tail_checksum"))
+      val after = tailSplitTotals(st.art1, "n_exact_after", "n_tail_after")
       val trans = st.art0.select(col("h1"), col("h2"), col("df").as("df0"))
         .join(st.art1.select(col("h1"), col("h2"), col("df").as("df1")),
           Seq("h1", "h2"), "left")
@@ -2325,12 +2316,7 @@ object PipelineQueries {
           "n_exact_after", "exact_checksum", "n_tail_after", "tail_checksum",
           "n_demoted", "n_dropped", "resketch_equals_scratch")
     },
-    s"""WITH ws AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
-       |seg0 AS (SELECT doc_id, w,
-       |    unnest(generate_series(0, (len(w) - 1) // 8)) AS c FROM ws),
-       |st AS (SELECT doc_id,
-       |    array_to_string(list_slice(w, c * 8 + 1, c * 8 + 8), ' ') AS t FROM seg0),
-       |hh AS (SELECT doc_id, ${h32Sql("t")} AS h1, ${h32bSql("t")} AS h2 FROM st),
+    s"""WITH ${tailSegsSql("st")},
        |ca AS (SELECT h1, h2, COUNT(*) AS df FROM hh GROUP BY 1, 2),
        |ret AS (SELECT h1, h2, COUNT(*) AS df FROM hh
        |  WHERE doc_id % 9 <> 0 GROUP BY 1, 2),
@@ -2338,15 +2324,7 @@ object PipelineQueries {
        |    CAST(SUM(CASE WHEN df >= 2 THEN 1 ELSE 0 END) AS BIGINT) AS n_exact_before,
        |    CAST(SUM(CASE WHEN df = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_tail_before
        |  FROM ca),
-       |aft AS (SELECT
-       |    CAST(SUM(CASE WHEN df >= 2 THEN 1 ELSE 0 END) AS BIGINT) AS n_exact_after,
-       |    CAST(SUM(CASE WHEN df >= 2 THEN (h1 % 2147483647) * (h2 % 2147483647)
-       |      % 2147483647 * (df % 2147483647) % 2147483647 ELSE 0 END)
-       |      % 2147483647 AS BIGINT) AS exact_checksum,
-       |    CAST(SUM(CASE WHEN df = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_tail_after,
-       |    CAST(SUM(CASE WHEN df = 1 THEN (h1 % 2147483647) * (h2 % 2147483647)
-       |      % 2147483647 ELSE 0 END) % 2147483647 AS BIGINT) AS tail_checksum
-       |  FROM ret),
+       |${tailSplitTotalsSql("aft", "n_exact_after", "n_tail_after", "ret")},
        |tr AS (SELECT
        |    CAST(SUM(CASE WHEN ca.df >= 2 AND ret.df = 1 THEN 1 ELSE 0 END)
        |      AS BIGINT) AS n_demoted,
@@ -2396,107 +2374,32 @@ object PipelineQueries {
     * re-sketch; the corpus is touched only by the verification arms. */
   private val x58InterleavedTakedown = Q(
     (s, d) => {
-      import org.apache.spark.sql.types.LongType
-      val M = lit(2147483647L)
       val docs = Tables.documents(s, d)
-      def segsOf(df: org.apache.spark.sql.DataFrame) =
-        TextAnalysis.chunkWords(df, "doc_id", "text", 8)
-          .select(col("doc_id"),
-            TextAnalysis.hash32(col("chunk_text")).as("h1"),
-            TextAnalysis.hash32b(col("chunk_text")).as("h2"))
-      def cntOf(f: org.apache.spark.sql.DataFrame) =
-        segsOf(f).groupBy("h1", "h2").agg(count(lit(1)).as("df"))
-      def batchOf(f: org.apache.spark.sql.DataFrame) =
-        segsOf(f).groupBy("h1", "h2").agg(count(lit(1)).as("b"))
-      val skAgg = "count_min_sketch(key, CAST(0.00001 AS DOUBLE), " +
-        "CAST(0.99 AS DOUBLE), 42)"
-      def sketchBytes(keys: org.apache.spark.sql.DataFrame): Array[Byte] = {
-        val r = keys.select("h1", "h2")
-          .withColumn("key", concat_ws(":", col("h1"), col("h2")))
-          .agg(expr(skAgg).as("sk")).head()
-        Option(r.getAs[Array[Byte]]("sk")).getOrElse(Array.empty[Byte])
-      }
-      def stored(day: String, built: org.apache.spark.sql.DataFrame) = {
-        val path = Artifacts.scratchPath(s, d, s"tailint_$day")
-        val store = graft.sources.Store(s, path, "part")
-        store.destroy()
-        store.append(built.withColumn("part", pmod(col("h1"), lit(8))))
-        store.read.drop("part")
-      }
-      def mergeDay(art: org.apache.spark.sql.DataFrame,
-                   batch: org.apache.spark.sql.DataFrame, skB: Array[Byte]) = {
-        val exact = art.filter(col("df") >= 2)
-        val tailK = art.filter(col("df") === 1)
-        val probed0 = batch
-          .join(exact.select(col("h1"), col("h2"), col("df").as("df_exact")),
-            Seq("h1", "h2"), "left")
-          .join(tailK.select(col("h1"), col("h2"), lit(1L).as("df_tail")),
-            Seq("h1", "h2"), "left")
-          .withColumn("est", when(col("df_exact").isNull,
-              call_function("graft_cms_estimate", lit(skB),
-                concat_ws(":", col("h1"), col("h2"))))
-            .otherwise(lit(0L)))
-        // retainCheckpoint (x55's rule): these frames live in x58's artifact
-        // across constructions, so their blocks must survive the
-        // per-query releaseAllBlocks sweep
-        val probed = graft.Housekeeping.retainCheckpoint(s)(probed0)
-        val estFlag = when(col("est") >= 1, 1L).otherwise(0L)
-        val updated = exact.join(batch, Seq("h1", "h2"), "left")
-          .select(col("h1"), col("h2"),
-            (col("df") + coalesce(col("b"), lit(0L))).cast(LongType).as("df"))
-        val crossings = probed
-          .filter(col("df_exact").isNull && estFlag + col("b") >= 2)
-          .select(col("h1"), col("h2"), (estFlag + col("b")).cast(LongType).as("df"))
-        val newTail = probed
-          .filter(col("df_exact").isNull && col("b") === 1 && col("est") < 1)
-        val tailKept = tailK
-          .join(crossings.select("h1", "h2"), Seq("h1", "h2"), "left_anti")
-        val newArt = updated.unionByName(crossings)
-          .unionByName(tailKept.select(col("h1"), col("h2"),
-            lit(1L).cast(LongType).as("df")))
-          .unionByName(newTail.select(col("h1"), col("h2"),
-            lit(1L).cast(LongType).as("df")))
-        (newArt, probed)
-      }
       val day0 = docs.filter(col("doc_id") % 10 =!= 0 && col("doc_id") % 10 =!= 5)
-      val b1 = batchOf(docs.filter(col("doc_id") % 10 === 5))
-      val b2 = batchOf(docs.filter(col("doc_id") % 10 === 0))
+      val b1 = tailCounts(docs.filter(col("doc_id") % 10 === 5), "b")
+      val b2 = tailCounts(docs.filter(col("doc_id") % 10 === 0), "b")
       // the takedown targets docs PRESENT at request time (day 0 ∪ day 1)
       val removedDocs = docs.filter(col("doc_id") % 9 === 0
         && col("doc_id") % 10 =!= 0)
-      def subtracted(art: org.apache.spark.sql.DataFrame) = {
-        val rem = segsOf(removedDocs).groupBy("h1", "h2").agg(count(lit(1)).as("r"))
-        art.join(rem, Seq("h1", "h2"), "left")
-          .select(col("h1"), col("h2"),
-            (col("df") - coalesce(col("r"), lit(0L))).cast(LongType).as("df"))
-          .filter(col("df") >= 1)
-      }
       val st = Artifacts.getOrBuild(s, d, "x58_tail_interleaved") {
-        val art0 = stored("d0", cntOf(day0))
-        val sk0 = sketchBytes(art0.filter(col("df") === 1))
-        val (newArt1, probed1) = mergeDay(art0, b1, sk0)
-        val art1 = stored("d1", newArt1)
+        val art0 = tailStored(s, d, "tailint_d0", tailCounts(day0))
+        val sk0 = tailSketch(art0.filter(col("df") === 1))
+        val (newArt1, probed1) = tailMergeDay(s, art0, b1, sk0)
+        val art1 = tailStored(s, d, "tailint_d1", newArt1)
         // ---- the governance request between the merge days ----
-        val art1t = stored("td", subtracted(art1))
+        val art1t = tailStored(s, d, "tailint_td", tailSubtract(art1, removedDocs))
         // CMS cannot subtract: rebuild the sketch from the STORED
         // tail′ keys — zero residue by construction, never the corpus
-        val sk1t = sketchBytes(art1t.filter(col("df") === 1))
-        val scratchT = sketchBytes(
-          cntOf(docs.filter(col("doc_id") % 10 =!= 0
+        val sk1t = tailSketch(art1t.filter(col("df") === 1))
+        val scratchT = tailSketch(
+          tailCounts(docs.filter(col("doc_id") % 10 =!= 0
               && col("doc_id") % 9 =!= 0))
             .filter(col("df") === 1))
         val resketch = java.util.Arrays.equals(sk1t, scratchT)
-        val (newArt2, probed2) = mergeDay(art1t, b2, sk1t)
-        val art2 = stored("d2", newArt2)
+        val (newArt2, probed2) = tailMergeDay(s, art1t, b2, sk1t)
+        val art2 = tailStored(s, d, "tailint_d2", newArt2)
         X58State(art1, art1t, art2, probed1, probed2, resketch)
       }
-      val estFlag = when(col("est") >= 1, 1L).otherwise(0L)
-      def dayCounts(p: org.apache.spark.sql.DataFrame, cName: String, nName: String) =
-        p.agg(
-          sum(when(col("df_exact").isNull && estFlag + col("b") >= 2, 1L)
-            .otherwise(0L)).as(cName),
-          sum(when(col("df_exact").isNull && col("b") === 1 && col("est") < 1, 1L)
-            .otherwise(0L)).as(nName))
       val trans = st.art1.select(col("h1"), col("h2"), col("df").as("df1"))
         .join(st.art1t.select(col("h1"), col("h2"), col("df").as("dft")),
           Seq("h1", "h2"), "left")
@@ -2507,18 +2410,10 @@ object PipelineQueries {
       val d2Contract = st.probed2.agg(
         (sum(when(col("df_exact").isNull && col("df_tail").isNotNull
           && col("est") < 1, 1L).otherwise(0L)) === 0L).as("no_false_negatives_d2"))
-      val finAgg = st.art2.agg(
-        sum(when(col("df") >= 2, 1L).otherwise(0L)).as("n_exact_final"),
-        pmod(sum(when(col("df") >= 2,
-          (col("h1") % M) * (col("h2") % M) % M * (col("df") % M) % M)
-          .otherwise(0L)), M).cast(LongType).as("exact_checksum"),
-        sum(when(col("df") === 1, 1L).otherwise(0L)).as("n_tail_final"),
-        pmod(sum(when(col("df") === 1, (col("h1") % M) * (col("h2") % M) % M)
-          .otherwise(0L)), M).cast(LongType).as("tail_checksum"))
-      finAgg
-        .crossJoin(broadcast(dayCounts(st.probed1, "n_crossings_d1", "n_new_tail_d1")))
+      tailSplitTotals(st.art2, "n_exact_final", "n_tail_final")
+        .crossJoin(broadcast(tailDayCounts(st.probed1, "n_crossings_d1", "n_new_tail_d1")))
         .crossJoin(broadcast(trans))
-        .crossJoin(broadcast(dayCounts(st.probed2, "n_crossings_d2", "n_new_tail_d2")))
+        .crossJoin(broadcast(tailDayCounts(st.probed2, "n_crossings_d2", "n_new_tail_d2")))
         .crossJoin(broadcast(d2Contract))
         .crossJoin(broadcast(
           removedDocs.agg(count(lit(1)).as("n_removed_docs"))))
@@ -2528,12 +2423,7 @@ object PipelineQueries {
           "n_demoted", "n_dropped", "n_crossings_d2", "n_new_tail_d2",
           "no_false_negatives_d2", "resketch_equals_scratch")
     },
-    s"""WITH ws AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
-       |seg0 AS (SELECT doc_id, w,
-       |    unnest(generate_series(0, (len(w) - 1) // 8)) AS c FROM ws),
-       |st AS (SELECT doc_id,
-       |    array_to_string(list_slice(w, c * 8 + 1, c * 8 + 8), ' ') AS t FROM seg0),
-       |hh AS (SELECT doc_id, ${h32Sql("t")} AS h1, ${h32bSql("t")} AS h2 FROM st),
+    s"""WITH ${tailSegsSql("st")},
        |c0 AS (SELECT h1, h2, COUNT(*) AS df FROM hh
        |  WHERE doc_id % 10 NOT IN (0, 5) GROUP BY 1, 2),
        |c01 AS (SELECT h1, h2, COUNT(*) AS df FROM hh
@@ -2542,41 +2432,37 @@ object PipelineQueries {
        |  WHERE doc_id % 10 <> 0 AND doc_id % 9 <> 0 GROUP BY 1, 2),
        |cf AS (SELECT h1, h2, COUNT(*) AS df FROM hh
        |  WHERE doc_id % 9 <> 0 OR doc_id % 10 = 0 GROUP BY 1, 2),
-       |x1 AS (SELECT
-       |    CAST(SUM(CASE WHEN c01.df >= 2 AND COALESCE(c0.df, 0) <= 1
-       |      THEN 1 ELSE 0 END) AS BIGINT) AS n_crossings_d1,
-       |    CAST(SUM(CASE WHEN c01.df = 1 AND c0.h1 IS NULL
-       |      THEN 1 ELSE 0 END) AS BIGINT) AS n_new_tail_d1
-       |  FROM c01 LEFT JOIN c0 ON c0.h1 = c01.h1 AND c0.h2 = c01.h2),
+       |${tailDayCountsSql("x1", "c01", "c0", "d1")},
        |tr AS (SELECT
        |    CAST(SUM(CASE WHEN c01.df >= 2 AND r01.df = 1 THEN 1 ELSE 0 END)
        |      AS BIGINT) AS n_demoted,
        |    CAST(SUM(CASE WHEN r01.h1 IS NULL THEN 1 ELSE 0 END) AS BIGINT)
        |      AS n_dropped
        |  FROM c01 LEFT JOIN r01 ON r01.h1 = c01.h1 AND r01.h2 = c01.h2),
-       |x2 AS (SELECT
-       |    CAST(SUM(CASE WHEN cf.df >= 2 AND COALESCE(r01.df, 0) <= 1
-       |      THEN 1 ELSE 0 END) AS BIGINT) AS n_crossings_d2,
-       |    CAST(SUM(CASE WHEN cf.df = 1 AND r01.h1 IS NULL
-       |      THEN 1 ELSE 0 END) AS BIGINT) AS n_new_tail_d2
-       |  FROM cf LEFT JOIN r01 ON r01.h1 = cf.h1 AND r01.h2 = cf.h2),
+       |${tailDayCountsSql("x2", "cf", "r01", "d2")},
        |nr AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_removed_docs FROM documents
        |  WHERE doc_id % 9 = 0 AND doc_id % 10 <> 0),
-       |fin AS (SELECT
-       |    CAST(SUM(CASE WHEN df >= 2 THEN 1 ELSE 0 END) AS BIGINT) AS n_exact_final,
-       |    CAST(SUM(CASE WHEN df >= 2 THEN (h1 % 2147483647) * (h2 % 2147483647)
-       |      % 2147483647 * (df % 2147483647) % 2147483647 ELSE 0 END)
-       |      % 2147483647 AS BIGINT) AS exact_checksum,
-       |    CAST(SUM(CASE WHEN df = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_tail_final,
-       |    CAST(SUM(CASE WHEN df = 1 THEN (h1 % 2147483647) * (h2 % 2147483647)
-       |      % 2147483647 ELSE 0 END) % 2147483647 AS BIGINT) AS tail_checksum
-       |  FROM cf)
+       |${tailSplitTotalsSql("fin", "n_exact_final", "n_tail_final", "cf")}
        |SELECT nr.n_removed_docs, fin.n_exact_final, fin.exact_checksum,
        |  fin.n_tail_final, fin.tail_checksum, x1.n_crossings_d1,
        |  x1.n_new_tail_d1, tr.n_demoted, tr.n_dropped, x2.n_crossings_d2,
        |  x2.n_new_tail_d2, TRUE AS no_false_negatives_d2,
        |  TRUE AS resketch_equals_scratch
        |FROM fin CROSS JOIN x1 CROSS JOIN tr CROSS JOIN x2 CROSS JOIN nr""".stripMargin)
+
+  /** Shared x59/y27 stage, the index-build half of mipsTopK: augment each
+    * vector with √(M² − ‖x‖²) for the corpus max norm M, then bucket it. */
+  private def mipsIndex(corpus: DataFrame, planes: Int) = {
+    val base = corpus.select(col("vec_id"), col("embedding"))
+      .withColumn("__nrm", Similarity.norm("embedding"))
+    val m = base.agg(max(col("__nrm")).as("__mnorm"))
+    base.crossJoin(broadcast(m))
+      .withColumn("__s", sqrt(greatest(col("__mnorm") * col("__mnorm")
+        - col("__nrm") * col("__nrm"), lit(0.0))).cast("float"))
+      .withColumn("caug", concat(col("embedding"), array(col("__s"))))
+      .withColumn("bucket", Similarity.hyperplaneBucket("caug", 65, planes))
+      .select(col("vec_id"), col("bucket"))
+  }
 
   private final case class X59State(
       srcRead: org.apache.spark.sql.DataFrame, hist: org.apache.spark.sql.DataFrame,
@@ -2661,32 +2547,6 @@ object PipelineQueries {
           .agg((-count(lit(1))).as("n"),
             (-sum(col("value").cast(DecimalType(18, 2)))).as("s_dec"))
           .withColumn("request_id", lit(ticket))
-      def augIndex(corpus: org.apache.spark.sql.DataFrame) = {
-        val base = corpus.select(col("vec_id"), col("embedding"))
-          .withColumn("__nrm", Similarity.norm("embedding"))
-        val m = base.agg(max(col("__nrm")).as("__mnorm"))
-        base.crossJoin(broadcast(m))
-          .withColumn("__s", sqrt(greatest(col("__mnorm") * col("__mnorm")
-            - col("__nrm") * col("__nrm"), lit(0.0))).cast("float"))
-          .withColumn("caug", concat(col("embedding"), array(col("__s"))))
-          .withColumn("bucket", Similarity.hyperplaneBucket("caug", 65, planes))
-          .select(col("vec_id"), col("bucket"))
-      }
-      def segsOf(f: org.apache.spark.sql.DataFrame) =
-        TextAnalysis.chunkWords(f, "doc_id", "text", 8)
-          .select(col("doc_id"),
-            TextAnalysis.hash32(col("chunk_text")).as("h1"),
-            TextAnalysis.hash32b(col("chunk_text")).as("h2"))
-      def cntOf(f: org.apache.spark.sql.DataFrame) =
-        segsOf(f).groupBy("h1", "h2").agg(count(lit(1)).as("df"))
-      def subtracted(art: org.apache.spark.sql.DataFrame) = {
-        val rem = segsOf(docs.filter(docPred))
-          .groupBy("h1", "h2").agg(count(lit(1)).as("r"))
-        art.join(rem, Seq("h1", "h2"), "left")
-          .select(col("h1"), col("h2"),
-            (col("df") - coalesce(col("r"), lit(0L))).cast(LongType).as("df"))
-          .filter(col("df") >= 1)
-      }
       // shared manifest aggregate definitions — A, B, and the oracle use
       // the SAME formulas, so the diff compares like with like
       def mrow(name: String, coord: Long, aggd: org.apache.spark.sql.DataFrame) =
@@ -2732,8 +2592,8 @@ object PipelineQueries {
           stt.update(partial(delta, s"pull_v$v"),
             Seq("request_id", "event_type"))
         }
-        g1.appendVersioned(augIndex(e))
-        a0s.append(cntOf(docs).withColumn("part", pmod(col("h1"), lit(8))))
+        g1.appendVersioned(mipsIndex(e, planes))
+        a0s.append(tailCounts(docs).withColumn("part", pmod(col("h1"), lit(8))))
         val art0 = a0s.read.drop("part")
         // manifest A PUBLISHED before the ticket (durable barrier: its
         // source/history aggregates read files the purge destroys)
@@ -2756,9 +2616,9 @@ object PipelineQueries {
             tmb.update(e.filter(tombPred).select("vec_id")
               .withColumn("part", pmod(col("vec_id"), lit(4))), Seq("vec_id"))
             if (!g2.exists)                   // guarded: one rebuild
-              g2.appendVersioned(augIndex(e.filter(!tombPred)))
+              g2.appendVersioned(mipsIndex(e.filter(!tombPred), planes))
             ats.destroy()                     // overwrite-idempotent
-            ats.append(subtracted(art0)
+            ats.append(tailSubtract(art0, docs.filter(docPred))
               .withColumn("part", pmod(col("h1"), lit(8))))
             ptr.update(s.range(1).select(lit(2L).as("serving_gen"),
               lit(0).as("part")), Seq("serving_gen"))
@@ -2892,12 +2752,7 @@ object PipelineQueries {
        |  FROM caug),
        |crbk AS (SELECT vec_id, CAST(${bucketSqlFor(65, 4)} AS BIGINT) AS bucket
        |  FROM car),
-       |ws AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
-       |seg0 AS (SELECT doc_id, w,
-       |    unnest(generate_series(0, (len(w) - 1) // 8)) AS c FROM ws),
-       |stg AS (SELECT doc_id,
-       |    array_to_string(list_slice(w, c * 8 + 1, c * 8 + 8), ' ') AS t FROM seg0),
-       |hh AS (SELECT doc_id, ${h32Sql("t")} AS h1, ${h32bSql("t")} AS h2 FROM stg),
+       |${tailSegsSql("stg")},
        |ca0 AS (SELECT h1, h2, COUNT(*) AS df FROM hh GROUP BY 1, 2),
        |rt AS (SELECT h1, h2, COUNT(*) AS df FROM hh
        |  WHERE doc_id % 6 <> 0 GROUP BY 1, 2),
@@ -3527,15 +3382,8 @@ object PipelineQueries {
   private val x51InventoryTailPolicy = Q(
     (s, d) => {
       import org.apache.spark.sql.types.LongType
-      val k = 8
       val docs = Tables.documents(s, d)
-      def segsOf(df: org.apache.spark.sql.DataFrame) =
-        TextAnalysis.chunkWords(df, "doc_id", "text", k)
-          .select(col("doc_id"),
-            TextAnalysis.hash32(col("chunk_text")).as("h1"),
-            TextAnalysis.hash32b(col("chunk_text")).as("h2"))
-      val baseCnt0 = segsOf(docs.filter(col("doc_id") % 10 =!= 0))
-        .groupBy("h1", "h2").agg(count(lit(1)).as("df"))
+      val baseCnt0 = tailCounts(docs.filter(col("doc_id") % 10 =!= 0))
       // three consumers (exact part, tail → sketch collect, tail → probe
       // attach) — pin so the corpus pays one segment pass
       val baseCnt = graft.Housekeeping.pin(s)(baseCnt0).df
@@ -3547,22 +3395,14 @@ object PipelineQueries {
       // by reference — never attached as a per-row column of the batch
       val sk = tail
         .withColumn("key", concat_ws(":", col("h1"), col("h2")))
-        .agg(expr("count_min_sketch(key, CAST(0.0001 AS DOUBLE), " +
-            "CAST(0.99 AS DOUBLE), 42)").as("sk"),
-          count(lit(1)).as("n_tail_rows"))
+        .agg(expr(cmsAggSql("0.0001")).as("sk"), count(lit(1)).as("n_tail_rows"))
       val (skBytes, nTailRows): (Array[Byte], Long) = {
         val r = sk.head()
-        val b = Option(r.getAs[Array[Byte]]("sk")).getOrElse {
-          val bos = new java.io.ByteArrayOutputStream()
-          org.apache.spark.util.sketch.CountMinSketch
-            .create(0.0001, 0.99, 42).writeTo(bos)
-          bos.toByteArray
-        }
-        (b, r.getAs[Long]("n_tail_rows"))
+        (Option(r.getAs[Array[Byte]]("sk")).getOrElse(emptyCms("0.0001")),
+          r.getAs[Long]("n_tail_rows"))
       }
       val nExact = exactPart.agg(count(lit(1)).as("n_exact_rows"))
-      val batchCnt = segsOf(docs.filter(col("doc_id") % 10 === 0))
-        .groupBy("h1", "h2").agg(count(lit(1)).as("b"))
+      val batchCnt = tailCounts(docs.filter(col("doc_id") % 10 === 0), "b")
       val probed = batchCnt
         .join(exactPart.select(col("h1"), col("h2"), col("df").as("df_exact")),
           Seq("h1", "h2"), "left")
@@ -3600,12 +3440,7 @@ object PipelineQueries {
           col("crossings_from_tail"), col("crossings_fresh"), col("n_miss_probes"),
           col("no_false_negatives"), col("fp_within_bound"))
     },
-    s"""WITH ws AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
-       |seg0 AS (SELECT doc_id, w,
-       |    unnest(generate_series(0, (len(w) - 1) // 8)) AS c FROM ws),
-       |st AS (SELECT doc_id,
-       |    array_to_string(list_slice(w, c * 8 + 1, c * 8 + 8), ' ') AS t FROM seg0),
-       |hh AS (SELECT doc_id, ${h32Sql("t")} AS h1, ${h32bSql("t")} AS h2 FROM st),
+    s"""WITH ${tailSegsSql("st")},
        |cb AS (SELECT h1, h2, COUNT(*) AS df FROM hh WHERE doc_id % 10 <> 0 GROUP BY 1, 2),
        |ex AS (SELECT h1, h2, df FROM cb WHERE df >= 2),
        |tl AS (SELECT h1, h2 FROM cb WHERE df = 1),
@@ -3726,8 +3561,7 @@ object PipelineQueries {
     * rounding discipline. */
   private val z35Containment = Q(
     (s, d) => {
-      val pairs = Dedup.shingleJaccardPairs(shingles(Tables.documents(s, d)), "doc_id", "lang",
-        maxDocFreq = Some(X4MaxDocFreq))
+      val pairs = cappedShinglePairs(Tables.documents(s, d))
       pairs
         .withColumn("cont_ab", col("n_inter").cast("double") / col("n_a"))
         .withColumn("cont_ba", col("n_inter").cast("double") / col("n_b"))
@@ -3740,13 +3574,7 @@ object PipelineQueries {
         .limit(100)
     },
     s"""WITH $shingleCte,
-       |df AS (SELECT s, count(*) AS df FROM sh GROUP BY 1),
-       |kept AS (SELECT sh.doc_id, sh.lang, sh.s FROM sh JOIN df USING (s) WHERE df <= $X4MaxDocFreq),
-       |sizes AS (SELECT doc_id, count(*) AS n_sh FROM kept GROUP BY 1),
-       |inter AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS n_inter
-       |  FROM kept a JOIN kept b
-       |    ON a.lang = b.lang AND a.s = b.s AND a.doc_id < b.doc_id
-       |  GROUP BY 1, 2),
+       |$cappedShingleInterSql,
        |scored AS (
        |  SELECT doc_a, doc_b, n_inter,
        |    CAST(n_inter AS DOUBLE) / sa.n_sh AS cont_ab,
@@ -3935,6 +3763,68 @@ object PipelineQueries {
        |JOIN sz ON sz.cluster_id = l.cluster_id
        |ORDER BY l.doc_id""".stripMargin)
 
+  /** Shared x30/x39/x40 stage: the arriving 10% (doc_id % 10 = 0)
+    * resolved against the base labels `labels0` — new↔base and new↔new
+    * LSH pairs, then touched-only label propagation. */
+  private def resolveArrivals(s: SparkSession, d: String, labels0: DataFrame) = {
+    val sig = minhashSig(s, d)
+    val exist = sig.filter(col("doc_id") % 10 =!= 0)
+    val batch = sig.filter(col("doc_id") % 10 === 0)
+    val newPairs = Dedup.lshCandidatesAgainst(batch, exist, "doc_id", 8)
+      .select(col("doc_new").as("doc_a"), col("doc_base").as("doc_b"))
+      .union(Dedup.lshCandidates(batch, "doc_id", 8))
+    Dedup.incrementalComponents(labels0,
+      Tables.documents(s, d).filter(col("doc_id") % 10 === 0).select("doc_id"),
+      newPairs, "doc_id")
+  }
+
+  /** Shared x39/x40 stage: each cluster's base-doc and total sizes. */
+  private def arrivalClusters(labels: DataFrame) =
+    labels.groupBy("cluster_id").agg(
+      sum(when(col("doc_id") % 10 =!= 0, 1L).otherwise(0L)).as("n_base"),
+      count(lit(1)).as("n_all"))
+
+  /** Shared x39/x40 verdict over arrivalClusters' columns. */
+  private def arrivalOutcome: Column =
+    when(col("n_base") > 0, "joined_existing")
+      .when(col("n_all") >= 2, "new_cluster").otherwise("singleton")
+
+  /** Oracle side of the full-corpus LSH CC: CTEs `bands`, `pairs`, `edges`,
+    * the recursive `reach` and `comp` (node, cid). */
+  private def lshCompSql: String =
+    s"""bands AS ($bandsSql),
+       |pairs AS (
+       |  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
+       |  FROM bands a JOIN bands b
+       |    ON a.band = b.band AND a.key = b.key AND a.doc_id < b.doc_id),
+       |edges AS (SELECT doc_a AS src, doc_b AS dst FROM pairs
+       |          UNION ALL SELECT doc_b, doc_a FROM pairs),
+       |reach(node, r) AS (
+       |  SELECT src, src FROM edges
+       |  UNION
+       |  SELECT e.dst, reach.r FROM edges e JOIN reach ON e.src = reach.node),
+       |comp AS (SELECT node, min(r) AS cid FROM reach GROUP BY 1)""".stripMargin
+
+  /** Oracle side of arrivalClusters: `lbl` (doc_id, source, cluster_id)
+    * off `comp`, then `cl`. */
+  private def arrivalClustersSql: String =
+    """lbl AS (SELECT d.doc_id, d.source,
+      |    COALESCE(comp.cid, d.doc_id) AS cluster_id
+      |  FROM documents d LEFT JOIN comp ON d.doc_id = comp.node),
+      |cl AS (SELECT cluster_id,
+      |    CAST(SUM(CASE WHEN doc_id % 10 <> 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_base,
+      |    COUNT(*) AS n_all
+      |  FROM lbl GROUP BY 1)""".stripMargin
+
+  /** Oracle side of arrivalOutcome: CTE `cte` of (`key`, outcome) per arrival. */
+  private def arrivalOutcomeSql(cte: String, key: String): String =
+    s"""$cte AS (SELECT l.$key,
+       |    CASE WHEN c.n_base > 0 THEN 'joined_existing'
+       |         WHEN c.n_all >= 2 THEN 'new_cluster'
+       |         ELSE 'singleton' END AS outcome
+       |  FROM lbl l JOIN cl c ON c.cluster_id = l.cluster_id
+       |  WHERE l.doc_id % 10 = 0)""".stripMargin
+
   /** x30: incremental cluster maintenance — the missing lifecycle step
     * between x10 (incremental candidates) and x8 (batch clustering): an
     * ingest batch's pairs are merged into the EXISTING labels via
@@ -3948,35 +3838,11 @@ object PipelineQueries {
     * diverge — the cap belongs to the candidate generator (x2), not to
     * this equality gate. */
   private val x30IncrementalCc = Q(
-    (s, d) => {
-      val docs = Tables.documents(s, d)
-      val sig = minhashSig(s, d)
-      val exist = sig.filter(col("doc_id") % 10 =!= 0)
-      val batch = sig.filter(col("doc_id") % 10 === 0)
-      val labels0 = Dedup.connectedComponents(
-        Dedup.lshCandidates(exist, "doc_id", 8),
-        docs.filter(col("doc_id") % 10 =!= 0), "doc_id")
-      val newPairs = Dedup.lshCandidatesAgainst(batch, exist, "doc_id", 8)
-        .select(col("doc_new").as("doc_a"), col("doc_base").as("doc_b"))
-        .union(Dedup.lshCandidates(batch, "doc_id", 8))
-      Dedup.incrementalComponents(labels0,
-          docs.filter(col("doc_id") % 10 === 0).select("doc_id"), newPairs, "doc_id")
+    (s, d) => resolveArrivals(s, d, baseMapFit(s, d))
         .withColumn("is_survivor", col("doc_id") === col("cluster_id"))
-        .orderBy("doc_id")
-    },
+        .orderBy("doc_id"),
     s"""WITH RECURSIVE $minhashCtes,
-       |bands AS ($bandsSql),
-       |pairs AS (
-       |  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-       |  FROM bands a JOIN bands b
-       |    ON a.band = b.band AND a.key = b.key AND a.doc_id < b.doc_id),
-       |edges AS (SELECT doc_a AS src, doc_b AS dst FROM pairs
-       |          UNION ALL SELECT doc_b, doc_a FROM pairs),
-       |reach(node, r) AS (
-       |  SELECT src, src FROM edges
-       |  UNION
-       |  SELECT e.dst, reach.r FROM edges e JOIN reach ON e.src = reach.node),
-       |comp AS (SELECT node, min(r) AS cid FROM reach GROUP BY 1)
+       |$lshCompSql
        |SELECT d.doc_id,
        |  COALESCE(comp.cid, d.doc_id) AS cluster_id,
        |  COALESCE(comp.cid, d.doc_id) = d.doc_id AS is_survivor
@@ -4031,53 +3897,19 @@ object PipelineQueries {
   private val x39ArrivalResolution = Q(
     (s, d) => {
       val docs = Tables.documents(s, d)
-      val sig = minhashSig(s, d)
-      val exist = sig.filter(col("doc_id") % 10 =!= 0)
-      val batch = sig.filter(col("doc_id") % 10 === 0)
-      val labels0 = baseMapStored(s, d)
-      val newPairs = Dedup.lshCandidatesAgainst(batch, exist, "doc_id", 8)
-        .select(col("doc_new").as("doc_a"), col("doc_base").as("doc_b"))
-        .union(Dedup.lshCandidates(batch, "doc_id", 8))
-      val labels = Dedup.incrementalComponents(labels0,
-        docs.filter(col("doc_id") % 10 === 0).select("doc_id"), newPairs, "doc_id")
-      val cl = labels.groupBy("cluster_id").agg(
-        sum(when(col("doc_id") % 10 =!= 0, 1L).otherwise(0L)).as("n_base"),
-        count(lit(1)).as("n_all"))
+      val labels = resolveArrivals(s, d, baseMapStored(s, d))
       labels.filter(col("doc_id") % 10 === 0)
         .join(docs.select("doc_id", "source"), Seq("doc_id"))
-        .join(cl, Seq("cluster_id"))
-        .withColumn("outcome", when(col("n_base") > 0, "joined_existing")
-          .when(col("n_all") >= 2, "new_cluster").otherwise("singleton"))
+        .join(arrivalClusters(labels), Seq("cluster_id"))
+        .withColumn("outcome", arrivalOutcome)
         .groupBy("source", "outcome")
         .agg(count(lit(1)).as("n_docs"))
         .orderBy("source", "outcome")
     },
     s"""WITH RECURSIVE $minhashCtes,
-       |bands AS ($bandsSql),
-       |pairs AS (
-       |  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-       |  FROM bands a JOIN bands b
-       |    ON a.band = b.band AND a.key = b.key AND a.doc_id < b.doc_id),
-       |edges AS (SELECT doc_a AS src, doc_b AS dst FROM pairs
-       |          UNION ALL SELECT doc_b, doc_a FROM pairs),
-       |reach(node, r) AS (
-       |  SELECT src, src FROM edges
-       |  UNION
-       |  SELECT e.dst, reach.r FROM edges e JOIN reach ON e.src = reach.node),
-       |comp AS (SELECT node, min(r) AS cid FROM reach GROUP BY 1),
-       |lbl AS (SELECT d.doc_id, d.source,
-       |    COALESCE(comp.cid, d.doc_id) AS cluster_id
-       |  FROM documents d LEFT JOIN comp ON d.doc_id = comp.node),
-       |cl AS (SELECT cluster_id,
-       |    CAST(SUM(CASE WHEN doc_id % 10 <> 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_base,
-       |    COUNT(*) AS n_all
-       |  FROM lbl GROUP BY 1),
-       |arr AS (SELECT l.source,
-       |    CASE WHEN c.n_base > 0 THEN 'joined_existing'
-       |         WHEN c.n_all >= 2 THEN 'new_cluster'
-       |         ELSE 'singleton' END AS outcome
-       |  FROM lbl l JOIN cl c ON c.cluster_id = l.cluster_id
-       |  WHERE l.doc_id % 10 = 0)
+       |$lshCompSql,
+       |$arrivalClustersSql,
+       |${arrivalOutcomeSql("arr", "source")}
        |SELECT source, outcome, COUNT(*) AS n_docs
        |FROM arr GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin)
 
@@ -4175,24 +4007,10 @@ object PipelineQueries {
       val docs = Tables.documents(s, d)
       val batch = docs.filter(col("doc_id") % 10 === 0)
       // 1. dedup resolution against the stored canonical map
-      val sig = minhashSig(s, d)
-      val labels0 = baseMapStored(s, d)
-      val newPairs = Dedup.lshCandidatesAgainst(
-          sig.filter(col("doc_id") % 10 === 0),
-          sig.filter(col("doc_id") % 10 =!= 0), "doc_id", 8)
-        .select(col("doc_new").as("doc_a"), col("doc_base").as("doc_b"))
-        .union(Dedup.lshCandidates(sig.filter(col("doc_id") % 10 === 0), "doc_id", 8))
-      val labels = Dedup.incrementalComponents(labels0,
-        batch.select("doc_id"), newPairs, "doc_id")
-      val cl = labels.groupBy("cluster_id").agg(
-        sum(when(col("doc_id") % 10 =!= 0, 1L).otherwise(0L)).as("n_base"),
-        count(lit(1)).as("n_all"))
+      val labels = resolveArrivals(s, d, baseMapStored(s, d))
       val outcome = labels.filter(col("doc_id") % 10 === 0)
-        .join(cl, Seq("cluster_id"))
-        .select(col("doc_id"),
-          when(col("n_base") > 0, "joined_existing")
-            .when(col("n_all") >= 2, "new_cluster")
-            .otherwise("singleton").as("outcome"))
+        .join(arrivalClusters(labels), Seq("cluster_id"))
+        .select(col("doc_id"), arrivalOutcome.as("outcome"))
       // 2. LM gate off the stored base model
       val knM = x40LmStored(s, d)
       val lmBand = Relational.groupedNtile(
@@ -4266,48 +4084,14 @@ object PipelineQueries {
         .orderBy("source")
     },
     s"""WITH RECURSIVE $minhashCtes,
-       |bands AS ($bandsSql),
-       |pairs AS (
-       |  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-       |  FROM bands a JOIN bands b
-       |    ON a.band = b.band AND a.key = b.key AND a.doc_id < b.doc_id),
-       |edges AS (SELECT doc_a AS src, doc_b AS dst FROM pairs
-       |          UNION ALL SELECT doc_b, doc_a FROM pairs),
-       |reach(node, r) AS (
-       |  SELECT src, src FROM edges
-       |  UNION
-       |  SELECT e.dst, reach.r FROM edges e JOIN reach ON e.src = reach.node),
-       |comp AS (SELECT node, min(r) AS cid FROM reach GROUP BY 1),
-       |lbl AS (SELECT d.doc_id, d.source,
-       |    COALESCE(comp.cid, d.doc_id) AS cluster_id
-       |  FROM documents d LEFT JOIN comp ON d.doc_id = comp.node),
-       |cl AS (SELECT cluster_id,
-       |    CAST(SUM(CASE WHEN doc_id % 10 <> 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_base,
-       |    COUNT(*) AS n_all
-       |  FROM lbl GROUP BY 1),
-       |outc AS (SELECT l.doc_id,
-       |    CASE WHEN c.n_base > 0 THEN 'joined_existing'
-       |         WHEN c.n_all >= 2 THEN 'new_cluster'
-       |         ELSE 'singleton' END AS outcome
-       |  FROM lbl l JOIN cl c ON c.cluster_id = l.cluster_id
-       |  WHERE l.doc_id % 10 = 0),
+       |$lshCompSql,
+       |$arrivalClustersSql,
+       |${arrivalOutcomeSql("outc", "doc_id")},
        |${knHeldoutCtes("doc_id % 10 <> 0", "doc_id % 10 = 0")},
        |kb AS (SELECT k.doc_id, NTILE(3) OVER (
        |      PARTITION BY dd.lang ORDER BY k.avg_kn_logprob, k.doc_id) AS band
        |  FROM kout k JOIN documents dd ON dd.doc_id = k.doc_id),
-       |feats AS (
-       |  SELECT doc_id, lang,
-       |    ln(1.0 + n_chars) AS x1,
-       |    CAST(length(text) - length(replace(text, ' ', '')) AS DOUBLE) / n_chars AS x2,
-       |    CAST(source IN ('src0', 'src3', 'src6', 'src9') AS DOUBLE) AS y
-       |  FROM documents),
-       |tf AS (SELECT lang, x1, x2, y FROM feats WHERE doc_id % 10 <> 0),
-       |${IrlsSql.ctes("tf", "lang", 4)},
-       |model AS (SELECT lang,
-       |    CAST(CAST(b0 AS DECIMAL(12,4)) AS DOUBLE) AS b0s,
-       |    CAST(CAST(b1 AS DECIMAL(12,4)) AS DOUBLE) AS b1s,
-       |    CAST(CAST(b2 AS DECIMAL(12,4)) AS DOUBLE) AS b2s
-       |  FROM b4it),
+       |${clsModelSql("doc_id % 10 <> 0")},
        |ce AS (SELECT f.doc_id, f.lang,
        |    m.b0s + m.b1s * f.x1 + m.b2s * f.x2 AS eta
        |  FROM feats f JOIN model m ON f.lang = m.lang
@@ -4516,21 +4300,19 @@ object PipelineQueries {
          |WHERE rank <= 5 ORDER BY q_id, rank""".stripMargin)
   }
 
-  /** y2b: multi-probe bucketed ANN — the query searches its own bucket
-    * PLUS the 8 buckets at Hamming distance 1 in signature space. Recall
-    * lost to near-boundary queries in y2 comes back without adding planes
-    * (which would split true neighbors apart); the probe union is the
-    * same bucket equi-join with the broadcast query side exploded 9-way.
-    * Oracle: the probed bucket set expressed directly as a Hamming
+  /** Shared y2b/y2c stage: Hamming-1 multi-probe bucketed top-5 of the
+    * `vec_id % 50 = 0` batch at `planes` hyperplanes. */
+  private def multiprobeKnn(e: DataFrame, planes: Int) =
+    Similarity.bucketedTopK(e, id => id % 50 === 0, "vec_id", "embedding",
+        k = 5, probeRadius = 1, planes = planes)
+      .orderBy("q_id", "rank")
+
+  /** Oracle side of multiprobeKnn: the probed bucket set as a Hamming
     * predicate on the signatures. */
-  private val y2bKnnMultiprobe = Q(
-    (s, d) => Similarity.bucketedTopK(
-        Tables.embeddings(s, d), id => id % 50 === 0, "vec_id", "embedding",
-        k = 5, probeRadius = 1)
-      .orderBy("q_id", "rank"),
+  private def multiprobeKnnSql(planes: Int): String =
     s"""WITH v AS (SELECT vec_id, ${vdSql("embedding")} AS vd FROM embeddings),
        |n AS (SELECT vec_id, vd, ${nrmSql("vd")} AS nrm,
-       |    CAST($bucketSql AS BIGINT) AS bucket FROM v),
+       |    CAST(${bucketSqlFor(64, planes)} AS BIGINT) AS bucket FROM v),
        |scored AS (
        |  SELECT q.vec_id AS q_id, q.bucket, c.vec_id AS c_id,
        |    ROUND(${dotSql("q.vd", "c.vd")} / (q.nrm * c.nrm), 6) AS cosine
@@ -4541,7 +4323,18 @@ object PipelineQueries {
        |  SELECT q_id, bucket, c_id, cosine,
        |    CAST(ROW_NUMBER() OVER (PARTITION BY q_id ORDER BY cosine DESC, c_id) AS INT) AS rank
        |  FROM scored) r
-       |WHERE rank <= 5 ORDER BY q_id, rank""".stripMargin)
+       |WHERE rank <= 5 ORDER BY q_id, rank""".stripMargin
+
+  /** y2b: multi-probe bucketed ANN — the query searches its own bucket
+    * PLUS the 8 buckets at Hamming distance 1 in signature space. Recall
+    * lost to near-boundary queries in y2 comes back without adding planes
+    * (which would split true neighbors apart); the probe union is the
+    * same bucket equi-join with the broadcast query side exploded 9-way.
+    * Oracle: the probed bucket set expressed directly as a Hamming
+    * predicate on the signatures. */
+  private val y2bKnnMultiprobe = Q(
+    (s, d) => multiprobeKnn(Tables.embeddings(s, d), Similarity.NumPlanes),
+    multiprobeKnnSql(Similarity.NumPlanes))
 
   /** y2c: y2 at SIXTEEN hyperplanes — the declared proof that the coarse
     * quantizer's scale knob actually turns. The plane count is a literal
@@ -4554,24 +4347,8 @@ object PipelineQueries {
     * at 2^16 buckets over a correctness-SF corpus most own-buckets are
     * singletons. */
   private val y2cKnnBucketed16 = Q(
-    (s, d) => Similarity.bucketedTopK(
-        Tables.embeddings(s, d), id => id % 50 === 0, "vec_id", "embedding",
-        k = 5, probeRadius = 1, planes = 16)
-      .orderBy("q_id", "rank"),
-    s"""WITH v AS (SELECT vec_id, ${vdSql("embedding")} AS vd FROM embeddings),
-       |n AS (SELECT vec_id, vd, ${nrmSql("vd")} AS nrm,
-       |    CAST(${bucketSqlFor(64, 16)} AS BIGINT) AS bucket FROM v),
-       |scored AS (
-       |  SELECT q.vec_id AS q_id, q.bucket, c.vec_id AS c_id,
-       |    ROUND(${dotSql("q.vd", "c.vd")} / (q.nrm * c.nrm), 6) AS cosine
-       |  FROM n q JOIN n c
-       |    ON bit_count(xor(q.bucket, c.bucket)) <= 1 AND q.vec_id <> c.vec_id
-       |  WHERE q.vec_id % 50 = 0)
-       |SELECT q_id, bucket, rank, c_id, cosine FROM (
-       |  SELECT q_id, bucket, c_id, cosine,
-       |    CAST(ROW_NUMBER() OVER (PARTITION BY q_id ORDER BY cosine DESC, c_id) AS INT) AS rank
-       |  FROM scored) r
-       |WHERE rank <= 5 ORDER BY q_id, rank""".stripMargin)
+    (s, d) => multiprobeKnn(Tables.embeddings(s, d), 16),
+    multiprobeKnnSql(16))
 
   /** y14: FILTERED vector search — the production ANN feature every
     * vector store ships (search WHERE metadata predicate) and the classic
@@ -5287,21 +5064,21 @@ object PipelineQueries {
       |SELECT label, n_vecs, sqrt(CAST(ss AS DOUBLE)) AS centroid_norm
       |FROM s ORDER BY label""".stripMargin)
 
-  /** y3c: IVF with nprobe=3 — the standard recall knob: each query
-    * searches its three nearest cells, so neighbors just across a cell
-    * boundary come back. Same equi-join shape as y3; the query side
-    * carries 3 rows per query, the candidate side never duplicates. */
-  private val y3cKnnNprobe = Q(
-    (s, d) => {
-      val e = Tables.embeddings(s, d)
-      val anchors = e.filter(col("vec_id") < IvfCells)
-        .select(col("vec_id").as("anchor_id"), col("embedding").as("anchor_vec"))
-      Similarity.ivfTopK(e, anchors, id => id % 50 === 0, "vec_id", "embedding",
-          k = 5, nprobe = 3)
-        .orderBy("q_id", "rank")
-    },
+  /** Shared y3c/y3e stage: IVF top-5 serving of the `vec_id % 50 = 0`
+    * batch with the first `cells` vectors as anchors, probing the
+    * `nprobe` nearest cells. */
+  private def ivfKnn(e: DataFrame, cells: Int, nprobe: Int) = {
+    val anchors = e.filter(col("vec_id") < cells)
+      .select(col("vec_id").as("anchor_id"), col("embedding").as("anchor_vec"))
+    Similarity.ivfTopK(e, anchors, id => id % 50 === 0, "vec_id", "embedding",
+        k = 5, nprobe = nprobe)
+      .orderBy("q_id", "rank")
+  }
+
+  /** Oracle side of ivfKnn. */
+  private def ivfKnnSql(cells: Int, nprobe: Int): String =
     s"""WITH v AS (SELECT vec_id, ${vdSql("embedding")} AS vd FROM embeddings),
-       |anchors AS (SELECT vec_id AS anchor_id, vd AS avd FROM v WHERE vec_id < $IvfCells),
+       |anchors AS (SELECT vec_id AS anchor_id, vd AS avd FROM v WHERE vec_id < $cells),
        |dists AS (
        |  SELECT v.vec_id, v.vd, a.anchor_id,
        |    ROUND(${dotSql("v.vd", "v.vd")} - 2.0 * ${dotSql("v.vd", "a.avd")}
@@ -5314,7 +5091,7 @@ object PipelineQueries {
        |n AS (SELECT vec_id, vd, cell, ${nrmSql("vd")} AS nrm FROM assigned),
        |qprobe AS (
        |  SELECT vec_id, vd, anchor_id AS cell, ${nrmSql("vd")} AS nrm
-       |  FROM ranked WHERE rn <= 3 AND vec_id % 50 = 0),
+       |  FROM ranked WHERE rn <= $nprobe AND vec_id % 50 = 0),
        |scored AS (
        |  SELECT q.vec_id AS q_id, c.cell, c.vec_id AS c_id,
        |    ROUND(${dotSql("q.vd", "c.vd")} / (q.nrm * c.nrm), 6) AS cosine
@@ -5323,7 +5100,15 @@ object PipelineQueries {
        |  SELECT q_id, cell, c_id, cosine,
        |    CAST(ROW_NUMBER() OVER (PARTITION BY q_id ORDER BY cosine DESC, c_id) AS INT) AS rank
        |  FROM scored) r
-       |WHERE rank <= 5 ORDER BY q_id, rank""".stripMargin)
+       |WHERE rank <= 5 ORDER BY q_id, rank""".stripMargin
+
+  /** y3c: IVF with nprobe=3 — the standard recall knob: each query
+    * searches its three nearest cells, so neighbors just across a cell
+    * boundary come back. Same equi-join shape as y3; the query side
+    * carries 3 rows per query, the candidate side never duplicates. */
+  private val y3cKnnNprobe = Q(
+    (s, d) => ivfKnn(Tables.embeddings(s, d), IvfCells, nprobe = 3),
+    ivfKnnSql(IvfCells, nprobe = 3))
 
   /** y3e: the y3 serve plan at SIXTY-FOUR cells — the anchor-count twin
     * of y2c's plane proof: nothing in the IVF path is shaped around a
@@ -5333,38 +5118,8 @@ object PipelineQueries {
     * nprobe=2 keeps the tiny-SF output non-trivial (≈8 vectors per cell
     * at sf0.01). */
   private val y3eKnnIvf64 = Q(
-    (s, d) => {
-      val e = Tables.embeddings(s, d)
-      val anchors = e.filter(col("vec_id") < 64)
-        .select(col("vec_id").as("anchor_id"), col("embedding").as("anchor_vec"))
-      Similarity.ivfTopK(e, anchors, id => id % 50 === 0, "vec_id", "embedding",
-          k = 5, nprobe = 2)
-        .orderBy("q_id", "rank")
-    },
-    s"""WITH v AS (SELECT vec_id, ${vdSql("embedding")} AS vd FROM embeddings),
-       |anchors AS (SELECT vec_id AS anchor_id, vd AS avd FROM v WHERE vec_id < 64),
-       |dists AS (
-       |  SELECT v.vec_id, v.vd, a.anchor_id,
-       |    ROUND(${dotSql("v.vd", "v.vd")} - 2.0 * ${dotSql("v.vd", "a.avd")}
-       |      + ${dotSql("a.avd", "a.avd")}, 6) AS d2
-       |  FROM v CROSS JOIN anchors a),
-       |ranked AS (
-       |  SELECT *, ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY d2, anchor_id) AS rn
-       |  FROM dists),
-       |assigned AS (SELECT vec_id, vd, anchor_id AS cell FROM ranked WHERE rn = 1),
-       |n AS (SELECT vec_id, vd, cell, ${nrmSql("vd")} AS nrm FROM assigned),
-       |qprobe AS (
-       |  SELECT vec_id, vd, anchor_id AS cell, ${nrmSql("vd")} AS nrm
-       |  FROM ranked WHERE rn <= 2 AND vec_id % 50 = 0),
-       |scored AS (
-       |  SELECT q.vec_id AS q_id, c.cell, c.vec_id AS c_id,
-       |    ROUND(${dotSql("q.vd", "c.vd")} / (q.nrm * c.nrm), 6) AS cosine
-       |  FROM qprobe q JOIN n c ON q.cell = c.cell AND q.vec_id <> c.vec_id)
-       |SELECT q_id, cell, rank, c_id, cosine FROM (
-       |  SELECT q_id, cell, c_id, cosine,
-       |    CAST(ROW_NUMBER() OVER (PARTITION BY q_id ORDER BY cosine DESC, c_id) AS INT) AS rank
-       |  FROM scored) r
-       |WHERE rank <= 5 ORDER BY q_id, rank""".stripMargin)
+    (s, d) => ivfKnn(Tables.embeddings(s, d), 64, nprobe = 2),
+    ivfKnnSql(64, nprobe = 2))
 
   /** y3d: the full fit → store → serve IVF lifecycle as ONE declared
     * query — y3b trains, y3/y3c serve off SEEDED anchors; this is the
@@ -5588,6 +5343,39 @@ object PipelineQueries {
        |  COALESCE(arr_mean_d2 > base_mean_d2 * 1.5, FALSE) AS drift
        |FROM m ORDER BY cell""".stripMargin)
 
+  /** Shared y16/y17 stage: the stale index's anchors (the first
+    * [[IvfCells]] non-arrival vectors) and the two arrival exemplars the
+    * cheap refresh promotes; arrivals are label 7. */
+  private def refreshAnchors(e: DataFrame) = {
+    val a0 = e.filter(col("label") =!= 7).orderBy("vec_id").limit(IvfCells)
+      .select(col("vec_id").as("anchor_id"), col("embedding").as("anchor_vec"))
+    val ax = e.filter(col("label") === 7).orderBy("vec_id").limit(2)
+      .select(col("vec_id").as("anchor_id"), col("embedding").as("anchor_vec"))
+    (a0, ax)
+  }
+
+  /** Shared y16/y17 panel row for one index arm over `anchors`: cells in
+    * use, max cell share and DECIMAL-exact base/arrival mean distances. */
+  private def refreshArm(e: DataFrame, anchors: DataFrame, name: String) = {
+    import org.apache.spark.sql.types.{DecimalType, DoubleType}
+    val asg = Similarity.ivfAssign(e, anchors, "vec_id", "embedding",
+        extraCols = Seq("label"))
+      .withColumn("is_arr", col("label") === 7)
+    val d2 = col("cell_d2").cast(DecimalType(20, 6))
+    asg.groupBy("cell")
+      .agg(count(lit(1)).as("nc"),
+        sum(when(col("is_arr"), d2)).as("sa"),
+        sum(when(col("is_arr"), 1L).otherwise(0L)).as("na"),
+        sum(when(!col("is_arr"), d2)).as("sb"),
+        sum(when(!col("is_arr"), 1L).otherwise(0L)).as("nb"))
+      .agg(count(lit(1)).as("n_cells_used"),
+        (max(col("nc")).cast(DoubleType) / sum(col("nc"))).as("max_share"),
+        (sum(col("sb")).cast(DoubleType) / sum(col("nb"))).as("base_mean_d2"),
+        (sum(col("sa")).cast(DoubleType) / sum(col("na"))).as("arr_mean_d2"))
+      .select(lit(name).as("arm"), col("n_cells_used"), col("max_share"),
+        col("base_mean_d2"), col("arr_mean_d2"))
+  }
+
   /** y16: INDEX REFRESH — the action y15's drift verdict calls for, with
     * the payoff measured: arrivals here are a coherent new content family
     * (one embedding-space label cluster — a new data source coming online,
@@ -5609,31 +5397,10 @@ object PipelineQueries {
     * batch. */
   private val y16IndexRefresh = Q(
     (s, d) => {
-      import org.apache.spark.sql.types.{DecimalType, DoubleType}
       val e = Tables.embeddings(s, d)
-      val a0 = e.filter(col("label") =!= 7).orderBy("vec_id").limit(IvfCells)
-        .select(col("vec_id").as("anchor_id"), col("embedding").as("anchor_vec"))
-      val ax = e.filter(col("label") === 7).orderBy("vec_id").limit(2)
-        .select(col("vec_id").as("anchor_id"), col("embedding").as("anchor_vec"))
-      def arm(anchors: org.apache.spark.sql.DataFrame, name: String) = {
-        val asg = Similarity.ivfAssign(e, anchors, "vec_id", "embedding",
-            extraCols = Seq("label"))
-          .withColumn("is_arr", col("label") === 7)
-        val d2 = col("cell_d2").cast(DecimalType(20, 6))
-        asg.groupBy("cell")
-          .agg(count(lit(1)).as("nc"),
-            sum(when(col("is_arr"), d2)).as("sa"),
-            sum(when(col("is_arr"), 1L).otherwise(0L)).as("na"),
-            sum(when(!col("is_arr"), d2)).as("sb"),
-            sum(when(!col("is_arr"), 1L).otherwise(0L)).as("nb"))
-          .agg(count(lit(1)).as("n_cells_used"),
-            (max(col("nc")).cast(DoubleType) / sum(col("nc"))).as("max_share"),
-            (sum(col("sb")).cast(DoubleType) / sum(col("nb"))).as("base_mean_d2"),
-            (sum(col("sa")).cast(DoubleType) / sum(col("na"))).as("arr_mean_d2"))
-          .select(lit(name).as("arm"), col("n_cells_used"), col("max_share"),
-            col("base_mean_d2"), col("arr_mean_d2"))
-      }
-      arm(a0, "stale").unionByName(arm(a0.unionByName(ax), "refreshed"))
+      val (a0, ax) = refreshAnchors(e)
+      refreshArm(e, a0, "stale")
+        .unionByName(refreshArm(e, a0.unionByName(ax), "refreshed"))
         .orderBy("arm")
     },
     s"""WITH v AS (SELECT vec_id, label, ${vdSql("embedding")} AS vd FROM embeddings),
@@ -5717,38 +5484,16 @@ object PipelineQueries {
     * are the y3d store-write lifecycle run offline. */
   private val y17RefitPayoff = Q(
     (s, d) => {
-      import org.apache.spark.sql.types.{DecimalType, DoubleType}
       val e = Tables.embeddings(s, d)
-      val a0 = e.filter(col("label") =!= 7).orderBy("vec_id").limit(IvfCells)
-        .select(col("vec_id").as("anchor_id"), col("embedding").as("anchor_vec"))
-      val ax = e.filter(col("label") === 7).orderBy("vec_id").limit(2)
-        .select(col("vec_id").as("anchor_id"), col("embedding").as("anchor_vec"))
+      val (a0, ax) = refreshAnchors(e)
       var refit = a0
       for (_ <- 1 to 2)
         refit = Similarity.lloydRefineExact(
           Similarity.ivfAssign(e, refit, "vec_id", "embedding"),
           "embedding", refit)
-      def arm(anchors: org.apache.spark.sql.DataFrame, name: String) = {
-        val asg = Similarity.ivfAssign(e, anchors, "vec_id", "embedding",
-            extraCols = Seq("label"))
-          .withColumn("is_arr", col("label") === 7)
-        val d2 = col("cell_d2").cast(DecimalType(20, 6))
-        asg.groupBy("cell")
-          .agg(count(lit(1)).as("nc"),
-            sum(when(col("is_arr"), d2)).as("sa"),
-            sum(when(col("is_arr"), 1L).otherwise(0L)).as("na"),
-            sum(when(!col("is_arr"), d2)).as("sb"),
-            sum(when(!col("is_arr"), 1L).otherwise(0L)).as("nb"))
-          .agg(count(lit(1)).as("n_cells_used"),
-            (max(col("nc")).cast(DoubleType) / sum(col("nc"))).as("max_share"),
-            (sum(col("sb")).cast(DoubleType) / sum(col("nb"))).as("base_mean_d2"),
-            (sum(col("sa")).cast(DoubleType) / sum(col("na"))).as("arr_mean_d2"))
-          .select(lit(name).as("arm"), col("n_cells_used"), col("max_share"),
-            col("base_mean_d2"), col("arr_mean_d2"))
-      }
-      arm(a0, "stale")
-        .unionByName(arm(a0.unionByName(ax), "refreshed"))
-        .unionByName(arm(refit, "refit"))
+      refreshArm(e, a0, "stale")
+        .unionByName(refreshArm(e, a0.unionByName(ax), "refreshed"))
+        .unionByName(refreshArm(e, refit, "refit"))
         .orderBy("arm")
     },
     {
@@ -6180,6 +5925,30 @@ object PipelineQueries {
     "fr" -> Seq("scan", "filter", "sort"),
     "es" -> Seq("join", "group", "order"))
 
+  /** Shared z33/z1/z34 stage: the marker scores of `text`, space-padded
+    * so every marker matches as a whole word. */
+  private def langScores(text: Column) = {
+    val padded = concat(lit(" "), text, lit(" "))
+    testMarkers.map { case (l, ms) => l -> TextAnalysis.langScore(padded, ms) }
+  }
+
+  /** Oracle side of langScores over the padded text `pt`: columns s_<lang>. */
+  private def langScoreSql: String = testMarkers.map { case (l, ms) =>
+    val terms = ms.map(m =>
+      s"CAST((length(pt) - length(replace(pt, ' $m ', ''))) / ${m.length + 2} AS INT)")
+      .mkString(" + ")
+    s"$terms AS s_$l"
+  }.mkString(",\n    ")
+
+  /** Oracle side of the best marker score across languages. */
+  private def langBestSql: String =
+    s"GREATEST(${testMarkers.map { case (l, _) => s"s_$l" }.mkString(", ")})"
+
+  /** Oracle side of TextAnalysis.langPredict: CASE arms over langBestSql's `best`. */
+  private def langPredSql: String = testMarkers.map { case (l, _) =>
+    s"WHEN s_$l = best AND s_$l > 0 THEN '$l'"
+  }.mkString(" ")
+
   /** z33: curation filter audit — the "why was this document dropped"
     * trail every production corpus build keeps (dropping silently makes
     * recall bugs invisible): each doc gets the FIRST failing gate of a
@@ -6195,103 +5964,77 @@ object PipelineQueries {
     * as x23's featurizer. The ratio threshold compares a single IEEE
     * division of exact ints — bit-identical cross-engine, so the gate
     * decision can never straddle engines. */
-  private val z33FilterAudit = {
-    val scoreSql = testMarkers.map { case (l, ms) =>
-      val terms = ms.map(m =>
-        s"CAST((length(pt) - length(replace(pt, ' $m ', ''))) / ${m.length + 2} AS INT)")
-        .mkString(" + ")
-      s"$terms AS s_$l"
-    }.mkString(",\n    ")
-    val best = s"GREATEST(${testMarkers.map { case (l, _) => s"s_$l" }.mkString(", ")})"
-    val predSql = testMarkers.map { case (l, _) =>
-      s"WHEN s_$l = best AND s_$l > 0 THEN '$l'"
-    }.mkString(" ")
-    Q(
-      (s, d) => {
-        val padded = concat(lit(" "), col("text"), lit(" "))
-        val scores = testMarkers.map { case (l, ms) => l -> TextAnalysis.langScore(padded, ms) }
-        val docs = Tables.documents(s, d)
-        val shingled = docs
-          .select(col("doc_id"), split(col("text"), " ").as("ws"))
-          .filter(size(col("ws")) >= 3)
-          .select(col("doc_id"), explode(TextAnalysis.shinglesExpr("ws", 3)).as("sh"))
-        val dr = shingled.groupBy("doc_id")
-          .agg(((count(lit(1)) - countDistinct(col("sh"))).cast("double")
-            / count(lit(1))).as("__dup"))
-        // every signal is an UNCONDITIONAL projection column computed below
-        // the join's exchange: inside a CaseWhen branch Spark disables
-        // common-subexpression elimination (branches evaluate lazily), so
-        // embedding langPredict in the when-ladder re-evaluated its score
-        // subtrees ~5x per row — 29 s vs 8 s for the same signals at the
-        // 10x soak. The exchange materializes the signal columns, so the
-        // ladder above it compares plain attributes.
-        val sig = docs.select(col("doc_id"), col("lang"),
-          size(split(col("text"), " ")).as("__nw"),
-          (col("text").rlike(TextAnalysis.EmailPattern)
-            || col("text").rlike(TextAnalysis.PhonePattern)).as("__pii"),
-          TextAnalysis.langPredict(scores).as("__pred"))
-        sig.join(dr, Seq("doc_id"), "left")
-          .withColumn("reason",
-            when(col("__nw") < 20, "too_short")
-              .when(col("__pii"), "pii")
-              .when(coalesce(col("__dup"), lit(0.0)) > 0.5, "repetitive")
-              .when(col("__pred") =!= col("lang"), "lang_mismatch")
-              .otherwise("kept"))
-          .select("doc_id", "reason")
-          .orderBy("doc_id")
-      },
-      s"""WITH ws AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
-         |g AS (SELECT doc_id, w[i] || ' ' || w[i+1] || ' ' || w[i+2] AS s
-         |  FROM (SELECT doc_id, w, unnest(generate_series(1, len(w) - 2)) AS i FROM ws)),
-         |dr AS (SELECT doc_id,
-         |    CAST(COUNT(*) - COUNT(DISTINCT s) AS DOUBLE) / COUNT(*) AS dup_ratio
-         |  FROM g GROUP BY 1),
-         |sc AS (SELECT doc_id, lang, text, len(string_split(text, ' ')) AS nw,
-         |    $scoreSql
-         |  FROM (SELECT doc_id, lang, text, ' ' || text || ' ' AS pt FROM documents)),
-         |pred AS (SELECT doc_id, lang, text, nw,
-         |    CASE $predSql ELSE 'und' END AS pred_lang
-         |  FROM (SELECT *, $best AS best FROM sc))
-         |SELECT p.doc_id,
-         |  CASE WHEN nw < 20 THEN 'too_short'
-         |       WHEN regexp_matches(text, '${TextAnalysis.EmailPattern}')
-         |         OR regexp_matches(text, '${TextAnalysis.PhonePattern}') THEN 'pii'
-         |       WHEN coalesce(d.dup_ratio, 0) > 0.5 THEN 'repetitive'
-         |       WHEN pred_lang <> lang THEN 'lang_mismatch'
-         |       ELSE 'kept' END AS reason
-         |FROM pred p LEFT JOIN dr d USING (doc_id) ORDER BY doc_id""".stripMargin)
-  }
+  private val z33FilterAudit = Q(
+    (s, d) => {
+      val scores = langScores(col("text"))
+      val docs = Tables.documents(s, d)
+      val shingled = docs
+        .select(col("doc_id"), split(col("text"), " ").as("ws"))
+        .filter(size(col("ws")) >= 3)
+        .select(col("doc_id"), explode(TextAnalysis.shinglesExpr("ws", 3)).as("sh"))
+      val dr = shingled.groupBy("doc_id")
+        .agg(((count(lit(1)) - countDistinct(col("sh"))).cast("double")
+          / count(lit(1))).as("__dup"))
+      // every signal is an UNCONDITIONAL projection column computed below
+      // the join's exchange: inside a CaseWhen branch Spark disables
+      // common-subexpression elimination (branches evaluate lazily), so
+      // embedding langPredict in the when-ladder re-evaluated its score
+      // subtrees ~5x per row — 29 s vs 8 s for the same signals at the
+      // 10x soak. The exchange materializes the signal columns, so the
+      // ladder above it compares plain attributes.
+      val sig = docs.select(col("doc_id"), col("lang"),
+        size(split(col("text"), " ")).as("__nw"),
+        (col("text").rlike(TextAnalysis.EmailPattern)
+          || col("text").rlike(TextAnalysis.PhonePattern)).as("__pii"),
+        TextAnalysis.langPredict(scores).as("__pred"))
+      sig.join(dr, Seq("doc_id"), "left")
+        .withColumn("reason",
+          when(col("__nw") < 20, "too_short")
+            .when(col("__pii"), "pii")
+            .when(coalesce(col("__dup"), lit(0.0)) > 0.5, "repetitive")
+            .when(col("__pred") =!= col("lang"), "lang_mismatch")
+            .otherwise("kept"))
+        .select("doc_id", "reason")
+        .orderBy("doc_id")
+    },
+    s"""WITH ws AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
+       |g AS (SELECT doc_id, w[i] || ' ' || w[i+1] || ' ' || w[i+2] AS s
+       |  FROM (SELECT doc_id, w, unnest(generate_series(1, len(w) - 2)) AS i FROM ws)),
+       |dr AS (SELECT doc_id,
+       |    CAST(COUNT(*) - COUNT(DISTINCT s) AS DOUBLE) / COUNT(*) AS dup_ratio
+       |  FROM g GROUP BY 1),
+       |sc AS (SELECT doc_id, lang, text, len(string_split(text, ' ')) AS nw,
+       |    $langScoreSql
+       |  FROM (SELECT doc_id, lang, text, ' ' || text || ' ' AS pt FROM documents)),
+       |pred AS (SELECT doc_id, lang, text, nw,
+       |    CASE $langPredSql ELSE 'und' END AS pred_lang
+       |  FROM (SELECT *, $langBestSql AS best FROM sc))
+       |SELECT p.doc_id,
+       |  CASE WHEN nw < 20 THEN 'too_short'
+       |       WHEN regexp_matches(text, '${TextAnalysis.EmailPattern}')
+       |         OR regexp_matches(text, '${TextAnalysis.PhonePattern}') THEN 'pii'
+       |       WHEN coalesce(d.dup_ratio, 0) > 0.5 THEN 'repetitive'
+       |       WHEN pred_lang <> lang THEN 'lang_mismatch'
+       |       ELSE 'kept' END AS reason
+       |FROM pred p LEFT JOIN dr d USING (doc_id) ORDER BY doc_id""".stripMargin)
 
   /** Language-ID confusion matrix: labeled lang × predicted lang counts. */
-  private val z1LangId = {
-    val scoreSql = testMarkers.map { case (l, ms) =>
-      val terms = ms.map(m =>
-        s"CAST((length(pt) - length(replace(pt, ' $m ', ''))) / ${m.length + 2} AS INT)")
-        .mkString(" + ")
-      s"$terms AS s_$l"
-    }.mkString(",\n    ")
-    val best = s"GREATEST(${testMarkers.map { case (l, _) => s"s_$l" }.mkString(", ")})"
-    val predSql = testMarkers.map { case (l, _) =>
-      s"WHEN s_$l = best AND s_$l > 0 THEN '$l'"
-    }.mkString(" ")
-    Q(
-      (s, d) => {
-        val padded = concat(lit(" "), col("text"), lit(" "))
-        val scores = testMarkers.map { case (l, ms) => l -> TextAnalysis.langScore(padded, ms) }
-        Tables.documents(s, d)
-          .withColumn("pred_lang", TextAnalysis.langPredict(scores))
-          .groupBy("lang", "pred_lang").agg(count(lit(1)).as("n_docs"))
-          .orderBy("lang", "pred_lang")
-      },
-      s"""WITH scored AS (SELECT lang,
-         |    $scoreSql
-         |  FROM (SELECT lang, ' ' || text || ' ' AS pt FROM documents)),
-         |pred AS (SELECT lang,
-         |    CASE $predSql ELSE 'und' END AS pred_lang
-         |  FROM (SELECT *, $best AS best FROM scored))
-         |SELECT lang, pred_lang, count(*) AS n_docs
-         |FROM pred GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin)
-  }
+  private val z1LangId = Q(
+    (s, d) => {
+      val scores = langScores(col("text"))
+      Tables.documents(s, d)
+        .withColumn("pred_lang", TextAnalysis.langPredict(scores))
+        .groupBy("lang", "pred_lang").agg(count(lit(1)).as("n_docs"))
+        .orderBy("lang", "pred_lang")
+    },
+    s"""WITH scored AS (SELECT lang,
+       |    $langScoreSql
+       |  FROM (SELECT lang, ' ' || text || ' ' AS pt FROM documents)),
+       |pred AS (SELECT lang,
+       |    CASE $langPredSql ELSE 'und' END AS pred_lang
+       |  FROM (SELECT *, $langBestSql AS best FROM scored))
+       |SELECT lang, pred_lang, count(*) AS n_docs
+       |FROM pred GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin)
 
   /** z34: code-switching detection — z1's language ID applied per CHUNK
     * (z8's 40-token segmenter) instead of per document, then folded back
@@ -6305,65 +6048,52 @@ object PipelineQueries {
     * min-struct aggregate — no whole-corpus window, nothing
     * per-document quadratic. maj_share is one BIGINT/BIGINT division —
     * bit-identical cross-engine. */
-  private val z34CodeSwitch = {
-    val scoreSql = testMarkers.map { case (l, ms) =>
-      val terms = ms.map(m =>
-        s"CAST((length(pt) - length(replace(pt, ' $m ', ''))) / ${m.length + 2} AS INT)")
-        .mkString(" + ")
-      s"$terms AS s_$l"
-    }.mkString(",\n    ")
-    val best = s"GREATEST(${testMarkers.map { case (l, _) => s"s_$l" }.mkString(", ")})"
-    val predSql = testMarkers.map { case (l, _) =>
-      s"WHEN s_$l = best AND s_$l > 0 THEN '$l'"
-    }.mkString(" ")
-    Q(
-      (s, d) => {
-        val chunks = TextAnalysis.chunkWords(Tables.documents(s, d), "doc_id", "text", 40)
-        val padded = concat(lit(" "), col("chunk_text"), lit(" "))
-        val scores = testMarkers.map { case (l, ms) => l -> TextAnalysis.langScore(padded, ms) }
-        val cnts = chunks
-          .withColumn("pred_lang", TextAnalysis.langPredict(scores))
-          .groupBy("doc_id", "pred_lang").agg(count(lit(1)).as("cnt"))
-        val tot = cnts.groupBy("doc_id")
-          .agg(sum(col("cnt")).as("n_chunks"), count(lit(1)).as("n_langs"))
-        val top = Relational.top1PerGroup(cnts, Seq(col("doc_id")),
-            Seq(col("cnt").desc, col("pred_lang").asc))
-          .select(col("doc_id"), col("pred_lang").as("top_lang"), col("cnt").as("top_n"))
-        tot.join(top, Seq("doc_id"))
-          .select(col("doc_id"), col("n_chunks"), col("n_langs"),
-            col("top_lang"), col("top_n"),
-            (col("top_n") / col("n_chunks")).as("maj_share"),
-            (col("n_langs") > 1).as("code_switched"))
-          .orderBy("doc_id")
-      },
-      s"""WITH ws AS (SELECT doc_id, string_split(text, ' ') AS l FROM documents),
-         |ch AS (SELECT doc_id, l,
-         |         unnest(generate_series(0, (len(l) - 1) // 40)) AS chunk_id
-         |       FROM ws),
-         |ck AS (SELECT doc_id,
-         |    ' ' || array_to_string(list_slice(l, chunk_id * 40 + 1, chunk_id * 40 + 40), ' ') || ' ' AS pt
-         |  FROM ch),
-         |scored AS (SELECT doc_id,
-         |    $scoreSql
-         |  FROM ck),
-         |pred AS (SELECT doc_id,
-         |    CASE $predSql ELSE 'und' END AS pred_lang
-         |  FROM (SELECT *, $best AS best FROM scored)),
-         |cnts AS (SELECT doc_id, pred_lang, count(*) AS cnt FROM pred GROUP BY 1, 2),
-         |tot AS (SELECT doc_id, CAST(sum(cnt) AS BIGINT) AS n_chunks,
-         |    CAST(count(*) AS BIGINT) AS n_langs
-         |  FROM cnts GROUP BY 1),
-         |top AS (SELECT doc_id, pred_lang AS top_lang, cnt AS top_n FROM (
-         |    SELECT *, ROW_NUMBER() OVER (PARTITION BY doc_id
-         |      ORDER BY cnt DESC, pred_lang) AS rn FROM cnts) r
-         |  WHERE rn = 1)
-         |SELECT t.doc_id, t.n_chunks, t.n_langs, top.top_lang,
-         |  CAST(top.top_n AS BIGINT) AS top_n,
-         |  top.top_n / t.n_chunks AS maj_share,
-         |  t.n_langs > 1 AS code_switched
-         |FROM tot t JOIN top ON top.doc_id = t.doc_id
-         |ORDER BY t.doc_id""".stripMargin)
-  }
+  private val z34CodeSwitch = Q(
+    (s, d) => {
+      val chunks = TextAnalysis.chunkWords(Tables.documents(s, d), "doc_id", "text", 40)
+      val scores = langScores(col("chunk_text"))
+      val cnts = chunks
+        .withColumn("pred_lang", TextAnalysis.langPredict(scores))
+        .groupBy("doc_id", "pred_lang").agg(count(lit(1)).as("cnt"))
+      val tot = cnts.groupBy("doc_id")
+        .agg(sum(col("cnt")).as("n_chunks"), count(lit(1)).as("n_langs"))
+      val top = Relational.top1PerGroup(cnts, Seq(col("doc_id")),
+          Seq(col("cnt").desc, col("pred_lang").asc))
+        .select(col("doc_id"), col("pred_lang").as("top_lang"), col("cnt").as("top_n"))
+      tot.join(top, Seq("doc_id"))
+        .select(col("doc_id"), col("n_chunks"), col("n_langs"),
+          col("top_lang"), col("top_n"),
+          (col("top_n") / col("n_chunks")).as("maj_share"),
+          (col("n_langs") > 1).as("code_switched"))
+        .orderBy("doc_id")
+    },
+    s"""WITH ws AS (SELECT doc_id, string_split(text, ' ') AS l FROM documents),
+       |ch AS (SELECT doc_id, l,
+       |         unnest(generate_series(0, (len(l) - 1) // 40)) AS chunk_id
+       |       FROM ws),
+       |ck AS (SELECT doc_id,
+       |    ' ' || array_to_string(list_slice(l, chunk_id * 40 + 1, chunk_id * 40 + 40), ' ') || ' ' AS pt
+       |  FROM ch),
+       |scored AS (SELECT doc_id,
+       |    $langScoreSql
+       |  FROM ck),
+       |pred AS (SELECT doc_id,
+       |    CASE $langPredSql ELSE 'und' END AS pred_lang
+       |  FROM (SELECT *, $langBestSql AS best FROM scored)),
+       |cnts AS (SELECT doc_id, pred_lang, count(*) AS cnt FROM pred GROUP BY 1, 2),
+       |tot AS (SELECT doc_id, CAST(sum(cnt) AS BIGINT) AS n_chunks,
+       |    CAST(count(*) AS BIGINT) AS n_langs
+       |  FROM cnts GROUP BY 1),
+       |top AS (SELECT doc_id, pred_lang AS top_lang, cnt AS top_n FROM (
+       |    SELECT *, ROW_NUMBER() OVER (PARTITION BY doc_id
+       |      ORDER BY cnt DESC, pred_lang) AS rn FROM cnts) r
+       |  WHERE rn = 1)
+       |SELECT t.doc_id, t.n_chunks, t.n_langs, top.top_lang,
+       |  CAST(top.top_n AS BIGINT) AS top_n,
+       |  top.top_n / t.n_chunks AS maj_share,
+       |  t.n_langs > 1 AS code_switched
+       |FROM tot t JOIN top ON top.doc_id = t.doc_id
+       |ORDER BY t.doc_id""".stripMargin)
 
   /** Per-document quality score: lexical diversity, stopword ratio, length
     * credit — pure column expressions, no UDF.
@@ -6538,16 +6268,7 @@ object PipelineQueries {
           TextAnalysis.hash32(expr("substring(text, k + 1, 16)")).as("hv_hi"),
           TextAnalysis.hash32b(expr("substring(text, k + 1, 16)")).as("hv_lo"))
       val pairs = Dedup.simhashPairs(Dedup.simhash64(hv, "doc_id"), "doc_id")
-      pairs.select(explode(array(
-          struct(col("doc_a").as("doc_id"), col("doc_b").as("partner"), col("hamming")),
-          struct(col("doc_b").as("doc_id"), col("doc_a").as("partner"), col("hamming"))))
-          .as("e"))
-        .select(col("e.doc_id"), col("e.partner"), col("e.hamming").as("hamming"))
-        .groupBy("doc_id")
-        .agg(count(lit(1)).as("n_neardups"),
-          min(col("partner")).as("min_partner"),
-          min(col("hamming")).as("min_hamming"))
-        .orderBy("doc_id")
+      nearDupPanel(pairs)
     },
     {
       s"""WITH pos AS (SELECT doc_id, text,
@@ -6557,23 +6278,8 @@ object PipelineQueries {
          |    ${h32Sql("substring(text, k + 1, 16)")} AS hv_hi,
          |    ${h32bSql("substring(text, k + 1, 16)")} AS hv_lo
          |  FROM pos),
-         |bits AS (SELECT doc_id,
-         |    $simhashBitSumsSql
-         |  FROM hv GROUP BY 1),
-         |sh AS (SELECT doc_id, CAST($simhashPackedSql AS BIGINT) AS simhash FROM bits),
-         |pairs AS (
-         |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-         |    CAST(bit_count(xor(a.simhash, b.simhash)) AS INT) AS hamming
-         |  FROM sh a JOIN sh b ON a.doc_id < b.doc_id
-         |  WHERE bit_count(xor(a.simhash, b.simhash)) <= 3),
-         |sym AS (
-         |  SELECT doc_a AS doc_id, doc_b AS partner, hamming FROM pairs
-         |  UNION ALL
-         |  SELECT doc_b AS doc_id, doc_a AS partner, hamming FROM pairs)
-         |SELECT doc_id, COUNT(*) AS n_neardups,
-         |  MIN(partner) AS min_partner,
-         |  CAST(MIN(hamming) AS INT) AS min_hamming
-         |FROM sym GROUP BY doc_id ORDER BY doc_id""".stripMargin
+         |${simhashBitsSql("hv")},
+         |$nearDupPanelSql""".stripMargin
     })
 
   /** m5b: m5's payload phash on the ROLLING Rabin–Karp window hash — the
@@ -6599,16 +6305,7 @@ object PipelineQueries {
             (hi, lo) => struct(hi.as("hv_hi"), lo.as("hv_lo")))).as("e"))
         .select(col("doc_id"), col("e.hv_hi"), col("e.hv_lo"))
       val pairs = Dedup.simhashPairs(Dedup.simhash64(hv, "doc_id"), "doc_id")
-      pairs.select(explode(array(
-          struct(col("doc_a").as("doc_id"), col("doc_b").as("partner"), col("hamming")),
-          struct(col("doc_b").as("doc_id"), col("doc_a").as("partner"), col("hamming"))))
-          .as("e"))
-        .select(col("e.doc_id"), col("e.partner"), col("e.hamming").as("hamming"))
-        .groupBy("doc_id")
-        .agg(count(lit(1)).as("n_neardups"),
-          min(col("partner")).as("min_partner"),
-          min(col("hamming")).as("min_hamming"))
-        .orderBy("doc_id")
+      nearDupPanel(pairs)
     },
     {
       val (b1, m1) = TextAnalysis.RollingA
@@ -6624,23 +6321,8 @@ object PipelineQueries {
          |    ${hornerSql(b1, m1)} AS hv_hi,
          |    ${hornerSql(b2, m2)} AS hv_lo
          |  FROM pos),
-         |bits AS (SELECT doc_id,
-         |    $simhashBitSumsSql
-         |  FROM hv GROUP BY 1),
-         |sh AS (SELECT doc_id, CAST($simhashPackedSql AS BIGINT) AS simhash FROM bits),
-         |pairs AS (
-         |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-         |    CAST(bit_count(xor(a.simhash, b.simhash)) AS INT) AS hamming
-         |  FROM sh a JOIN sh b ON a.doc_id < b.doc_id
-         |  WHERE bit_count(xor(a.simhash, b.simhash)) <= 3),
-         |sym AS (
-         |  SELECT doc_a AS doc_id, doc_b AS partner, hamming FROM pairs
-         |  UNION ALL
-         |  SELECT doc_b AS doc_id, doc_a AS partner, hamming FROM pairs)
-         |SELECT doc_id, COUNT(*) AS n_neardups,
-         |  MIN(partner) AS min_partner,
-         |  CAST(MIN(hamming) AS INT) AS min_hamming
-         |FROM sym GROUP BY doc_id ORDER BY doc_id""".stripMargin
+         |${simhashBitsSql("hv")},
+         |$nearDupPanelSql""".stripMargin
     })
 
   private val m1MediaFeatures = Q(
@@ -7866,12 +7548,10 @@ object PipelineQueries {
         (sum(col("lp")).cast("double") / count(lit(1))).as("avg_kn_logprob"))
   }
 
-  private val z38KneserNey = Q(
-    (s, d) => knScored(Tables.documents(s, d)).orderBy("doc_id"),
-    """WITH wl AS (SELECT doc_id, string_split(text, ' ') AS l FROM documents),
-      |pos AS (SELECT doc_id, l, unnest(generate_series(1, len(l) - 1)) AS i
-      |        FROM wl WHERE len(l) >= 2),
-      |bg AS (SELECT doc_id, l[i] AS prev, l[i+1] AS cur FROM pos),
+  /** Shared z38/x32 oracle: interpolated-KN log-probs `p` (doc_id, lp) of
+    * the bigrams of `pos` (doc_id, l, i), with their count CTEs. */
+  private def knLogprobSql: String =
+    """bg AS (SELECT doc_id, l[i] AS prev, l[i+1] AS cur FROM pos),
       |bcnt AS (SELECT prev, cur, COUNT(*) AS n_bg FROM bg GROUP BY 1, 2),
       |pcnt AS (SELECT prev, COUNT(*) AS n_prev FROM bg GROUP BY 1),
       |nf AS (SELECT prev, COUNT(*) AS n1_fwd FROM bcnt GROUP BY 1),
@@ -7884,7 +7564,14 @@ object PipelineQueries {
       |        * (CAST(n1_bwd AS DOUBLE) / n1_tot)
       |    ) AS DECIMAL(12,6)) AS lp
       |  FROM bg JOIN bcnt USING (prev, cur) JOIN pcnt USING (prev)
-      |    JOIN nf USING (prev) JOIN nb USING (cur) CROSS JOIN nt)
+      |    JOIN nf USING (prev) JOIN nb USING (cur) CROSS JOIN nt)""".stripMargin
+
+  private val z38KneserNey = Q(
+    (s, d) => knScored(Tables.documents(s, d)).orderBy("doc_id"),
+    s"""WITH wl AS (SELECT doc_id, string_split(text, ' ') AS l FROM documents),
+      |pos AS (SELECT doc_id, l, unnest(generate_series(1, len(l) - 1)) AS i
+      |        FROM wl WHERE len(l) >= 2),
+      |$knLogprobSql
       |SELECT doc_id, CAST(COUNT(*) AS INT) AS n_bigrams,
       |  CAST(SUM(lp) AS DOUBLE) / COUNT(*) AS avg_kn_logprob
       |FROM p GROUP BY doc_id ORDER BY doc_id""".stripMargin)
@@ -8029,6 +7716,24 @@ object PipelineQueries {
     * streaming gate — same build + Store cache the declared queries use). */
   private[graft] def clsModel(s: SparkSession, d: String) = clsModelStored(s, d)
 
+  /** Shared x38/x40/z42 oracle: the discriminator features `feats`, the
+    * ridge-IRLS fit on the rows matching `train`, and its DECIMAL(12,4)
+    * coefficient snapshot `model` (lang, b0s, b1s, b2s). */
+  private def clsModelSql(train: String): String =
+    s"""feats AS (
+       |  SELECT doc_id, lang,
+       |    ln(1.0 + n_chars) AS x1,
+       |    CAST(length(text) - length(replace(text, ' ', '')) AS DOUBLE) / n_chars AS x2,
+       |    CAST(source IN ('src0', 'src3', 'src6', 'src9') AS DOUBLE) AS y
+       |  FROM documents),
+       |tf AS (SELECT lang, x1, x2, y FROM feats WHERE $train),
+       |${IrlsSql.ctes("tf", "lang", 4)},
+       |model AS (SELECT lang,
+       |    CAST(CAST(b0 AS DECIMAL(12,4)) AS DOUBLE) AS b0s,
+       |    CAST(CAST(b1 AS DECIMAL(12,4)) AS DOUBLE) AS b1s,
+       |    CAST(CAST(b2 AS DECIMAL(12,4)) AS DOUBLE) AS b2s
+       |  FROM b4it)""".stripMargin
+
   /** The fitted discriminator persisted through the Store (lang →
     * snapshot coefficients, partitioned by lang) and read back — the
     * serve side never re-derives weights from training text. Same
@@ -8080,19 +7785,7 @@ object PipelineQueries {
           col("n_scored"), col("n_keep"), col("mean_mu"))
         .orderBy("lang")
     },
-    s"""WITH feats AS (
-       |  SELECT doc_id, lang,
-       |    ln(1.0 + n_chars) AS x1,
-       |    CAST(length(text) - length(replace(text, ' ', '')) AS DOUBLE) / n_chars AS x2,
-       |    CAST(source IN ('src0', 'src3', 'src6', 'src9') AS DOUBLE) AS y
-       |  FROM documents),
-       |tf AS (SELECT lang, x1, x2, y FROM feats WHERE doc_id % 2 = 0),
-       |${IrlsSql.ctes("tf", "lang", 4)},
-       |model AS (SELECT lang,
-       |    CAST(CAST(b0 AS DECIMAL(12,4)) AS DOUBLE) AS b0s,
-       |    CAST(CAST(b1 AS DECIMAL(12,4)) AS DOUBLE) AS b1s,
-       |    CAST(CAST(b2 AS DECIMAL(12,4)) AS DOUBLE) AS b2s
-       |  FROM b4it),
+    s"""WITH ${clsModelSql("doc_id % 2 = 0")},
        |sc AS (
        |  SELECT f.lang,
        |    m.b0s + m.b1s * f.x1 + m.b2s * f.x2 AS eta
@@ -8177,22 +7870,9 @@ object PipelineQueries {
     * shared by the x32 and x34 oracles. Reads `dws` from
     * [[x32GateCtes]]. */
   private val x32KnBandCtes: String =
-    """pos AS (SELECT doc_id, ws AS l, unnest(generate_series(1, len(ws) - 1)) AS i
+    s"""pos AS (SELECT doc_id, ws AS l, unnest(generate_series(1, len(ws) - 1)) AS i
       |  FROM dws),
-      |bg AS (SELECT doc_id, l[i] AS prev, l[i+1] AS cur FROM pos),
-      |bcnt AS (SELECT prev, cur, COUNT(*) AS n_bg FROM bg GROUP BY 1, 2),
-      |pcnt AS (SELECT prev, COUNT(*) AS n_prev FROM bg GROUP BY 1),
-      |nf AS (SELECT prev, COUNT(*) AS n1_fwd FROM bcnt GROUP BY 1),
-      |nb AS (SELECT cur, COUNT(*) AS n1_bwd FROM bcnt GROUP BY 1),
-      |nt AS (SELECT COUNT(*) AS n1_tot FROM bcnt),
-      |p AS (SELECT doc_id,
-      |    CAST(ln(
-      |      greatest(CAST(n_bg AS DOUBLE) - CAST(0.75 AS DOUBLE), CAST(0 AS DOUBLE)) / n_prev
-      |      + (CAST(0.75 AS DOUBLE) * n1_fwd / n_prev)
-      |        * (CAST(n1_bwd AS DOUBLE) / n1_tot)
-      |    ) AS DECIMAL(12,6)) AS lp
-      |  FROM bg JOIN bcnt USING (prev, cur) JOIN pcnt USING (prev)
-      |    JOIN nf USING (prev) JOIN nb USING (cur) CROSS JOIN nt),
+      |$knLogprobSql,
       |kavg AS (SELECT doc_id, CAST(SUM(lp) AS DOUBLE) / COUNT(*) AS avg_lp
       |  FROM p GROUP BY 1),
       |kb AS (SELECT k.doc_id, NTILE(3) OVER (
@@ -8385,19 +8065,7 @@ object PipelineQueries {
           (col("n_both_keep") + col("n_both_drop")) / col("n_docs"))
         .orderBy("lang")
     },
-    s"""WITH feats AS (
-       |  SELECT doc_id, lang,
-       |    ln(1.0 + n_chars) AS x1,
-       |    CAST(length(text) - length(replace(text, ' ', '')) AS DOUBLE) / n_chars AS x2,
-       |    CAST(source IN ('src0', 'src3', 'src6', 'src9') AS DOUBLE) AS y
-       |  FROM documents),
-       |tf AS (SELECT lang, x1, x2, y FROM feats WHERE doc_id % 2 = 0),
-       |${IrlsSql.ctes("tf", "lang", 4)},
-       |model AS (SELECT lang,
-       |    CAST(CAST(b0 AS DECIMAL(12,4)) AS DOUBLE) AS b0s,
-       |    CAST(CAST(b1 AS DECIMAL(12,4)) AS DOUBLE) AS b1s,
-       |    CAST(CAST(b2 AS DECIMAL(12,4)) AS DOUBLE) AS b2s
-       |  FROM b4it),
+    s"""WITH ${clsModelSql("doc_id % 2 = 0")},
        |${knHeldoutCtes("doc_id % 2 = 0", "doc_id % 2 = 1")},
        |kb AS (SELECT k.doc_id, NTILE(3) OVER (
        |      PARTITION BY d.lang ORDER BY k.avg_kn_logprob, k.doc_id) AS band
@@ -9982,28 +9650,11 @@ object PipelineQueries {
          |FROM agg ORDER BY doc_id""".stripMargin
     })
 
-  /** x35: duplicate-span REMOVAL — x18 detects and scores, this one edits:
-    * every 8-word window occurring ≥ 2 times corpus-wide is stripped from
-    * its document and the remainder survives (Lee et al.'s ExactSubstr
-    * production shape — remove the duplicated bytes, don't drop the doc).
-    * Overlapping/touching dup windows merge into maximal spans (equal
-    * window widths make the island rule adjacent-start gap arithmetic);
-    * untouched docs pass through as the ORIGINAL string. The oracle
-    * replays positions, the dup-fp set, the island merge, and the token
-    * rebuild — `clean_text` is exact-string-compared, so the
-    * reconstruction itself is hash-gated. Scale shape: in-scan posexplode,
-    * one combinable fp count, an unhinted fp-keyed verdict join, and
-    * row-local HOF island/rebuild — no window function, no corpus sort
-    * (see Dedup.spanScrub's scaladoc). */
-  private val x35SpanScrub = Q(
-    (s, d) => Dedup.spanScrub(Tables.documents(s, d), "doc_id", "text", k = 8)
-      .orderBy("doc_id"),
-    """WITH ws AS (SELECT doc_id, text, string_split(text, ' ') AS w FROM documents),
-      |pos AS (
-      |  SELECT doc_id, i AS pos, md5(array_to_string(w[i:i+7], ' ')) AS fp
-      |  FROM (SELECT doc_id, w, unnest(generate_series(1, len(w) - 7)) AS i
-      |        FROM ws WHERE len(w) >= 8)),
-      |dupfp AS (SELECT fp FROM pos GROUP BY fp HAVING COUNT(*) >= 2),
+  /** Shared x35/x35b oracle tail: from the window fingerprints `pos`
+    * (doc_id, pos, fp) over `ws` (doc_id, text, w), the dup-window set,
+    * the island merge and the token rebuild. */
+  private def spanScrubSql: String =
+    """dupfp AS (SELECT fp FROM pos GROUP BY fp HAVING COUNT(*) >= 2),
       |dpt AS (
       |  SELECT doc_id, list_sort(list(pos)) AS dp, CAST(COUNT(*) AS INT) AS n_dup
       |  FROM pos JOIN dupfp USING (fp) GROUP BY 1),
@@ -10026,7 +9677,30 @@ object PipelineQueries {
       |  CASE WHEN n_dup = 0 THEN text
       |       ELSE coalesce(array_to_string(list_transform(kept, jj -> w[jj]), ' '), '')
       |  END AS clean_text
-      |FROM kpt ORDER BY doc_id""".stripMargin)
+      |FROM kpt ORDER BY doc_id""".stripMargin
+
+  /** x35: duplicate-span REMOVAL — x18 detects and scores, this one edits:
+    * every 8-word window occurring ≥ 2 times corpus-wide is stripped from
+    * its document and the remainder survives (Lee et al.'s ExactSubstr
+    * production shape — remove the duplicated bytes, don't drop the doc).
+    * Overlapping/touching dup windows merge into maximal spans (equal
+    * window widths make the island rule adjacent-start gap arithmetic);
+    * untouched docs pass through as the ORIGINAL string. The oracle
+    * replays positions, the dup-fp set, the island merge, and the token
+    * rebuild — `clean_text` is exact-string-compared, so the
+    * reconstruction itself is hash-gated. Scale shape: in-scan posexplode,
+    * one combinable fp count, an unhinted fp-keyed verdict join, and
+    * row-local HOF island/rebuild — no window function, no corpus sort
+    * (see Dedup.spanScrub's scaladoc). */
+  private val x35SpanScrub = Q(
+    (s, d) => Dedup.spanScrub(Tables.documents(s, d), "doc_id", "text", k = 8)
+      .orderBy("doc_id"),
+    s"""WITH ws AS (SELECT doc_id, text, string_split(text, ' ') AS w FROM documents),
+      |pos AS (
+      |  SELECT doc_id, i AS pos, md5(array_to_string(w[i:i+7], ' ')) AS fp
+      |  FROM (SELECT doc_id, w, unnest(generate_series(1, len(w) - 7)) AS i
+      |        FROM ws WHERE len(w) >= 8)),
+      |$spanScrubSql""".stripMargin)
 
   /** x35b: x35's span scrub on the ROLLING dual-lattice fingerprint —
     * one md5 per WORD plus an O(1) Rabin–Karp slide per window instead
@@ -10055,30 +9729,7 @@ object PipelineQueries {
          |      + list_reduce(hs[i:i+7], (acc, h) -> (acc * $bb + h) % $mb) AS fp
          |  FROM (SELECT doc_id, hs, unnest(generate_series(1, len(hs) - 7)) AS i
          |        FROM ws WHERE len(hs) >= 8)),
-         |dupfp AS (SELECT fp FROM pos GROUP BY fp HAVING COUNT(*) >= 2),
-         |dpt AS (
-         |  SELECT doc_id, list_sort(list(pos)) AS dp, CAST(COUNT(*) AS INT) AS n_dup
-         |  FROM pos JOIN dupfp USING (fp) GROUP BY 1),
-         |j AS (
-         |  SELECT ws.doc_id, ws.text, ws.w,
-         |    coalesce(dpt.dp, CAST([] AS BIGINT[])) AS dp,
-         |    coalesce(dpt.n_dup, 0) AS n_dup
-         |  FROM ws LEFT JOIN dpt USING (doc_id)),
-         |kpt AS (
-         |  SELECT *, list_filter(generate_series(1, len(w)),
-         |    jj -> len(list_filter(dp, p -> jj >= p AND jj <= p + 7)) = 0) AS kept
-         |  FROM j)
-         |SELECT doc_id, CAST(len(w) AS INT) AS n_tokens, n_dup AS n_dup_windows,
-         |  CASE WHEN len(dp) = 0 THEN 0
-         |       ELSE CAST(len(list_filter(generate_series(1, len(dp)),
-         |              i -> i = 1 OR dp[i] - dp[i-1] > 8)) AS INT)
-         |  END AS n_spans_removed,
-         |  CAST(len(w) - len(kept) AS INT) AS n_removed_tokens,
-         |  len(kept) / len(w) AS clean_frac,
-         |  CASE WHEN n_dup = 0 THEN text
-         |       ELSE coalesce(array_to_string(list_transform(kept, jj -> w[jj]), ' '), '')
-         |  END AS clean_text
-         |FROM kpt ORDER BY doc_id""".stripMargin
+         |$spanScrubSql""".stripMargin
     })
 
   /** x22: most-duplicated spans corpus-wide — the memorization-risk
@@ -10247,6 +9898,52 @@ object PipelineQueries {
       |  FROM adc) r
       |WHERE rank <= 5 ORDER BY q_id, rank""".stripMargin)
 
+  /** Shared y9/y20 stage: IVF cell assignment against the first
+    * [[IvfCells]] vectors, then PQ codes (8 × 8-dim subspaces, the first 16
+    * vectors as codebook) carrying the cell; returns (codebook, assigned,
+    * codes). */
+  private def ivfPqCodes(e: DataFrame) = {
+    val anchors = e.filter(col("vec_id") < IvfCells)
+      .select(col("vec_id").as("anchor_id"), col("embedding").as("anchor_vec"))
+    val codebook = e.filter(col("vec_id") < 16)
+      .select(col("vec_id").as("anchor_id"), col("embedding").as("anchor_vec"))
+    val assigned = Similarity.ivfAssign(e, anchors, "vec_id", "embedding")
+      .select("vec_id", "embedding", "cell")
+    val codes = Similarity.pqEncode(assigned, codebook, "vec_id", "embedding",
+      m = 8, subDim = 8, carryCols = Seq("cell"))
+    (codebook, assigned, codes)
+  }
+
+  /** Oracle side of ivfPqCodes plus the cell-blocked ADC sums of the
+    * `vec_id % 50 = 0` queries: CTEs `v` through `adc` (q_id, c_id, s). */
+  private def ivfPqAdcSql: String =
+    s"""v AS (SELECT vec_id,
+      |    list_transform(embedding, x -> CAST(x AS DOUBLE)) AS vd FROM embeddings),
+      |anchors AS (SELECT vec_id AS anchor_id, vd AS avd FROM v WHERE vec_id < $IvfCells),
+      |adists AS (
+      |  SELECT v.vec_id, v.vd, a.anchor_id,
+      |    ROUND(${dotSql("v.vd", "v.vd")} - 2.0 * ${dotSql("v.vd", "a.avd")}
+      |      + ${dotSql("a.avd", "a.avd")}, 6) AS d2
+      |  FROM v CROSS JOIN anchors a),
+      |assigned AS (SELECT vec_id, vd, anchor_id AS cell FROM (
+      |    SELECT *, ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY d2, anchor_id) AS rn
+      |    FROM adists) x WHERE rn = 1),
+      |cb AS (SELECT vec_id AS anchor_id, vd AS cvd FROM v WHERE vec_id < 16),
+      |subs AS (SELECT vec_id, vd, cell, unnest(generate_series(0, 7)) AS sub FROM assigned),
+      |sd AS (SELECT s.vec_id, s.cell, s.sub, c.anchor_id,
+      |    ROUND(list_reduce(list_transform(generate_series(s.sub * 8 + 1, s.sub * 8 + 8),
+      |      i -> (s.vd[i] - c.cvd[i]) * (s.vd[i] - c.cvd[i])), (acc, x) -> acc + x), 6) AS d6
+      |  FROM subs s CROSS JOIN cb c),
+      |codes AS (SELECT vec_id, cell, sub, anchor_id AS code FROM (
+      |    SELECT *, ROW_NUMBER() OVER (PARTITION BY vec_id, sub ORDER BY d6, anchor_id) AS rn
+      |    FROM sd) x WHERE rn = 1),
+      |qd AS (SELECT vec_id AS q_id, cell, sub, anchor_id AS code,
+      |    CAST(d6 AS DECIMAL(18,6)) AS dd
+      |  FROM sd WHERE vec_id % 50 = 0),
+      |adc AS (SELECT q.q_id, c.vec_id AS c_id, SUM(q.dd) AS s
+      |  FROM qd q JOIN codes c USING (cell, sub, code)
+      |  WHERE q.q_id <> c.vec_id GROUP BY 1, 2)""".stripMargin
+
   /** y9: IVF-PQ — the two FAISS halves composed the way a production
     * vector index actually runs them: the IVF coarse quantizer PRUNES
     * (every vector lands in its nearest-anchor cell, serving joins on the
@@ -10272,45 +9969,13 @@ object PipelineQueries {
   private val y9IvfPq = Q(
     (s, d) => {
       val e = Tables.embeddings(s, d)
-      val anchors = e.filter(col("vec_id") < IvfCells)
-        .select(col("vec_id").as("anchor_id"), col("embedding").as("anchor_vec"))
-      val codebook = e.filter(col("vec_id") < 16)
-        .select(col("vec_id").as("anchor_id"), col("embedding").as("anchor_vec"))
-      val assigned = Similarity.ivfAssign(e, anchors, "vec_id", "embedding")
-        .select("vec_id", "embedding", "cell")
-      val codes = Similarity.pqEncode(assigned, codebook, "vec_id", "embedding",
-        m = 8, subDim = 8, carryCols = Seq("cell"))
+      val (codebook, assigned, codes) = ivfPqCodes(e)
       Similarity.pqTopK(codes, codebook, assigned.filter(col("vec_id") % 50 === 0),
           "vec_id", "embedding", m = 8, subDim = 8, k = 5,
           blockCol = Some("cell"))
         .orderBy("q_id", "rank")
     },
-    s"""WITH v AS (SELECT vec_id,
-      |    list_transform(embedding, x -> CAST(x AS DOUBLE)) AS vd FROM embeddings),
-      |anchors AS (SELECT vec_id AS anchor_id, vd AS avd FROM v WHERE vec_id < $IvfCells),
-      |adists AS (
-      |  SELECT v.vec_id, v.vd, a.anchor_id,
-      |    ROUND(${dotSql("v.vd", "v.vd")} - 2.0 * ${dotSql("v.vd", "a.avd")}
-      |      + ${dotSql("a.avd", "a.avd")}, 6) AS d2
-      |  FROM v CROSS JOIN anchors a),
-      |assigned AS (SELECT vec_id, vd, anchor_id AS cell FROM (
-      |    SELECT *, ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY d2, anchor_id) AS rn
-      |    FROM adists) x WHERE rn = 1),
-      |cb AS (SELECT vec_id AS anchor_id, vd AS cvd FROM v WHERE vec_id < 16),
-      |subs AS (SELECT vec_id, vd, cell, unnest(generate_series(0, 7)) AS sub FROM assigned),
-      |sd AS (SELECT s.vec_id, s.cell, s.sub, c.anchor_id,
-      |    ROUND(list_reduce(list_transform(generate_series(s.sub * 8 + 1, s.sub * 8 + 8),
-      |      i -> (s.vd[i] - c.cvd[i]) * (s.vd[i] - c.cvd[i])), (acc, x) -> acc + x), 6) AS d6
-      |  FROM subs s CROSS JOIN cb c),
-      |codes AS (SELECT vec_id, cell, sub, anchor_id AS code FROM (
-      |    SELECT *, ROW_NUMBER() OVER (PARTITION BY vec_id, sub ORDER BY d6, anchor_id) AS rn
-      |    FROM sd) x WHERE rn = 1),
-      |qd AS (SELECT vec_id AS q_id, cell, sub, anchor_id AS code,
-      |    CAST(d6 AS DECIMAL(18,6)) AS dd
-      |  FROM sd WHERE vec_id % 50 = 0),
-      |adc AS (SELECT q.q_id, c.vec_id AS c_id, SUM(q.dd) AS s
-      |  FROM qd q JOIN codes c USING (cell, sub, code)
-      |  WHERE q.q_id <> c.vec_id GROUP BY 1, 2)
+    s"""WITH $ivfPqAdcSql
       |SELECT q_id, rank, c_id, approx_d2 FROM (
       |  SELECT q_id, c_id, CAST(s AS DOUBLE) AS approx_d2,
       |    CAST(ROW_NUMBER() OVER (PARTITION BY q_id
@@ -10333,14 +9998,7 @@ object PipelineQueries {
   private val y20PqRerank = Q(
     (s, d) => {
       val e = Tables.embeddings(s, d)
-      val anchors = e.filter(col("vec_id") < IvfCells)
-        .select(col("vec_id").as("anchor_id"), col("embedding").as("anchor_vec"))
-      val codebook = e.filter(col("vec_id") < 16)
-        .select(col("vec_id").as("anchor_id"), col("embedding").as("anchor_vec"))
-      val assigned = Similarity.ivfAssign(e, anchors, "vec_id", "embedding")
-        .select("vec_id", "embedding", "cell")
-      val codes = Similarity.pqEncode(assigned, codebook, "vec_id", "embedding",
-        m = 8, subDim = 8, carryCols = Seq("cell"))
+      val (codebook, assigned, codes) = ivfPqCodes(e)
       val shortlist = Similarity.pqTopK(codes, codebook,
           assigned.filter(col("vec_id") % 50 === 0), "vec_id", "embedding",
           m = 8, subDim = 8, k = 20, blockCol = Some("cell"))
@@ -10363,32 +10021,7 @@ object PipelineQueries {
           (col("approx_rank") > col("rank")).as("promoted"))
         .orderBy("q_id", "rank")
     },
-    s"""WITH v AS (SELECT vec_id,
-      |    list_transform(embedding, x -> CAST(x AS DOUBLE)) AS vd FROM embeddings),
-      |anchors AS (SELECT vec_id AS anchor_id, vd AS avd FROM v WHERE vec_id < $IvfCells),
-      |adists AS (
-      |  SELECT v.vec_id, v.vd, a.anchor_id,
-      |    ROUND(${dotSql("v.vd", "v.vd")} - 2.0 * ${dotSql("v.vd", "a.avd")}
-      |      + ${dotSql("a.avd", "a.avd")}, 6) AS d2
-      |  FROM v CROSS JOIN anchors a),
-      |assigned AS (SELECT vec_id, vd, anchor_id AS cell FROM (
-      |    SELECT *, ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY d2, anchor_id) AS rn
-      |    FROM adists) x WHERE rn = 1),
-      |cb AS (SELECT vec_id AS anchor_id, vd AS cvd FROM v WHERE vec_id < 16),
-      |subs AS (SELECT vec_id, vd, cell, unnest(generate_series(0, 7)) AS sub FROM assigned),
-      |sd AS (SELECT s.vec_id, s.cell, s.sub, c.anchor_id,
-      |    ROUND(list_reduce(list_transform(generate_series(s.sub * 8 + 1, s.sub * 8 + 8),
-      |      i -> (s.vd[i] - c.cvd[i]) * (s.vd[i] - c.cvd[i])), (acc, x) -> acc + x), 6) AS d6
-      |  FROM subs s CROSS JOIN cb c),
-      |codes AS (SELECT vec_id, cell, sub, anchor_id AS code FROM (
-      |    SELECT *, ROW_NUMBER() OVER (PARTITION BY vec_id, sub ORDER BY d6, anchor_id) AS rn
-      |    FROM sd) x WHERE rn = 1),
-      |qd AS (SELECT vec_id AS q_id, cell, sub, anchor_id AS code,
-      |    CAST(d6 AS DECIMAL(18,6)) AS dd
-      |  FROM sd WHERE vec_id % 50 = 0),
-      |adc AS (SELECT q.q_id, c.vec_id AS c_id, SUM(q.dd) AS s
-      |  FROM qd q JOIN codes c USING (cell, sub, code)
-      |  WHERE q.q_id <> c.vec_id GROUP BY 1, 2),
+    s"""WITH $ivfPqAdcSql,
       |sl AS (SELECT q_id, c_id, CAST(s AS DOUBLE) AS approx_d2,
       |    CAST(ROW_NUMBER() OVER (PARTITION BY q_id
       |      ORDER BY CAST(s AS DOUBLE), c_id) AS INT) AS approx_rank
@@ -10670,6 +10303,106 @@ object PipelineQueries {
        |GROUP BY planes, probe, nt.n_truth
        |ORDER BY planes, probe""".stripMargin)
 
+  /** Shared y24-y27 stage: the post-filter arm's re-rank — keep the
+    * best 3 survivors of each query's ranked candidates. */
+  private def top3Survivors(ranked: DataFrame) =
+    ranked.withColumn("r2", row_number().over(
+        Window.partitionBy("q_id").orderBy(col("rank").asc)))
+      .filter(col("r2") <= 3)
+
+  /** Shared y24/y26/y27 panel: per-`keys` served, hit and starved counts of
+    * the (q_id, c_id) arms against `truth`. */
+  private def tombArmPanel(arms: DataFrame, truth: DataFrame, keys: String*) =
+    arms.join(truth.withColumn("hit", lit(true)), Seq("q_id", "c_id"), "left")
+      .groupBy(keys.head, keys.tail: _*).agg(
+        countDistinct(col("q_id")).as("n_queries"),
+        count(lit(1)).as("n_served"),
+        sum(when(col("hit"), 1L).otherwise(0L)).as("n_hits"))
+      .crossJoin(broadcast(truth.agg(count(lit(1)).as("n_truth"))))
+      .withColumn("n_starved", col("n_queries") * 3 - col("n_served"))
+
+  /** Shared y26/y27 stage: exact raw-dot MIPS top-3 of `queries` over
+    * `corpus` (both (vec_id, embedding)). */
+  private def mipsTruth(queries: DataFrame, corpus: DataFrame) = {
+    val q = queries.select(col("vec_id").as("q_id"), col("embedding").as("q_vec"))
+    val c = corpus.select(col("vec_id").as("c_id"), col("embedding").as("c_vec"))
+    Relational.groupedTopK(
+        q.join(c, col("q_id") =!= col("c_id"))
+          .withColumn("dot", round(Similarity.dot("q_vec", "c_vec"), 6)),
+        Seq("q_id"), col("c_id"),
+        Seq(col("dot").desc, col("c_id").asc), k = 3, out = "rank")
+      .select("q_id", "c_id")
+  }
+
+  /** Oracle side of the post-filter arm (from the k′ = 6 ranking `st6`)
+    * and the arm union `u` with the truth count `nt`. */
+  private def tombArmsSql: String =
+    """pf AS (SELECT 'post_filter' AS arm, q_id, c_id FROM (
+      |    SELECT q_id, c_id, ROW_NUMBER() OVER (
+      |      PARTITION BY q_id ORDER BY rk) AS r2
+      |    FROM st6 WHERE rk <= 6 AND c_id % 7 <> 0) t WHERE r2 <= 3),
+      |u AS (SELECT * FROM reb UNION ALL SELECT * FROM pf),
+      |nt AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_truth FROM truth)""".stripMargin
+
+  /** Oracle side of tombArmPanel keyed by arm. */
+  private def tombPanelSelectSql: String =
+    """SELECT arm, CAST(COUNT(DISTINCT u.q_id) AS BIGINT) AS n_queries,
+      |  CAST(COUNT(*) AS BIGINT) AS n_served,
+      |  CAST(COUNT(DISTINCT u.q_id) * 3 - COUNT(*) AS BIGINT) AS n_starved,
+      |  CAST(SUM(CASE WHEN truth.q_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT)
+      |    AS n_hits,
+      |  nt.n_truth
+      |FROM u LEFT JOIN truth ON truth.q_id = u.q_id AND truth.c_id = u.c_id
+      |CROSS JOIN nt
+      |GROUP BY arm, nt.n_truth ORDER BY arm""".stripMargin
+
+  /** Oracle CTEs of the y26/y27 MIPS tombstone arms: stale and re-augmented
+    * indexes, exact retained truth, both arms, through `nt`. */
+  private def mipsTombSql: String =
+    s"""v AS (SELECT vec_id, ${vdSql("embedding")} AS vd FROM embeddings),
+       |n AS (SELECT vec_id, vd, ${nrmSql("vd")} AS nrm FROM v),
+       |ret AS (SELECT * FROM n WHERE vec_id % 7 <> 0),
+       |m AS (SELECT MAX(nrm) AS mnorm FROM n),
+       |mr AS (SELECT MAX(nrm) AS mnorm FROM ret),
+       |ca AS (SELECT vec_id, list_append(vd,
+       |    CAST(CAST(sqrt(GREATEST(mnorm * mnorm - nrm * nrm, 0)) AS FLOAT)
+       |      AS DOUBLE)) AS vd
+       |  FROM n CROSS JOIN m),
+       |car AS (SELECT vec_id, list_append(vd,
+       |    CAST(CAST(sqrt(GREATEST(mnorm * mnorm - nrm * nrm, 0)) AS FLOAT)
+       |      AS DOUBLE)) AS vd
+       |  FROM ret CROSS JOIN mr),
+       |cbk AS (SELECT vec_id, CAST(${bucketSqlFor(65, 4)} AS BIGINT) AS bucket FROM ca),
+       |crbk AS (SELECT vec_id, CAST(${bucketSqlFor(65, 4)} AS BIGINT) AS bucket FROM car),
+       |qa AS (SELECT vec_id, list_append(vd, CAST(0 AS DOUBLE)) AS vd
+       |  FROM v WHERE vec_id % 50 = 0 AND vec_id < 1000 AND vec_id % 7 <> 0),
+       |qbk AS (SELECT vec_id, CAST(${bucketSqlFor(65, 4)} AS BIGINT) AS bucket FROM qa),
+       |truth AS (SELECT q_id, c_id FROM (
+       |    SELECT q.vec_id AS q_id, c.vec_id AS c_id, ROW_NUMBER() OVER (
+       |      PARTITION BY q.vec_id ORDER BY
+       |        ROUND(${dotSql("q.vd", "c.vd")}, 6) DESC, c.vec_id) AS rk
+       |    FROM v q JOIN ret cn ON cn.vec_id <> q.vec_id
+       |    JOIN v c ON c.vec_id = cn.vec_id
+       |    WHERE q.vec_id % 50 = 0 AND q.vec_id < 1000 AND q.vec_id % 7 <> 0) t
+       |  WHERE rk <= 3),
+       |reb AS (SELECT 'rebuild' AS arm, q_id, c_id FROM (
+       |    SELECT qb.vec_id AS q_id, ck.vec_id AS c_id, ROW_NUMBER() OVER (
+       |      PARTITION BY qb.vec_id ORDER BY
+       |        ROUND(${dotSql("q.vd", "c.vd")}, 6) DESC, ck.vec_id) AS rk
+       |    FROM qbk qb JOIN v q ON q.vec_id = qb.vec_id
+       |    JOIN crbk ck ON bit_count(xor(qb.bucket, ck.bucket)) <= 1
+       |      AND ck.vec_id <> qb.vec_id
+       |    JOIN v c ON c.vec_id = ck.vec_id) t
+       |  WHERE rk <= 3),
+       |st6 AS (SELECT qb.vec_id AS q_id, ck.vec_id AS c_id, ROW_NUMBER() OVER (
+       |      PARTITION BY qb.vec_id ORDER BY
+       |        ROUND(${dotSql("q.vd", "c.vd")}, 6) DESC, ck.vec_id) AS rk
+       |    FROM qbk qb JOIN v q ON q.vec_id = qb.vec_id
+       |    JOIN cbk ck ON bit_count(xor(qb.bucket, ck.bucket)) <= 1
+       |      AND ck.vec_id <> qb.vec_id
+       |    JOIN v c ON c.vec_id = ck.vec_id),
+       |$tombArmsSql""".stripMargin
+
   /** y24: TOMBSTONE-AWARE ANN SERVING — the takedown lifecycle meets the
     * vector index (x44 deletes rows; this is what deletion means for a
     * SERVING structure, where "deleted" must stop being retrievable NOW
@@ -10700,22 +10433,11 @@ object PipelineQueries {
       val rebuild = Similarity.bucketedTopK(retained, qPred, "vec_id", "embedding",
           k = 3, probeRadius = 1)
         .select(lit("rebuild").as("arm"), col("q_id"), col("c_id"))
-      val stale = Similarity.bucketedTopK(e, qPred, "vec_id", "embedding",
+      val stale = top3Survivors(Similarity.bucketedTopK(e, qPred, "vec_id", "embedding",
           k = 6, probeRadius = 1)
-        .filter(!(col("c_id") % 7 === 0))
-        .withColumn("r2", row_number().over(
-          Window.partitionBy("q_id").orderBy(col("rank").asc)))
-        .filter(col("r2") <= 3)
+        .filter(!(col("c_id") % 7 === 0)))
         .select(lit("post_filter").as("arm"), col("q_id"), col("c_id"))
-      val nTruth = truth.agg(count(lit(1)).as("n_truth"))
-      rebuild.unionByName(stale)
-        .join(truth.withColumn("hit", lit(true)), Seq("q_id", "c_id"), "left")
-        .groupBy("arm").agg(
-          countDistinct(col("q_id")).as("n_queries"),
-          count(lit(1)).as("n_served"),
-          sum(when(col("hit"), 1L).otherwise(0L)).as("n_hits"))
-        .crossJoin(broadcast(nTruth))
-        .withColumn("n_starved", col("n_queries") * 3 - col("n_served"))
+      tombArmPanel(rebuild.unionByName(stale), truth, "arm")
         .select("arm", "n_queries", "n_served", "n_starved", "n_hits", "n_truth")
         .orderBy("arm")
     },
@@ -10745,21 +10467,8 @@ object PipelineQueries {
        |        c.vec_id) AS rk
        |    FROM q JOIN n c ON bit_count(xor(c.bucket, q.bucket)) <= 1
        |      AND c.vec_id <> q.vec_id),
-       |pf AS (SELECT 'post_filter' AS arm, q_id, c_id FROM (
-       |    SELECT q_id, c_id, ROW_NUMBER() OVER (
-       |      PARTITION BY q_id ORDER BY rk) AS r2
-       |    FROM st6 WHERE rk <= 6 AND c_id % 7 <> 0) t WHERE r2 <= 3),
-       |u AS (SELECT * FROM reb UNION ALL SELECT * FROM pf),
-       |nt AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_truth FROM truth)
-       |SELECT arm, CAST(COUNT(DISTINCT u.q_id) AS BIGINT) AS n_queries,
-       |  CAST(COUNT(*) AS BIGINT) AS n_served,
-       |  CAST(COUNT(DISTINCT u.q_id) * 3 - COUNT(*) AS BIGINT) AS n_starved,
-       |  CAST(SUM(CASE WHEN truth.q_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT)
-       |    AS n_hits,
-       |  nt.n_truth
-       |FROM u LEFT JOIN truth ON truth.q_id = u.q_id AND truth.c_id = u.c_id
-       |CROSS JOIN nt
-       |GROUP BY arm, nt.n_truth ORDER BY arm""".stripMargin)
+       |$tombArmsSql
+       |$tombPanelSelectSql""".stripMargin)
 
   /** y25: DELETION → REBUILD DECISION — y24 priced the two serving arms;
     * this WIRES THE DECISION, y16's refresh-payoff discipline applied to
@@ -10814,12 +10523,9 @@ object PipelineQueries {
         val rebuild = Similarity.bucketedTopK(retained, qPred, "vec_id",
             "embedding", k = 3, probeRadius = 1)
           .select("q_id", "c_id")
-        val stale = Similarity.bucketedTopK(e, qPred, "vec_id", "embedding",
-            k = 6, probeRadius = 1)
-          .filter(!(col("c_id") % m === 0))
-          .withColumn("r2", row_number().over(
-            Window.partitionBy("q_id").orderBy(col("rank").asc)))
-          .filter(col("r2") <= 3)
+        val stale = top3Survivors(Similarity.bucketedTopK(e, qPred, "vec_id",
+            "embedding", k = 6, probeRadius = 1)
+          .filter(!(col("c_id") % m === 0)))
           .select("q_id", "c_id")
         val pf = stale
           .join(truth.withColumn("hit", lit(true)), Seq("q_id", "c_id"), "left")
@@ -10925,94 +10631,21 @@ object PipelineQueries {
       val qPred: Column => Column = id =>
         id % 50 === 0 && id < 1000 && !(id % 7 === 0)
       val retained = e.filter(!tomb)
-      val q = retained.filter(qPred(col("vec_id")))
-        .select(col("vec_id").as("q_id"), col("embedding").as("q_vec"))
-      val c = retained.select(col("vec_id").as("c_id"), col("embedding").as("c_vec"))
-      val scored = q.join(c, col("q_id") =!= col("c_id"))
-        .withColumn("dot", round(Similarity.dot("q_vec", "c_vec"), 6))
-      val truth0 = Relational.groupedTopK(scored, Seq("q_id"), col("c_id"),
-          Seq(col("dot").desc, col("c_id").asc), k = 3, out = "rank")
-        .select("q_id", "c_id")
+      val truth0 = mipsTruth(retained.filter(qPred(col("vec_id"))), retained)
       val truth = graft.Housekeeping.pin(s)(truth0).df
       val rebuild = Similarity.mipsTopK(retained, qPred, "vec_id", "embedding",
           k = 3, planes = 4)
         .select(lit("rebuild").as("arm"), col("q_id"), col("c_id"))
-      val stale = Similarity.mipsTopK(e, qPred, "vec_id", "embedding",
+      val stale = top3Survivors(Similarity.mipsTopK(e, qPred, "vec_id", "embedding",
           k = 6, planes = 4)
-        .filter(!(col("c_id") % 7 === 0))
-        .withColumn("r2", row_number().over(
-          Window.partitionBy("q_id").orderBy(col("rank").asc)))
-        .filter(col("r2") <= 3)
+        .filter(!(col("c_id") % 7 === 0)))
         .select(lit("post_filter").as("arm"), col("q_id"), col("c_id"))
-      val nTruth = truth.agg(count(lit(1)).as("n_truth"))
-      rebuild.unionByName(stale)
-        .join(truth.withColumn("hit", lit(true)), Seq("q_id", "c_id"), "left")
-        .groupBy("arm").agg(
-          countDistinct(col("q_id")).as("n_queries"),
-          count(lit(1)).as("n_served"),
-          sum(when(col("hit"), 1L).otherwise(0L)).as("n_hits"))
-        .crossJoin(broadcast(nTruth))
-        .withColumn("n_starved", col("n_queries") * 3 - col("n_served"))
+      tombArmPanel(rebuild.unionByName(stale), truth, "arm")
         .select("arm", "n_queries", "n_served", "n_starved", "n_hits", "n_truth")
         .orderBy("arm")
     },
-    s"""WITH v AS (SELECT vec_id, ${vdSql("embedding")} AS vd FROM embeddings),
-       |n AS (SELECT vec_id, vd, ${nrmSql("vd")} AS nrm FROM v),
-       |ret AS (SELECT * FROM n WHERE vec_id % 7 <> 0),
-       |m AS (SELECT MAX(nrm) AS mnorm FROM n),
-       |mr AS (SELECT MAX(nrm) AS mnorm FROM ret),
-       |ca AS (SELECT vec_id, list_append(vd,
-       |    CAST(CAST(sqrt(GREATEST(mnorm * mnorm - nrm * nrm, 0)) AS FLOAT)
-       |      AS DOUBLE)) AS vd
-       |  FROM n CROSS JOIN m),
-       |car AS (SELECT vec_id, list_append(vd,
-       |    CAST(CAST(sqrt(GREATEST(mnorm * mnorm - nrm * nrm, 0)) AS FLOAT)
-       |      AS DOUBLE)) AS vd
-       |  FROM ret CROSS JOIN mr),
-       |cbk AS (SELECT vec_id, CAST(${bucketSqlFor(65, 4)} AS BIGINT) AS bucket FROM ca),
-       |crbk AS (SELECT vec_id, CAST(${bucketSqlFor(65, 4)} AS BIGINT) AS bucket FROM car),
-       |qa AS (SELECT vec_id, list_append(vd, CAST(0 AS DOUBLE)) AS vd
-       |  FROM v WHERE vec_id % 50 = 0 AND vec_id < 1000 AND vec_id % 7 <> 0),
-       |qbk AS (SELECT vec_id, CAST(${bucketSqlFor(65, 4)} AS BIGINT) AS bucket FROM qa),
-       |truth AS (SELECT q_id, c_id FROM (
-       |    SELECT q.vec_id AS q_id, c.vec_id AS c_id, ROW_NUMBER() OVER (
-       |      PARTITION BY q.vec_id ORDER BY
-       |        ROUND(${dotSql("q.vd", "c.vd")}, 6) DESC, c.vec_id) AS rk
-       |    FROM v q JOIN ret cn ON cn.vec_id <> q.vec_id
-       |    JOIN v c ON c.vec_id = cn.vec_id
-       |    WHERE q.vec_id % 50 = 0 AND q.vec_id < 1000 AND q.vec_id % 7 <> 0) t
-       |  WHERE rk <= 3),
-       |reb AS (SELECT 'rebuild' AS arm, q_id, c_id FROM (
-       |    SELECT qb.vec_id AS q_id, ck.vec_id AS c_id, ROW_NUMBER() OVER (
-       |      PARTITION BY qb.vec_id ORDER BY
-       |        ROUND(${dotSql("q.vd", "c.vd")}, 6) DESC, ck.vec_id) AS rk
-       |    FROM qbk qb JOIN v q ON q.vec_id = qb.vec_id
-       |    JOIN crbk ck ON bit_count(xor(qb.bucket, ck.bucket)) <= 1
-       |      AND ck.vec_id <> qb.vec_id
-       |    JOIN v c ON c.vec_id = ck.vec_id) t
-       |  WHERE rk <= 3),
-       |st6 AS (SELECT qb.vec_id AS q_id, ck.vec_id AS c_id, ROW_NUMBER() OVER (
-       |      PARTITION BY qb.vec_id ORDER BY
-       |        ROUND(${dotSql("q.vd", "c.vd")}, 6) DESC, ck.vec_id) AS rk
-       |    FROM qbk qb JOIN v q ON q.vec_id = qb.vec_id
-       |    JOIN cbk ck ON bit_count(xor(qb.bucket, ck.bucket)) <= 1
-       |      AND ck.vec_id <> qb.vec_id
-       |    JOIN v c ON c.vec_id = ck.vec_id),
-       |pf AS (SELECT 'post_filter' AS arm, q_id, c_id FROM (
-       |    SELECT q_id, c_id, ROW_NUMBER() OVER (
-       |      PARTITION BY q_id ORDER BY rk) AS r2
-       |    FROM st6 WHERE rk <= 6 AND c_id % 7 <> 0) t WHERE r2 <= 3),
-       |u AS (SELECT * FROM reb UNION ALL SELECT * FROM pf),
-       |nt AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_truth FROM truth)
-       |SELECT arm, CAST(COUNT(DISTINCT u.q_id) AS BIGINT) AS n_queries,
-       |  CAST(COUNT(*) AS BIGINT) AS n_served,
-       |  CAST(COUNT(DISTINCT u.q_id) * 3 - COUNT(*) AS BIGINT) AS n_starved,
-       |  CAST(SUM(CASE WHEN truth.q_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT)
-       |    AS n_hits,
-       |  nt.n_truth
-       |FROM u LEFT JOIN truth ON truth.q_id = u.q_id AND truth.c_id = u.c_id
-       |CROSS JOIN nt
-       |GROUP BY arm, nt.n_truth ORDER BY arm""".stripMargin)
+    s"""WITH $mipsTombSql
+       |$tombPanelSelectSql""".stripMargin)
 
   private final case class Y27State(
       pf: org.apache.spark.sql.DataFrame, rb: org.apache.spark.sql.DataFrame,
@@ -11061,18 +10694,6 @@ object PipelineQueries {
       val qPred: Column => Column = id =>
         id % 50 === 0 && id < 1000 && !(id % 7 === 0)
       val retained = e.filter(!tombPred)
-      // the index-build half of mipsTopK: augment with √(M²−‖x‖²), bucket
-      def augIndex(corpus: org.apache.spark.sql.DataFrame) = {
-        val base = corpus.select(col("vec_id"), col("embedding"))
-          .withColumn("__nrm", Similarity.norm("embedding"))
-        val m = base.agg(max(col("__nrm")).as("__mnorm"))
-        base.crossJoin(broadcast(m))
-          .withColumn("__s", sqrt(greatest(col("__mnorm") * col("__mnorm")
-            - col("__nrm") * col("__nrm"), lit(0.0))).cast("float"))
-          .withColumn("caug", concat(col("embedding"), array(col("__s"))))
-          .withColumn("bucket", Similarity.hyperplaneBucket("caug", 65, planes))
-          .select(col("vec_id"), col("bucket"))
-      }
       // serve a query batch against a STORED (vec_id, bucket) index:
       // query buckets need no M (queries augment with 0), candidates
       // join back to the vector table for raw-dot ranking
@@ -11114,32 +10735,21 @@ object PipelineQueries {
         val tmb = graft.sources.Store(s, s"$base/tomb", "part")
         val ptr = graft.sources.Store(s, s"$base/ptr", "part")
         Seq(g1, g2, tmb, ptr).foreach(_.destroy())
-        g1.appendVersioned(augIndex(e))
+        g1.appendVersioned(mipsIndex(e, planes))
         // ---- the request arrives ----
         tmb.append(e.filter(tombPred).select("vec_id")
           .withColumn("part", pmod(col("vec_id"), lit(4))))
         val tombIds = tmb.read.select("vec_id")
         // exact retained-MIPS truth (bounded query batch); cached across
         // constructions, so retainCheckpoint, not pin
-        val q = e.filter(qPred(col("vec_id")))
-          .select(col("vec_id").as("q_id"), col("embedding").as("q_vec"))
-        val c = retained.select(col("vec_id").as("c_id"),
-          col("embedding").as("c_vec"))
         val truth = graft.Housekeeping.retainCheckpoint(s)(
-          Relational.groupedTopK(
-              q.join(c, col("q_id") =!= col("c_id"))
-                .withColumn("dot", round(Similarity.dot("q_vec", "c_vec"), 6)),
-              Seq("q_id"), col("c_id"),
-              Seq(col("dot").desc, col("c_id").asc), k = 3, out = "rank")
-            .select("q_id", "c_id"))
+          mipsTruth(e.filter(qPred(col("vec_id"))), retained))
         // stopgap arm off the STALE stored index
-        val pf0 = serveFrom(g1.read, 6, Some(tombIds))
-          .withColumn("r2", row_number().over(
-            Window.partitionBy("q_id").orderBy(col("rank").asc)))
-          .filter(col("r2") <= 3).select("q_id", "c_id")
+        val pf0 = top3Survivors(serveFrom(g1.read, 6, Some(tombIds)))
+          .select("q_id", "c_id")
         val pf = graft.Housekeeping.retainCheckpoint(s)(pf0)
         // candidate generation 2: retained corpus, RE-AUGMENTED
-        g2.appendVersioned(augIndex(retained))
+        g2.appendVersioned(mipsIndex(retained, planes))
         val rb = graft.Housekeeping.retainCheckpoint(s)(
           serveFrom(g2.read, 3, None).select("q_id", "c_id"))
         // the measured y25 decision
@@ -11158,72 +10768,18 @@ object PipelineQueries {
           .head().getLong(0)
         Y27State(pf, rb, truth, rebuildNow, servingGen)
       }
-      val nTruth = st.truth.agg(count(lit(1)).as("n_truth"))
-      st.rb.select(lit("rebuild").as("arm"), lit(2L).as("index_gen"),
+      val arms = st.rb.select(lit("rebuild").as("arm"), lit(2L).as("index_gen"),
           col("q_id"), col("c_id"))
         .unionByName(st.pf.select(lit("post_filter").as("arm"),
           lit(1L).as("index_gen"), col("q_id"), col("c_id")))
-        .join(st.truth.withColumn("hit", lit(true)), Seq("q_id", "c_id"), "left")
-        .groupBy("arm", "index_gen").agg(
-          countDistinct(col("q_id")).as("n_queries"),
-          count(lit(1)).as("n_served"),
-          sum(when(col("hit"), 1L).otherwise(0L)).as("n_hits"))
-        .crossJoin(broadcast(nTruth))
-        .withColumn("n_starved", col("n_queries") * 3 - col("n_served"))
+      tombArmPanel(arms, st.truth, "arm", "index_gen")
         .withColumn("rebuild_now", lit(st.rebuildNow))
         .withColumn("serving_gen", lit(st.servingGen).cast(LongType))
         .select("arm", "index_gen", "n_queries", "n_served", "n_starved",
           "n_hits", "n_truth", "rebuild_now", "serving_gen")
         .orderBy("arm")
     },
-    s"""WITH v AS (SELECT vec_id, ${vdSql("embedding")} AS vd FROM embeddings),
-       |n AS (SELECT vec_id, vd, ${nrmSql("vd")} AS nrm FROM v),
-       |ret AS (SELECT * FROM n WHERE vec_id % 7 <> 0),
-       |m AS (SELECT MAX(nrm) AS mnorm FROM n),
-       |mr AS (SELECT MAX(nrm) AS mnorm FROM ret),
-       |ca AS (SELECT vec_id, list_append(vd,
-       |    CAST(CAST(sqrt(GREATEST(mnorm * mnorm - nrm * nrm, 0)) AS FLOAT)
-       |      AS DOUBLE)) AS vd
-       |  FROM n CROSS JOIN m),
-       |car AS (SELECT vec_id, list_append(vd,
-       |    CAST(CAST(sqrt(GREATEST(mnorm * mnorm - nrm * nrm, 0)) AS FLOAT)
-       |      AS DOUBLE)) AS vd
-       |  FROM ret CROSS JOIN mr),
-       |cbk AS (SELECT vec_id, CAST(${bucketSqlFor(65, 4)} AS BIGINT) AS bucket FROM ca),
-       |crbk AS (SELECT vec_id, CAST(${bucketSqlFor(65, 4)} AS BIGINT) AS bucket FROM car),
-       |qa AS (SELECT vec_id, list_append(vd, CAST(0 AS DOUBLE)) AS vd
-       |  FROM v WHERE vec_id % 50 = 0 AND vec_id < 1000 AND vec_id % 7 <> 0),
-       |qbk AS (SELECT vec_id, CAST(${bucketSqlFor(65, 4)} AS BIGINT) AS bucket FROM qa),
-       |truth AS (SELECT q_id, c_id FROM (
-       |    SELECT q.vec_id AS q_id, c.vec_id AS c_id, ROW_NUMBER() OVER (
-       |      PARTITION BY q.vec_id ORDER BY
-       |        ROUND(${dotSql("q.vd", "c.vd")}, 6) DESC, c.vec_id) AS rk
-       |    FROM v q JOIN ret cn ON cn.vec_id <> q.vec_id
-       |    JOIN v c ON c.vec_id = cn.vec_id
-       |    WHERE q.vec_id % 50 = 0 AND q.vec_id < 1000 AND q.vec_id % 7 <> 0) t
-       |  WHERE rk <= 3),
-       |reb AS (SELECT 'rebuild' AS arm, q_id, c_id FROM (
-       |    SELECT qb.vec_id AS q_id, ck.vec_id AS c_id, ROW_NUMBER() OVER (
-       |      PARTITION BY qb.vec_id ORDER BY
-       |        ROUND(${dotSql("q.vd", "c.vd")}, 6) DESC, ck.vec_id) AS rk
-       |    FROM qbk qb JOIN v q ON q.vec_id = qb.vec_id
-       |    JOIN crbk ck ON bit_count(xor(qb.bucket, ck.bucket)) <= 1
-       |      AND ck.vec_id <> qb.vec_id
-       |    JOIN v c ON c.vec_id = ck.vec_id) t
-       |  WHERE rk <= 3),
-       |st6 AS (SELECT qb.vec_id AS q_id, ck.vec_id AS c_id, ROW_NUMBER() OVER (
-       |      PARTITION BY qb.vec_id ORDER BY
-       |        ROUND(${dotSql("q.vd", "c.vd")}, 6) DESC, ck.vec_id) AS rk
-       |    FROM qbk qb JOIN v q ON q.vec_id = qb.vec_id
-       |    JOIN cbk ck ON bit_count(xor(qb.bucket, ck.bucket)) <= 1
-       |      AND ck.vec_id <> qb.vec_id
-       |    JOIN v c ON c.vec_id = ck.vec_id),
-       |pf AS (SELECT 'post_filter' AS arm, q_id, c_id FROM (
-       |    SELECT q_id, c_id, ROW_NUMBER() OVER (
-       |      PARTITION BY q_id ORDER BY rk) AS r2
-       |    FROM st6 WHERE rk <= 6 AND c_id % 7 <> 0) t WHERE r2 <= 3),
-       |u AS (SELECT * FROM reb UNION ALL SELECT * FROM pf),
-       |nt AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_truth FROM truth),
+    s"""WITH $mipsTombSql,
        |agg AS (SELECT arm, CAST(COUNT(DISTINCT u.q_id) AS BIGINT) AS n_queries,
        |    CAST(COUNT(*) AS BIGINT) AS n_served,
        |    CAST(SUM(CASE WHEN truth.q_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT)
@@ -11462,6 +11018,20 @@ object PipelineQueries {
        |  FROM scored) r
        |WHERE rank <= 3 ORDER BY q_doc, q_chunk, rank""".stripMargin)
 
+  /** Shared x19/x19b oracle tail: from the window fingerprints `win`
+    * (doc_id, fp), each non-benchmark doc's windows that also occur in the
+    * benchmark slice (doc_id % 97 = 0). */
+  private def spanContamSql: String =
+    """pd AS (SELECT doc_id, fp, COUNT(*) AS c FROM win
+      |       WHERE doc_id % 97 <> 0 GROUP BY 1, 2),
+      |bench AS (SELECT DISTINCT fp FROM win WHERE doc_id % 97 = 0),
+      |agg AS (
+      |  SELECT doc_id, CAST(SUM(c) AS BIGINT) AS n_windows,
+      |    CAST(SUM(CASE WHEN b.fp IS NOT NULL THEN c ELSE 0 END) AS BIGINT) AS n_contam
+      |  FROM pd LEFT JOIN bench b ON pd.fp = b.fp GROUP BY 1)
+      |SELECT doc_id, n_windows, n_contam, n_contam / n_windows AS contam_frac
+      |FROM agg ORDER BY doc_id""".stripMargin
+
   /** x19: span-level benchmark decontamination — z11 flags a document if
     * ANY 3-gram shingle overlaps the benchmark; this measures HOW MUCH of
     * it is verbatim benchmark material at 8-word-span granularity (the
@@ -11479,20 +11049,12 @@ object PipelineQueries {
           "doc_id", "text", k = 8)
         .orderBy("doc_id")
     },
-    """WITH ws AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
+    s"""WITH ws AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
       |win AS (
       |  SELECT doc_id, md5(array_to_string(w[i:i+7], ' ')) AS fp
       |  FROM (SELECT doc_id, w, unnest(generate_series(1, len(w) - 7)) AS i
       |        FROM ws WHERE len(w) >= 8)),
-      |pd AS (SELECT doc_id, fp, COUNT(*) AS c FROM win
-      |       WHERE doc_id % 97 <> 0 GROUP BY 1, 2),
-      |bench AS (SELECT DISTINCT fp FROM win WHERE doc_id % 97 = 0),
-      |agg AS (
-      |  SELECT doc_id, CAST(SUM(c) AS BIGINT) AS n_windows,
-      |    CAST(SUM(CASE WHEN b.fp IS NOT NULL THEN c ELSE 0 END) AS BIGINT) AS n_contam
-      |  FROM pd LEFT JOIN bench b ON pd.fp = b.fp GROUP BY 1)
-      |SELECT doc_id, n_windows, n_contam, n_contam / n_windows AS contam_frac
-      |FROM agg ORDER BY doc_id""".stripMargin)
+      |$spanContamSql""".stripMargin)
 
   /** x19b: span decontamination on the ROLLING fingerprint — completes
     * the rolling family (x18b spans, m5b payloads, z37b grams): one md5
@@ -11519,15 +11081,7 @@ object PipelineQueries {
        |      + list_reduce(hs[i:i+7], (acc, h) -> (acc * 263 + h) % 2147483629) AS fp
        |  FROM (SELECT doc_id, hs, unnest(generate_series(1, len(hs) - 7)) AS i
        |        FROM hs WHERE len(hs) >= 8)),
-       |pd AS (SELECT doc_id, fp, COUNT(*) AS c FROM win
-       |       WHERE doc_id % 97 <> 0 GROUP BY 1, 2),
-       |bench AS (SELECT DISTINCT fp FROM win WHERE doc_id % 97 = 0),
-       |agg AS (
-       |  SELECT doc_id, CAST(SUM(c) AS BIGINT) AS n_windows,
-       |    CAST(SUM(CASE WHEN b.fp IS NOT NULL THEN c ELSE 0 END) AS BIGINT) AS n_contam
-       |  FROM pd LEFT JOIN bench b ON pd.fp = b.fp GROUP BY 1)
-       |SELECT doc_id, n_windows, n_contam, n_contam / n_windows AS contam_frac
-       |FROM agg ORDER BY doc_id""".stripMargin)
+       |$spanContamSql""".stripMargin)
 
   /** Shared z21/x21 stage: DSIR-shaped per-document importance frame
     * (doc_id, source, llr_dec, kept) — data selection by unigram

@@ -131,6 +131,44 @@ object RelationalQueries {
     * reconstruction equals the batch-prefix truth at every version.
     * Overwrites are rejected on versioned tables (they would rewrite
     * files older snapshots reference) — StoreSpec pins that guard. */
+  /** Shared s24/s25 panel over a history whose versions span
+    * [`from`, `to`) in epoch micros: version, user and current counts, the
+    * 2024-01-16 as-of probe and the closed lifetimes. */
+  private def scd2Panel(hist: DataFrame, from: String, to: String) = {
+    val probeUs = 1705363200000000L // 2024-01-16 00:00:00 UTC, micros
+    val active = col(from) <= probeUs && (col(to).isNull || col(to) > probeUs)
+    hist.groupBy("event_type").agg(
+        count(lit(1)).as("n_versions"),
+        countDistinct(col("user_id")).as("n_users"),
+        sum(when(col(to).isNull, 1L).otherwise(0L)).as("n_current"),
+        sum(when(active, 1L).otherwise(0L)).as("n_active_probe"),
+        sum(when(active, col("value").cast(DecimalType(18, 2))))
+          .cast(DoubleType).as("active_value_sum"),
+        sum(when(col(to).isNotNull, col(to) - col(from)))
+          .cast(LongType).as("closed_lifetime_us"))
+      .orderBy("event_type")
+  }
+
+  /** Oracle side of scd2Panel: the history derived in one window pass. */
+  private def scd2PanelSql: String =
+    """WITH h AS (SELECT event_id, user_id, event_type, value,
+      |    epoch_us(ts) AS from_us,
+      |    LEAD(epoch_us(ts), 1) OVER (
+      |      PARTITION BY user_id, event_type ORDER BY ts, event_id) AS to_us
+      |  FROM events)
+      |SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n_versions,
+      |  CAST(COUNT(DISTINCT user_id) AS BIGINT) AS n_users,
+      |  CAST(SUM(CASE WHEN to_us IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_current,
+      |  CAST(SUM(CASE WHEN from_us <= 1705363200000000
+      |    AND (to_us IS NULL OR to_us > 1705363200000000)
+      |    THEN 1 ELSE 0 END) AS BIGINT) AS n_active_probe,
+      |  CAST(SUM(CASE WHEN from_us <= 1705363200000000
+      |    AND (to_us IS NULL OR to_us > 1705363200000000)
+      |    THEN CAST(value AS DECIMAL(18,2)) END) AS DOUBLE) AS active_value_sum,
+      |  CAST(SUM(CASE WHEN to_us IS NOT NULL THEN to_us - from_us END) AS BIGINT)
+      |    AS closed_lifetime_us
+      |FROM h GROUP BY 1 ORDER BY 1""".stripMargin
+
   /** s24: SLOWLY-CHANGING DIMENSION (type 2) from a change feed — the
     * warehouse op that turns an event log into queryable HISTORY: each
     * (user, event_type) state change opens a validity interval
@@ -147,43 +185,15 @@ object RelationalQueries {
     * reconstructing ANY instant costs one scan of the history table. */
   private val s24Scd2History = Q(
     (s, d) => {
-      val probeUs = 1705363200000000L // 2024-01-16 00:00:00 UTC, micros
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy("user_id", "event_type")
         .orderBy(col("ts").asc, col("event_id").asc)
       val hist = Tables.events(s, d)
         .withColumn("from_us", unix_micros(col("ts")))
         .withColumn("to_us", unix_micros(lead(col("ts"), 1).over(w)))
-      val active = col("from_us") <= probeUs &&
-        (col("to_us").isNull || col("to_us") > probeUs)
-      hist.groupBy("event_type").agg(
-          count(lit(1)).as("n_versions"),
-          countDistinct(col("user_id")).as("n_users"),
-          sum(when(col("to_us").isNull, 1L).otherwise(0L)).as("n_current"),
-          sum(when(active, 1L).otherwise(0L)).as("n_active_probe"),
-          sum(when(active, col("value").cast(DecimalType(18, 2))))
-            .cast(DoubleType).as("active_value_sum"),
-          sum(when(col("to_us").isNotNull, col("to_us") - col("from_us")))
-            .cast(LongType).as("closed_lifetime_us"))
-        .orderBy("event_type")
+      scd2Panel(hist, "from_us", "to_us")
     },
-    """WITH h AS (SELECT event_id, user_id, event_type, value,
-      |    epoch_us(ts) AS from_us,
-      |    LEAD(epoch_us(ts), 1) OVER (
-      |      PARTITION BY user_id, event_type ORDER BY ts, event_id) AS to_us
-      |  FROM events)
-      |SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n_versions,
-      |  CAST(COUNT(DISTINCT user_id) AS BIGINT) AS n_users,
-      |  CAST(SUM(CASE WHEN to_us IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_current,
-      |  CAST(SUM(CASE WHEN from_us <= 1705363200000000
-      |    AND (to_us IS NULL OR to_us > 1705363200000000)
-      |    THEN 1 ELSE 0 END) AS BIGINT) AS n_active_probe,
-      |  CAST(SUM(CASE WHEN from_us <= 1705363200000000
-      |    AND (to_us IS NULL OR to_us > 1705363200000000)
-      |    THEN CAST(value AS DECIMAL(18,2)) END) AS DOUBLE) AS active_value_sum,
-      |  CAST(SUM(CASE WHEN to_us IS NOT NULL THEN to_us - from_us END) AS BIGINT)
-      |    AS closed_lifetime_us
-      |FROM h GROUP BY 1 ORDER BY 1""".stripMargin)
+    scd2PanelSql)
 
   /** s25: SCD2 as a STORE WRITE PATH — s24 derives history in-query; s25
     * makes it durable: three change-feed slices (the events table split
@@ -200,7 +210,6 @@ object RelationalQueries {
     * the same path continues the history) and the tiling invariant. */
   private val s25Scd2Store = Q(
     (s, d) => {
-      val probeUs = 1705363200000000L // 2024-01-16 00:00:00 UTC, micros
       val t1 = 1704931200000000L // 2024-01-11: wave-1/2 boundary
       val t2 = 1705795200000000L // 2024-01-21: wave-2/3 boundary
       val ev = Tables.events(s, d)
@@ -217,36 +226,9 @@ object RelationalQueries {
             Seq("user_id", "event_type"), "from_us", Seq(col("event_id"))))
         store.read
       }
-      val active = col("valid_from") <= probeUs &&
-        (col("valid_to").isNull || col("valid_to") > probeUs)
-      hist.groupBy("event_type").agg(
-          count(lit(1)).as("n_versions"),
-          countDistinct(col("user_id")).as("n_users"),
-          sum(when(col("valid_to").isNull, 1L).otherwise(0L)).as("n_current"),
-          sum(when(active, 1L).otherwise(0L)).as("n_active_probe"),
-          sum(when(active, col("value").cast(DecimalType(18, 2))))
-            .cast(DoubleType).as("active_value_sum"),
-          sum(when(col("valid_to").isNotNull, col("valid_to") - col("valid_from")))
-            .cast(LongType).as("closed_lifetime_us"))
-        .orderBy("event_type")
+      scd2Panel(hist, "valid_from", "valid_to")
     },
-    """WITH h AS (SELECT event_id, user_id, event_type, value,
-      |    epoch_us(ts) AS from_us,
-      |    LEAD(epoch_us(ts), 1) OVER (
-      |      PARTITION BY user_id, event_type ORDER BY ts, event_id) AS to_us
-      |  FROM events)
-      |SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n_versions,
-      |  CAST(COUNT(DISTINCT user_id) AS BIGINT) AS n_users,
-      |  CAST(SUM(CASE WHEN to_us IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_current,
-      |  CAST(SUM(CASE WHEN from_us <= 1705363200000000
-      |    AND (to_us IS NULL OR to_us > 1705363200000000)
-      |    THEN 1 ELSE 0 END) AS BIGINT) AS n_active_probe,
-      |  CAST(SUM(CASE WHEN from_us <= 1705363200000000
-      |    AND (to_us IS NULL OR to_us > 1705363200000000)
-      |    THEN CAST(value AS DECIMAL(18,2)) END) AS DOUBLE) AS active_value_sum,
-      |  CAST(SUM(CASE WHEN to_us IS NOT NULL THEN to_us - from_us END) AS BIGINT)
-      |    AS closed_lifetime_us
-      |FROM h GROUP BY 1 ORDER BY 1""".stripMargin)
+    scd2PanelSql)
 
   /** s26: CHANGE-DATA-FEED read off the version log — the O(changes)
     * complement to s17's keyed full-outer diff (O(table)) and s23's
@@ -449,6 +431,49 @@ object RelationalQueries {
       |FROM r JOIN documents ON doc_id % 3 >= from_v AND doc_id % 3 < to_v
       |GROUP BY from_v, to_v ORDER BY from_v, to_v""".stripMargin)
 
+  /** Shared s30/s32 stage: the CDC chain under scratch name `name` — a
+    * versioned event source landed in three time slices (boundaries
+    * 2024-01-11 and 2024-01-21), its SCD2 history and its monoid state
+    * (per-type partials appended per pull) maintained off the change
+    * feed alone. Returns the (source, history, state) stores. */
+  private def cdcChain(s: SparkSession, d: String, name: String) = {
+    val t1 = 1704931200000000L // 2024-01-11: pull-1/2 boundary
+    val t2 = 1705795200000000L // 2024-01-21: pull-2/3 boundary
+    val ev = Tables.events(s, d)
+      .withColumn("from_us", unix_micros(col("ts")))
+      .select("event_id", "user_id", "event_type", "value", "from_us")
+    val base = Artifacts.scratchPath(s, d, name)
+    val src = graft.sources.Store(s, s"$base/src", "event_type")
+    val hst = graft.sources.Store(s, s"$base/hist", "event_type")
+    val stt = graft.sources.Store(s, s"$base/state", "event_type")
+    Seq(src, hst, stt).foreach(_.destroy())
+    Seq(col("from_us") < t1,
+        col("from_us") >= t1 && col("from_us") < t2,
+        col("from_us") >= t2)
+      .foreach(c => src.appendVersioned(ev.filter(c)))
+    (1L to 3L).foreach { v =>
+      val delta = src.readChanges(v - 1, v) // the ONLY source read
+      hst.upsertScd2(delta, Seq("user_id", "event_type"), "from_us",
+        Seq(col("event_id")))
+      // monoid: append the delta's partial
+      stt.append(delta.groupBy("event_type")
+        .agg(count(lit(1)).as("n"), sum(dec2(col("value"))).as("s_dec")))
+    }
+    (src, hst, stt)
+  }
+
+  /** Shared s30/s32 panel: per type, the history's version and current
+    * counts joined with the folded state. */
+  private def chainPanel(hist: DataFrame, state: DataFrame) = {
+    val histPanel = hist.groupBy("event_type").agg(
+      count(lit(1)).as("n_versions"),
+      sum(when(col("valid_to").isNull, 1L).otherwise(0L)).as("n_current"))
+    val stateFold = state.groupBy("event_type").agg(
+      sum(col("n")).cast(LongType).as("n_events"),
+      sum(col("s_dec")).cast(DoubleType).as("sum_value"))
+    histPanel.join(stateFold, Seq("event_type"))
+  }
+
   /** s30: THE CDC CHAIN END TO END — the composition a warehouse actually
     * runs nightly, in ONE declared DAG: a versioned SOURCE table's change
     * feed (s26's `readChanges` — the log IS the diff) feeds BOTH an SCD2
@@ -468,38 +493,8 @@ object RelationalQueries {
     * rescans the source. */
   private val s30CdcChain = Q(
     (s, d) => {
-      val t1 = 1704931200000000L // 2024-01-11: pull-1/2 boundary
-      val t2 = 1705795200000000L // 2024-01-21: pull-2/3 boundary
-      val ev = Tables.events(s, d)
-        .withColumn("from_us", unix_micros(col("ts")))
-        .select("event_id", "user_id", "event_type", "value", "from_us")
-      def partial(f: DataFrame) = f.groupBy("event_type")
-        .agg(count(lit(1)).as("n"), sum(dec2(col("value"))).as("s_dec"))
-      val (hist, state) = {
-        val base = Artifacts.scratchPath(s, d, "cdc_chain")
-        val src = graft.sources.Store(s, s"$base/src", "event_type")
-        val hst = graft.sources.Store(s, s"$base/hist", "event_type")
-        val stt = graft.sources.Store(s, s"$base/state", "event_type")
-        Seq(src, hst, stt).foreach(_.destroy())
-        Seq(col("from_us") < t1,
-            col("from_us") >= t1 && col("from_us") < t2,
-            col("from_us") >= t2)
-          .foreach(c => src.appendVersioned(ev.filter(c)))
-        (1L to 3L).foreach { v =>
-          val delta = src.readChanges(v - 1, v) // the ONLY source read
-          hst.upsertScd2(delta, Seq("user_id", "event_type"), "from_us",
-            Seq(col("event_id")))
-          stt.append(partial(delta)) // monoid: append the delta's partial
-        }
-        (hst.read, stt.read)
-      }
-      val histPanel = hist.groupBy("event_type").agg(
-        count(lit(1)).as("n_versions"),
-        sum(when(col("valid_to").isNull, 1L).otherwise(0L)).as("n_current"))
-      val stateFold = state.groupBy("event_type").agg(
-        sum(col("n")).cast(LongType).as("n_events"),
-        sum(col("s_dec")).cast(DoubleType).as("sum_value"))
-      histPanel.join(stateFold, Seq("event_type"))
+      val (_, hst, stt) = cdcChain(s, d, "cdc_chain")
+      chainPanel(hst.read, stt.read)
         .select("event_type", "n_versions", "n_current", "n_events", "sum_value")
         .orderBy("event_type")
     },
@@ -599,30 +594,9 @@ object RelationalQueries {
     * the purge; the negDelta checkpoint is consumed inside the build. */
   private val s32ChainPurge = Q(
     (s, d) => {
-      val t1 = 1704931200000000L
-      val t2 = 1705795200000000L
-      val ev = Tables.events(s, d)
-        .withColumn("from_us", unix_micros(col("ts")))
-        .select("event_id", "user_id", "event_type", "value", "from_us")
       val removePred = col("user_id") % 5 === 0
-      def partial(f: DataFrame) = f.groupBy("event_type")
-        .agg(count(lit(1)).as("n"), sum(dec2(col("value"))).as("s_dec"))
       val (hist, state, epoch) = Artifacts.getOrBuild(s, d, "s32_chain_purge") {
-        val base = Artifacts.scratchPath(s, d, "chain_purge")
-        val src = graft.sources.Store(s, s"$base/src", "event_type")
-        val hst = graft.sources.Store(s, s"$base/hist", "event_type")
-        val stt = graft.sources.Store(s, s"$base/state", "event_type")
-        Seq(src, hst, stt).foreach(_.destroy())
-        Seq(col("from_us") < t1,
-            col("from_us") >= t1 && col("from_us") < t2,
-            col("from_us") >= t2)
-          .foreach(c => src.appendVersioned(ev.filter(c)))
-        (1L to 3L).foreach { v =>
-          val delta = src.readChanges(v - 1, v)
-          hst.upsertScd2(delta, Seq("user_id", "event_type"), "from_us",
-            Seq(col("event_id")))
-          stt.append(partial(delta))
-        }
+        val (src, hst, stt) = cdcChain(s, d, "chain_purge")
         // ---- the governance request arrives ----
         // snapshot the doomed rows' partial BEFORE the purge destroys the
         // files it reads (an eager checkpoint — a lazy frame evaluated
@@ -637,13 +611,7 @@ object RelationalQueries {
         stt.append(negDelta)
         (hst.read, stt.read, newEpoch)
       }
-      val histPanel = hist.groupBy("event_type").agg(
-        count(lit(1)).as("n_versions"),
-        sum(when(col("valid_to").isNull, 1L).otherwise(0L)).as("n_current"))
-      val stateFold = state.groupBy("event_type").agg(
-        sum(col("n")).cast(LongType).as("n_events"),
-        sum(col("s_dec")).cast(DoubleType).as("sum_value"))
-      histPanel.join(stateFold, Seq("event_type"))
+      chainPanel(hist, state)
         .select(col("event_type"), lit(epoch).as("epoch"), col("n_versions"),
           col("n_current"), col("n_events"), col("sum_value"))
         .orderBy("event_type")
@@ -1518,23 +1486,27 @@ object RelationalQueries {
       |WHERE EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey AND o_totalprice > 400000)
       |ORDER BY c_custkey""".stripMargin)
 
+  /** Shared j6/j6b stage: the top-10 customers by account balance zipped
+    * by rank with the top `nSupp` suppliers. */
+  private def topAcctbalZip(s: SparkSession, d: String, nSupp: Int) = {
+    val topCust = Tables.customer(s, d)
+      .orderBy(col("c_acctbal").desc, col("c_custkey").asc)
+      .limit(10).select("c_name", "c_acctbal")
+    val topSupp = Tables.supplier(s, d)
+      .orderBy(col("s_acctbal").desc, col("s_suppkey").asc)
+      .limit(nSupp).select("s_name", "s_acctbal")
+    bindCols(
+      topCust, Seq(col("c_acctbal").desc, col("c_name").asc),
+      topSupp, Seq(col("s_acctbal").desc, col("s_name").asc))
+      .withColumnRenamed("__idx", "rank")
+      .select("rank", "c_name", "s_name")
+      .orderBy("rank")
+  }
+
   /** J6: positional `bind_cols` zip of two ranked lists
     * (`/root/reference/R/nfc_west_starting_qbs.R:71-94`). */
   private val j6BindCols = Q(
-    (s, d) => {
-      val topCust = Tables.customer(s, d)
-        .orderBy(col("c_acctbal").desc, col("c_custkey").asc)
-        .limit(10).select("c_name", "c_acctbal")
-      val topSupp = Tables.supplier(s, d)
-        .orderBy(col("s_acctbal").desc, col("s_suppkey").asc)
-        .limit(10).select("s_name", "s_acctbal")
-      bindCols(
-        topCust, Seq(col("c_acctbal").desc, col("c_name").asc),
-        topSupp, Seq(col("s_acctbal").desc, col("s_name").asc))
-        .withColumnRenamed("__idx", "rank")
-        .select("rank", "c_name", "s_name")
-        .orderBy("rank")
-    },
+    (s, d) => topAcctbalZip(s, d, nSupp = 10),
     """WITH tc AS (
       |  SELECT c_name, ROW_NUMBER() OVER (ORDER BY c_acctbal DESC, c_name ASC) AS rank
       |  FROM (SELECT c_name, c_acctbal FROM customer ORDER BY c_acctbal DESC, c_custkey ASC LIMIT 10)),
@@ -1549,20 +1521,7 @@ object RelationalQueries {
     * that as a full outer join on the row index, so ranks 7–10 carry a null
     * supplier instead of silently truncating. */
   private val j6bBindColsPad = Q(
-    (s, d) => {
-      val topCust = Tables.customer(s, d)
-        .orderBy(col("c_acctbal").desc, col("c_custkey").asc)
-        .limit(10).select("c_name", "c_acctbal")
-      val topSupp = Tables.supplier(s, d)
-        .orderBy(col("s_acctbal").desc, col("s_suppkey").asc)
-        .limit(6).select("s_name", "s_acctbal")
-      bindCols(
-        topCust, Seq(col("c_acctbal").desc, col("c_name").asc),
-        topSupp, Seq(col("s_acctbal").desc, col("s_name").asc))
-        .withColumnRenamed("__idx", "rank")
-        .select("rank", "c_name", "s_name")
-        .orderBy("rank")
-    },
+    (s, d) => topAcctbalZip(s, d, nSupp = 6),
     """WITH tc AS (
       |  SELECT c_name, ROW_NUMBER() OVER (ORDER BY c_acctbal DESC, c_name ASC) AS rank
       |  FROM (SELECT c_name, c_acctbal FROM customer ORDER BY c_acctbal DESC, c_custkey ASC LIMIT 10)),
@@ -1624,6 +1583,38 @@ object RelationalQueries {
       |FROM p ASOF LEFT JOIN v ON p.user_id = v.user_id AND p.ts <= v.ts
       |ORDER BY p.event_id""".stripMargin)
 
+  /** Shared j8/j8b inputs: event times in epoch micros, and 50
+    * overlapping 20-hour windows starting every 14 hours from 2024-01-01
+    * 00:00 UTC. */
+  private def rangeJoinInputs(s: SparkSession, d: String) = {
+    val pts = Tables.events(s, d)
+      .select(col("event_id"), unix_micros(col("ts")).as("t"))
+    val base = 1704067200000000L // 2024-01-01 00:00:00 UTC
+    val ivs = Tables.supplier(s, d).filter(col("s_suppkey") <= 50)
+      .select(col("s_suppkey").as("window_id"),
+        (lit(base) + col("s_suppkey") * lit(14L * 3600 * 1000000)).as("w_start"))
+      .withColumn("w_end", col("w_start") + lit(20L * 3600 * 1000000))
+    (pts, ivs)
+  }
+
+  /** Shared j8/j8b panel: events and first event id per window. */
+  private def windowCounts(joined: DataFrame) =
+    joined.groupBy("window_id")
+      .agg(count(lit(1)).as("n_events"), min(col("event_id")).as("first_event"))
+      .orderBy("window_id")
+
+  /** Oracle of j8/j8b: the plain inequality join (the result is
+    * bucket-width independent). */
+  private def windowCountsSql: String =
+    """WITH p AS (SELECT event_id, epoch_us(ts) AS t FROM events),
+      |iv AS (SELECT s_suppkey AS window_id,
+      |         1704067200000000 + s_suppkey * 50400000000 AS w_start,
+      |         1704067200000000 + s_suppkey * 50400000000 + 72000000000 AS w_end
+      |       FROM supplier WHERE s_suppkey <= 50)
+      |SELECT window_id, COUNT(*) AS n_events, MIN(event_id) AS first_event
+      |FROM iv JOIN p ON p.t >= iv.w_start AND p.t < iv.w_end
+      |GROUP BY 1 ORDER BY 1""".stripMargin
+
   /** J8: range join (engine extension) — events counted into overlapping
     * 20-hour maintenance windows via the bucketed interval join (6-hour
     * buckets: each interval explodes into ≤5 bucket rows, no cartesian).
@@ -1632,26 +1623,11 @@ object RelationalQueries {
     * plan is checked against the direct semantics. */
   private val j8RangeJoin = Q(
     (s, d) => {
-      val pts = Tables.events(s, d)
-        .select(col("event_id"), unix_micros(col("ts")).as("t"))
-      val base = 1704067200000000L // 2024-01-01 00:00:00 UTC
-      val ivs = Tables.supplier(s, d).filter(col("s_suppkey") <= 50)
-        .select(col("s_suppkey").as("window_id"),
-          (lit(base) + col("s_suppkey") * lit(14L * 3600 * 1000000)).as("w_start"))
-        .withColumn("w_end", col("w_start") + lit(20L * 3600 * 1000000))
-      rangeJoin(pts, "t", ivs, "w_start", "w_end", bucketWidth = 6L * 3600 * 1000000)
-        .groupBy("window_id")
-        .agg(count(lit(1)).as("n_events"), min(col("event_id")).as("first_event"))
-        .orderBy("window_id")
+      val (pts, ivs) = rangeJoinInputs(s, d)
+      windowCounts(
+        rangeJoin(pts, "t", ivs, "w_start", "w_end", bucketWidth = 6L * 3600 * 1000000))
     },
-    """WITH p AS (SELECT event_id, epoch_us(ts) AS t FROM events),
-      |iv AS (SELECT s_suppkey AS window_id,
-      |         1704067200000000 + s_suppkey * 50400000000 AS w_start,
-      |         1704067200000000 + s_suppkey * 50400000000 + 72000000000 AS w_end
-      |       FROM supplier WHERE s_suppkey <= 50)
-      |SELECT window_id, COUNT(*) AS n_events, MIN(event_id) AS first_event
-      |FROM iv JOIN p ON p.t >= iv.w_start AND p.t < iv.w_end
-      |GROUP BY 1 ORDER BY 1""".stripMargin)
+    windowCountsSql)
 
   /** J8b: the same range join with the bucket width DERIVED from the data
     * (median interval length via t-digest) instead of caller-supplied —
@@ -1660,26 +1636,10 @@ object RelationalQueries {
     * explode factor changes. */
   private val j8bRangeJoinAuto = Q(
     (s, d) => {
-      val pts = Tables.events(s, d)
-        .select(col("event_id"), unix_micros(col("ts")).as("t"))
-      val base = 1704067200000000L
-      val ivs = Tables.supplier(s, d).filter(col("s_suppkey") <= 50)
-        .select(col("s_suppkey").as("window_id"),
-          (lit(base) + col("s_suppkey") * lit(14L * 3600 * 1000000)).as("w_start"))
-        .withColumn("w_end", col("w_start") + lit(20L * 3600 * 1000000))
-      rangeJoinAutoWidth(pts, "t", ivs, "w_start", "w_end")
-        .groupBy("window_id")
-        .agg(count(lit(1)).as("n_events"), min(col("event_id")).as("first_event"))
-        .orderBy("window_id")
+      val (pts, ivs) = rangeJoinInputs(s, d)
+      windowCounts(rangeJoinAutoWidth(pts, "t", ivs, "w_start", "w_end"))
     },
-    """WITH p AS (SELECT event_id, epoch_us(ts) AS t FROM events),
-      |iv AS (SELECT s_suppkey AS window_id,
-      |         1704067200000000 + s_suppkey * 50400000000 AS w_start,
-      |         1704067200000000 + s_suppkey * 50400000000 + 72000000000 AS w_end
-      |       FROM supplier WHERE s_suppkey <= 50)
-      |SELECT window_id, COUNT(*) AS n_events, MIN(event_id) AS first_event
-      |FROM iv JOIN p ON p.t >= iv.w_start AND p.t < iv.w_end
-      |GROUP BY 1 ORDER BY 1""".stripMargin)
+    windowCountsSql)
 
   /** U1: union-by-name with null-filled missing columns (`bind_rows`,
     * `/root/reference/R/preseason_predictiveness.R:48-49`). */

@@ -2,7 +2,7 @@ package graft.queries
 
 import graft.{Artifacts, Tables}
 import graft.operators.Vocab
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{IntegerType, LongType}
 
@@ -272,6 +272,25 @@ object VocabQueries {
       .orderBy(col("n_uses").desc, col("token")),
     ugOracleSql)
 
+  /** Shared z50/z51/z52 stage: the corpus's distinct words, each carrying
+    * the fitted unigram cost map `vmap` (one fit, broadcast). */
+  private def ugWords(docs: DataFrame) = {
+    val fitCosts = Vocab.unigramFit(docs, "text",
+        maxTok = UgMaxTok, initMulti = UgInitMulti, pruneTo = UgPruneTo,
+        rounds = UgRounds)
+      .select(col("token"), col("cost"))
+    val vmap = fitCosts.agg(
+      map_from_entries(collect_list(struct(col("token"), col("cost"))))
+        .as("vmap"))
+    docs.select(explode(split(col("text"), " ")).as("w"))
+      .filter(col("w") =!= "").distinct()
+      .crossJoin(broadcast(vmap))
+  }
+
+  /** Shared z50/z51/z52 stage: word `w`'s token count under `vmap`. */
+  private def ugWordTokens: Column =
+    size(Vocab.unigramViterbi(col("w"), col("vmap"), UgMaxTok))
+
   /** z50: re-tokenize the corpus under the FITTED unigram vocabulary —
     * z31's accounting for the probabilistic tokenizer, gating learn →
     * encode end to end (the oracle re-derives the same fit and replays
@@ -285,20 +304,8 @@ object VocabQueries {
   private val z50UnigramTokens = Q(
     (s, d) => {
       val docs = Tables.documents(s, d)
-      val fitCosts = Vocab.unigramFit(docs, "text",
-          maxTok = UgMaxTok, initMulti = UgInitMulti, pruneTo = UgPruneTo,
-          rounds = UgRounds)
-        .select(col("token"), col("cost"))
-      val vmap = fitCosts.agg(
-        map_from_entries(collect_list(struct(col("token"), col("cost"))))
-          .as("vmap"))
-      val perWord = docs
-        .select(explode(split(col("text"), " ")).as("w"))
-        .filter(col("w") =!= "").distinct()
-        .crossJoin(broadcast(vmap))
-        .select(col("w"),
-          size(Vocab.unigramViterbi(col("w"), col("vmap"), UgMaxTok))
-            .cast(IntegerType).as("w_tokens"))
+      val perWord = ugWords(docs)
+        .select(col("w"), ugWordTokens.cast(IntegerType).as("w_tokens"))
       docs.select(col("doc_id"), explode(split(col("text"), " ")).as("w"))
         .filter(col("w") =!= "")
         .join(perWord, Seq("w"))
@@ -336,20 +343,8 @@ object VocabQueries {
   private val z51FertilityBands = Q(
     (s, d) => {
       val docs = Tables.documents(s, d)
-      val fitCosts = Vocab.unigramFit(docs, "text",
-          maxTok = UgMaxTok, initMulti = UgInitMulti, pruneTo = UgPruneTo,
-          rounds = UgRounds)
-        .select(col("token"), col("cost"))
-      val vmap = fitCosts.agg(
-        map_from_entries(collect_list(struct(col("token"), col("cost"))))
-          .as("vmap"))
-      val perWord = docs
-        .select(explode(split(col("text"), " ")).as("w"))
-        .filter(col("w") =!= "").distinct()
-        .crossJoin(broadcast(vmap))
-        .select(col("w"),
-          size(Vocab.unigramViterbi(col("w"), col("vmap"), UgMaxTok))
-            .cast(LongType).as("w_tokens"),
+      val perWord = ugWords(docs)
+        .select(col("w"), ugWordTokens.cast(LongType).as("w_tokens"),
           length(col("w")).cast(LongType).as("w_chars"))
       val perDoc = docs
         .select(col("doc_id"), col("lang"), explode(split(col("text"), " ")).as("w"))
@@ -399,20 +394,8 @@ object VocabQueries {
       val ms = merges(s, d)
       val bpe = Vocab.bpeTokenCounts(docs, "doc_id", "text", ms)
         .select(col("doc_id"), col("n_tokens").as("bt"))
-      val fitCosts = Vocab.unigramFit(docs, "text",
-          maxTok = UgMaxTok, initMulti = UgInitMulti, pruneTo = UgPruneTo,
-          rounds = UgRounds)
-        .select(col("token"), col("cost"))
-      val vmap = fitCosts.agg(
-        map_from_entries(collect_list(struct(col("token"), col("cost"))))
-          .as("vmap"))
-      val perWord = docs
-        .select(explode(split(col("text"), " ")).as("w"))
-        .filter(col("w") =!= "").distinct()
-        .crossJoin(broadcast(vmap))
-        .select(col("w"),
-          size(Vocab.unigramViterbi(col("w"), col("vmap"), UgMaxTok))
-            .cast(LongType).as("w_tokens"))
+      val perWord = ugWords(docs)
+        .select(col("w"), ugWordTokens.cast(LongType).as("w_tokens"))
       val ug = docs
         .select(col("doc_id"), explode(split(col("text"), " ")).as("w"))
         .filter(col("w") =!= "")

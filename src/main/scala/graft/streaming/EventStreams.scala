@@ -481,14 +481,7 @@ object EventStreams {
         "the max-norm augmentation scalar is undefined")
     val mnorm = mnormRow.getDouble(0)
     val idType = corpus.schema(idCol).dataType
-    val c = corpus
-      .select(col(idCol).as("c_id"), col(vecCol).as("c_vec"))
-      .withColumn("caug", concat(col("c_vec"),
-        array(sqrt(greatest(lit(mnorm * mnorm)
-          - Similarity.norm("c_vec") * Similarity.norm("c_vec"),
-          lit(0.0))).cast("float"))))
-      .withColumn("probe", Similarity.hyperplaneBucket("caug", dims + 1, planes))
-      .select("c_id", "c_vec", "probe")
+    val c = augmentedCorpus(corpus, idCol, vecCol, mnorm, dims, planes)
     queries.writeStream
       .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
         batch.persist()
@@ -496,12 +489,9 @@ object EventStreams {
           if (!batch.isEmpty) {
             val spark = batch.sparkSession
             val tomb = readTombstones(spark, tombstonePath, idCol, idType)
-            serveMipsBatch(batch, c, idCol, vecCol, tsCol, planes, dims, tomb)
-              .withColumn("batch_id", lit(batchId))
-              .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-              .option("partitionOverwriteMode", "dynamic")
-              .partitionBy("batch_id")
-              .parquet(destDir)
+            overwriteBatch(
+              serveMipsBatch(batch, c, idCol, vecCol, tsCol, planes, dims, tomb),
+              batchId, destDir)
           }
         } finally batch.unpersist()
         ()
@@ -556,6 +546,32 @@ object EventStreams {
           .parquet(p))
       }
     }
+
+  /** Shared mipsServeSink/mipsServeSinkGenerational stage: the corpus as
+    * (c_id, c_vec, probe), each vector augmented with √(M² − ‖x‖²) for
+    * the max norm `mnorm` and hyperplane-bucketed. */
+  private def augmentedCorpus(corpus: DataFrame, idCol: String, vecCol: String,
+                              mnorm: Double, dims: Int, planes: Int): DataFrame = {
+    import graft.operators.Similarity
+    corpus
+      .select(col(idCol).as("c_id"), col(vecCol).as("c_vec"))
+      .withColumn("caug", concat(col("c_vec"),
+        array(sqrt(greatest(lit(mnorm * mnorm)
+          - Similarity.norm("c_vec") * Similarity.norm("c_vec"),
+          lit(0.0))).cast("float"))))
+      .withColumn("probe", Similarity.hyperplaneBucket("caug", dims + 1, planes))
+      .select("c_id", "c_vec", "probe")
+  }
+
+  /** Shared sink write: one batch's rows replace its own `batch_id`
+    * partition under `destDir` (dynamic overwrite), so a re-delivered
+    * batch never duplicates its output. */
+  private def overwriteBatch(out: DataFrame, batchId: Long, destDir: String): Unit =
+    out.withColumn("batch_id", lit(batchId))
+      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
+      .option("partitionOverwriteMode", "dynamic")
+      .partitionBy("batch_id")
+      .parquet(destDir)
 
   /** One micro-batch of MIPS serving against a prepared (c_id, c_vec,
     * probe) index relation — the body [[mipsServeSink]] and
@@ -616,7 +632,6 @@ object EventStreams {
                                 tombstonePath: Option[String] = None,
                                 planes: Int = graft.operators.Similarity.NumPlanes,
                                 dims: Int = 64): StreamingQuery = {
-    import graft.operators.Similarity
     queries.writeStream
       .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
         batch.persist()
@@ -637,23 +652,12 @@ object EventStreams {
               (cur.getLong(0), cur.getDouble(1), cur.getString(2))
             val corpus = spark.read.parquet(corpusPath)
             val idType = corpus.schema(idCol).dataType
-            val c = corpus
-              .select(col(idCol).as("c_id"), col(vecCol).as("c_vec"))
-              .withColumn("caug", concat(col("c_vec"),
-                array(sqrt(greatest(lit(mnorm * mnorm)
-                  - Similarity.norm("c_vec") * Similarity.norm("c_vec"),
-                  lit(0.0))).cast("float"))))
-              .withColumn("probe",
-                Similarity.hyperplaneBucket("caug", dims + 1, planes))
-              .select("c_id", "c_vec", "probe")
+            val c = augmentedCorpus(corpus, idCol, vecCol, mnorm, dims, planes)
             val tomb = readTombstones(spark, tombstonePath, idCol, idType)
-            serveMipsBatch(batch, c, idCol, vecCol, tsCol, planes, dims, tomb)
-              .withColumn("serving_gen", lit(gen))
-              .withColumn("batch_id", lit(batchId))
-              .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-              .option("partitionOverwriteMode", "dynamic")
-              .partitionBy("batch_id")
-              .parquet(destDir)
+            overwriteBatch(
+              serveMipsBatch(batch, c, idCol, vecCol, tsCol, planes, dims, tomb)
+                .withColumn("serving_gen", lit(gen)),
+              batchId, destDir)
           }
         } finally batch.unpersist()
         ()

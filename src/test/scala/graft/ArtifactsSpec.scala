@@ -110,4 +110,33 @@ class ArtifactsSpec extends AnyFunSuite {
     assert(offenders.isEmpty,
       s"build through graft.Artifacts on the one construction path: $offenders")
   }
+
+  test("no window of 12 code lines appears twice under src/main/scala/graft") {
+    // a stage two queries share lives in one helper that both call; code
+    // lines are trimmed with whitespace runs collapsed, and blank and
+    // comment lines (`//`, `/*`, `*`) are skipped
+    import scala.jdk.CollectionConverters._
+    val window = 12
+    val dir = java.nio.file.Paths.get("src/main/scala/graft")
+    assert(java.nio.file.Files.isDirectory(dir), s"run from the project root: $dir")
+    val stream = java.nio.file.Files.walk(dir)
+    val files =
+      try stream.toArray.toSeq.map(_.asInstanceOf[java.nio.file.Path])
+        .filter(_.toString.endsWith(".scala")).sortBy(_.toString)
+      finally stream.close()
+    val where = scala.collection.mutable.LinkedHashMap.empty[String, Vector[String]]
+    files.foreach { f =>
+      val code = java.nio.file.Files.readAllLines(f).asScala.toVector.zipWithIndex
+        .map { case (l, i) => (i + 1, l.trim.replaceAll("\\s+", " ")) }
+        .filterNot { case (_, t) =>
+          t.isEmpty || t.startsWith("//") || t.startsWith("/*") || t.startsWith("*") }
+      code.sliding(window).filter(_.size == window).foreach { w =>
+        val key = w.map(_._2).mkString("\n")
+        where(key) = where.getOrElse(key, Vector.empty) :+ s"${dir.relativize(f)}:${w.head._1}"
+      }
+    }
+    val repeats = where.values.filter(_.size > 1).map(_.mkString(" ~ ")).toSeq
+    assert(repeats.isEmpty, s"${repeats.size} windows of $window code lines appear " +
+      s"more than once; share each in one helper:\n${repeats.mkString("\n")}")
+  }
 }

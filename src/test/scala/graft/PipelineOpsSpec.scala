@@ -150,6 +150,26 @@ class DedupSpec extends SparkSpec {
     assert(got === Map(2L -> 2L, 5L -> 2L, 9L -> 2L, 11L -> 11L, 12L -> 11L, 99L -> 99L))
   }
 
+  test("both connected-components operators throw when a chain outlasts maxIters") {
+    // chain 0-1-…-63: min-label propagation needs 63 rounds to converge,
+    // star contraction more than two
+    val pairs = (0L until 63L).map(i => (i, i + 1)).toDF("doc_a", "doc_b")
+    val nodes = (0L until 64L).toDF("doc_id")
+    val byLabel = intercept[IllegalStateException](
+      Dedup.connectedComponents(pairs, nodes, "doc_id", maxIters = 3))
+    assert(byLabel.getMessage.contains("maxIters=3"))
+    val byStar = intercept[IllegalStateException](
+      Dedup.connectedComponentsStar(pairs, nodes, "doc_id", maxIters = 2))
+    assert(byStar.getMessage.contains("maxIters=2"))
+  }
+
+  test("connectedComponents rejects a non-numeric id column and names its type") {
+    val pairs = Seq(("a", "b")).toDF("doc_a", "doc_b")
+    val err = intercept[IllegalArgumentException](
+      Dedup.connectedComponents(pairs, Seq("a", "b", "c").toDF("doc_id"), "doc_id"))
+    assert(err.getMessage.contains("'doc_id' is string"))
+  }
+
   test("pageRank: uniform on a regular graph, center-heavy on a star, mass conserved") {
     // 4-cycle: every node degree 2 → PageRank fixpoint is exactly uniform
     val cycle = Seq((1L, 2L), (2L, 3L), (3L, 4L), (1L, 4L)).toDF("doc_a", "doc_b")
