@@ -14,11 +14,80 @@ package graft
   * artifacts it built and the build seconds. A query whose first timed
   * iteration built an artifact is timed once — a later iteration would
   * time the cache hit, not the operator — so its time includes the build.
+  * Every iteration also records its codegen compiles and its process CPU
+  * by thread group ([[Codegen]], [[Cpu]]).
   */
 object Bench {
-  final case class Iteration(seconds: Double, artifactBuilds: Long, artifactBuildSeconds: Double) {
+  final case class Iteration(seconds: Double, artifactBuilds: Long, artifactBuildSeconds: Double,
+      codegen: Codegen, cpu: Cpu) {
     def json: String =
-      s"""{"s":$seconds,"artifact_builds":$artifactBuilds,"artifact_build_s":$artifactBuildSeconds}"""
+      s"""{"s":$seconds,"artifact_builds":$artifactBuilds,"artifact_build_s":$artifactBuildSeconds,""" +
+        s"""${codegen.json},${cpu.json}}"""
+  }
+
+  /** Janino compiles the run paid: whole-stage and expression codegen
+    * classes not found in Spark's per-JVM codegen cache. `ms` is
+    * approximate: the compile-time histogram keeps a decaying sample, so
+    * it is the compile count times the sample's mean. */
+  final case class Codegen(compiles: Long, ms: Double) {
+    def json: String = s""""codegen_compiles":$compiles,"codegen_ms":$ms"""
+  }
+
+  /** Process CPU seconds over a run, split by thread group:
+    * `task` — executor task threads; `driver` — the thread that called
+    * [[run]] (`main` in every harness: construction, Catalyst, job
+    * submission); `exchange` — AQE's `shuffle-exchange` and
+    * `broadcast-exchange` threads; `service` — every other live JVM
+    * thread (listener bus, RPC dispatcher, block manager, cleaner);
+    * `other` — process CPU minus the sum over threads: JIT compiler and
+    * GC threads, which ThreadMXBean does not list, and threads that ended
+    * during the run. The five parts sum to `process`. */
+  final case class Cpu(process: Double, task: Double, driver: Double, exchange: Double,
+      service: Double, other: Double) {
+    def json: String =
+      s""""process_cpu_s":$process,"task_cpu_s":$task,"driver_cpu_s":$driver,""" +
+        s""""exchange_cpu_s":$exchange,"service_cpu_s":$service,"other_cpu_s":$other"""
+  }
+
+  private val threads =
+    java.lang.management.ManagementFactory.getThreadMXBean.asInstanceOf[com.sun.management.ThreadMXBean]
+  private val os = java.lang.management.ManagementFactory.getOperatingSystemMXBean
+    .asInstanceOf[com.sun.management.OperatingSystemMXBean]
+  private def compileTime = org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME
+
+  /** Process and per-thread CPU nanoseconds, and the compile count, at
+    * one instant. */
+  private final case class Probe(process: Long, threadIds: Array[Long], threadNs: Array[Long],
+      compiles: Long)
+
+  private def probe(): Probe = {
+    val ids = threads.getAllThreadIds
+    Probe(os.getProcessCpuTime, ids, threads.getThreadCpuTime(ids), compileTime.getCount)
+  }
+
+  /** The compiles and CPU since `start`, taken on the thread that took
+    * `start`. A thread that started later counts from 0; a thread that
+    * ended between listing and reading (-1) counts 0. */
+  private def since(start: Probe): (Codegen, Cpu) = {
+    val end = probe()
+    val driver = Thread.currentThread.getId
+    val before = start.threadIds.zip(start.threadNs).toMap
+    val names = threads.getThreadInfo(end.threadIds).map(i => if (i == null) "" else i.getThreadName)
+    def group(i: Int): String =
+      if (names(i).startsWith("Executor task launch worker")) "task"
+      else if (end.threadIds(i) == driver) "driver"
+      else if (names(i).startsWith("shuffle-exchange") || names(i).startsWith("broadcast-exchange"))
+        "exchange"
+      else "service"
+    val ns = end.threadIds.indices.groupMapReduce(group) { i =>
+      (end.threadNs(i) - before.getOrElse(end.threadIds(i), 0L).max(0L)).max(0L)
+    }(_ + _).withDefaultValue(0L)
+    val process = end.process - start.process
+    val compiles = end.compiles - start.compiles
+    val s = (n: Long) => n / 1e9
+    (Codegen(compiles, compiles * compileTime.getSnapshot.getMean),
+      Cpu(s(process), s(ns("task")), s(ns("driver")), s(ns("exchange")), s(ns("service")),
+        s(process - ns.values.sum)))
   }
 
   /** The run step every harness shares (Bench, Soak, AbTest, Profile):
@@ -27,6 +96,7 @@ object Bench {
     * failed run prints its error and reports -1 s. */
   def run(spark: org.apache.spark.sql.SparkSession, dir: String, name: String): Iteration = {
     val before = Artifacts.stats(spark)
+    val start = probe()
     val t0 = System.nanoTime()
     val elapsed =
       try {
@@ -37,13 +107,14 @@ object Bench {
         System.err.println(s"[bench] $name failed: ${e.getMessage}")
         -1.0
       }
+    val (codegen, cpu) = since(start)
     val built = Artifacts.stats(spark) - before
     // the block sweep is bench hygiene, not query cost: without it 284
     // runs accumulate never-unpersisted checkpoint blocks (round-3: x6
     // 26 s vs 1 s fresh-JVM), but its driver-side unpersist calls must
     // not bias the measurement, so it runs AFTER elapsed is captured
     Housekeeping.releaseAllBlocks(spark)
-    Iteration(elapsed, built.builds, built.buildSeconds)
+    Iteration(elapsed, built.builds, built.buildSeconds, codegen, cpu)
   }
 
   def main(args: Array[String]): Unit = {

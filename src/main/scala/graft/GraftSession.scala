@@ -57,6 +57,24 @@ object GraftSession {
       .config("spark.sql.parquet.compression.codec", "snappy")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.extensions", "graft.plans.GraftExtensions")
+      // Spark's codegen cache (default 100 classes) is smaller than what
+      // one pass over the registry generates, so a session that runs the
+      // same queries again recompiled nearly every class in Janino (1129
+      // of 1281 on a repeat pass over 42 queries). The cache is keyed on
+      // the generated source, and by default each whole-stage class is
+      // named after its stage id, which AQE assigns in the order it plans
+      // stages: the same stage could get a new name, and a new compile, on
+      // a re-run (74 of 86 classes for y11 on Bench's second iteration).
+      // One class name lets identical stages share one class; the id stays
+      // in the plan and in the generated code's comment. With it, one
+      // graft.Bench pass at sf0.01 (warm-up plus every query once)
+      // generates 4295 distinct classes; 6144 leaves ~40% headroom. The
+      // cache holds classes, not data: those 4295 cost 164 MB of heap
+      // (source-text keys, bytecode) plus 38 MB of Metaspace, ~47 KB a
+      // class, so a full cache holds ~290 MB. maxEntries is a static conf,
+      // read once per JVM when CodeGenerator is first used.
+      .config("spark.sql.codegen.cache.maxEntries", "6144")
+      .config("spark.sql.codegen.useIdInClassName", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark

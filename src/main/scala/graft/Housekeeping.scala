@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.CheckpointRelease
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Block hygiene for long-lived sessions.
@@ -92,7 +93,7 @@ object Housekeeping {
         }
       }
       persistent.foreach { case (id, rdd) =>
-        if (ids.contains(id)) rdd.unpersist(blocking = false)
+        if (ids.contains(id)) CheckpointRelease(rdd, blocking = false)
       }
     }
   }
@@ -186,7 +187,7 @@ object Housekeeping {
     spark.catalog.clearCache()
     spark.sparkContext.getPersistentRDDs.foreach { case (id, rdd) =>
       if (!retained.contains((app, id))) {
-        rdd.unpersist(blocking = false)
+        CheckpointRelease(rdd, blocking = false)
         lazyPending.remove((app, id))
       }
     }

@@ -101,7 +101,7 @@ object Dedup {
     * thousands of docs carries no near-dup signal). Costs one extra
     * aggregation over the banded relation when set. */
   private def pairJoin(banded: DataFrame, idCol: String,
-                       maxBucket: Option[Long] = None): DataFrame = {
+                       maxBucket: Option[Long]): DataFrame = {
     val kept = maxBucket.fold(banded)(capBuckets(banded, _))
     val a = kept.select(col(idCol).as("doc_a"), col("band"), col("key"))
     val b = kept.select(col(idCol).as("doc_b"), col("band"), col("key"))
@@ -653,7 +653,7 @@ object Dedup {
       sym.df.groupBy("src").agg(count(lit(1)).as("deg")))
     // scalar metadata action (node count), not a data collect
     val n = deg.df.count().toDouble
-    var rank = Housekeeping.pin(spark)(
+    val rank = Housekeeping.pin(spark)(
       deg.df.select(col("src").as("node"), col("deg"),
         (lit(1.0) / lit(n)).as("rank")))
     // checkpoint cadence (r13, guide §1.2): a fixed small iteration count
@@ -796,7 +796,7 @@ object Dedup {
     * inflate n_dup/n_contam; at 62 bits the collision expectation stays
     * ≪ 1 per 10⁹·100-word corpus. */
   private def spanFingerprints(docs: DataFrame, idCol: String, textCol: String,
-                               k: Int, rolling: Boolean = false): DataFrame = {
+                               k: Int, rolling: Boolean): DataFrame = {
     // fanOut (r13): the ANCHOR form pays one md5 per window — CPU-dense,
     // and the one-file bench corpus scans as ONE task (x19 A/B: −0.2 s
     // with fanOut; identity at production scan parallelism). The ROLLING

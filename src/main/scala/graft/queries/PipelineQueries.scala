@@ -5598,7 +5598,6 @@ object PipelineQueries {
   private val y18IndexAppend = Q(
     (s, d) => {
       import org.apache.spark.sql.types.{DecimalType, DoubleType, LongType}
-      val e = Tables.embeddings(s, d)
       val index = y18StoredIndex(s, d)
       val M = lit(2147483647L)
       index.groupBy("cell").agg(
@@ -8593,7 +8592,6 @@ object PipelineQueries {
       val run = x41StoredRun(s, d)
       val lm = x40LmStored(s, d)
       val bm = baseMapStored(s, d)
-      val e = Tables.embeddings(s, d)
       val idx = y18StoredIndex(s, d)
 
       def manifestRow(name: String, agg: org.apache.spark.sql.DataFrame) =
@@ -9168,7 +9166,6 @@ object PipelineQueries {
       val run = x41StoredRun(s, d)
       val lm = x40LmStored(s, d)
       val bm = baseMapStored(s, d)
-      val e = Tables.embeddings(s, d)
       val idx = y18StoredIndex(s, d)
 
       // tombstone artifacts: one conditional-aggregation pass each

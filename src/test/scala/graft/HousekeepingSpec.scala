@@ -1,5 +1,9 @@
 package graft
 
+import org.apache.logging.log4j.LogManager
+import org.apache.logging.log4j.core.{LogEvent, Logger}
+import org.apache.logging.log4j.core.appender.AbstractAppender
+import org.apache.logging.log4j.core.config.Property
 import org.apache.spark.sql.functions.col
 
 /** Gate for the round-3 bench-poisoning diagnosis: checkpoint-heavy queries
@@ -67,5 +71,36 @@ class HousekeepingSpec extends SparkSpec {
     assert(child.df.count() == 50)
     child.free(); parent.free()
     Housekeeping.releaseAllBlocks(spark)
+  }
+
+  /** The messages logged through the root logger while `body` runs. */
+  private def logged(body: => Unit): Seq[String] = {
+    val messages = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val appender = new AbstractAppender("capture", null, null, true, Property.EMPTY_ARRAY) {
+      def append(e: LogEvent): Unit = messages.add(s"${e.getLevel} ${e.getMessage.getFormattedMessage}")
+    }
+    appender.start()
+    val root = LogManager.getRootLogger.asInstanceOf[Logger]
+    root.addAppender(appender)
+    try body finally { root.removeAppender(appender); appender.stop() }
+    messages.toArray(Array.empty[String]).toSeq
+  }
+
+  test("free and the sweep drop locally checkpointed blocks without the unpersist WARN") {
+    val sp = spark
+    import sp.implicits._
+    val sc = spark.sparkContext
+    val freed = Housekeeping.pin(spark)((1L to 100L).toDF("v"))
+    val swept = Housekeeping.pin(spark)(freed.df.filter(col("v") % 3 === 0))
+    val ids = freed.ids ++ swept.ids
+    assert(ids.nonEmpty && ids.subsetOf(sc.getPersistentRDDs.keySet))
+    val messages = logged {
+      freed.free()
+      assert(!sc.getPersistentRDDs.keySet.exists(freed.ids), s"free left ${freed.ids}")
+      Housekeeping.releaseAllBlocks(spark)
+    }
+    assert(!sc.getPersistentRDDs.keySet.exists(ids), s"blocks of $ids outlived free and the sweep")
+    val warned = messages.filter(_.contains("locally checkpointed"))
+    assert(warned.isEmpty, warned.mkString("\n"))
   }
 }

@@ -382,7 +382,7 @@ class RelationalSpec extends SparkSpec {
     def fit(data: Seq[(Double, Double, Double)]): (Double, Double, Double) = {
       var (b0, b1, b2) = (0.0, 0.0, 0.0)
       for (_ <- 1 to 4) {
-        var m = Array.ofDim[Double](3, 3); var r = new Array[Double](3)
+        val m = Array.ofDim[Double](3, 3); val r = new Array[Double](3)
         for ((x1, x2, y) <- data) {
           val eta = b0 + b1 * x1 + b2 * x2
           val mu = math.max(1e-6, math.min(0.999999, 1.0 / (1.0 + math.exp(-eta))))

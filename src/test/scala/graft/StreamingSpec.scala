@@ -205,7 +205,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("curationRouter with scrubText edits survivors identically to the batch spanScrub") {
-    import graft.operators.{Dedup, TextAnalysis}
+    import graft.operators.Dedup
     val ref = Seq((100L, (1 to 24).map(i => f"r$i%02d").mkString(" ")))
       .toDF("doc_id", "text")
     // all three survive the gates; doc 2 carries a 3-word reference run
