@@ -29,6 +29,10 @@ object Artifacts {
   private val built =
     new java.util.concurrent.ConcurrentHashMap[(String, String, String), AnyRef]()
   private val counters = new java.util.concurrent.ConcurrentHashMap[String, Stats]()
+  // the checkpoint ids each entry's build retained (nested builds included),
+  // handed back to the block sweep when evict drops the entry
+  private val retainedBy =
+    new java.util.concurrent.ConcurrentHashMap[(String, String, String), Set[Int]]()
   // nesting depth of the running builds: only the outermost build adds its
   // seconds, so buildSeconds never exceeds the wall time it describes
   private val depth = new ThreadLocal[Int] { override def initialValue(): Int = 0 }
@@ -48,9 +52,12 @@ object Artifacts {
       hit.asInstanceOf[A]
     } else {
       val t0 = System.nanoTime()
+      val retainedBefore = Housekeeping.retainedIn(app)
       depth.set(depth.get + 1)
       val v = try build finally depth.set(depth.get - 1)
       val secs = if (depth.get == 0) (System.nanoTime() - t0) / 1e9 else 0.0
+      val kept = Housekeeping.retainedIn(app) -- retainedBefore
+      if (kept.nonEmpty) retainedBy.put(key, kept)
       built.put(key, v.asInstanceOf[AnyRef])
       count(app, Stats(1, 0, secs))
       v
@@ -61,13 +68,25 @@ object Artifacts {
     * [[getOrBuild]] of any of them builds again. Other directories, other
     * applications and the counters are left alone, and nothing on disk is
     * deleted (each builder clears its scratch path before it writes).
-    * Blocks a build registered through [[Housekeeping.retainCheckpoint]]
-    * stay retained. */
+    * The checkpoint blocks a dropped entry's build registered through
+    * [[Housekeeping.retainCheckpoint]] go back to the block sweep, unless
+    * the build of an entry still cached retained them too: the next
+    * [[Housekeeping.releaseAllBlocks]] frees them, so a frame taken from a
+    * dropped entry must not run after that sweep. */
   def evict(spark: SparkSession, dir: String): Unit =
     evictIn(spark.sparkContext.applicationId, dir)
 
-  private[graft] def evictIn(app: String, dir: String): Unit =
-    built.keySet.removeIf(k => k._1 == app && k._2 == dir)
+  private[graft] def evictIn(app: String, dir: String): Unit = {
+    val dropped = (app, dir)
+    built.keySet.removeIf(k => (k._1, k._2) == dropped)
+    var freed = Set.empty[Int]
+    var live = Set.empty[Int]
+    retainedBy.forEach { (k, ids) =>
+      if ((k._1, k._2) == dropped) freed ++= ids else if (k._1 == app) live ++= ids
+    }
+    retainedBy.keySet.removeIf(k => (k._1, k._2) == dropped)
+    Housekeeping.unretainIn(app, freed -- live)
+  }
 
   /** Builds, hits and outermost build seconds so far in this application. */
   def stats(spark: SparkSession): Stats = statsIn(spark.sparkContext.applicationId)

@@ -22,24 +22,29 @@ object Explain {
           // formatted mode includes scan detail (PushedFilters/ReadSchema)
           // that the plain executedPlan string omits under AQE
           val qe = SparkEntry.queries(name)(spark, sfDir).queryExecution
-          val plan = qe.explainString(org.apache.spark.sql.execution.FormattedMode)
-          val join =
-            if (plan.contains("BroadcastHashJoin")) "broadcast"
-            else if (plan.contains("SortMergeJoin")) "SMJ"
-            else if (plan.contains("ShuffledHashJoin")) "SHJ"
-            else if (plan.contains("BroadcastNestedLoopJoin")) "BNLJ"
-            else "-"
-          val pushed = "PushedFilters: \\[([^\\]]*)\\]".r
-            .findFirstMatchIn(plan).map(_.group(1)).getOrElse("")
-          val readCols = "ReadSchema: struct<([^>]*)>".r
-            .findFirstMatchIn(plan).map(_.group(1).count(_ == ':')).getOrElse(-1)
-          // formatted mode marks codegen membership as `[codegen id : N]`
-          val codegen = "codegen id : (\\d+)".r
-            .findAllMatchIn(plan).map(_.group(1)).toSet.size
-          val exchanges = "Exchange ".r.findAllIn(plan).size
-          println(f"$name%-24s join=$join%-10s shuffles=$exchanges codegen=$codegen readCols=$readCols pushed=${pushed.nonEmpty}")
+          println(summary(name, qe.explainString(org.apache.spark.sql.execution.FormattedMode)))
         }
     }
     spark.stop()
+  }
+
+  /** One line for a formatted plan: join strategy, shuffle and codegen
+    * counts, read-schema width and whether filters were pushed. */
+  private def summary(name: String, plan: String): String = {
+    val join =
+      if (plan.contains("BroadcastHashJoin")) "broadcast"
+      else if (plan.contains("SortMergeJoin")) "SMJ"
+      else if (plan.contains("ShuffledHashJoin")) "SHJ"
+      else if (plan.contains("BroadcastNestedLoopJoin")) "BNLJ"
+      else "-"
+    val pushed = "PushedFilters: \\[([^\\]]*)\\]".r
+      .findFirstMatchIn(plan).map(_.group(1)).getOrElse("")
+    val readCols = "ReadSchema: struct<([^>]*)>".r
+      .findFirstMatchIn(plan).map(_.group(1).count(_ == ':')).getOrElse(-1)
+    // formatted mode marks codegen membership as `[codegen id : N]`
+    val codegen = "codegen id : (\\d+)".r
+      .findAllMatchIn(plan).map(_.group(1)).toSet.size
+    val exchanges = "Exchange ".r.findAllIn(plan).size
+    f"$name%-24s join=$join%-10s shuffles=$exchanges codegen=$codegen readCols=$readCols pushed=${pushed.nonEmpty}"
   }
 }

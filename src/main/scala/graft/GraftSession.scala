@@ -39,19 +39,16 @@ object GraftSession {
       // tiny tasks across their many small stages (x24 3.6 vs 2.2 s,
       // x8 4.0 vs 2.7 s, m7 9.2 vs 7.3 s, z58 5.2 vs 3.9 s, x25 4.6 vs
       // 3.7 s). So the session default returns to Spark's 1m and the
-      // three pair-scoring queries scope the 64k floor to themselves via
-      // Housekeeping.scopedConf (restored by the harness sweep).
-      // Env-overridable for cluster tuning either way.
+      // pair-scoring queries declare the 64k floor as a query conf, which
+      // the run step sets around them (Q.confs).
       // r13: partitioned-store reads with >32 partition dirs were paying a
       // DISTRIBUTED listing job (~100–150 ms of job overhead per read) —
       // on local FS the driver lists 60 paths in ~ms, so the threshold
-      // rises to 1024 here; an object-store deployment, where listing
-      // really is the bottleneck, sets SPARK_GRAFT_LIST_PAR back down
-      // (the upstream default is 32).
-      .config("spark.sql.sources.parallelPartitionDiscovery.threshold",
-        sys.env.getOrElse("SPARK_GRAFT_LIST_PAR", "1024"))
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("SPARK_GRAFT_MIN_PART", "1m"))
+      // rises to 1024 here (the upstream default is 32; an object-store
+      // deployment, where listing really is the bottleneck, builds its own
+      // session).
+      .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "1024")
+      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "1m")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .config("spark.sql.parquet.compression.codec", "snappy")

@@ -26,8 +26,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * once per session through [[Artifacts.getOrBuild]] and read by later
   * queries (the flagship panel, multi-day tail artifacts) registers the
   * checkpoint blocks it keeps as process-lifetime so the per-query sweep
-  * skips them. Each build chooses which of its frames outlive the sweep;
-  * everything else it leaves behind is swept. The registry holds RDD ids,
+  * skips them, until [[Artifacts.evict]] drops the entry that built them.
+  * Each build chooses which of its frames outlive the sweep; everything
+  * else it leaves behind is swept. The registry holds RDD ids,
   * not references — a handful of ints.
   */
 object Housekeeping {
@@ -144,8 +145,9 @@ object Housekeeping {
   }
 
   /** RDD ids registered as process-lifetime for THIS session's context. */
-  def retainedIds(spark: SparkSession): Set[Int] = {
-    val app = spark.sparkContext.applicationId
+  def retainedIds(spark: SparkSession): Set[Int] = retainedIn(spark.sparkContext.applicationId)
+
+  private[graft] def retainedIn(app: String): Set[Int] = {
     val it = retained.iterator()
     val b = Set.newBuilder[Int]
     while (it.hasNext) {
@@ -155,33 +157,15 @@ object Housekeeping {
     b.result()
   }
 
-  /** Per-QUERY session-conf overrides (r14, r13 verdict #6): a handful of
-    * queries need an execution conf the session default would mis-serve —
-    * x23/x16/x17's byte-tiny, CPU-dense pair-scoring stages need the AQE
-    * coalescing floor at 64k (bytes underestimate per-pair compute), while
-    * the session-wide 64k floor of r13 cost the CC/minhash band 1.3–1.9 s
-    * per query in un-coalesced tiny tasks (in-JVM A/B, OPTIMIZATION_r14.md).
-    * Spark has no per-plan conf, so the query lambda registers the override
-    * here at construction; it applies through the query's execution, and
-    * the harness sweep ([[releaseAllBlocks]], run by Bench/Verify/Profile/
-    * AbTest/Soak after every query) restores the session value. Outside a
-    * harness the override persists until the next sweep — the documented
-    * caveat, strictly narrower than r13's session-wide setting. */
-  private val scopedConfs =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), Option[String]]()
-
-  def scopedConf(spark: SparkSession, key: String, value: String): Unit = {
-    val app = spark.sparkContext.applicationId
-    // first registration wins: the stored original is the true session
-    // default even if the query re-registers across bench iterations
-    scopedConfs.putIfAbsent((app, key), spark.conf.getOption(key))
-    spark.conf.set(key, value)
-  }
+  /** Returns retained ids to the sweep: the next [[releaseAllBlocks]]
+    * frees their blocks ([[Artifacts.evict]] calls this for the entries it
+    * drops). */
+  private[graft] def unretainIn(app: String, ids: Set[Int]): Unit =
+    ids.foreach(id => retained.remove((app, id)))
 
   /** Drop every cached/persisted/checkpointed block the last query run left
     * behind, except the process-lifetime set. Non-blocking: the executors
-    * free the blocks asynchronously while the next query plans. Also
-    * restores any [[scopedConf]] overrides the query registered. */
+    * free the blocks asynchronously while the next query plans. */
   def releaseAllBlocks(spark: SparkSession): Unit = {
     val app = spark.sparkContext.applicationId
     spark.catalog.clearCache()
@@ -189,17 +173,6 @@ object Housekeeping {
       if (!retained.contains((app, id))) {
         CheckpointRelease(rdd, blocking = false)
         lazyPending.remove((app, id))
-      }
-    }
-    val it = scopedConfs.entrySet().iterator()
-    while (it.hasNext) {
-      val e = it.next()
-      if (e.getKey._1 == app) {
-        e.getValue match {
-          case Some(v) => spark.conf.set(e.getKey._2, v)
-          case None => spark.conf.unset(e.getKey._2)
-        }
-        it.remove()
       }
     }
   }

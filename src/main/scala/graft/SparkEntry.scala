@@ -13,7 +13,7 @@ import graft.queries._
 object SparkEntry {
 
   /** All declared queries, grouped by module. */
-  private def registry: Map[String, Q] =
+  private[graft] def registry: Map[String, Q] =
     RelationalQueries.all ++ WindowQueries.all ++ MetricQueries.all ++
       PipelineQueries.all ++ FlagshipQueries.all ++ MarketQueries.all ++
       VocabQueries.all
@@ -28,5 +28,5 @@ object SparkEntry {
     registry.map { case (k, q) => k -> q.fn }
 
   def oracleSql: Map[String, String] =
-    registry.collect { case (k, Q(_, Some(sql))) => k -> sql }
+    registry.collect { case (k, Q(_, Some(sql), _)) => k -> sql }
 }

@@ -446,45 +446,66 @@ object Relational {
     * + `__tot` (group total). */
   private def rangedRankTot(df: DataFrame, groups: Seq[String],
                             order: Seq[String]): DataFrame = {
-    // NOTE: name resolution is case-INsensitive by default, so helper
-    // names must differ by more than case ("__n" vs "__N" would collide)
-    // __opid and the __og<i> join-key aliases are created on the offsets
-    // side — an input column with one of those names would make the join
-    // condition ambiguous (or be silently dropped by the cleanup), so they
-    // are reserved too
-    val reserved = Seq("__pid", "__loc", "__off", "__tot", "__rn", "__n", "__opid")
-    require(!df.columns.exists(c =>
-        reserved.contains(c.toLowerCase) || c.toLowerCase.startsWith("__og")),
-      s"column names ${reserved.mkString("/")} and the __og* prefix are reserved")
-    val sortCols = (groups ++ order).map(col)
-    val parts = df.sparkSession.sessionState.conf.numShufflePartitions
-    val ranged = graft.Housekeeping.pin(df.sparkSession)(
-      df.repartitionByRange(parts, sortCols: _*)
-        .withColumn("__pid", spark_partition_id())).df
+    val ranged = rangePinned(df, groups, order,
+      Seq("__pid", "__loc", "__off", "__tot", "__rn", "__n", "__opid"))
     val groupCols = groups.map(col)
     val cellCounts = ranged.groupBy(col("__pid") +: groupCols: _*)
       .agg(count(lit(1)).as("__n"))
     val wOff = Window.partitionBy(groupCols: _*).orderBy(col("__pid"))
       .rowsBetween(Window.unboundedPreceding, -1)
     val wTot = Window.partitionBy(groupCols: _*)
-    // rename the join keys instead of using-columns syntax: the group
-    // match must be NULL-SAFE (<=>) or NULL-group rows silently vanish
-    val offsets = cellCounts
+    val cells = cellCounts
       .withColumn("__off", coalesce(sum(col("__n")).over(wOff), lit(0L)))
       .withColumn("__tot", sum(col("__n")).over(wTot))
       .drop("__n")
-      .withColumnRenamed("__pid", "__opid")
-      .select(col("__opid") +: col("__off") +: col("__tot") +:
-        groups.zipWithIndex.map { case (g, i) => col(g).as(s"__og$i") }: _*)
-    val joinCond = (col("__pid") === col("__opid")) +:
-      groups.zipWithIndex.map { case (g, i) => col(g) <=> col(s"__og$i") }
     val wLoc = Window.partitionBy(col("__pid") +: groupCols: _*)
       .orderBy(order.map(col): _*)
+    plusOffsets(ranged, cells, groups, Seq("__tot"), row_number().over(wLoc), "__rn")
+  }
+
+  /** Range-partitions `df` on (groups ++ order) over the session's shuffle
+    * partitions and pins it with each row's partition id as `__pid`, so
+    * both passes of [[rangedRankTot]] and [[groupedRunningTotal]] observe
+    * the same memberships. `reserved` names (and the `__og*` prefix) must
+    * not be input columns. */
+  private def rangePinned(df: DataFrame, groups: Seq[String], order: Seq[String],
+                          reserved: Seq[String]): DataFrame = {
+    // NOTE: name resolution is case-INsensitive by default, so helper
+    // names must differ by more than case ("__n" vs "__N" would collide)
+    // __opid and the __og<i> join-key aliases are created on the offsets
+    // side — an input column with one of those names would make the join
+    // condition ambiguous (or be silently dropped by the cleanup), so they
+    // are reserved too
+    require(!df.columns.exists(c =>
+        reserved.contains(c.toLowerCase) || c.toLowerCase.startsWith("__og")),
+      s"column names ${reserved.mkString("/")} and the __og* prefix are reserved")
+    val sortCols = (groups ++ order).map(col)
+    val parts = df.sparkSession.sessionState.conf.numShufflePartitions
+    graft.Housekeeping.pin(df.sparkSession)(
+      df.repartitionByRange(parts, sortCols: _*)
+        .withColumn("__pid", spark_partition_id())).df
+  }
+
+  /** The second pass of [[rangedRankTot]] and [[groupedRunningTotal]]:
+    * joins each row of `ranged` to its (partition, group) cell in `cells`
+    * (`__pid`, the groups, `__off` and the `carry` columns) and writes
+    * `out` = `local` (a window over the row's partition and group) + the
+    * cell's offset `__off`. */
+  private def plusOffsets(ranged: DataFrame, cells: DataFrame, groups: Seq[String],
+                          carry: Seq[String], local: Column, out: String): DataFrame = {
+    // rename the join keys instead of using-columns syntax: the group
+    // match must be NULL-SAFE (<=>) or NULL-group rows silently vanish
+    val offsets = cells
+      .withColumnRenamed("__pid", "__opid")
+      .select(col("__opid") +: col("__off") +: (carry.map(col) ++
+        groups.zipWithIndex.map { case (g, i) => col(g).as(s"__og$i") }): _*)
+    val joinCond = (col("__pid") === col("__opid")) +:
+      groups.zipWithIndex.map { case (g, i) => col(g) <=> col(s"__og$i") }
     ranged
-      .withColumn("__loc", row_number().over(wLoc))
+      .withColumn("__loc", local)
       .join(offsets, joinCond.reduce(_ && _))
       .drop("__opid" +: groups.indices.map(i => s"__og$i"): _*)
-      .withColumn("__rn", col("__loc") + col("__off"))
+      .withColumn(out, col("__loc") + col("__off"))
       .drop("__pid", "__loc", "__off")
   }
 
@@ -579,39 +600,19 @@ object Relational {
     * join), matching the window form. */
   def groupedRunningTotal(df: DataFrame, groups: Seq[String], order: Seq[String],
                           valueCol: String, out: String): DataFrame = {
-    val reserved = Seq("__pid", "__loc", "__off", "__s", "__opid")
-    require(!df.columns.exists(c =>
-        reserved.contains(c.toLowerCase) || c.toLowerCase.startsWith("__og")),
-      s"column names ${reserved.mkString("/")} and the __og* prefix are reserved")
-    val sortCols = (groups ++ order).map(col)
-    val parts = df.sparkSession.sessionState.conf.numShufflePartitions
-    val ranged = graft.Housekeeping.pin(df.sparkSession)(
-      df.repartitionByRange(parts, sortCols: _*)
-        .withColumn("__pid", spark_partition_id())).df
+    val ranged = rangePinned(df, groups, order, Seq("__pid", "__loc", "__off", "__s", "__opid"))
     val groupCols = groups.map(col)
     val cells = ranged.groupBy(col("__pid") +: groupCols: _*)
       .agg(sum(col(valueCol)).as("__s"))
     val wOff = Window.partitionBy(groupCols: _*).orderBy(col("__pid"))
       .rowsBetween(Window.unboundedPreceding, -1)
-    // rename join keys; the group match must be NULL-SAFE (<=>) or
-    // NULL-group rows silently vanish (groupedNtile's rule)
     val offsets = cells
       .withColumn("__off", coalesce(sum(col("__s")).over(wOff), lit(0L)))
       .drop("__s")
-      .withColumnRenamed("__pid", "__opid")
-      .select(col("__opid") +: col("__off") +:
-        groups.zipWithIndex.map { case (g, i) => col(g).as(s"__og$i") }: _*)
-    val joinCond = (col("__pid") === col("__opid")) +:
-      groups.zipWithIndex.map { case (g, i) => col(g) <=> col(s"__og$i") }
     val wLoc = Window.partitionBy(col("__pid") +: groupCols: _*)
       .orderBy(order.map(col): _*)
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    ranged
-      .withColumn("__loc", sum(col(valueCol)).over(wLoc))
-      .join(offsets, joinCond.reduce(_ && _))
-      .drop("__opid" +: groups.indices.map(i => s"__og$i"): _*)
-      .withColumn(out, col("__loc") + col("__off"))
-      .drop("__pid", "__loc", "__off")
+    plusOffsets(ranged, offsets, groups, Nil, sum(col(valueCol)).over(wLoc), out)
   }
 
   /** One mergeable aggregate for [[Relational.saltedAgg]]: `partial` runs

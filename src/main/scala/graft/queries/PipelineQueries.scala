@@ -129,6 +129,16 @@ object PipelineQueries {
     * oracle CTEs, so correctness holds at ANY SF. */
   private val X2MaxBucket = 16L
 
+  /** AQE coalescing floor declared by the byte-tiny but CPU-dense pair
+    * scorers (x16/x17 head levenshtein, x23 bucket-join dots, y9b blocked
+    * ADC): Spark's 1m default merges their scoring stage into one task
+    * (in-JVM A/B, OPTIMIZATION_r14.md: x23 7.2 vs 2.0 s, x16 3.6 vs
+    * 1.4 s, x17 6.4 vs 5.8 s, y9b 2.12 vs 1.49 s), while a session-wide
+    * 64k costs the CC/minhash band 1.0–1.9 s a query. The run step sets
+    * it around each of those queries ([[Q]]'s `confs`). */
+  private val PairScoringFloor =
+    Map("spark.sql.adaptive.coalescePartitions.minPartitionSize" -> "64k")
+
   /** Stop-shingle df cap for exact-Jaccard paths (x4/x24) — see x4's
     * scaladoc for the measured rationale. Declared here (not next to x4)
     * because Scala vals initialize in declaration order and x24's oracle
@@ -630,12 +640,6 @@ object PipelineQueries {
     * the declared fuzzy-verify query and the curation composition can
     * never drift on the edge definition. */
   private def headEditPairs(s: SparkSession, d: String) = {
-    // scoped AQE floor (r14, guide §2.5): the levenshtein-per-pair stage
-    // is byte-tiny but CPU-dense — the 1m default coalesces it to one
-    // task (x16 3.6 s vs 1.4 s, x17 6.4 vs 5.8, in-JVM A/B). 64k applies
-    // to THIS query only; the harness sweep restores the session default.
-    graft.Housekeeping.scopedConf(s,
-      "spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
     val pairs = Dedup.lshCandidates(minhashSig(s, d), "doc_id", 8,
       maxBucket = Some(X2MaxBucket))
     val heads = Tables.documents(s, d)
@@ -661,7 +665,7 @@ object PipelineQueries {
        |  levenshtein(substring(da.text, 1, 40), substring(db.text, 1, 40)) <= 10 AS is_close
        |FROM p JOIN documents da ON da.doc_id = p.doc_a
        |       JOIN documents db ON db.doc_id = p.doc_b
-       |ORDER BY p.doc_a, p.doc_b""".stripMargin)
+       |ORDER BY p.doc_a, p.doc_b""".stripMargin, PairScoringFloor)
 
   /** x17: curation v3 — THIS round's operators composed as one declared
     * corpus build: (1) lexical-diversity gate (type-token ratio ≥ 0.3 as
@@ -752,7 +756,7 @@ object PipelineQueries {
        |    CAST(NTILE(10) OVER (PARTITION BY lang ORDER BY n_chars, doc_id) AS INT) AS decile
        |  FROM keptd)
        |SELECT lang, decile, COUNT(*) AS n_docs, CAST(SUM(ws) AS BIGINT) AS total_tokens
-       |FROM t GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin)
+       |FROM t GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin, PairScoringFloor)
 
   /** z11: benchmark decontamination — per training document, the count of
     * its distinct 3-gram shingles that appear in the benchmark set (docs
@@ -1560,7 +1564,7 @@ object PipelineQueries {
             concat_ws(":", col("h1"), col("h2"))))
         .otherwise(lit(0L)))
     // retainCheckpoint, not pin: these frames live in x55's/x58's artifact
-    // across constructions (Bench/Soak run every query twice), so their
+    // across constructions (Bench runs every query twice), so their
     // blocks must survive the per-query releaseAllBlocks sweep — a pinned
     // frame would be unpersisted after run 1 and run 2 would hit
     // CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND (lineage is truncated).
@@ -4774,12 +4778,6 @@ object PipelineQueries {
     * still-true inequality. */
   private val y9bIvfPqRotated = Q(
     (s, d) => {
-      // scoped AQE floor (r14): both arms' blocked ADC scoring is
-      // byte-tiny but CPU-dense — 64k vs 1m measured 1.49 vs 2.12 s
-      // (min of 4, in-JVM A/B); same class as x23's pair scorer. Applies
-      // to THIS query only; the harness sweep restores the default.
-      graft.Housekeeping.scopedConf(s,
-        "spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
       val e = y13Mixed(s, d)
       val (r, er) = y13RotationFor(s, d)
       val orthogonal = Similarity.orthogonalityDefect(r) < 1e-8
@@ -4811,7 +4809,7 @@ object PipelineQueries {
     },
     """SELECT CAST(COUNT(*) AS BIGINT) AS n_queries,
       |  TRUE AS rotation_orthogonal, TRUE AS recall_ok
-      |FROM embeddings WHERE vec_id % 50 = 0 AND vec_id < 1000""".stripMargin)
+      |FROM embeddings WHERE vec_id % 50 = 0 AND vec_id < 1000""".stripMargin, PairScoringFloor)
 
   /** One stored rotated-PQ index per (session, input dir) — y3d's
     * build-once discipline for the OPQ-rotated serve table:
@@ -8784,6 +8782,68 @@ object PipelineQueries {
        |FROM ma FULL OUTER JOIN mb ON ma.artifact = mb.artifact
        |ORDER BY artifact""".stripMargin)
 
+  /** One x57/x60 manifest row: `df`'s row count and an order-free
+    * checksum of `idCol`, at coordinate (`ep`, `v`), plus `extra` columns. */
+  private def manifestRow(name: String, df: DataFrame, idCol: String, ep: Long, v: Long,
+                          extra: Column*): DataFrame = {
+    val M = lit(2147483647L)
+    df.agg(count(lit(1)).as("n_rows"),
+        coalesce(pmod(sum((col(idCol) % M) * ((col(idCol) + 7) % M) % M), M),
+          lit(0L)).cast(org.apache.spark.sql.types.LongType).as("checksum"))
+      .select(Seq(lit(name).as("artifact"), lit(ep).as("epoch"),
+        lit(v).as("version"), col("n_rows"), col("checksum")) ++ extra: _*)
+  }
+
+  /** x57/x60's manifest diff: manifests A and B joined full-outer on
+    * artifact, B's `carried` columns kept. `verdict` closes the status
+    * ladder after new / removed / lineage_restarted(Ea->Eb) / unchanged;
+    * each of `coords` (manifest fields) is reported for side a and b, 0
+    * where the side has no row. */
+  private def manifestDiff(manifestA: DataFrame, manifestB: DataFrame, carried: Seq[Column],
+                           verdict: Column => Column, coords: Seq[String]): DataFrame = {
+    val a = manifestA.select(col("artifact"), col("epoch").as("ea"),
+      col("version").as("va"), col("n_rows").as("na"), col("checksum").as("ca"))
+    val b = manifestB.select(Seq(col("artifact"), col("epoch").as("eb"),
+      col("version").as("vb"), col("n_rows").as("nb"), col("checksum").as("cb")) ++ carried: _*)
+    val status = verdict(when(col("na").isNull, lit("new"))
+      .when(col("nb").isNull, lit("removed"))
+      .when(col("ea") =!= col("eb"),
+        concat(lit("lineage_restarted("), col("ea").cast("string"),
+          lit("->"), col("eb").cast("string"), lit(")")))
+      .when(col("na") === col("nb") && col("ca") === col("cb"), lit("unchanged")))
+    // the joined sides name each field by its first letter: ea, va, na, ca
+    val sides = coords.flatMap(f => Seq("a", "b").map(side =>
+      coalesce(col(s"${f.head}$side"), lit(0L)).cast(org.apache.spark.sql.types.LongType)
+        .as(s"${f}_$side")))
+    a.join(b, Seq("artifact"), "full_outer")
+      .select(col("artifact") +: status.as("status") +: sides: _*)
+      .orderBy("artifact")
+  }
+
+  /** DuckDB twin of [[manifestRow]]'s checksum over column `c`. */
+  private def checksumSql(c: String): String =
+    s"CAST(COALESCE(SUM(($c % 2147483647) * (($c + 7) % 2147483647) % 2147483647), 0)" +
+      " % 2147483647 AS BIGINT)"
+
+  /** DuckDB twin of [[manifestDiff]] over CTEs `ma` and `mb`; `rung` is
+    * the ladder's text before ELSE 'changed'. No line starts with `|`, so
+    * a caller may splice the text into a stripMargin literal. */
+  private def manifestDiffSql(rung: String, coords: Seq[String]): String = {
+    val sides = coords.flatMap(f => Seq("a", "b").map(side =>
+      s"  CAST(COALESCE($side.$f, 0) AS BIGINT) AS ${f}_$side"))
+    s"""SELECT COALESCE(a.artifact, b.artifact) AS artifact,
+       |  CASE WHEN a.artifact IS NULL THEN 'new'
+       |       WHEN b.artifact IS NULL THEN 'removed'
+       |       WHEN a.epoch <> b.epoch THEN 'lineage_restarted(' ||
+       |         CAST(a.epoch AS VARCHAR) || '->' || CAST(b.epoch AS VARCHAR) || ')'
+       |       WHEN a.n_rows = b.n_rows AND a.checksum = b.checksum
+       |         THEN 'unchanged'
+       |       ${rung}ELSE 'changed' END AS status,
+       |${sides.mkString(",\n")}
+       |FROM ma a FULL OUTER JOIN mb b ON a.artifact = b.artifact
+       |ORDER BY artifact""".stripMargin
+  }
+
   /** x57: MANIFEST DIFF ACROSS A PURGE BOUNDARY — the cross-EPOCH form
     * x43 deliberately does not cover (its two manifests live in one
     * lineage; see x42 for the coordinate itself). After a
@@ -8816,17 +8876,8 @@ object PipelineQueries {
     * governance cadence. */
   private val x57EpochManifestDiff = Q(
     (s, d) => {
-      import org.apache.spark.sql.types.LongType
-      val M = lit(2147483647L)
       val docs = Tables.documents(s, d)
       val region = Tables.region(s, d)
-      def mrow(name: String, df: org.apache.spark.sql.DataFrame, idCol: String,
-               ep: Long, v: Long) =
-        df.agg(count(lit(1)).as("n_rows"),
-            coalesce(pmod(sum((col(idCol) % M) * ((col(idCol) + 7) % M) % M), M),
-              lit(0L)).cast(LongType).as("checksum"))
-          .select(lit(name).as("artifact"), lit(ep).as("epoch"),
-            lit(v).as("version"), col("n_rows"), col("checksum"))
       val (manifestA, manifestB) = Artifacts.getOrBuild(s, d, "x57_epoch_diff") {
         val base = Artifacts.scratchPath(s, d, "epoch_diff")
         val src = graft.sources.Store(s, s"$base/corpus", "source")
@@ -8842,97 +8893,53 @@ object PipelineQueries {
         // files the purge destroys, so the store append is the barrier
         val (e1, v1) = coord(src); val (de, dv) = coord(dims)
         mst.append(
-          mrow("corpus", src.read, "doc_id", e1, v1)
-            .unionByName(mrow("reference_dims", dims.read, "r_regionkey", de, dv)))
+          manifestRow("corpus", src.read, "doc_id", e1, v1)
+            .unionByName(manifestRow("reference_dims", dims.read, "r_regionkey", de, dv)))
         // the governance request, then the next ingest day in epoch 2
         src.purgeRestartLineage(col("doc_id") % 6 === 0)
         src.appendVersioned(docs.filter(col("doc_id") % 4 === 0))
         val (e2, v2) = coord(src)
-        val manB = mrow("corpus", src.read, "doc_id", e2, v2)
-          .unionByName(mrow("reference_dims", dims.read, "r_regionkey", de, dv))
+        val manB = manifestRow("corpus", src.read, "doc_id", e2, v2)
+          .unionByName(manifestRow("reference_dims", dims.read, "r_regionkey", de, dv))
           // the batch artifact reads ONLY the changed files off the log
-          .unionByName(mrow("ingest_batch", src.readChanges(v2 - 1, v2),
+          .unionByName(manifestRow("ingest_batch", src.readChanges(v2 - 1, v2),
             "doc_id", e2, v2))
         (mst.read.select("artifact", "epoch", "version", "n_rows", "checksum"),
           manB)
       }
-      val a = manifestA.select(col("artifact"), col("epoch").as("ea"),
-        col("version").as("va"), col("n_rows").as("na"), col("checksum").as("ca"))
-      val b = manifestB.select(col("artifact"), col("epoch").as("eb"),
-        col("version").as("vb"), col("n_rows").as("nb"), col("checksum").as("cb"))
-      a.join(b, Seq("artifact"), "full_outer")
-        .select(col("artifact"),
-          when(col("na").isNull, lit("new"))
-            .when(col("nb").isNull, lit("removed"))
-            .when(col("ea") =!= col("eb"),
-              concat(lit("lineage_restarted("), col("ea").cast("string"),
-                lit("->"), col("eb").cast("string"), lit(")")))
-            .when(col("na") === col("nb") && col("ca") === col("cb"), lit("unchanged"))
-            .otherwise(lit("changed")).as("status"),
-          coalesce(col("ea"), lit(0L)).cast(LongType).as("epoch_a"),
-          coalesce(col("eb"), lit(0L)).cast(LongType).as("epoch_b"),
-          coalesce(col("va"), lit(0L)).cast(LongType).as("version_a"),
-          coalesce(col("vb"), lit(0L)).cast(LongType).as("version_b"),
-          coalesce(col("na"), lit(0L)).cast(LongType).as("n_rows_a"),
-          coalesce(col("nb"), lit(0L)).cast(LongType).as("n_rows_b"),
-          coalesce(col("ca"), lit(0L)).cast(LongType).as("checksum_a"),
-          coalesce(col("cb"), lit(0L)).cast(LongType).as("checksum_b"))
-        .orderBy("artifact")
+      manifestDiff(manifestA, manifestB, Nil, _.otherwise(lit("changed")),
+        Seq("epoch", "version", "n_rows", "checksum"))
     },
-    """WITH pre AS (SELECT doc_id FROM documents WHERE doc_id % 4 IN (1, 2, 3)),
+    s"""WITH pre AS (SELECT doc_id FROM documents WHERE doc_id % 4 IN (1, 2, 3)),
       |post AS (SELECT doc_id FROM documents
       |  WHERE (doc_id % 4 IN (1, 2, 3) AND doc_id % 6 <> 0) OR doc_id % 4 = 0),
       |bat AS (SELECT doc_id FROM documents WHERE doc_id % 4 = 0),
       |ma AS (
       |  SELECT 'corpus' AS artifact, CAST(1 AS BIGINT) AS epoch,
       |    CAST(3 AS BIGINT) AS version, CAST(COUNT(*) AS BIGINT) AS n_rows,
-      |    CAST(COALESCE(SUM((doc_id % 2147483647) * ((doc_id + 7) % 2147483647)
-      |      % 2147483647), 0) % 2147483647 AS BIGINT) AS checksum
+      |    ${checksumSql("doc_id")} AS checksum
       |  FROM pre
       |  UNION ALL
       |  SELECT 'reference_dims', CAST(1 AS BIGINT), CAST(1 AS BIGINT),
       |    CAST(COUNT(*) AS BIGINT),
-      |    CAST(COALESCE(SUM((r_regionkey % 2147483647)
-      |      * ((r_regionkey + 7) % 2147483647) % 2147483647), 0)
-      |      % 2147483647 AS BIGINT)
+      |    ${checksumSql("r_regionkey")}
       |  FROM region),
       |mb AS (
       |  SELECT 'corpus' AS artifact, CAST(2 AS BIGINT) AS epoch,
       |    CAST(2 AS BIGINT) AS version, CAST(COUNT(*) AS BIGINT) AS n_rows,
-      |    CAST(COALESCE(SUM((doc_id % 2147483647) * ((doc_id + 7) % 2147483647)
-      |      % 2147483647), 0) % 2147483647 AS BIGINT) AS checksum
+      |    ${checksumSql("doc_id")} AS checksum
       |  FROM post
       |  UNION ALL
       |  SELECT 'reference_dims', CAST(1 AS BIGINT), CAST(1 AS BIGINT),
       |    CAST(COUNT(*) AS BIGINT),
-      |    CAST(COALESCE(SUM((r_regionkey % 2147483647)
-      |      * ((r_regionkey + 7) % 2147483647) % 2147483647), 0)
-      |      % 2147483647 AS BIGINT)
+      |    ${checksumSql("r_regionkey")}
       |  FROM region
       |  UNION ALL
       |  SELECT 'ingest_batch', CAST(2 AS BIGINT), CAST(2 AS BIGINT),
       |    CAST(COUNT(*) AS BIGINT),
-      |    CAST(COALESCE(SUM((doc_id % 2147483647) * ((doc_id + 7) % 2147483647)
-      |      % 2147483647), 0) % 2147483647 AS BIGINT)
+      |    ${checksumSql("doc_id")}
       |  FROM bat)
-      |SELECT COALESCE(a.artifact, b.artifact) AS artifact,
-      |  CASE WHEN a.artifact IS NULL THEN 'new'
-      |       WHEN b.artifact IS NULL THEN 'removed'
-      |       WHEN a.epoch <> b.epoch THEN 'lineage_restarted('
-      |         || CAST(a.epoch AS VARCHAR) || '->' || CAST(b.epoch AS VARCHAR) || ')'
-      |       WHEN a.n_rows = b.n_rows AND a.checksum = b.checksum
-      |         THEN 'unchanged'
-      |       ELSE 'changed' END AS status,
-      |  CAST(COALESCE(a.epoch, 0) AS BIGINT) AS epoch_a,
-      |  CAST(COALESCE(b.epoch, 0) AS BIGINT) AS epoch_b,
-      |  CAST(COALESCE(a.version, 0) AS BIGINT) AS version_a,
-      |  CAST(COALESCE(b.version, 0) AS BIGINT) AS version_b,
-      |  CAST(COALESCE(a.n_rows, 0) AS BIGINT) AS n_rows_a,
-      |  CAST(COALESCE(b.n_rows, 0) AS BIGINT) AS n_rows_b,
-      |  CAST(COALESCE(a.checksum, 0) AS BIGINT) AS checksum_a,
-      |  CAST(COALESCE(b.checksum, 0) AS BIGINT) AS checksum_b
-      |FROM ma a FULL OUTER JOIN mb b ON a.artifact = b.artifact
-      |ORDER BY artifact""".stripMargin)
+      |${manifestDiffSql("", Seq("epoch", "version", "n_rows", "checksum"))}""".stripMargin)
 
   /** x60: REPAIR-AWARE MANIFEST DIFF — closing the r12 verdict's "an
     * adoptOrphans() repair version is indistinguishable from a normal
@@ -8962,19 +8969,12 @@ object PipelineQueries {
     * is O(orphaned files) log writing, never a data rewrite. */
   private val x60RepairManifest = Q(
     (s, d) => {
-      import org.apache.spark.sql.types.LongType
-      val M = lit(2147483647L)
       val docs = Tables.documents(s, d)
       val nation = Tables.nation(s, d)
       val region = Tables.region(s, d)
-      def mrow(name: String, df: org.apache.spark.sql.DataFrame, idCol: String,
-               ep: Long, v: Long, viaRepair: Boolean) =
-        df.agg(count(lit(1)).as("n_rows"),
-            coalesce(pmod(sum((col(idCol) % M) * ((col(idCol) + 7) % M) % M), M),
-              lit(0L)).cast(LongType).as("checksum"))
-          .select(lit(name).as("artifact"), lit(ep).as("epoch"),
-            lit(v).as("version"), col("n_rows"), col("checksum"),
-            lit(viaRepair).as("via_repair"))
+      def mrow(name: String, df: DataFrame, idCol: String, ep: Long, v: Long,
+               viaRepair: Boolean) =
+        manifestRow(name, df, idCol, ep, v, lit(viaRepair).as("via_repair"))
       val (manifestA, manifestB) = Artifacts.getOrBuild(s, d, "x60_repair_manifest") {
         val base = Artifacts.scratchPath(s, d, "repair_man")
         val src = graft.sources.Store(s, s"$base/corpus", "source")
@@ -9016,90 +9016,45 @@ object PipelineQueries {
             aux.epoch, aux.versions.last, viaRepair(aux, xv)))
         (manA, manB)
       }
-      val a = manifestA.select(col("artifact"), col("epoch").as("ea"),
-        col("version").as("va"), col("n_rows").as("na"), col("checksum").as("ca"))
-      val b = manifestB.select(col("artifact"), col("epoch").as("eb"),
-        col("version").as("vb"), col("n_rows").as("nb"), col("checksum").as("cb"),
-        col("via_repair"))
-      a.join(b, Seq("artifact"), "full_outer")
-        .select(col("artifact"),
-          when(col("na").isNull, lit("new"))
-            .when(col("nb").isNull, lit("removed"))
-            .when(col("ea") =!= col("eb"),
-              concat(lit("lineage_restarted("), col("ea").cast("string"),
-                lit("->"), col("eb").cast("string"), lit(")")))
-            .when(col("na") === col("nb") && col("ca") === col("cb"),
-              lit("unchanged"))
-            .when(col("via_repair"), lit("repaired"))
-            .otherwise(lit("changed")).as("status"),
-          coalesce(col("va"), lit(0L)).cast(LongType).as("version_a"),
-          coalesce(col("vb"), lit(0L)).cast(LongType).as("version_b"),
-          coalesce(col("na"), lit(0L)).cast(LongType).as("n_rows_a"),
-          coalesce(col("nb"), lit(0L)).cast(LongType).as("n_rows_b"),
-          coalesce(col("ca"), lit(0L)).cast(LongType).as("checksum_a"),
-          coalesce(col("cb"), lit(0L)).cast(LongType).as("checksum_b"))
-        .orderBy("artifact")
+      manifestDiff(manifestA, manifestB, Seq(col("via_repair")),
+        _.when(col("via_repair"), lit("repaired")).otherwise(lit("changed")),
+        Seq("version", "n_rows", "checksum"))
     },
-    """WITH pre AS (SELECT doc_id FROM documents WHERE doc_id % 3 IN (1, 2)),
+    s"""WITH pre AS (SELECT doc_id FROM documents WHERE doc_id % 3 IN (1, 2)),
       |axp AS (SELECT n_nationkey FROM nation WHERE n_nationkey < 13),
       |ma AS (
       |  SELECT 'corpus' AS artifact, CAST(1 AS BIGINT) AS epoch,
       |    CAST(2 AS BIGINT) AS version, CAST(COUNT(*) AS BIGINT) AS n_rows,
-      |    CAST(COALESCE(SUM((doc_id % 2147483647) * ((doc_id + 7) % 2147483647)
-      |      % 2147483647), 0) % 2147483647 AS BIGINT) AS checksum
+      |    ${checksumSql("doc_id")} AS checksum
       |  FROM pre
       |  UNION ALL
       |  SELECT 'reference_dims', CAST(1 AS BIGINT), CAST(1 AS BIGINT),
       |    CAST(COUNT(*) AS BIGINT),
-      |    CAST(COALESCE(SUM((r_regionkey % 2147483647)
-      |      * ((r_regionkey + 7) % 2147483647) % 2147483647), 0)
-      |      % 2147483647 AS BIGINT)
+      |    ${checksumSql("r_regionkey")}
       |  FROM region
       |  UNION ALL
       |  SELECT 'aux_dims', CAST(1 AS BIGINT), CAST(1 AS BIGINT),
       |    CAST(COUNT(*) AS BIGINT),
-      |    CAST(COALESCE(SUM((n_nationkey % 2147483647)
-      |      * ((n_nationkey + 7) % 2147483647) % 2147483647), 0)
-      |      % 2147483647 AS BIGINT)
+      |    ${checksumSql("n_nationkey")}
       |  FROM axp),
       |mb AS (
       |  SELECT 'corpus' AS artifact, CAST(1 AS BIGINT) AS epoch,
       |    CAST(3 AS BIGINT) AS version, CAST(COUNT(*) AS BIGINT) AS n_rows,
-      |    CAST(COALESCE(SUM((doc_id % 2147483647) * ((doc_id + 7) % 2147483647)
-      |      % 2147483647), 0) % 2147483647 AS BIGINT) AS checksum,
+      |    ${checksumSql("doc_id")} AS checksum,
       |    TRUE AS via_repair
       |  FROM documents
       |  UNION ALL
       |  SELECT 'reference_dims', CAST(1 AS BIGINT), CAST(1 AS BIGINT),
       |    CAST(COUNT(*) AS BIGINT),
-      |    CAST(COALESCE(SUM((r_regionkey % 2147483647)
-      |      * ((r_regionkey + 7) % 2147483647) % 2147483647), 0)
-      |      % 2147483647 AS BIGINT), FALSE
+      |    ${checksumSql("r_regionkey")}, FALSE
       |  FROM region
       |  UNION ALL
       |  SELECT 'aux_dims', CAST(1 AS BIGINT), CAST(2 AS BIGINT),
       |    CAST(COUNT(*) AS BIGINT),
-      |    CAST(COALESCE(SUM((n_nationkey % 2147483647)
-      |      * ((n_nationkey + 7) % 2147483647) % 2147483647), 0)
-      |      % 2147483647 AS BIGINT), FALSE
+      |    ${checksumSql("n_nationkey")}, FALSE
       |  FROM nation)
-      |SELECT COALESCE(a.artifact, b.artifact) AS artifact,
-      |  CASE WHEN a.artifact IS NULL THEN 'new'
-      |       WHEN b.artifact IS NULL THEN 'removed'
-      |       WHEN a.epoch <> b.epoch THEN 'lineage_restarted('
-      |         || CAST(a.epoch AS VARCHAR) || '->' || CAST(b.epoch AS VARCHAR) || ')'
-      |       WHEN a.n_rows = b.n_rows AND a.checksum = b.checksum
-      |         THEN 'unchanged'
-      |       WHEN b.via_repair THEN 'repaired'
-      |       ELSE 'changed' END AS status,
-      |  CAST(COALESCE(a.version, 0) AS BIGINT) AS version_a,
-      |  CAST(COALESCE(b.version, 0) AS BIGINT) AS version_b,
-      |  CAST(COALESCE(a.n_rows, 0) AS BIGINT) AS n_rows_a,
-      |  CAST(COALESCE(b.n_rows, 0) AS BIGINT) AS n_rows_b,
-      |  CAST(COALESCE(a.checksum, 0) AS BIGINT) AS checksum_a,
-      |  CAST(COALESCE(b.checksum, 0) AS BIGINT) AS checksum_b
-      |FROM ma a FULL OUTER JOIN mb b ON a.artifact = b.artifact
-      |ORDER BY artifact""".stripMargin)
+      |${manifestDiffSql("WHEN b.via_repair THEN 'repaired' ",
+           Seq("version", "n_rows", "checksum"))}""".stripMargin)
 
   /** The orphan refusal x60's incident step contracts on: the next
     * versioned write after the crash must fail loudly naming the repair —
@@ -10927,13 +10882,6 @@ object PipelineQueries {
     * join on is unchanged. */
   private val x23ChunkRetrieval = Q(
     (s, d) => {
-      // scoped AQE floor (r14, guide §2.5): the bucket-join + 64-float-dot
-      // per-pair stage is byte-tiny but CPU-dense — the 1m default merges
-      // it to ONE task (7.2 s vs 2.0 s, in-JVM A/B; see the NOTE below for
-      // why an in-plan repartition cannot fix it). 64k applies to THIS
-      // query only; the harness sweep restores the session default.
-      graft.Housekeeping.scopedConf(s,
-        "spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
       val chunks = TextAnalysis.hashedBowVectors(
           TextAnalysis.chunkWords(
             graft.Tables.fanOut(Tables.documents(s, d)), // r13: 1-task scan
@@ -10959,8 +10907,8 @@ object PipelineQueries {
       // join and computes a 64-float dot per pair is byte-tiny but
       // CPU-dense; AQE's 1 MB byte-based coalescing floor merged it into
       // ONE task — 5.1 s of the query's 7 s serialized on one core of 32.
-      // Fixed by the SCOPED 64k floor at the top of this lambda (r13 set
-      // it session-wide; r14 narrowed it after the CC/minhash band
+      // Fixed by the query's declared 64k floor (PairScoringFloor; r13
+      // set it session-wide, r14 narrowed it after the CC/minhash band
       // measured 1–1.9 s slower under it). An in-plan repartition was
       // tried first and rejected — placed on the pair relation it
       // re-shuffles the vectors (guide §2.3); placed on the query side
@@ -11013,7 +10961,7 @@ object PipelineQueries {
        |    CAST(ROW_NUMBER() OVER (PARTITION BY q_doc, q_chunk
        |      ORDER BY qcos DESC, c_doc, c_chunk) AS INT) AS rank
        |  FROM scored) r
-       |WHERE rank <= 3 ORDER BY q_doc, q_chunk, rank""".stripMargin)
+       |WHERE rank <= 3 ORDER BY q_doc, q_chunk, rank""".stripMargin, PairScoringFloor)
 
   /** Shared x19/x19b oracle tail: from the window fingerprints `win`
     * (doc_id, fp), each non-benchmark doc's windows that also occur in the

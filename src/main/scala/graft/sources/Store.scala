@@ -419,15 +419,7 @@ final case class Store(spark: SparkSession, path: String, partCol: String) {
             .write.mode(SaveMode.Overwrite).partitionBy(partCol).parquet(tmp)
           // an all-matching delete lands no tmp data files — there is
           // nothing to overwrite back, only directories to remove
-          val tmpHasData = {
-            val it = f.listFiles(tmpPath, true)
-            var found = false
-            while (!found && it.hasNext) {
-              val st = it.next()
-              if (st.isFile && st.getPath.getName.endsWith(".parquet")) found = true
-            }
-            found
-          }
+          val tmpHasData = hasParquetFile(f, tmpPath)
           // a partition whose every row matched must still be REPLACED
           // (with nothing): dynamic overwrite only touches partitions
           // present in the written frame, so fully-emptied partitions are
@@ -607,6 +599,19 @@ final case class Store(spark: SparkSession, path: String, partCol: String) {
   // before/after listing brackets one append).
 
   private def logDir = new org.apache.hadoop.fs.Path(s"$path/_log")
+
+  /** Whether any `.parquet` file lies under `dir` (a rewrite's temp
+    * snapshot lands none when every row was removed). */
+  private def hasParquetFile(f: org.apache.hadoop.fs.FileSystem,
+                             dir: org.apache.hadoop.fs.Path): Boolean = {
+    val it = f.listFiles(dir, true)
+    var found = false
+    while (!found && it.hasNext) {
+      val st = it.next()
+      if (st.isFile && st.getPath.getName.endsWith(".parquet")) found = true
+    }
+    found
+  }
 
   private def listDataFiles(): Set[String] = {
     val (f, p) = fs
@@ -1289,15 +1294,7 @@ final case class Store(spark: SparkSession, path: String, partCol: String) {
       .filter(not(coalesce(remove, lit(false))))
     val schemaDdl = retained.schema.toDDL
     retained.write.mode(SaveMode.Overwrite).partitionBy(partCol).parquet(tmp)
-    val tmpHasData = {
-      val it = f.listFiles(tmpPath, true)
-      var found = false
-      while (!found && it.hasNext) {
-        val st = it.next()
-        if (st.isFile && st.getPath.getName.endsWith(".parquet")) found = true
-      }
-      found
-    }
+    val tmpHasData = hasParquetFile(f, tmpPath)
     // persist the incremented epoch OUTSIDE the tree about to be destroyed
     // (destroy() wipes _log/_epoch with the data): from here every crash
     // point reads `newEpoch` via the sibling, never a reset epoch 1

@@ -71,21 +71,28 @@ object EventStreams {
                keys: Seq[String], tsCol: String, checkpointDir: String,
                order: Seq[org.apache.spark.sql.Column] = Nil,
                mergeSchema: Boolean = false): StreamingQuery =
-    updates.writeStream
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-        // the merge body drives several independent jobs off this one
-        // micro-batch (empty probe, replay anti-join, first-ts aggregate,
-        // the overwrite itself) — persist so the source is evaluated once
-        // per batch, not once per job: wasteful for file sources and a
-        // correctness hazard if a non-replayable source were ever wired
-        // in (the multi-action foreachBatch discipline Spark's docs
-        // prescribe)
+    nonEmptyBatches(updates, checkpointDir) { (batch, _) =>
+      // the merge body drives several independent jobs off this one
+      // micro-batch (empty probe, replay anti-join, first-ts aggregate,
+      // the overwrite itself)
+      graft.sources.Store(batch.sparkSession, storePath, partCol)
+        .upsertScd2(batch, keys, tsCol, order, mergeSchema)
+    }
+
+  /** Drains `src` once (AvailableNow) through `body`, called for each
+    * non-empty micro-batch with its batch id. The batch is persisted
+    * around `body`, so a body that runs several jobs off it evaluates the
+    * source once per batch, not once per job: wasteful for file sources
+    * and a correctness hazard if a non-replayable source were ever wired
+    * in (the multi-action foreachBatch discipline Spark's docs
+    * prescribe). */
+  private def nonEmptyBatches(src: DataFrame, checkpointDir: String)(
+      body: (DataFrame, Long) => Unit): StreamingQuery =
+    src.writeStream
+      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
         batch.persist()
-        try {
-          if (!batch.isEmpty)
-            graft.sources.Store(batch.sparkSession, storePath, partCol)
-              .upsertScd2(batch, keys, tsCol, order, mergeSchema)
-        } finally batch.unpersist()
+        try if (!batch.isEmpty) body(batch, batchId)
+        finally batch.unpersist()
         ()
       }
       .option("checkpointLocation", checkpointDir)
@@ -115,22 +122,12 @@ object EventStreams {
     * is one metadata write wide. */
   def versionedIngestSink(src: DataFrame, storePath: String, partCol: String,
                           checkpointDir: String): StreamingQuery =
-    src.writeStream
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        batch.persist()
-        try {
-          if (!batch.isEmpty) {
-            val store = graft.sources.Store(batch.sparkSession, storePath, partCol)
-            val tag = s"stream_batch_$batchId"
-            if (!store.hasBatchTag(tag))
-              store.appendVersioned(batch.toDF(), Some(tag))
-          }
-        } finally batch.unpersist()
-        ()
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
+    nonEmptyBatches(src, checkpointDir) { (batch, batchId) =>
+      val store = graft.sources.Store(batch.sparkSession, storePath, partCol)
+      val tag = s"stream_batch_$batchId"
+      if (!store.hasBatchTag(tag))
+        store.appendVersioned(batch, Some(tag))
+    }
 
   /** Streaming exact dedup with BOUNDED state: drop every repeat of a key
     * seen within the watermark window — x1's exact-dedup gate as a
@@ -482,23 +479,12 @@ object EventStreams {
     val mnorm = mnormRow.getDouble(0)
     val idType = corpus.schema(idCol).dataType
     val c = augmentedCorpus(corpus, idCol, vecCol, mnorm, dims, planes)
-    queries.writeStream
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        batch.persist()
-        try {
-          if (!batch.isEmpty) {
-            val spark = batch.sparkSession
-            val tomb = readTombstones(spark, tombstonePath, idCol, idType)
-            overwriteBatch(
-              serveMipsBatch(batch, c, idCol, vecCol, tsCol, planes, dims, tomb),
-              batchId, destDir)
-          }
-        } finally batch.unpersist()
-        ()
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
+    nonEmptyBatches(queries, checkpointDir) { (batch, batchId) =>
+      val tomb = readTombstones(batch.sparkSession, tombstonePath, idCol, idType)
+      overwriteBatch(
+        serveMipsBatch(batch, c, idCol, vecCol, tsCol, planes, dims, tomb),
+        batchId, destDir)
+    }
   }
 
   /** Per-batch tombstone read shared by the live-takedown sinks: a fresh
@@ -632,39 +618,29 @@ object EventStreams {
                                 tombstonePath: Option[String] = None,
                                 planes: Int = graft.operators.Similarity.NumPlanes,
                                 dims: Int = 64): StreamingQuery = {
-    queries.writeStream
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        batch.persist()
-        try {
-          if (!batch.isEmpty) {
-            val spark = batch.sparkSession
-            val ptr = spark.read.parquet(pointerPath)
-            val needed = Seq("serving_gen", "mnorm", "corpus_path")
-            require(needed.forall(ptr.schema.fieldNames.contains),
-              s"serving pointer at $pointerPath carries columns " +
-                s"${ptr.schema.fieldNames.mkString("[", ", ", "]")} — " +
-                s"expected ${needed.mkString("(", ", ", ")")}; a missing " +
-                "column would silently pin the sink to no generation")
-            val cur = ptr.select(col("serving_gen").cast("long"),
-                col("mnorm").cast("double"), col("corpus_path"))
-              .orderBy(col("serving_gen").desc).head()
-            val (gen, mnorm, corpusPath) =
-              (cur.getLong(0), cur.getDouble(1), cur.getString(2))
-            val corpus = spark.read.parquet(corpusPath)
-            val idType = corpus.schema(idCol).dataType
-            val c = augmentedCorpus(corpus, idCol, vecCol, mnorm, dims, planes)
-            val tomb = readTombstones(spark, tombstonePath, idCol, idType)
-            overwriteBatch(
-              serveMipsBatch(batch, c, idCol, vecCol, tsCol, planes, dims, tomb)
-                .withColumn("serving_gen", lit(gen)),
-              batchId, destDir)
-          }
-        } finally batch.unpersist()
-        ()
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
+    nonEmptyBatches(queries, checkpointDir) { (batch, batchId) =>
+      val spark = batch.sparkSession
+      val ptr = spark.read.parquet(pointerPath)
+      val needed = Seq("serving_gen", "mnorm", "corpus_path")
+      require(needed.forall(ptr.schema.fieldNames.contains),
+        s"serving pointer at $pointerPath carries columns " +
+          s"${ptr.schema.fieldNames.mkString("[", ", ", "]")} — " +
+          s"expected ${needed.mkString("(", ", ", ")")}; a missing " +
+          "column would silently pin the sink to no generation")
+      val cur = ptr.select(col("serving_gen").cast("long"),
+          col("mnorm").cast("double"), col("corpus_path"))
+        .orderBy(col("serving_gen").desc).head()
+      val (gen, mnorm, corpusPath) =
+        (cur.getLong(0), cur.getDouble(1), cur.getString(2))
+      val corpus = spark.read.parquet(corpusPath)
+      val idType = corpus.schema(idCol).dataType
+      val c = augmentedCorpus(corpus, idCol, vecCol, mnorm, dims, planes)
+      val tomb = readTombstones(spark, tombstonePath, idCol, idType)
+      overwriteBatch(
+        serveMipsBatch(batch, c, idCol, vecCol, tsCol, planes, dims, tomb)
+          .withColumn("serving_gen", lit(gen)),
+        batchId, destDir)
+    }
   }
 
   /** Streaming held-out perplexity scoring — the online half of z41: each

@@ -1,7 +1,7 @@
 package org.apache.spark
 
-/** Test access to the driver's listener bus, which Spark keeps
-  * package-private: blocks until every event posted so far (job ends,
+/** Access to the driver's listener bus, which Spark keeps package-private:
+  * blocks until every event posted so far (job ends, task ends,
   * query-execution callbacks) has reached its listeners. */
 object ListenerBusDrain {
   def apply(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty(60000L)

@@ -38,6 +38,23 @@ class HousekeepingSpec extends SparkSpec {
     assert(kept.nonEmpty, "shared panel blocks were evicted by the sweep")
   }
 
+  test("evicting e1's artifacts hands its retained panel back to the sweep") {
+    // evict first, so e1 builds here whichever test or suite ran before
+    Artifacts.evict(spark, sf)
+    Housekeeping.releaseAllBlocks(spark)
+    val before = Housekeeping.retainedIds(spark)
+    SparkEntry.queries("e1_stability_matrix")(spark, sf)
+      .write.format("noop").mode("overwrite").save()
+    Housekeeping.releaseAllBlocks(spark)
+    val panel = Housekeeping.retainedIds(spark) -- before
+    assert(panel.nonEmpty && panel.subsetOf(spark.sparkContext.getPersistentRDDs.keySet))
+    Artifacts.evict(spark, sf)
+    Housekeeping.releaseAllBlocks(spark)
+    val left = spark.sparkContext.getPersistentRDDs.keySet
+    assert(left.intersect(panel).isEmpty, s"evicted panel blocks outlived the sweep: ${left.intersect(panel)}")
+    assert((left -- Housekeeping.retainedIds(spark)).isEmpty, s"persistent RDDs left: $left")
+  }
+
   test("star contraction frees its edge blocks, keeping only the label checkpoint") {
     val sp = spark
     import sp.implicits._
