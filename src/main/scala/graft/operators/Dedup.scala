@@ -1,9 +1,9 @@
 package graft.operators
 
 import graft.Housekeeping
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.LongType
+import org.apache.spark.sql.types.{DataType, LongType, StructField, StructType}
 
 /** Deduplication operators for training-data pipelines, designed shuffle-
   * first: every stage is expressible as explode → hash-partition → aggregate,
@@ -400,7 +400,11 @@ object Dedup {
     * Untouched labels pass through by anti-join. The 100-TB property: an
     * ingest pays O(batch + touched-cluster membership), never O(corpus);
     * label storage is the only corpus-sized relation read, and only twice
-    * (semi + anti). `newPairs` must only contain edges with at least one
+    * (semi + anti). The touched clusters' members are pinned once: they
+    * feed both the membership edges and the node set, and the sub-solve
+    * (driver-finished while its edges fit `LocalEdges`) reads them once
+    * instead of re-deriving them from `labels` per consumer; they are freed
+    * before returning. `newPairs` must only contain edges with at least one
     * endpoint in `newDocs` (exactly what `lshCandidatesAgainst` + a
     * batch-internal `lshCandidates` produce). Gated by x30's oracle:
     * incremental == full recompute, at any SF. */
@@ -411,42 +415,123 @@ object Dedup {
       .distinct()
     val touched = labels.join(ends, Seq(idCol), "left_semi")
       .select("cluster_id").distinct()
-    val members = labels.join(touched, Seq("cluster_id"), "left_semi")
-    val memberEdges = members.filter(col(idCol) =!= col("cluster_id"))
+    val members = Housekeeping.pin(labels.sparkSession)(
+      labels.join(touched, Seq("cluster_id"), "left_semi"))
+    val memberEdges = members.df.filter(col(idCol) =!= col("cluster_id"))
       .select(col(idCol).as("doc_a"), col("cluster_id").as("doc_b"))
     val nodes = newDocs.select(col(idCol))
-      .union(members.select(col(idCol)))
+      .union(members.df.select(col(idCol)))
       .distinct()
+    // both paths of connectedComponents return an eagerly pinned frame,
+    // so nothing downstream reads the members' blocks after this call
     val sub = connectedComponents(
       newPairs.select(col("doc_a"), col("doc_b")).union(memberEdges), nodes, idCol)
+    members.free()
     labels.join(touched, Seq("cluster_id"), "left_anti")
       .select(col(idCol), col("cluster_id"))
       .union(sub.select(col(idCol), col("cluster_id")))
   }
 
+  /** Largest edge count [[connectedComponents]] finishes on the driver.
+    * The collected edges, the union-find map and the label relation (at
+    * most one row per edge, broadcast back) take about 300 bytes of driver
+    * heap per edge, so the limit implies at most ~60 MB. */
+  val LocalEdges = 200000
+
   /** Duplicate clustering: connected components over a candidate-pair
-    * edge list by iterative min-label propagation — every node ends up
-    * labeled with the smallest doc id in its component (the survivor).
-    * Converges in ≤ graph-diameter iterations; near-dup components are
-    * shallow (stars/short chains), so the driver loop exits after a few
-    * rounds on the real distribution. Each iteration is one shuffle-join +
-    * one aggregation; at very large scale swap the loop body for
-    * alternating large-star/small-star contraction (same fixpoint).
-    * `nodes` supplies the full id universe — isolated docs keep their own
-    * id as cluster. Ids must be numeric; a component whose diameter
-    * exceeds `maxIters` throws IllegalStateException rather than return
-    * unconverged labels. */
+    * edge list — every node ends up labeled with the smallest id of its
+    * component (the survivor), in the id column's own type. `nodes`
+    * supplies the full id universe: isolated docs keep their own id as
+    * cluster, duplicate rows stay duplicated, and a null id gets a null
+    * label. Only edges with both endpoints in `nodes` relay a label; null
+    * endpoints and self-loops relay nothing. Ids must be numeric and are
+    * compared by value, so an Int id column matches Long edges.
+    *
+    * Two strategies, chosen from the observed edge count:
+    *   - driver finish: one action collects at most `localEdges + 1` of
+    *     the edges inside `nodes`; if they fit, a min-root union-find on
+    *     the driver labels every component in one step whatever its
+    *     diameter, and the labels are joined back to `nodes` as a
+    *     broadcast local relation. A few Spark jobs in all;
+    *   - above the limit, iterative min-label propagation: each round is
+    *     one shuffle-join + one aggregation and the loop runs ≤ diameter
+    *     rounds; a component whose diameter exceeds `maxIters` throws
+    *     IllegalStateException rather than return unconverged labels. At
+    *     very large scale swap the loop body for alternating
+    *     large-star/small-star contraction (same fixpoint).
+    *
+    * Both return an eagerly pinned frame whose blocks are the caller's to
+    * release (`Housekeeping.releaseAllBlocks` after the action).
+    * `localEdges = 0` sends every graph with an edge inside `nodes` to the
+    * rounds (the reference path tests compare against). */
   def connectedComponents(pairs: DataFrame, nodes: DataFrame, idCol: String,
-                          maxIters: Int = 20): DataFrame = {
+                          maxIters: Int = 20, localEdges: Int = LocalEdges): DataFrame = {
     import org.apache.spark.sql.types._
-    // the convergence probe below sums the labels, which is sound only for
-    // numeric ids (a string id would cast to null)
+    // the convergence probe of the rounds sums the labels, which is sound
+    // only for numeric ids (a string id would cast to null)
     val idType = nodes.schema(idCol).dataType
     require(idType match {
       case ByteType | ShortType | IntegerType | LongType | FloatType | DoubleType => true
       case _: DecimalType => true
       case _ => false
     }, s"connectedComponents needs a numeric id column; '$idCol' is ${idType.simpleString}")
+    driverComponents(pairs, nodes, idCol, idType, localEdges)
+      .getOrElse(propagateLabels(pairs, nodes, idCol, maxIters))
+  }
+
+  /** The driver finish of [[connectedComponents]], or None when more than
+    * `limit` edges lie inside `nodes`. */
+  private def driverComponents(pairs: DataFrame, nodes: DataFrame, idCol: String,
+                               idType: DataType, limit: Int): Option[DataFrame] = {
+    val spark = pairs.sparkSession
+    // the rounds join both endpoints against the label frame, so an edge
+    // with an endpoint outside `nodes` (or a null one) relays nothing.
+    // The semi-joins compare by value under Spark's numeric coercion, as
+    // the rounds' joins do; a kept endpoint equals a node id, so its cast
+    // to the id type is exact
+    val ids = nodes.select(col(idCol).as("id"))
+    val inside = pairs.select(col("doc_a").as("a"), col("doc_b").as("b"))
+      .join(ids, col("a") === col("id"), "left_semi")
+      .join(ids, col("b") === col("id"), "left_semi")
+      .select(col("a").cast(idType).as("a"), col("b").cast(idType).as("b"))
+      .filter(col("a") =!= col("b"))
+    val edges = inside.limit(limit + 1).collect()
+    if (edges.length > limit) None
+    else {
+      // min-root union-find: every root is its set's minimum, so a node's
+      // root is its component label. java.util.HashMap keys by equals(),
+      // which is value equality for the boxed ids of one column type;
+      // parent holds non-roots only
+      val parent = new java.util.HashMap[AnyRef, AnyRef]()
+      def find(x: AnyRef): AnyRef = {
+        var root = x
+        while (parent.containsKey(root)) root = parent.get(root)
+        var y = x
+        while (parent.containsKey(y)) y = parent.put(y, root)
+        root
+      }
+      edges.foreach { e =>
+        val ra = find(e.get(0).asInstanceOf[AnyRef])
+        val rb = find(e.get(1).asInstanceOf[AnyRef])
+        val c = ra.asInstanceOf[Comparable[AnyRef]].compareTo(rb)
+        if (c < 0) parent.put(rb, ra) else if (c > 0) parent.put(ra, rb)
+      }
+      val labeled = new java.util.ArrayList[Row](parent.size())
+      parent.keySet().forEach(x => labeled.add(Row(x, find(x))))
+      val local = spark.createDataFrame(labeled,
+        StructType(Seq(StructField(idCol, idType), StructField("cluster_id", idType))))
+      // roots are absent from `local` and label themselves
+      Some(Housekeeping.pin(spark)(
+        nodes.select(col(idCol))
+          .join(broadcast(local), Seq(idCol), "left")
+          .select(col(idCol), coalesce(col("cluster_id"), col(idCol)).as("cluster_id"))).df)
+    }
+  }
+
+  /** The distributed path of [[connectedComponents]]: iterative min-label
+    * propagation, pinned per round. */
+  private def propagateLabels(pairs: DataFrame, nodes: DataFrame, idCol: String,
+                              maxIters: Int): DataFrame = {
     val spark = pairs.sparkSession
     // materialize the edge list once — it feeds every iteration, and its
     // upstream (the whole LSH candidate pipeline) must not re-run per round.

@@ -69,6 +69,27 @@ class HousekeepingSpec extends SparkSpec {
     Housekeeping.releaseAllBlocks(spark)
   }
 
+  test("the sweep frees every block the driver finish of connected components pinned") {
+    val sp = spark
+    import sp.implicits._
+    val sc = spark.sparkContext
+    Housekeeping.releaseAllBlocks(spark)
+    val before = sc.getPersistentRDDs.keySet
+    val pairs = Seq((1L, 2L), (2L, 3L), (10L, 11L)).toDF("doc_a", "doc_b")
+    val nodes = (1L to 12L).toDF("doc_id")
+    val labels = graft.operators.Dedup.connectedComponents(pairs, nodes, "doc_id")
+    val merged = graft.operators.Dedup.incrementalComponents(labels, Seq(13L).toDF("doc_id"),
+      Seq((3L, 13L)).toDF("doc_a", "doc_b"), "doc_id")
+    assert(merged.as[(Long, Long)].collect().toMap ===
+      Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 13L -> 1L, 10L -> 10L, 11L -> 10L) ++
+        (4L to 9L).map(i => i -> i) ++ Seq(12L -> 12L))
+    val pinned = sc.getPersistentRDDs.keySet -- before
+    assert(pinned.nonEmpty, "the driver finish pinned nothing")
+    Housekeeping.releaseAllBlocks(spark)
+    val left = sc.getPersistentRDDs.keySet.intersect(pinned)
+    assert(left.isEmpty, s"blocks of the driver finish outlived the sweep: $left")
+  }
+
   test("freeing a parent under an unmaterialized lazy pin fails loudly (pinLazy contract)") {
     val sp = spark
     import sp.implicits._

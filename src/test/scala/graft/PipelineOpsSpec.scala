@@ -1,7 +1,10 @@
 package graft
 
 import graft.operators.{Dedup, Multimodal, Similarity, TextAnalysis}
+import org.apache.spark.ListenerBusDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
+import org.scalacheck.{Gen, Prop, Test => SCTest}
 
 class DedupSpec extends SparkSpec {
   import spark.implicits._
@@ -156,11 +159,78 @@ class DedupSpec extends SparkSpec {
     val pairs = (0L until 63L).map(i => (i, i + 1)).toDF("doc_a", "doc_b")
     val nodes = (0L until 64L).toDF("doc_id")
     val byLabel = intercept[IllegalStateException](
-      Dedup.connectedComponents(pairs, nodes, "doc_id", maxIters = 3))
+      Dedup.connectedComponents(pairs, nodes, "doc_id", maxIters = 3, localEdges = 0))
     assert(byLabel.getMessage.contains("maxIters=3"))
     val byStar = intercept[IllegalStateException](
       Dedup.connectedComponentsStar(pairs, nodes, "doc_id", maxIters = 2))
     assert(byStar.getMessage.contains("maxIters=2"))
+  }
+
+  /** `body`'s result and the stage names of the Spark jobs it ran, picked
+    * by a job tag once the listener bus has drained. */
+  private def withJobs[A](body: => A): (A, Seq[String]) = {
+    val sc = spark.sparkContext
+    val tag = "dedup-spec-jobs"
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).flatMap(p => Option(p.getProperty("spark.job.tags")))
+            .exists(_.split(",").contains(tag))) jobs.add(e.stageInfos.map(_.name).mkString(" + "))
+    }
+    sc.addSparkListener(listener)
+    sc.addJobTag(tag)
+    val out = try body finally sc.removeJobTag(tag)
+    ListenerBusDrain(sc)
+    sc.removeSparkListener(listener)
+    (out, jobs.toArray(Array.empty[String]).toSeq)
+  }
+
+  test("connectedComponents finishes a chain longer than maxIters on the driver in a few jobs") {
+    val pairs = (0L until 63L).map(i => (i, i + 1)).toDF("doc_a", "doc_b")
+    val nodes = (0L until 64L).toDF("doc_id")
+    val (labels, jobs) = withJobs(Dedup.connectedComponents(pairs, nodes, "doc_id", maxIters = 3))
+    assert(labels.as[(Long, Long)].collect().toMap === (0L until 64L).map(_ -> 0L).toMap)
+    assert(jobs.size <= 4, jobs.mkString("Spark jobs:\n", "\n", ""))
+    Housekeeping.releaseAllBlocks(spark)
+  }
+
+  test("the driver finish of connectedComponents equals the label-propagation rounds (property)") {
+    // ids n..n+3 and the dropped ones are outside `nodes`; some node rows
+    // repeat, some edges have a null end or are self-loops; the id columns
+    // are Int, Long, Int nodes against Long edges, or Decimal nodes
+    // against Double edges
+    val gen = for {
+      n <- Gen.choose(1, 24)
+      end = Gen.frequency(1 -> Gen.const(Option.empty[Int]), 12 -> Gen.choose(0, n + 3).map(Some(_)))
+      edges <- Gen.choose(0, 30).flatMap(Gen.listOfN(_, Gen.zip(end, end)))
+      dropped <- Gen.listOf(Gen.choose(0, n - 1))
+      repeated <- Gen.listOf(Gen.choose(0, n - 1))
+      nullNode <- Gen.oneOf(false, true)
+      types <- Gen.oneOf("int", "long", "int nodes, long edges", "decimal nodes, double edges")
+    } yield (edges, (0 until n).filterNot(dropped.toSet) ++ repeated, nullNode, types)
+    val prop = Prop.forAll(gen) { case (edges, ids, nullNode, types) =>
+      val nodeIds = ids.map(Option(_)) ++ (if (nullNode) Seq(None) else Nil)
+      val nodes = types match {
+        case "long" => nodeIds.map(_.map(_.toLong)).toDF("id")
+        case "decimal nodes, double edges" => nodeIds.toDF("id").select(col("id").cast("decimal(10,0)").as("id"))
+        case _ => nodeIds.toDF("id")
+      }
+      val pairs = types match {
+        case "int" => edges.toDF("doc_a", "doc_b")
+        case "decimal nodes, double edges" =>
+          edges.map { case (a, b) => (a.map(_.toDouble), b.map(_.toDouble)) }.toDF("doc_a", "doc_b")
+        case _ => edges.map { case (a, b) => (a.map(_.toLong), b.map(_.toLong)) }.toDF("doc_a", "doc_b")
+      }
+      def labels(localEdges: Int) = {
+        val df = Dedup.connectedComponents(pairs, nodes, "id", maxIters = 64, localEdges = localEdges)
+        (df.schema.map(_.dataType), df.collect().map(_.toString).sorted.toSeq)
+      }
+      val (driver, rounds) = (labels(Dedup.LocalEdges), labels(0))
+      Housekeeping.releaseAllBlocks(spark)
+      Prop(driver == rounds) :| s"$types: driver $driver, rounds $rounds"
+    }
+    val res = SCTest.check(SCTest.Parameters.default.withMinSuccessfulTests(16), prop)
+    assert(res.passed, res.status.toString)
   }
 
   test("connectedComponents rejects a non-numeric id column and names its type") {
